@@ -1307,7 +1307,7 @@ def stream_minhash_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     spliced between takedown and read: minhash_vacuum prunes the
     retired docs from all THREE data roots in one version stamp —
     band and signature rows by doc_id, pair rows by either column
-    (the multi-root vacuum_masked_roots generalization) — and swaps the
+    (state_log.vacuum over the MINHASH family) — and swaps the
     mask empty. The masked read over the post-swap state must
     HASH-equal the takedown op's (same oracle SQL): reader-view
     invariance of the third vacuum instance, driver-checked. The in-op

@@ -3280,7 +3280,7 @@ def stream_curation_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-swap reader view must be HASH-identical to the takedown op's
     (same oracle SQL: the capstone with the exclusion spliced
     post-keeper). This driver-checks reader-view invariance of the
-    SECOND vacuum_masked_root instance under the oracle — the vector
+    SECOND state_log.vacuum instance under the oracle — the vector
     twin (similarity_index_vacuum_verify) covers the first; until this
     entry, curation_vacuum was only pytest-pinned. The in-op
     nothing-pruned guard keeps the check non-vacuous: a silently
@@ -3451,7 +3451,7 @@ def stream_curation_epoch_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     two slices (batches 0-1), take down every ADMITTED doc_id ≡ 3 mod 7
     (batch 2), PHYSICALLY vacuum with bump_epoch=True, then deliver the
     third slice as a RESUMED checkpoint's batch 0 — the id that dies at
-    _below_floor_guard without the epoch; with it, the write lands at
+    the state_log floor guard without the epoch; with it, the write lands at
     effective id = the vacuum stamp and the same checkpoint continues.
 
     The oracle is the capstone SQL with the exclusion bounded to the
@@ -3498,7 +3498,7 @@ def stream_curation_epoch_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
             "would not be exercising a post-vacuum resume at all"
         )
     # the resumed checkpoint restarts numbering at 0: without the epoch
-    # this exact call is the _below_floor_guard error
+    # this exact call is the state_log floor-guard error
     curation_apply_batch(d.filter(col("doc_id") > cuts[1]), 0, state)
     return _pack_from_toks(read_curation_survivors(spark, state), _PACK_BUDGET)
 
@@ -3519,7 +3519,7 @@ def stream_curation_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
     trunk keeper).
 
     Scale shape: the fork is zero-copy — driver-side file copies of the
-    as-of delta set, no Spark job at all (r16; see clone_state_roots);
+    as-of delta set, no Spark job at all (see state_log.clone);
     everything else is the streamed capstone's per-batch shape. The
     trunk is never touched — divergence isolation is pinned in
     tests/test_curation_branch.py."""
@@ -3556,7 +3556,7 @@ def stream_curation_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Admission PROVENANCE over the curation delta log: every live
     survivor with the batch id that admitted it, read from the RAW
     survivor deltas (read_curation_survivors_with_batch — the curation
-    twin of the vector index's _rows_with_batch audit surface). The
+    twin of the vector index's raw-delta audit, state_log.read_provenance). The
     oracle derives each keeper's batch from the slice that contained
     its doc_id: with ascending doc_id slices, first-delivery-wins
     admits every capstone keeper in exactly its own slice's batch, so

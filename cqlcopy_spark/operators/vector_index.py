@@ -46,8 +46,16 @@ from pyspark.sql.functions import col
 from cqlcopy_spark.catalog import table
 from cqlcopy_spark.functions.skew import keep_min_by
 from cqlcopy_spark.plans.registry import register
+from cqlcopy_spark.streaming import state_log
 
 _CODES_SCHEMA = "vec_id long, emb array<double>, cell int, codes string"
+# the index's delta log (streaming/state_log.py): codes/ plus its
+# tombstone mask, beside the two header files the trainer writes
+INDEX_CODES = state_log.View("codes", _CODES_SCHEMA, ("vec_id",), masked=("vec_id",))
+INDEX_TOMBSTONES = state_log.View("tombstones", "vec_id long", ("vec_id",))
+VECTOR_INDEX = state_log.Family(
+    (INDEX_CODES,), INDEX_TOMBSTONES, ("centroids.parquet", "codebooks.parquet")
+)
 
 
 def _fit_from_base(base: DataFrame):
@@ -104,7 +112,7 @@ def vector_index_build(base: DataFrame, state_dir: str, batch_id: int = 0) -> No
       seed batch simply retrains over the partial state;
     - the seed delta carries the REAL batch id: with empty leading
       stream batches the seed arrives as batch K>0, and hard-coding
-      delta=0 both mislabeled _rows_with_batch provenance and made a
+      delta=0 both mislabeled the raw-delta provenance and made a
       replay of batch K anti-join against its own rows (filed under
       delta=0 < K) and write an empty delta=K. With delta=K the replay
       re-derives from state strictly below K — nothing — and rewrites
@@ -116,12 +124,10 @@ def vector_index_build(base: DataFrame, state_dir: str, batch_id: int = 0) -> No
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from cqlcopy_spark.streaming.sinks import _apply_epoch
-
     # uniform effective-id mapping across every writer of this state dir
     # (a no-op on the fresh state dirs build normally targets: no epoch
     # file exists until a vacuum bumps one)
-    batch_id = _apply_epoch(state_dir, batch_id)
+    batch_id += state_log.log_epoch(state_dir)
     seed = keep_min_by(base.select("vec_id", "emb"), "vec_id")
     coarse, books = _fit_from_base(seed)
     os.makedirs(state_dir, exist_ok=True)
@@ -207,29 +213,20 @@ def vector_index_append(new_df: DataFrame, batch_id: int, state_dir: str) -> Non
       fresh id in this model.
     The probe is asymmetric (batch × keys-only index scan) and the
     compaction cadence keeps the index file count O(1) per batch, not
-    ∝ batches (see _maybe_compact_index). Both guard reads stop
+    ∝ batches (state_log.maybe_compact). Both guard reads stop
     strictly below batch_id, so an out-of-order replay re-derives from
     exactly the state it saw the first time."""
-    from cqlcopy_spark.streaming.sinks import (
-        _maybe_compact_index,
-        _read_index_deltas,
-    )
-
-    from cqlcopy_spark.streaming.sinks import _apply_epoch
-
     spark = new_df.sparkSession
-    # effective id = batch id + persisted log epoch (0 until a vacuum
-    # bumps it) — lets the same checkpoint resume after a vacuum
-    batch_id = _apply_epoch(state_dir, batch_id)
-    codes_root = os.path.join(state_dir, "codes")
-    _below_floor_guard(codes_root, batch_id, "vector_index_append")
-    _maybe_compact_index(spark, codes_root, batch_id, _CODES_SCHEMA, ["vec_id"])
-    prior_ids = _read_index_deltas(
-        spark, codes_root, batch_id, _CODES_SCHEMA
-    ).select("vec_id")
+    batch_id = state_log.begin_batch(
+        VECTOR_INDEX.views, state_dir, batch_id, "vector_index_append"
+    )
+    state_log.maybe_compact(spark, INDEX_CODES, state_dir, batch_id)
+    prior_ids = state_log.read_view(spark, INDEX_CODES, state_dir, batch_id).select(
+        "vec_id"
+    )
     if os.path.isdir(os.path.join(state_dir, "tombstones")):
         prior_ids = prior_ids.unionByName(
-            _read_tombstones(spark, state_dir, batch_id)
+            state_log.read_view(spark, INDEX_TOMBSTONES, state_dir, batch_id)
         )
     # deterministic in-batch keeper (min emb per vec_id), never bare
     # dropDuplicates: an arbitrary pick would let a checkpoint replay of
@@ -241,16 +238,8 @@ def vector_index_append(new_df: DataFrame, batch_id: int, state_dir: str) -> Non
     )
     coarse, books = _load_artifacts(spark, state_dir)
     _encode_with(fresh, coarse, books).write.mode("overwrite").parquet(
-        os.path.join(codes_root, f"delta={batch_id}")
+        os.path.join(state_dir, "codes", f"delta={batch_id}")
     )
-
-
-def _below_floor_guard(root: str, batch_id: int, what: str) -> None:
-    """See streaming.sinks._below_floor_guard (the canonical home — the
-    guard protects every delta-log root, not just the vector index)."""
-    from cqlcopy_spark.streaming.sinks import _below_floor_guard as _guard
-
-    _guard(root, batch_id, what)
 
 
 def read_index_codes(
@@ -267,19 +256,10 @@ def read_index_codes(
     below the read point — a reader at batch id `as_of`'s exact view.
     Vacuum versions stamp above every id, so historical reads skip
     them and serve the retained raw deltas: point-in-time truth
-    survives physical pruning by construction."""
-    from cqlcopy_spark.streaming.sinks import _read_index_deltas
-
-    codes = _read_index_deltas(
-        spark, os.path.join(state_dir, "codes"), as_of, _CODES_SCHEMA
-    )
-    if not os.path.isdir(os.path.join(state_dir, "tombstones")):
-        return codes
-    # tombstones are tiny relative to codes: stats pick a broadcast
-    # anti-join unhinted (the no-SF-scaling-broadcast-hint rule)
-    return codes.join(
-        _read_tombstones(spark, state_dir, as_of), "vec_id", "left_anti"
-    )
+    survives physical pruning by construction. Tombstones are tiny
+    relative to codes: stats pick a broadcast anti-join unhinted (the
+    no-SF-scaling-broadcast-hint rule)."""
+    return state_log.read_masked(spark, VECTOR_INDEX, INDEX_CODES, state_dir, as_of)
 
 
 def vector_index_search(
@@ -506,49 +486,9 @@ def vector_index_delete(
     ONE anti-join against the compacted tombstone set (tiny relative to
     codes, broadcast by stats); physical pruning is an offline
     index-version swap, never a read-path concern."""
-    from cqlcopy_spark.streaming.sinks import _apply_epoch, _maybe_compact_index
-
-    spark = vec_ids.sparkSession
-    batch_id = _apply_epoch(state_dir, batch_id)
-    tomb_root = os.path.join(state_dir, "tombstones")
-    _below_floor_guard(tomb_root, batch_id, "vector_index_delete")
-    _maybe_compact_index(spark, tomb_root, batch_id, "vec_id long", ["vec_id"])
-    vec_ids.select("vec_id").dropDuplicates(["vec_id"]).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(tomb_root, f"delta={batch_id}"))
-
-
-def _read_tombstones(
-    spark: SparkSession, state_dir: str, below_batch: int = 1 << 62
-) -> DataFrame:
-    from cqlcopy_spark.streaming.sinks import _read_index_deltas
-
-    return _read_index_deltas(
-        spark, os.path.join(state_dir, "tombstones"), below_batch, "vec_id long"
+    state_log.write_mask(
+        VECTOR_INDEX, vec_ids, batch_id, state_dir, "vector_index_delete"
     )
-
-
-def _rows_with_batch(spark: SparkSession, root: str, schema: str) -> DataFrame:
-    """(vec_id, b) provenance over the RAW deltas of an index root —
-    compactions are skipped on purpose: deltas stay on disk as replay
-    truth, and provenance is exactly what compaction erases. Driver
-    state is one os.listdir (bounded by the delta count, which the
-    compaction cadence keeps O(batches) on disk but the LOOP here only
-    builds a union plan — rows never collect)."""
-    from cqlcopy_spark.streaming.sinks import _delta_ids
-
-    frames = [
-        spark.read.schema(schema)
-        .parquet(os.path.join(root, f"delta={b}"))
-        .select("vec_id", F.lit(b).alias("b"))
-        for b in _delta_ids(root, 1 << 62)
-    ]
-    if not frames:
-        return spark.createDataFrame([], "vec_id long, b int")
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
 
 
 def _lifecycle_state(spark: SparkSession, sf_dir: str):
@@ -595,19 +535,17 @@ def _delete_violations(
     factored so tests/test_vector_index_delete.py can corrupt a delta
     and assert the exact planted rows come back."""
     coarse, books = _load_artifacts(spark, state)
-    tombs = _read_tombstones(spark, state)
+    tombs = state_log.read_view(spark, INDEX_TOMBSTONES, state)
     survivors = corpus.join(tombs, "vec_id", "left_anti")
     oneshot = _encode_with(
         keep_min_by(survivors.select("vec_id", "emb"), "vec_id"), coarse, books
     ).select("vec_id", col("cell").alias("o_cell"), col("codes").alias("o_codes"))
     stored = read_index_codes(spark, state).select("vec_id", "cell", "codes")
 
-    codes_prov = _rows_with_batch(
-        spark, os.path.join(state, "codes"), _CODES_SCHEMA
+    codes_prov = state_log.read_provenance(spark, INDEX_CODES, state, "b")
+    tomb_prov = state_log.read_provenance(
+        spark, INDEX_TOMBSTONES, state, "tb"
     )
-    tomb_prov = _rows_with_batch(
-        spark, os.path.join(state, "tombstones"), "vec_id long"
-    ).select("vec_id", col("b").alias("tb"))
     resurrected = (
         codes_prov.join(tomb_prov, "vec_id")
         .filter(col("b") > col("tb"))
@@ -656,13 +594,14 @@ def _delete_violations(
 def vector_index_vacuum(
     spark: SparkSession, state_dir: str, bump_epoch: bool = False
 ) -> int:
-    """Physically prune tombstoned code rows AND their tombstones by
-    writing the current reader view (codes ANTI-JOIN tombstones) as a
-    new compaction version of the codes index, stamped strictly ABOVE
-    every existing delta — the version-swap lever the delete docstring
-    promises, on compact_cdc_tombstones' discipline (streaming/sinks.py:
-    offline, between batches, caller owns the horizon claim). Returns
-    the number of code rows pruned.
+    """Physically prune tombstoned code rows AND their tombstones:
+    state_log.vacuum over the VECTOR_INDEX family (the layer's docstring
+    states the layout, the stamp and the crash contract once for all
+    three families). The reader view (codes ANTI-JOIN tombstones) lands
+    as a new codes compaction stamped strictly ABOVE every existing
+    delta and compaction, and the tombstones swap to an empty
+    compaction at the same version. Returns the number of code rows
+    pruned.
 
     What changes and for whom:
     - Readers at-or-above the new version (every future read: searches,
@@ -672,20 +611,11 @@ def vector_index_vacuum(
       side stops growing with lifetime deletes.
     - RAW deltas (codes AND tombstones) are RETAINED as replay truth:
       a same-checkpoint replay of any batch b reads compactions ≤ b
-      and raw deltas — never the vacuum version stamped above it — so
-      it re-derives from exactly the state it saw the first time
-      (_read_index_deltas' out-of-order contract), and
-      _rows_with_batch provenance (the delete twin's 'resurrected'
-      check) still sees every historical write.
-
-    Monotone-log requirement: the vacuum version is stamped strictly
-    ABOVE every existing delta and compaction, so every post-vacuum
-    writer must carry a batch id above it — automatic when appends,
-    deletes and the vacuum share one monotone numbering (the offline-
-    between-batches contract). A first-time write numbered below the
-    stamp would be invisible to every reader (the compact-floor read);
-    _below_floor_guard turns that silent loss into an error while still
-    admitting legitimate out-of-order REPLAYS (their delta dirs exist).
+      and raw deltas — never the vacuum version stamped above it — and
+      the raw-delta provenance (the delete twin's 'resurrected' check)
+      still sees every historical write.
+    - Post-vacuum writers must carry batch ids above the stamp; a
+      first-time write below it raises (state_log.begin_batch).
 
     The horizon claim (caller-owned, the lakehouse-VACUUM contract):
     pruning a tombstone removes it from the append guard, so the caller
@@ -695,73 +625,26 @@ def vector_index_vacuum(
     'resurrected' invariant flags it (reader-level checks cannot, by
     construction — tests/test_vector_index_vacuum.py plants one).
 
-    Crash safety: the new codes version is a Spark overwrite write
-    (_SUCCESS-gated — a partial dir is ignored by _compact_versions and
-    overwritten on retry); superseded versions are removed only after
-    it lands; the tombstone side is swapped last. A crash between the
-    two swaps leaves pruned codes + full tombstones — a consistent,
-    merely unvacuumed-tombstone state; re-running the vacuum completes
-    it (idempotent; a re-run over a clean state is a no-op fast path).
-
-    Implementation is the shared vacuum_masked_root discipline
-    (streaming/sinks.py) — one code path for every (data, mask)
-    delta-log pair (curation_vacuum is the other instance).
-
     bump_epoch=True additionally raises the state dir's persisted log
-    epoch to the vacuum stamp (bump_log_epoch), which lets the SAME
-    checkpoint resume ingest afterwards; the default keeps the no-epoch
-    behavior (a resumed checkpoint fails loudly at _below_floor_guard).
-    Quiescence contract: see bump_log_epoch."""
-    from cqlcopy_spark.streaming.sinks import bump_log_epoch, vacuum_masked_root
-
-    n = vacuum_masked_root(
-        spark,
-        os.path.join(state_dir, "codes"),
-        os.path.join(state_dir, "tombstones"),
-        _CODES_SCHEMA,
-        "vec_id",
-        ["vec_id"],
-    )
-    if bump_epoch:
-        bump_log_epoch(
-            state_dir,
-            [os.path.join(state_dir, sub) for sub in ("codes", "tombstones")],
-        )
-    return n
+    epoch to the vacuum stamp, which lets the SAME checkpoint resume
+    ingest afterwards; the default keeps the no-epoch behavior (a
+    resumed checkpoint fails loudly at the floor guard)."""
+    return state_log.vacuum(spark, VECTOR_INDEX, state_dir, bump_epoch)
 
 
 def vector_index_clone(
     spark: SparkSession, src: str, dst: str, as_of: int
 ) -> None:
-    """BRANCH the persisted index at an as-of point (the curation
-    clone's discipline on the (codes, tombstones) pair): the trunk's
-    header artifacts are copied — the branch keeps encoding with the
+    """BRANCH the persisted index at an as-of point (state_log.clone, the
+    curation clone's discipline): the trunk's header artifacts are
+    copied by temp name + rename — the branch keeps encoding with the
     TRUNK'S codebooks, the FAISS clone semantics, which is what makes
     identical payloads encode identically across the fork — the as-of
-    codes and tombstone file sets are copied verbatim (zero-copy fork,
-    r16 — see clone_state_roots), and the branch epoch is persisted =
-    the fork point so a brand-new checkpoint's batch 0 lands exactly
-    there. Fork cost: driver-side file copies only, ZERO Spark jobs;
-    the trunk is never touched."""
-    import shutil
-
-    from cqlcopy_spark.streaming.sinks import clone_state_roots
-
-    os.makedirs(dst, exist_ok=True)
-    for name in ("centroids.parquet", "codebooks.parquet"):
-        # temp-name + os.replace: same crash discipline as the build's
-        # header writes — a torn codebooks copy is a corrupt 'trained'
-        # sentinel that flips replays onto the append path
-        tmp = os.path.join(dst, name + ".tmp")
-        shutil.copyfile(os.path.join(src, name), tmp)
-        os.replace(tmp, os.path.join(dst, name))
-    clone_state_roots(
-        spark,
-        src,
-        dst,
-        as_of,
-        (("codes", _CODES_SCHEMA, ["vec_id"]), ("tombstones", "vec_id long", ["vec_id"])),
-    )
+    codes and tombstone file sets are copied verbatim, and the branch
+    epoch is persisted = the fork point so a brand-new checkpoint's
+    batch 0 lands exactly there. Fork cost: driver-side file copies
+    only, ZERO Spark jobs; the trunk is never touched."""
+    state_log.clone(VECTOR_INDEX, src, dst, as_of)
 
 
 @register("similarity_index_branch_verify", oracle=_INDEX_VERIFY_ORACLE)
@@ -806,16 +689,6 @@ def _branch_violations(
         "vec_id", F.lit("extra_in_branch").alias("kind")
     )
     return missing.unionByName(extra)
-
-
-def _read_index_deltas_codes(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The cumulative codes state WITHOUT the tombstone mask — the
-    physical row set read_index_codes starts from."""
-    from cqlcopy_spark.streaming.sinks import _read_index_deltas
-
-    return _read_index_deltas(
-        spark, os.path.join(state_dir, "codes"), 1 << 62, _CODES_SCHEMA
-    )
 
 
 @register("similarity_index_vacuum_verify", oracle=_INDEX_VERIFY_ORACLE)
@@ -884,7 +757,7 @@ def _pre_vacuum_snapshot(spark: SparkSession, state: str):
             .parquet(pre_view_dir)
         )
 
-    raw_tombs = _read_tombstones(spark, state).persist()
+    raw_tombs = state_log.read_view(spark, INDEX_TOMBSTONES, state).persist()
     # the corpus-view snapshot write and the tombstone materialization
     # are independent read-only jobs over the pre-vacuum state — overlap
     # them (guide §2.6); both must complete before the swap empties what
@@ -943,11 +816,11 @@ def _vacuum_violations(
         .select("vec_id", F.lit("view_drift").alias("kind"))
     )
     dead = (
-        _read_index_deltas_codes(spark, state)
+        state_log.read_view(spark, INDEX_CODES, state)
         .join(raw_tombs, "vec_id", "left_semi")
         .select("vec_id", F.lit("dead_row").alias("kind"))
     )
-    residue = _read_tombstones(spark, state).select(
+    residue = state_log.read_view(spark, INDEX_TOMBSTONES, state).select(
         "vec_id", F.lit("tombstone_residue").alias("kind")
     )
     # no trailing orderBy (CLAUDE.md): an empty relation needs no sort

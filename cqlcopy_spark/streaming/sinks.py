@@ -18,6 +18,18 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import DataStreamWriter
 
+from cqlcopy_spark.functions.skew import keep_min_by
+from cqlcopy_spark.operators.dedup import (
+    _N_BANDS,
+    _band_rows,
+    _minhash_verify_pairs,
+    _with_minhash_sig,
+)
+from cqlcopy_spark.operators.text import _PACK_SHARDS, _curation_gated
+from cqlcopy_spark.streaming import state_log
+# log_epoch stays importable from here: callers read sinks.log_epoch
+from cqlcopy_spark.streaming.state_log import log_epoch  # noqa: F401
+
 
 def exactly_once_parquet_sink(
     stream_df: DataFrame, out_dir: str, checkpoint_dir: str
@@ -90,7 +102,6 @@ def _run_guard(state_dir: str, qid: str, on_new_run: str, sink: str) -> bool:
     across checkpoint lineages can double-count/misorder because batch
     ids restart and may slice the source differently."""
     import json
-    import re
     import shutil
 
     marker = os.path.join(state_dir, "_run.json")
@@ -108,9 +119,8 @@ def _run_guard(state_dir: str, qid: str, on_new_run: str, sink: str) -> bool:
             "the original checkpoint, point at a fresh state_dir, or pass "
             "on_new_run='restart' to discard the old lineage and recompute."
         )
-    for d in os.listdir(state_dir):
-        if re.fullmatch(r"v=(\d+)", d):
-            shutil.rmtree(os.path.join(state_dir, d), ignore_errors=True)
+    for v in state_log.versions(state_dir):
+        shutil.rmtree(os.path.join(state_dir, f"v={v}"), ignore_errors=True)
     return False
 
 
@@ -121,17 +131,39 @@ def _write_run_marker(state_dir: str, qid: str) -> None:
         json.dump({"query_id": qid}, f)
 
 
-def _latest_version_below(state_dir: str, batch_id: int) -> "int | None":
-    import re
+def _check_on_new_run(on_new_run: str) -> None:
+    if on_new_run not in ("error", "restart"):
+        raise ValueError(
+            f"on_new_run must be 'error' or 'restart', got {on_new_run!r}"
+        )
 
-    if not os.path.isdir(state_dir):
-        return None
-    versions = [
-        int(m.group(1))
-        for d in os.listdir(state_dir)
-        if (m := re.fullmatch(r"v=(\d+)", d))
-    ]
-    below = [v for v in versions if v < batch_id]
+
+def _state_log_sink(
+    stream_df, state_dir, checkpoint_dir, on_new_run, sink, family, apply
+) -> DataStreamWriter:
+    """The foreachBatch writer of the delta-log sinks: per micro-batch,
+    the cross-run guard (a foreign lineage raises, or with 'restart'
+    wipes the family's state — batch ids restart across checkpoint
+    lineages, so merging deltas across runs would double-admit), then
+    `apply(batch_df, batch_id, state_dir)`, then the run marker — unless
+    apply returns False (it wrote nothing)."""
+    _check_on_new_run(on_new_run)
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        qid = _checkpoint_query_id(checkpoint_dir)
+        if not _run_guard(state_dir, qid, on_new_run, sink):
+            state_log.wipe(family, state_dir)
+        os.makedirs(state_dir, exist_ok=True)
+        if apply(batch_df, batch_id, state_dir) is not False:
+            _write_run_marker(state_dir, qid)
+
+    return stream_df.writeStream.foreachBatch(write_batch).option(
+        "checkpointLocation", checkpoint_dir
+    )
+
+
+def _latest_version_below(state_dir: str, batch_id: int) -> "int | None":
+    below = [v for v in state_log.versions(state_dir) if v < batch_id]
     return max(below) if below else None
 
 
@@ -171,8 +203,7 @@ def continuous_agg_sink(
     is never retained."""
     from pyspark.sql import functions as F
 
-    if on_new_run not in ("error", "restart"):
-        raise ValueError(f"on_new_run must be 'error' or 'restart', got {on_new_run!r}")
+    _check_on_new_run(on_new_run)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -225,14 +256,8 @@ def continuous_agg_sink(
 
 def read_agg_state(spark, state_dir: str) -> DataFrame:
     """Latest version of a continuous_agg_sink state table."""
-    import re
-
-    versions = [
-        int(m.group(1))
-        for d in os.listdir(state_dir)
-        if (m := re.fullmatch(r"v=(\d+)", d))
-    ]
-    return spark.read.parquet(os.path.join(state_dir, f"v={max(versions)}"))
+    v = max(state_log.versions(state_dir))
+    return spark.read.parquet(os.path.join(state_dir, f"v={v}"))
 
 
 def continuous_cdc_sink(
@@ -264,8 +289,7 @@ def continuous_cdc_sink(
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    if on_new_run not in ("error", "restart"):
-        raise ValueError(f"on_new_run must be 'error' or 'restart', got {on_new_run!r}")
+    _check_on_new_run(on_new_run)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -338,8 +362,7 @@ def continuous_topk_sink(
     TakeOrdered(k+1): executor-side and shuffle-light at any rate."""
     from pyspark.sql import functions as F
 
-    if on_new_run not in ("error", "restart"):
-        raise ValueError(f"on_new_run must be 'error' or 'restart', got {on_new_run!r}")
+    _check_on_new_run(on_new_run)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -437,7 +460,6 @@ def compact_state_versions(state_dir: str, keep_last: int = 2) -> "list[int]":
     replay silently restart the accumulation from the batch alone
     (review finding: the earlier ≥1 guard contradicted the sinks'
     replay contract)."""
-    import re
     import shutil
 
     if keep_last < 2:
@@ -446,259 +468,10 @@ def compact_state_versions(state_dir: str, keep_last: int = 2) -> "list[int]":
             "the version below it — with only one version kept, that "
             "replay would silently reset the accumulated state"
         )
-    if not os.path.isdir(state_dir):
-        return []
-    versions = sorted(
-        int(m.group(1))
-        for d in os.listdir(state_dir)
-        if (m := re.fullmatch(r"v=(\d+)", d))
-    )
-    drop = versions[:-keep_last]
+    drop = state_log.versions(state_dir)[:-keep_last]
     for v in drop:
         shutil.rmtree(os.path.join(state_dir, f"v={v}"), ignore_errors=True)
     return drop
-
-
-def vacuum_masked_root(
-    spark,
-    data_root: str,
-    mask_root: str,
-    schema: str,
-    key: str,
-    layout_cols: "list[str]",
-) -> int:
-    """Generic offline version swap for a (data, mask) delta-log pair —
-    the physical-pruning lever shared by the vector index
-    (codes/tombstones) and the curation log (survivors/takedowns):
-    rewrite data-ANTI-JOIN-mask as a new data compaction stamped
-    strictly ABOVE every existing delta and compaction of EITHER root,
-    then swap the mask to an empty compaction at the same version.
-    Returns the number of data rows pruned.
-
-    Contract (see vector_index_vacuum for the full argument, proven by
-    similarity_index_vacuum_verify + tests):
-    - readers at/above the stamp see pruned data + an empty mask — the
-      data scan stops carrying dead rows and the per-read mask
-      anti-join's build side stops growing with lifetime retirements;
-    - RAW deltas of both roots are RETAINED as replay truth
-      (out-of-order same-checkpoint replays read compactions ≤
-      themselves and fall back to deltas) and as provenance;
-    - the caller owns the horizon claim: pruning the mask removes it
-      from any writer-side first-delivery guard, so nothing retired
-      before the vacuum may ever be re-delivered (a producer that
-      breaks the claim is still caught by raw-delta provenance);
-    - post-vacuum writers must continue strictly above the stamp
-      (_below_floor_guard turns violations into errors);
-    - crash-safe and idempotent: the data swap is _SUCCESS-gated and
-      lands before the mask swap, so a crash between the two leaves a
-      consistent merely-unvacuumed-mask state that a re-run completes;
-      a re-run over a clean state is a no-op fast path.
-
-    Streaming-checkpoint caveat: Structured Streaming batch ids are
-    checkpoint-owned and resume at small values, so RESUMING the same
-    checkpoint after a vacuum stamped above them would write
-    reader-invisible deltas — every writer's _below_floor_guard turns
-    that into a loud error instead of silent loss. Supported
-    compositions: vacuum after the checkpoint retires, or continue
-    ingest through the batch kernels with explicit ids above the
-    stamp. The production lever for live pipelines is a persisted log
-    epoch (effective id = batch id + offset bumped at vacuum time) —
-    a table-format-style version counter decoupled from the
-    checkpoint — not implemented here."""
-    return vacuum_masked_roots(
-        spark, [(data_root, schema, [key], layout_cols)], mask_root, key
-    )
-
-
-def vacuum_masked_roots(
-    spark,
-    data_specs: "list[tuple]",
-    mask_root: str,
-    mask_key: str,
-    extra_id_roots: "tuple[str, ...]" = (),
-) -> int:
-    """The multi-root generalization of vacuum_masked_root (same
-    contract, see there): `data_specs` is a list of
-    (root, schema, mask_cols, layout_cols) — each data root is pruned
-    of rows whose ANY mask_cols column matches a retired `mask_key`,
-    covering both id-keyed roots (mask_cols = [key]) and relation roots
-    carrying the key in several columns (the minhash PAIR report:
-    mask_cols = [new_doc, dup_of]). Every data root's new version lands
-    BEFORE the single mask swap — a crash mid-way leaves some roots
-    pruned at a lower version and the mask intact, and the re-run
-    restamps everything above it (wasteful, never wrong).
-
-    r16 job-count optimization (guide §1.4/§2.6): the pruned-row counts
-    come from parquet FOOTER row counts, driver-side (rows under the
-    input path set minus rows under the written compaction — num_rows
-    is mandatory footer metadata, always exact; zero extra Spark jobs,
-    where the previous shape paid 1-2 dedicated count jobs per root —
-    and no Observation/CollectMetrics node, which the optimizer may
-    prune with the whole subtree on an empty root), the fast path is
-    `mask.isEmpty()` alone (an empty mask prunes nothing by
-    construction, so the old `n_pruned == 0 and mask.isEmpty()` test is
-    equivalent), and the independent per-root rewrites run concurrently
-    from a small thread pool — actions are only sequential when the
-    driver calls them sequentially, and the roots share no state. The
-    mask swap still lands strictly LAST, after every root's write has
-    joined."""
-    import shutil
-    from concurrent.futures import ThreadPoolExecutor
-
-    if not os.path.isdir(mask_root):
-        return 0  # nothing retired — nothing to prune
-    everything = _delta_ids(mask_root, 1 << 62) + _compact_versions(mask_root)
-    for spec in data_specs:
-        root = spec[0]
-        everything += _delta_ids(root, 1 << 62) + _compact_versions(root)
-    # roots whose DELTAS feed a virtual data view (the curation
-    # survivors derive from the ths deltas — r17 single-write layout):
-    # the stamp must clear their ids too, or a delta at/above the stamp
-    # would be double-counted (inside the compaction AND the tail scan)
-    for root in extra_id_roots:
-        everything += _delta_ids(root, 1 << 62)
-    if not everything:
-        return 0
-    vid = 1 + max(everything)
-    if _parquet_dir_rows(_index_delta_paths(mask_root, 1 << 62)) == 0:
-        # an empty mask prunes nothing and needs no swap — the state
-        # right after a completed vacuum. Without this fast path a
-        # re-run rewrote the whole corpus as a fresh version for
-        # nothing. A crash BETWEEN the swaps leaves mask rows still
-        # visible, which falls through and completes the vacuum (the
-        # crash-retry contract). Emptiness is answered DRIVER-SIDE from
-        # the parquet footer row counts of the exact file set the mask
-        # read resolves (r16, guide §6) — the former mask.isEmpty()
-        # paid a Spark job for the same bit.
-        return 0
-    mask = _read_index_deltas(spark, mask_root, 1 << 62, f"{mask_key} long")
-
-    def _rewrite_root(spec) -> int:
-        # a 5-tuple carries a `source` callable -> (rows_in, view) for
-        # roots whose data view is VIRTUAL (compactions under `root`,
-        # deltas resolved elsewhere — the curation survivors, the
-        # minhash bands); the 4-tuple default reads the root's own
-        # compact+delta file set
-        if len(spec) == 5:
-            root, schema, mask_cols, layout_cols, source = spec
-            rows_in, view = source()
-        else:
-            root, schema, mask_cols, layout_cols = spec
-            in_paths = _index_delta_paths(root, 1 << 62)
-            # count BEFORE the write: the post-write cleanup removes the
-            # superseded compaction this path set may include
-            rows_in = _parquet_dir_rows(in_paths)
-            view = (
-                spark.read.schema(schema).parquet(*in_paths)
-                if in_paths
-                else spark.createDataFrame([], schema)
-            )
-        for c in mask_cols:
-            view = view.join(
-                mask.withColumnRenamed(mask_key, c), c, "left_anti"
-            )
-        out_path = os.path.join(root, "compact", f"v={vid}")
-        (
-            view.repartition(*layout_cols)
-            .sortWithinPartitions(*layout_cols)
-            .write.mode("overwrite")
-            .parquet(out_path)
-        )
-        for v in _compact_versions(root):
-            if v < vid:
-                shutil.rmtree(
-                    os.path.join(root, "compact", f"v={v}"), ignore_errors=True
-                )
-        # the anti-join is row-preserving on the keep side, so footer
-        # accounting (inputs minus written compaction) IS the prune count
-        return rows_in - _parquet_dir_rows([out_path])
-
-    with ThreadPoolExecutor(max_workers=min(3, len(data_specs))) as pool:
-        n_pruned = sum(pool.map(_rewrite_root, data_specs))
-    # mask swap LAST: an empty compaction at the same version — every
-    # pre-vacuum mask row is already reflected in the pruned data
-    # versions, so readers at/above vid need none of them. Written
-    # DRIVER-SIDE with pyarrow (r16, guide §1.4): a zero-row parquet
-    # file is pure metadata, and the former Spark write paid a whole
-    # job for it. Crash discipline identical to the committer's:
-    # _SUCCESS lands last, and _compact_versions ignores markerless
-    # dirs, so a torn write is invisible and the retry overwrites.
-    # Readers force the schema (`spark.read.schema(...)`), so the
-    # int64 column matches the `{mask_key} long` contract exactly.
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    swap_dir = os.path.join(mask_root, "compact", f"v={vid}")
-    shutil.rmtree(swap_dir, ignore_errors=True)
-    os.makedirs(swap_dir)
-    pq.write_table(
-        pa.table({mask_key: pa.array([], type=pa.int64())}),
-        os.path.join(swap_dir, "part-00000.parquet"),
-    )
-    with open(os.path.join(swap_dir, "_SUCCESS"), "w", encoding="utf-8"):
-        pass
-    for v in _compact_versions(mask_root):
-        if v < vid:
-            shutil.rmtree(
-                os.path.join(mask_root, "compact", f"v={v}"), ignore_errors=True
-            )
-    return n_pruned
-
-
-def curation_vacuum(spark, state_dir: str, bump_epoch: bool = False) -> int:
-    """Physically prune taken-down survivor rows AND their takedown
-    masks from a curation state — vacuum_masked_root applied to the
-    (survivors, takedowns) pair. Reader-view invariance, idempotence
-    and the retained-raw-delta replay truth are pinned in
-    tests/test_curation_takedown.py; driver-checked directly by
-    stream_curation_vacuum (operators/text.py) and by the vector
-    index's similarity_index_vacuum_verify (identical code path).
-
-    bump_epoch=True additionally raises the state dir's persisted log
-    epoch to the vacuum stamp (bump_log_epoch — covering the ths root
-    too, so every kernel under this dir stays monotone), which lets the
-    SAME checkpoint resume ingest afterwards; the default keeps the
-    no-epoch behavior (a resumed checkpoint fails loudly at
-    _below_floor_guard). Quiescence contract: see bump_log_epoch.
-
-    r17 single-write layout: the survivor view is VIRTUAL (vacuum
-    compactions under survivors/ + the raw admitted-row ths deltas
-    above the floor — _survivor_frame), so the data spec carries a
-    source callable and the stamp derivation clears the ths delta ids;
-    the compaction this writes is a plain (doc_id, shard, n_tokens)
-    parquet dir, exactly the pre-r17 shape."""
-
-    def _survivor_source():
-        compact, deltas = _survivor_sources(state_dir, 1 << 62)
-        return (
-            _parquet_dir_rows(compact + deltas),
-            _survivor_frame(spark, state_dir, 1 << 62),
-        )
-
-    n = vacuum_masked_roots(
-        spark,
-        [
-            (
-                os.path.join(state_dir, "survivors"),
-                _SURVIVOR_SCHEMA,
-                ["doc_id"],
-                ["doc_id"],
-                _survivor_source,
-            )
-        ],
-        os.path.join(state_dir, "takedowns"),
-        "doc_id",
-        extra_id_roots=(os.path.join(state_dir, "ths"),),
-    )
-    if bump_epoch:
-        bump_log_epoch(
-            state_dir,
-            [
-                os.path.join(state_dir, sub)
-                for sub in ("survivors", "takedowns", "ths")
-            ],
-        )
-    return n
 
 
 def compact_cdc_tombstones(
@@ -716,15 +489,9 @@ def compact_cdc_tombstones(
     those tombstones dropped (live rows are never touched) and returns
     the number removed. The caller owns the watermark claim — exactly
     the contract of a lakehouse VACUUM horizon."""
-    import re
-
     from pyspark.sql import functions as F
 
-    versions = [
-        int(m.group(1))
-        for d in (os.listdir(state_dir) if os.path.isdir(state_dir) else [])
-        if (m := re.fullmatch(r"v=(\d+)", d))
-    ]
+    versions = state_log.versions(state_dir)
     if not versions:
         return 0
     latest = os.path.join(state_dir, f"v={max(versions)}")
@@ -776,8 +543,7 @@ def continuous_quantile_sink(
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    if on_new_run not in ("error", "restart"):
-        raise ValueError(f"on_new_run must be 'error' or 'restart', got {on_new_run!r}")
+    _check_on_new_run(on_new_run)
 
     def summarize(df, w_col: str, total: int):
         """k-point weighted summary of (value, weight) rows: cumulative
@@ -898,356 +664,59 @@ def read_quantile_state(spark, state_dir: str, ps=(0.5, 0.9, 0.99)) -> DataFrame
     )
 
 
-def _delta_ids(root: str, below_batch: int) -> list[int]:
-    import re
+def _survivor_projection(frame: DataFrame) -> DataFrame:
+    """(doc_id, shard, n_tokens) from admitted ths rows: shard =
+    doc_id % _PACK_SHARDS (Spark `%` matches the oracle's on negative
+    ids), n_tokens = n_toks, all BIGINT."""
+    from pyspark.sql.functions import col
 
-    if not os.path.isdir(root):
-        return []
-    return sorted(
-        int(m.group(1))
-        for d in os.listdir(root)
-        if (m := re.fullmatch(r"delta=(\d+)", d)) and int(m.group(1)) < below_batch
+    return frame.select(
+        "doc_id",
+        (col("doc_id") % _PACK_SHARDS).alias("shard"),
+        col("n_toks").alias("n_tokens"),
     )
 
 
-def _compact_versions(root: str) -> list[int]:
-    """COMPLETE compaction versions under root/compact (``v=<b>`` dirs
-    with a _SUCCESS marker — a crash mid-compaction leaves no marker
-    and the partial dir is ignored, then overwritten on retry)."""
-    import re
+# The two state families of this module (the vector index's is in
+# operators/vector_index.py). One ingest batch writes ONE delta per
+# family: ths/delta=<b> carries the full admitted row, hashes/delta=<b>
+# the gram hashes plus the MinHash signature. The survivor and band
+# views are projections of those deltas; survivors/ and bands/ hold
+# compactions only (vacuum output, and the (band, key)-clustered probe
+# index).
+TAKEDOWNS = state_log.View("takedowns", "doc_id long", ("doc_id",))
+CURATION_THS = state_log.View("ths", "th string", ("th",))
+CURATION_SURVIVORS = state_log.View(
+    "survivors",
+    "doc_id long, shard long, n_tokens long",
+    ("doc_id",),
+    deltas="ths",
+    delta_schema="th string, doc_id long, n_toks long",
+    project=_survivor_projection,
+    masked=("doc_id",),
+)
+CURATION = state_log.Family((CURATION_THS, CURATION_SURVIVORS), TAKEDOWNS)
 
-    croot = os.path.join(root, "compact")
-    if not os.path.isdir(croot):
-        return []
-    return sorted(
-        int(m.group(1))
-        for d in os.listdir(croot)
-        if (m := re.fullmatch(r"v=(\d+)", d))
-        and os.path.exists(os.path.join(croot, d, "_SUCCESS"))
-    )
-
-
-def _below_floor_guard(
-    root: str, batch_id: int, what: str, replay_root: "str | None" = None
-) -> None:
-    """Refuse a FIRST-TIME write whose batch id sits below the root's
-    newest compaction version: every reader resolves state as (newest
-    compaction ≤ reader) + (deltas ≥ that version), so such a delta
-    would be invisible to every current reader — silently lost data.
-    This state can only arise from a non-monotone log: an out-of-band
-    writer numbering below a compaction or vacuum stamp (a vacuum stamps
-    strictly above every existing id, so post-vacuum writers must
-    continue above it). A REPLAY of the same batch id is legitimate and
-    passes: its delta dir already exists (replays rewrite identical
-    content — the idempotence contract — and out-of-order replays below
-    a later batch's compaction are exactly what the retained raw deltas
-    are for). `replay_root` names the root whose DELTA dirs witness a
-    replay when it differs from the floor's root — the curation
-    survivor view keeps its vacuum floor under survivors/ while its
-    deltas live under ths/ (r17 single-write layout)."""
-    vs = _compact_versions(root)
-    if (
-        vs
-        and batch_id < vs[-1]
-        and not os.path.isdir(
-            os.path.join(replay_root or root, f"delta={batch_id}")
-        )
-    ):
-        raise ValueError(
-            f"{what}: batch_id {batch_id} is below this index root's "
-            f"compaction floor v={vs[-1]} and is not a replay (no "
-            f"existing delta={batch_id}) — the write would be invisible "
-            "to every reader. Writers must use monotone batch ids; "
-            "after a vacuum, continue strictly above the vacuum version."
-        )
-
-
-_EPOCH_FILE = "_log_epoch"
-
-
-def log_epoch(state_dir: str) -> int:
-    """Persisted log-epoch offset of a state dir — 0 until a vacuum
-    bumps it (bump_log_epoch). Every batch kernel writing under this
-    state dir maps its checkpoint-owned batch id to
-    ``effective id = batch id + epoch`` (_apply_epoch), which is what
-    lets the SAME Structured Streaming checkpoint resume after a vacuum
-    stamped above its small restart ids: the offset lifts every future
-    write above the vacuum version, exactly a table-format version
-    counter decoupled from the checkpoint (the lever the
-    vacuum_masked_root docstring names).
-
-    A malformed file raises rather than silently reading 0 — an
-    under-numbered effective id is the reader-invisible-delta silent
-    loss the _below_floor_guard exists to prevent."""
-    p = os.path.join(state_dir, _EPOCH_FILE)
-    try:
-        with open(p, encoding="utf-8") as f:
-            return int(f.read().strip())
-    except FileNotFoundError:
-        return 0
-
-
-def _apply_epoch(state_dir: str, batch_id: int) -> int:
-    return batch_id + log_epoch(state_dir)
-
-
-def _clear_log_epoch(state_dir: str) -> None:
-    """Remove the epoch file — part of every sink's 'restart' wipe: the
-    epoch exists to keep effective ids above the wiped state's vacuum
-    stamps, and a fresh lineage over an empty state has none."""
-    try:
-        os.remove(os.path.join(state_dir, _EPOCH_FILE))
-    except FileNotFoundError:
-        pass
-
-
-def bump_log_epoch(state_dir: str, roots: "list[str]") -> int:
-    """Raise the state dir's log epoch to sit at/above every existing
-    delta id and compaction version across `roots` — called by a vacuum
-    (with bump_epoch=True) so a LIVE pipeline's checkpoint can resume
-    afterwards: the next batch 0 maps to the vacuum stamp itself (the
-    newest compaction version — a reader at that id sees exactly the
-    vacuumed state), later batches strictly above it, and no effective
-    id ever collides with an existing delta (existing ids contribute
-    id+1 to the stamp).
-
-    Monotone and idempotent: never decreases, re-running after a
-    completed vacuum recomputes the same value. Atomic temp-name +
-    os.replace write — a crash before the replace leaves the old epoch,
-    and resuming the checkpoint then fails LOUDLY at _below_floor_guard
-    (recoverable: re-run the vacuum with bump_epoch=True; the no-op
-    fast path still re-bumps).
-
-    Quiescence contract (caller-owned, same as any table-format
-    compaction vs concurrent writers): bump only against a CLEANLY
-    STOPPED stream. If the checkpoint has an uncommitted in-flight
-    batch, its post-bump replay maps to a fresh effective id and
-    re-derives against the VACUUMED state — rows of that batch that the
-    vacuum pruned are no longer in the first-delivery guard and would
-    re-land, a resurrection the raw-delta provenance check flags but
-    the reader cannot (the horizon claim)."""
-    stamp = 0
-    for r in roots:
-        stamp = max(
-            [stamp]
-            + [i + 1 for i in _delta_ids(r, 1 << 62)]
-            + _compact_versions(r)
-        )
-    new = max(stamp, log_epoch(state_dir))
-    if new != log_epoch(state_dir):
-        os.makedirs(state_dir, exist_ok=True)
-        tmp = os.path.join(state_dir, _EPOCH_FILE + ".tmp")
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(str(new))
-        os.replace(tmp, os.path.join(state_dir, _EPOCH_FILE))
-    return new
-
-
-_COMPACT_EVERY = 4  # compact once this many deltas accumulate below a batch
-
-
-def _maybe_compact_index(
-    spark, root: str, batch_id: int, schema: str, layout_cols: list[str]
-) -> None:
-    """Compact the index deltas strictly below batch_id into ONE
-    ``compact/v=<batch_id>`` dir, hash-clustered and sorted on
-    layout_cols (r8 VERDICT item 2: the band probe must stop rescanning
-    every delta — at thousands of production batches the per-batch
-    probe's file count was ∝ corpus, the exact 'production replaces
-    with a bucketed table probe' debt the docstring carried).
-
-    INCREMENTAL: each compaction merges the PREVIOUS compact version
-    with only the tail deltas since it (never re-reading all raw
-    deltas — a cumulative re-read would be O(batches²) total I/O), and
-    fires only when _COMPACT_EVERY tail deltas have accumulated SINCE
-    the newest compaction, so between fires a batch does no compaction
-    work at all. Superseded compact versions are deleted after the new
-    one lands (disk = raw deltas + ONE compact copy, not a copy per
-    fire). Write amplification is one corpus rewrite per
-    _COMPACT_EVERY batches — the standard compaction trade; a
-    production deployment layers size-tiered levels on the same
-    contract.
-
-    Deltas stay on disk as the source of truth: a batch can replay OUT
-    OF ORDER after later batches ran (the sink contract — see
-    test_minhash_apply_batch_replay_is_idempotent, which replays the
-    middle batch), and such a replay needs exactly the deltas below
-    ITSELF; _read_index only consults a compact version ≤ the reading
-    batch, falling back to raw deltas, so compaction — and the
-    deletion of superseded compact versions — can never change what
-    any batch sees. Idempotent: a replay of the trigger batch finds
-    its complete v=<batch_id> and skips; a crash mid-write leaves no
-    _SUCCESS and the retry overwrites. At cluster scale the compact
-    dir becomes a metastore bucketed table (bucketBy(layout_cols)) so
-    the probe join also skips the corpus-side shuffle; the sorted
-    parquet layout here is the same data arrangement without the
-    single-session metastore dependency."""
-    import shutil
-
-    ids = _delta_ids(root, batch_id)
-    vs = _compact_versions(root)
-    if vs and vs[-1] >= batch_id:
-        return  # this batch's (or a later) compaction already complete
-    floor = vs[-1] if vs else 0
-    tail = [i for i in ids if i >= floor]
-    if len(tail) < _COMPACT_EVERY:
-        return
-    paths = [os.path.join(root, "compact", f"v={floor}")] if vs else []
-    paths += [os.path.join(root, f"delta={i}") for i in tail]
-    (
-        spark.read.schema(schema)
-        .parquet(*paths)
-        .repartition(*layout_cols)
-        .sortWithinPartitions(*layout_cols)
-        .write.mode("overwrite")
-        .parquet(os.path.join(root, "compact", f"v={batch_id}"))
-    )
-    # superseded versions: readers at-or-above batch_id use the new one,
-    # readers below it fall back to the retained raw deltas either way
-    for v in vs:
-        shutil.rmtree(os.path.join(root, "compact", f"v={v}"), ignore_errors=True)
-
-
-_HASHES_DELTA_SCHEMA = "doc_id long, hashes array<long>, sig array<long>"
-_BAND_SCHEMA = "doc_id long, band int, key string"
-
-
-def _band_sources(
-    state_dir: str, below_batch: int
-) -> "tuple[list[str], list[str]]":
-    """(band-compaction paths, raw hashes-delta paths) a band reader at
-    `below_batch` resolves under the r17 single-write layout: the
-    newest COMPLETE (band, key)-clustered compaction v ≤ below_batch
-    under bands/ plus the raw hashes deltas in [v, below_batch), whose
-    band rows are DERIVED from the persisted sig column (_band_frame).
-    One delta write per batch serves the signature index, the refine
-    reads and the band probe; the clustered compaction — the shape a
-    production probe buckets on — still materializes real band rows at
-    the _COMPACT_EVERY cadence."""
-    bands_root = os.path.join(state_dir, "bands")
-    usable = [v for v in _compact_versions(bands_root) if v <= below_batch]
-    floor = usable[-1] if usable else 0
-    compact = (
-        [os.path.join(bands_root, "compact", f"v={floor}")] if usable else []
-    )
-    h_root = os.path.join(state_dir, "hashes")
-    deltas = [
-        os.path.join(h_root, f"delta={i}")
-        for i in _delta_ids(h_root, below_batch)
-        if i >= floor
-    ]
-    return compact, deltas
-
-
-def _band_frame(spark, state_dir: str, below_batch: int) -> DataFrame:
-    """The cumulative (doc_id, band, key) index strictly below
-    `below_batch`: the newest clustered compaction union the band rows
-    derived from the raw hashes-delta tail — the LITERAL _band_rows
-    expression over the persisted sig, so the derived rows are bitwise
-    the rows the pre-r17 bands delta write materialized."""
-    from cqlcopy_spark.operators.dedup import _band_rows
-
-    compact, deltas = _band_sources(state_dir, below_batch)
-    parts = []
-    if compact:
-        parts.append(spark.read.schema(_BAND_SCHEMA).parquet(*compact))
-    if deltas:
-        parts.append(
-            _band_rows(
-                spark.read.schema(_HASHES_DELTA_SCHEMA).parquet(*deltas)
-            )
-        )
-    if not parts:
-        return spark.createDataFrame([], _BAND_SCHEMA)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _maybe_compact_bands(spark, state_dir: str, batch_id: int) -> None:
-    """_maybe_compact_index for the VIRTUAL bands root: same trigger
-    (≥ _COMPACT_EVERY tail deltas since the newest compaction, measured
-    on the hashes deltas — the band deltas of the r17 layout), same
-    incremental merge (previous compaction + derived tail only), same
-    (band, key)-clustered output and superseded-version cleanup, same
-    idempotence (a replay of the trigger batch finds its complete
-    v=<batch_id> and skips; a crash leaves no _SUCCESS)."""
-    import shutil
-
-    bands_root = os.path.join(state_dir, "bands")
-    ids = _delta_ids(os.path.join(state_dir, "hashes"), batch_id)
-    vs = _compact_versions(bands_root)
-    if vs and vs[-1] >= batch_id:
-        return  # this batch's (or a later) compaction already complete
-    floor = vs[-1] if vs else 0
-    tail = [i for i in ids if i >= floor]
-    if len(tail) < _COMPACT_EVERY:
-        return
-    (
-        _band_frame(spark, state_dir, batch_id)
-        .repartition("band", "key")
-        .sortWithinPartitions("band", "key")
-        .write.mode("overwrite")
-        .parquet(os.path.join(bands_root, "compact", f"v={batch_id}"))
-    )
-    for v in vs:
-        shutil.rmtree(
-            os.path.join(bands_root, "compact", f"v={v}"), ignore_errors=True
-        )
-
-
-def _index_delta_paths(root: str, below_batch: int) -> "list[str]":
-    """The exact directory set _read_index_deltas resolves: the newest
-    COMPLETE compaction v ≤ below_batch plus the raw deltas in
-    [v, below_batch). Factored so footer-level accounting
-    (_parquet_dir_rows) counts the same files the frame reads."""
-    usable = [v for v in _compact_versions(root) if v <= below_batch]
-    paths = []
-    floor = 0
-    if usable:
-        floor = usable[-1]
-        paths.append(os.path.join(root, "compact", f"v={floor}"))
-    paths += [
-        os.path.join(root, f"delta={i}")
-        for i in _delta_ids(root, below_batch)
-        if i >= floor
-    ]
-    return paths
-
-
-def _parquet_dir_rows(paths: "list[str]") -> int:
-    """Exact total row count of the parquet part-files under `paths`
-    (each a delta/compaction directory), read DRIVER-SIDE from the
-    footers — `num_rows` is mandatory parquet metadata, not optional
-    column statistics, so this is always exact and costs no Spark job
-    (guide §1.4/§6: let metadata answer what metadata can)."""
-    import pyarrow.parquet as pq
-
-    n = 0
-    for p in paths:
-        for f in os.listdir(p):
-            if f.endswith(".parquet"):
-                n += pq.ParquetFile(os.path.join(p, f)).metadata.num_rows
-    return n
-
-
-def _read_index_deltas(
-    spark, root: str, below_batch: int, schema: str
-) -> DataFrame:
-    """Index state strictly below below_batch: the newest COMPLETE
-    compaction v ≤ below_batch (covering every delta < v) plus the raw
-    deltas in [v, below_batch) — or all raw deltas when no usable
-    compaction exists (empty frame with `schema` when none at all).
-    Reading strictly BELOW the current batch id is what makes a
-    replayed batch re-derive from the same corpus state it saw the
-    first time; ignoring compactions NEWER than the reader keeps
-    out-of-order replays correct (a middle batch replayed after later
-    batches must not see a compact table that includes itself)."""
-    paths = _index_delta_paths(root, below_batch)
-    if not paths:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*paths)
+MINHASH_HASHES = state_log.View(
+    "hashes", "doc_id long, hashes array<long>", ("doc_id",), masked=("doc_id",)
+)
+MINHASH_BANDS = state_log.View(
+    "bands",
+    "doc_id long, band int, key string",
+    ("band", "key"),
+    deltas="hashes",
+    delta_schema="doc_id long, hashes array<long>, sig array<long>",
+    project=_band_rows,
+    fanout=_N_BANDS,
+    masked=("doc_id",),
+)
+MINHASH_PAIRS = state_log.View(
+    "pairs",
+    "new_doc long, dup_of long, jaccard double",
+    ("new_doc", "dup_of"),
+    masked=("new_doc", "dup_of"),
+)
+MINHASH = state_log.Family((MINHASH_HASHES, MINHASH_PAIRS, MINHASH_BANDS), TAKEDOWNS)
 
 
 def minhash_apply_batch(
@@ -1275,65 +744,31 @@ def minhash_apply_batch(
        duplicates: hashes/delta=<b> carrying (doc_id, hashes, sig) —
        the signature column makes the delta self-describing, so the
        BAND rows of the tail deltas are DERIVED at read time
-       (_band_frame: the literal _band_rows expression over sig) and
-       the per-batch bands/delta write is gone (r17, guide §1.4: it
-       duplicated a deterministic projection of the same rows as a
+       (the MINHASH_BANDS view: the literal _band_rows expression over
+       sig) and there is no per-batch bands/delta write (it would
+       duplicate a deterministic projection of the same rows as a
        second Spark action per micro-batch). bands/ holds only the
-       (band, key)-clustered COMPACTIONS (_maybe_compact_bands), which
-       is what makes the production probe a bucketed-table lookup —
-       the derived tail is ≤ _COMPACT_EVERY-1 batch-sized explodes.
+       (band, key)-clustered COMPACTIONS, which is what makes the
+       production probe a bucketed-table lookup — the derived tail is
+       ≤ COMPACT_EVERY-1 batch-sized explodes.
        pairs/delta=<b> is this batch's near-dup report — the streaming
        twin of dedup_incremental's output.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.functions import col
 
-    from cqlcopy_spark.operators.dedup import (
-        _band_rows,
-        _minhash_verify_pairs,
-        _with_minhash_sig,
-    )
-
     spark = batch_df.sparkSession
-    # effective id = batch id + persisted log epoch (0 until a vacuum
-    # bumps it) — lets the same checkpoint resume after a vacuum
-    batch_id = _apply_epoch(state_dir, batch_id)
-    # refuse first-time writes below a compaction stamp on any of the
-    # three roots (reader-invisible — silent loss); replays pass. The
-    # bands root keeps its floor under bands/ while its deltas are the
-    # hashes deltas (r17 single-write layout), so its replay witness is
-    # the hashes delta dir.
-    hashes_root = os.path.join(state_dir, "hashes")
-    for sub in ("hashes", "pairs"):
-        _below_floor_guard(
-            os.path.join(state_dir, sub), batch_id, f"minhash_apply_batch[{sub}]"
-        )
-    _below_floor_guard(
-        os.path.join(state_dir, "bands"),
-        batch_id,
-        "minhash_apply_batch[bands]",
-        replay_root=hashes_root,
+    # effective id (epoch mapping) + the floor guard of every view —
+    # replays pass, first-time writes below a compaction stamp raise
+    batch_id = state_log.begin_batch(
+        MINHASH.views, state_dir, batch_id, "minhash_apply_batch"
     )
-    # compact BEFORE probing (r8 VERDICT item 2): once _COMPACT_EVERY
-    # deltas sit below this batch, fold them into one (band, key)-
-    # clustered dir so the probe (and the refine's hashes read) stop
-    # rescanning a file set that grows with every batch — see
-    # _maybe_compact_index for the out-of-order-replay safety argument.
-    _maybe_compact_bands(spark, state_dir, batch_id)
-    _maybe_compact_index(
-        spark,
-        hashes_root,
-        batch_id,
-        "doc_id long, hashes array<long>",
-        ["doc_id"],
-    )
-    prev_bands = _band_frame(spark, state_dir, batch_id)
-    prev_hashes = _read_index_deltas(
-        spark,
-        hashes_root,
-        batch_id,
-        "doc_id long, hashes array<long>",
-    )
+    # compact BEFORE probing: the probe and the refine's hashes read
+    # stop rescanning a file set that grows with every batch
+    state_log.maybe_compact(spark, MINHASH_BANDS, state_dir, batch_id)
+    state_log.maybe_compact(spark, MINHASH_HASHES, state_dir, batch_id)
+    prev_bands = state_log.read_view(spark, MINHASH_BANDS, state_dir, batch_id)
+    prev_hashes = state_log.read_view(spark, MINHASH_HASHES, state_dir, batch_id)
     # takedown masking (armed only when the state carries takedowns —
     # a takedown-free state keeps the original plan byte for byte):
     # retired docs leave the PROBE side, so later arrivals never pair
@@ -1341,7 +776,7 @@ def minhash_apply_batch(
     # forever (tombstones-win-forever, the vector index's rule)
     guard_ids = prev_hashes.select("doc_id")
     if os.path.isdir(os.path.join(state_dir, "takedowns")):
-        td = _minhash_takedowns(spark, state_dir, batch_id)
+        td = state_log.read_view(spark, TAKEDOWNS, state_dir, batch_id)
         prev_bands = prev_bands.join(td, "doc_id", "left_anti")
         prev_hashes = prev_hashes.join(td, "doc_id", "left_anti")
         guard_ids = guard_ids.unionByName(td)
@@ -1357,8 +792,6 @@ def minhash_apply_batch(
     # write a different delta than the first run — the r13 ADVICE class),
     # then a keys-only anti-join against the prior index. Revising a
     # document's text is a DELETE+INSERT under a fresh id in this model.
-    from cqlcopy_spark.functions.skew import keep_min_by
-
     fresh = keep_min_by(batch_df.select("doc_id", "text"), "doc_id").join(
         guard_ids, "doc_id", "left_anti"
     )
@@ -1401,7 +834,7 @@ def minhash_apply_batch(
         os.path.join(state_dir, "pairs", f"delta={batch_id}")
     )
     docs.select("doc_id", "hashes", "sig").write.mode("overwrite").parquet(
-        os.path.join(hashes_root, f"delta={batch_id}")
+        os.path.join(state_dir, "hashes", f"delta={batch_id}")
     )
     new_bands.unpersist()
     docs.unpersist()
@@ -1437,17 +870,17 @@ def continuous_minhash_dedup_sink(
 
     Candidate volume per batch is Σ_key n_new(key)·n_all(key) — batch ×
     bucket occupancy, never corpus² (the dedup_incremental asymmetry).
-    The delta layout is the production shape: the index is only ever
-    APPENDED (∝ batch per write — ONE delta per batch since r17, the
-    sig column making band rows a derived projection), and once
-    _COMPACT_EVERY deltas accumulate they are folded into a
+    The delta layout is the production shape (streaming/state_log.py):
+    the index is only ever APPENDED (∝ batch per write — ONE delta per
+    batch, the sig column making band rows a derived projection), and
+    once COMPACT_EVERY deltas accumulate they are folded into a
     (band, key)-clustered ``compact/v=<b>`` dir (hashes/ clustered by
     doc_id) so the per-batch probe reads ONE compacted dir plus at most
-    _COMPACT_EVERY-1 tail deltas — bounded, instead of a file set
+    COMPACT_EVERY-1 tail deltas — bounded, instead of a file set
     growing with every batch (r8 VERDICT item 2). Deltas stay on disk
-    as replay truth: _read_index_deltas ignores compactions newer than
-    the reading batch, so out-of-order replays still see exactly their
-    original corpus state. At cluster scale the compact dir becomes a
+    as replay truth: readers ignore compactions newer than the reading
+    batch, so out-of-order replays still see exactly their original
+    corpus state. At cluster scale the compact dir becomes a
     metastore bucketed table so the probe join also skips the
     corpus-side shuffle. The cross-run guard
     (_run_guard) refuses a foreign checkpoint ('error') or wipes the
@@ -1459,26 +892,14 @@ def continuous_minhash_dedup_sink(
     (test_gram_builders_handle_short_docs).
 
     Read the cumulative report with read_minhash_pairs()."""
-    import shutil
-
-    if on_new_run not in ("error", "restart"):
-        raise ValueError(f"on_new_run must be 'error' or 'restart', got {on_new_run!r}")
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        qid = _checkpoint_query_id(checkpoint_dir)
-        same_run = _run_guard(
-            state_dir, qid, on_new_run, "continuous_minhash_dedup_sink"
-        )
-        if not same_run:
-            for sub in ("bands", "hashes", "pairs", "takedowns"):
-                shutil.rmtree(os.path.join(state_dir, sub), ignore_errors=True)
-            _clear_log_epoch(state_dir)
-        os.makedirs(state_dir, exist_ok=True)
-        minhash_apply_batch(batch_df, batch_id, state_dir)
-        _write_run_marker(state_dir, qid)
-
-    return stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _state_log_sink(
+        stream_df,
+        state_dir,
+        checkpoint_dir,
+        on_new_run,
+        "continuous_minhash_dedup_sink",
+        MINHASH,
+        minhash_apply_batch,
     )
 
 
@@ -1491,20 +912,9 @@ def read_minhash_pairs(spark, state_dir: str) -> DataFrame:
     exist — a takedown-free state keeps the plain-union plan): a pair
     touching a retired doc on EITHER side leaves the report, the
     right-to-be-forgotten contract for the dedup index
-    (minhash_takedown_batch)."""
-    pairs = _read_index_deltas(
-        spark,
-        os.path.join(state_dir, "pairs"),
-        2**62,
-        "new_doc long, dup_of long, jaccard double",
-    )
-    if not os.path.isdir(os.path.join(state_dir, "takedowns")):
-        return pairs
-    td = _minhash_takedowns(spark, state_dir)
-    for c in ("new_doc", "dup_of"):
-        # takedown sets are tiny: stats pick broadcast anti-joins
-        pairs = pairs.join(td.withColumnRenamed("doc_id", c), c, "left_anti")
-    return pairs
+    (minhash_takedown_batch). Takedown sets are tiny: stats pick
+    broadcast anti-joins."""
+    return state_log.read_masked(spark, MINHASH, MINHASH_PAIRS, state_dir)
 
 
 def curation_apply_batch(
@@ -1536,7 +946,7 @@ def curation_apply_batch(
        n_toks). The hash probe reads it with schema "th string"
        (parquet column pruning — the extra columns cost the probe
        nothing), and the survivor view is DERIVED from the same files
-       at read time (_survivor_frame: doc_id, doc_id % shards, n_toks —
+       at read time (CURATION_SURVIVORS: doc_id, doc_id % shards, n_toks —
        deterministic projections, disjoint across deltas by
        construction of the anti-join, so the cumulative read is a
        plain union). r17, guide §1.4: the former separate
@@ -1555,29 +965,29 @@ def curation_apply_batch(
     DIFFERENT delta than the first run (r13 ADVICE); the gates are
     deterministic per document, so a re-delivered REJECTED doc
     re-rejects identically and needs no doc_id index."""
-    from cqlcopy_spark.functions.skew import keep_min_by
-    from cqlcopy_spark.operators.text import _curation_gated
-
     spark = batch_df.sparkSession
-    # effective id = batch id + persisted log epoch (0 until a vacuum
-    # bumps it) — lets the same checkpoint resume after a vacuum
-    batch_id = _apply_epoch(state_dir, batch_id)
-    ths_root = os.path.join(state_dir, "ths")
-    # refuse first-time writes below a compaction/vacuum stamp on either
-    # root (they would be reader-invisible — silent loss); replays pass.
-    # The survivor view's floor is a VACUUM compaction under survivors/
-    # while the deltas live under ths/ (the r17 single-write layout), so
-    # its guard checks the survivors floor against the THS delta dirs.
-    _below_floor_guard(ths_root, batch_id, "curation_apply_batch[ths]")
-    _below_floor_guard(
-        os.path.join(state_dir, "survivors"),
-        batch_id,
-        "curation_apply_batch[survivors]",
-        replay_root=ths_root,
+    # effective id (epoch mapping) + the floor guard of both views —
+    # replays pass, first-time writes below a compaction stamp raise
+    batch_id = state_log.begin_batch(
+        CURATION.views, state_dir, batch_id, "curation_apply_batch"
     )
-    _maybe_compact_index(spark, ths_root, batch_id, "th string", ["th"])
-    prior_ths = _read_index_deltas(spark, ths_root, batch_id, "th string")
+    state_log.maybe_compact(spark, CURATION_THS, state_dir, batch_id)
+    # ONE write per batch: the delta carries the full admitted row; the
+    # hash probe column-prunes to `th`, the survivor view projects
+    # (doc_id, shard, n_tokens) from the same files. No persist — single
+    # consumer, single action.
+    curation_admitted(batch_df, batch_id, state_dir).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(state_dir, "ths", f"delta={batch_id}"))
 
+
+def curation_admitted(
+    batch_df: DataFrame, batch_id: int, state_dir: str
+) -> DataFrame:
+    """The rows curation_apply_batch admits at `batch_id`: steps 0-3 of
+    its docstring, as the one frame the kernel writes."""
+    spark = batch_df.sparkSession
+    prior_ths = state_log.read_view(spark, CURATION_THS, state_dir, batch_id)
     fresh = keep_min_by(batch_df.select("doc_id", "text", "n_chars"), "doc_id")
     # decontamination gate — armed only when the state dir carries a
     # persisted eval window index (decontamination_index_write); a
@@ -1586,22 +996,14 @@ def curation_apply_batch(
     if os.path.isdir(ew_root):
         fresh = _decontaminate_batch(spark, fresh, ew_root)
     gated = _curation_gated(fresh)
-    # in-batch keeper as a DIRECT argmin aggregate (r16, guide
-    # §2.3/§2.4): min(struct(doc_id, n_toks)) per th is the min-doc_id
-    # row (doc_id unique after the fresh keeper, so the struct min is
-    # deterministic and n_toks rides along) — one partial-combining
-    # shuffle where the former groupBy + semi-join-back pair shuffled
-    # twice and ran the gate lineage on BOTH join sides (two batch
-    # scans per write at any scale). Same rows, same keeper rule.
-    # ONE write per batch (r17, guide §1.4): the delta carries the full
-    # admitted row; the hash probe column-prunes to `th`, the survivor
-    # view projects (doc_id, shard, n_tokens) from the same files
-    # (_survivor_frame). No persist — single consumer, single action.
-    admitted = keep_min_by(gated.select("th", "doc_id", "n_toks"), "th").join(
+    # in-batch keeper as a DIRECT argmin aggregate: min(struct(doc_id,
+    # n_toks)) per th is the min-doc_id row (doc_id is unique after the
+    # fresh keeper, so the struct min is deterministic and n_toks rides
+    # along) — one partial-combining shuffle, and the gate lineage runs
+    # once (a groupBy + semi-join-back keeper would shuffle twice and
+    # scan the batch on both join sides).
+    return keep_min_by(gated.select("th", "doc_id", "n_toks"), "th").join(
         prior_ths, "th", "left_anti"
-    )
-    admitted.write.mode("overwrite").parquet(
-        os.path.join(ths_root, f"delta={batch_id}")
     )
 
 
@@ -1687,23 +1089,26 @@ def curation_takedown_batch(
     rows is the vector_index_vacuum discipline applied verbatim to this
     root — the raw takedown deltas are the replay truth that makes it
     safe."""
-    _takedown_ids_batch(doc_ids, batch_id, state_dir, "curation_takedown_batch")
+    state_log.write_mask(
+        CURATION, doc_ids, batch_id, state_dir, "curation_takedown_batch"
+    )
 
 
-def _takedown_ids_batch(
-    doc_ids: DataFrame, batch_id: int, state_dir: str, what: str
-) -> None:
-    """The shared takedown-delta kernel (curation + minhash): an
-    id-keyed tombstone delta on the full discipline — epoch mapping,
-    monotone-id floor guard, compaction cadence, overwrite-on-replay."""
-    spark = doc_ids.sparkSession
-    batch_id = _apply_epoch(state_dir, batch_id)
-    td_root = os.path.join(state_dir, "takedowns")
-    _below_floor_guard(td_root, batch_id, what)
-    _maybe_compact_index(spark, td_root, batch_id, "doc_id long", ["doc_id"])
-    doc_ids.select("doc_id").dropDuplicates(["doc_id"]).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(td_root, f"delta={batch_id}"))
+def curation_vacuum(spark, state_dir: str, bump_epoch: bool = False) -> int:
+    """Physically prune taken-down survivor rows AND their takedown
+    masks from a curation state (state_log.vacuum over the CURATION
+    family): the survivor view minus the takedowns lands as one
+    (doc_id, shard, n_tokens) compaction under survivors/, stamped above
+    every id of every root the view reads, and the mask swaps empty.
+    Reader-view invariance, idempotence and the retained-raw-delta
+    replay truth are pinned in tests/test_curation_takedown.py;
+    driver-checked by stream_curation_vacuum (operators/text.py).
+
+    bump_epoch=True additionally raises the state dir's log epoch to
+    the stamp, which lets the SAME checkpoint resume ingest afterwards;
+    the default keeps the no-epoch behavior (a resumed checkpoint fails
+    loudly at the floor guard). Quiescence contract: see state_log."""
+    return state_log.vacuum(spark, CURATION, state_dir, bump_epoch)
 
 
 def minhash_takedown_batch(
@@ -1714,7 +1119,7 @@ def minhash_takedown_batch(
     the vector index): a retired document's text-derived state must
     leave the near-dup index too, or its content keeps influencing
     processing through signatures and reported pairs. Appends an
-    id-keyed takedown delta (_takedown_ids_batch); from then on
+    id-keyed takedown delta (state_log.write_mask); from then on
 
     - readers mask it: read_minhash_pairs drops pairs touching a
       retired id (EITHER side);
@@ -1727,144 +1132,20 @@ def minhash_takedown_batch(
     - physical pruning is minhash_vacuum — the shared discipline over
       THREE data roots (bands, hashes, and the two-column pairs
       report) and one mask."""
-    _takedown_ids_batch(doc_ids, batch_id, state_dir, "minhash_takedown_batch")
-
-
-def _minhash_takedowns(spark, state_dir: str, below_batch: int = 1 << 62):
-    return _read_index_deltas(
-        spark, os.path.join(state_dir, "takedowns"), below_batch, "doc_id long"
+    state_log.write_mask(
+        MINHASH, doc_ids, batch_id, state_dir, "minhash_takedown_batch"
     )
 
 
 def minhash_vacuum(spark, state_dir: str, bump_epoch: bool = False) -> int:
     """Physically prune retired documents from all three minhash data
-    roots — band rows and signature rows by doc_id, PAIR rows by either
+    views — band rows and signature rows by doc_id, PAIR rows by either
     column — and swap the takedown mask empty, in one version stamp
-    (vacuum_masked_roots; same retained-raw-delta replay truth,
-    idempotence and crash-retry contract as the other two instances).
-    bump_epoch=True raises the log epoch to the stamp so a live
-    checkpoint resumes afterwards (see bump_log_epoch)."""
-    def _bands_source():
-        # the bands view is VIRTUAL (r17): clustered compactions under
-        # bands/ + band rows derived from the raw hashes-delta tail.
-        # Exact input accounting without reading data: every signature
-        # derives exactly _N_BANDS band rows, so the derived tail
-        # contributes _N_BANDS × the hashes deltas' footer row counts.
-        from cqlcopy_spark.operators.dedup import _N_BANDS
-
-        compact, deltas = _band_sources(state_dir, 1 << 62)
-        rows_in = _parquet_dir_rows(compact) + _N_BANDS * _parquet_dir_rows(
-            deltas
-        )
-        return rows_in, _band_frame(spark, state_dir, 1 << 62)
-
-    n = vacuum_masked_roots(
-        spark,
-        [
-            (
-                os.path.join(state_dir, "bands"),
-                "doc_id long, band int, key string",
-                ["doc_id"],
-                ["band", "key"],
-                _bands_source,
-            ),
-            (
-                os.path.join(state_dir, "hashes"),
-                "doc_id long, hashes array<long>",
-                ["doc_id"],
-                ["doc_id"],
-            ),
-            (
-                os.path.join(state_dir, "pairs"),
-                "new_doc long, dup_of long, jaccard double",
-                ["new_doc", "dup_of"],
-                ["new_doc", "dup_of"],
-            ),
-        ],
-        os.path.join(state_dir, "takedowns"),
-        "doc_id",
-    )
-    if bump_epoch:
-        bump_log_epoch(
-            state_dir,
-            [
-                os.path.join(state_dir, sub)
-                for sub in ("bands", "hashes", "pairs", "takedowns")
-            ],
-        )
-    return n
-
-
-_THS_DELTA_SCHEMA = "th string, doc_id long, n_toks long"
-_SURVIVOR_SCHEMA = "doc_id long, shard long, n_tokens long"
-
-
-def _survivor_sources(
-    state_dir: str, below_batch: int
-) -> "tuple[list[str], list[str]]":
-    """(vacuum-compaction paths, raw ths-delta paths) a survivor reader
-    at `below_batch` resolves under the r17 single-write layout: the
-    newest COMPLETE vacuum compaction v ≤ below_batch under survivors/
-    (absent until a vacuum runs) plus the raw admitted-row deltas under
-    ths/ in [v, below_batch). The ths deltas ARE the survivor deltas —
-    one file set serves both the hash probe (column-pruned to th) and
-    the survivor view (projected to doc_id/shard/n_tokens); raw deltas
-    are never deleted, so the fallback below any historical as_of or
-    vacuum stamp is always on disk."""
-    surv_root = os.path.join(state_dir, "survivors")
-    usable = [v for v in _compact_versions(surv_root) if v <= below_batch]
-    floor = usable[-1] if usable else 0
-    compact = (
-        [os.path.join(surv_root, "compact", f"v={floor}")] if usable else []
-    )
-    ths_root = os.path.join(state_dir, "ths")
-    deltas = [
-        os.path.join(ths_root, f"delta={i}")
-        for i in _delta_ids(ths_root, below_batch)
-        if i >= floor
-    ]
-    return compact, deltas
-
-
-def _survivor_projection(frame: DataFrame) -> DataFrame:
-    """(doc_id, shard, n_tokens) from an admitted-row ths frame — the
-    deterministic projections the pre-r17 survivors delta write wrote:
-    shard = doc_id % _PACK_SHARDS (Spark `%` matches the oracle's on
-    negative ids), n_tokens = n_toks. Column dtypes identical to the
-    former on-disk schema (all BIGINT)."""
-    from pyspark.sql.functions import col
-
-    from cqlcopy_spark.operators.text import _PACK_SHARDS
-
-    return frame.select(
-        "doc_id",
-        (col("doc_id") % _PACK_SHARDS).alias("shard"),
-        col("n_toks").alias("n_tokens"),
-    )
-
-
-def _survivor_frame(spark, state_dir: str, below_batch: int) -> DataFrame:
-    """The cumulative survivor view strictly below `below_batch`: the
-    newest vacuum compaction (already (doc_id, shard, n_tokens)) union
-    the projected raw ths deltas above it. Plain union — deltas are
-    disjoint first-delivery-wins sets, the compaction only ever covers
-    ids strictly below its own version."""
-    compact, deltas = _survivor_sources(state_dir, below_batch)
-    parts = []
-    if compact:
-        parts.append(spark.read.schema(_SURVIVOR_SCHEMA).parquet(*compact))
-    if deltas:
-        parts.append(
-            _survivor_projection(
-                spark.read.schema(_THS_DELTA_SCHEMA).parquet(*deltas)
-            )
-        )
-    if not parts:
-        return spark.createDataFrame([], _SURVIVOR_SCHEMA)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    (state_log.vacuum over the MINHASH family; same retained-raw-delta
+    replay truth, idempotence and crash-retry contract as the other two
+    instances). bump_epoch=True raises the log epoch to the stamp so a
+    live checkpoint resumes afterwards."""
+    return state_log.vacuum(spark, MINHASH, state_dir, bump_epoch)
 
 
 def read_curation_survivors(
@@ -1880,23 +1161,15 @@ def read_curation_survivors(
 
     `as_of` is TIME TRAVEL over the delta log: the state a reader AT
     batch id `as_of` saw — deltas (and takedown masks) strictly below
-    it, exactly _read_index_deltas' replay contract. Compactions only
+    it, exactly the state_log replay contract. Compactions only
     ever fold deltas strictly below their own version, so a compaction
     ≤ as_of is a lossless shortcut; a vacuum version is stamped ABOVE
     every id and is therefore skipped by any historical as_of, which
     falls back to the retained raw deltas — time travel keeps working
     across physical pruning, because the raw deltas are the replay
     truth the vacuum deliberately retains."""
-    surv = _survivor_frame(spark, state_dir, as_of)
-    td_root = os.path.join(state_dir, "takedowns")
-    if not os.path.isdir(td_root):
-        return surv
-    # takedowns are tiny relative to survivors: stats pick a broadcast
-    # anti-join unhinted (the no-SF-scaling-broadcast-hint rule)
-    return surv.join(
-        _read_index_deltas(spark, td_root, as_of, "doc_id long"),
-        "doc_id",
-        "left_anti",
+    return state_log.read_masked(
+        spark, CURATION, CURATION_SURVIVORS, state_dir, as_of
     )
 
 
@@ -1912,151 +1185,40 @@ def curation_state_clone(spark, src: str, dst: str, as_of: int) -> None:
     touch the other (a dev fork of a training corpus, the table-format
     branch primitive).
 
-    Cost: pure driver-side file copying, ZERO Spark jobs (r16 — see
-    clone_state_roots for the zero-copy argument; the previous shape
-    rewrote each root's as-of view as a base compaction); every later
+    Cost: pure driver-side file copying, ZERO Spark jobs (the as-of
+    view IS those immutable files); every later
     branch read is the normal compact+tail-delta resolution. Faithful
     by the same argument as time travel: deltas are disjoint
     first-delivery-wins sets and the as-of read is exact — continuing
     the branch with the trunk's remaining deliveries reproduces the
     trunk relation (stream_curation_branch driver-checks that
     equality)."""
-    # r17 single-write layout: the survivor view is virtual (vacuum
-    # compactions under survivors/ + raw ths deltas above that floor),
-    # and its floor is independent of the ths root's own compaction
-    # floor — copy the exact source set the view resolves FIRST (a ths
-    # compaction stamped above a vacuum would otherwise let the
-    # standard ths clone skip deltas the survivor view still needs).
-    # copytree(dirs_exist_ok) makes the overlap with the ths spec a
-    # no-op re-copy; the epoch file still lands last, inside
-    # clone_state_roots.
-    compact, deltas = _survivor_sources(src, as_of)
-    for p in compact + deltas:
-        _copytree_marker_last(p, os.path.join(dst, os.path.relpath(p, src)))
-    clone_state_roots(
-        spark,
-        src,
-        dst,
-        as_of,
-        (
-            ("ths", _THS_DELTA_SCHEMA, ["th"]),
-            ("takedowns", "doc_id long", ["doc_id"]),
-        ),
-    )
-
-
-def _copytree_marker_last(src_dir: str, dst_dir: str) -> None:
-    """copytree with the _SUCCESS marker copied strictly LAST (r16
-    ADVICE): _compact_versions treats any marker-bearing dir as a
-    complete compaction, so a crash mid-copy must never leave the
-    marker without every data file. Idempotent re-copy (dirs_exist_ok
-    semantics) — a torn dst has no marker, is invisible to readers,
-    and the retry overwrites it file by file."""
-    import shutil
-
-    os.makedirs(dst_dir, exist_ok=True)
-    names = os.listdir(src_dir)
-    for name in sorted(n for n in names if n != "_SUCCESS"):
-        s = os.path.join(src_dir, name)
-        d = os.path.join(dst_dir, name)
-        if os.path.isdir(s):
-            shutil.copytree(s, d, dirs_exist_ok=True)
-        else:
-            shutil.copyfile(s, d)
-    if "_SUCCESS" in names:
-        shutil.copyfile(
-            os.path.join(src_dir, "_SUCCESS"), os.path.join(dst_dir, "_SUCCESS")
-        )
-
-
-def clone_state_roots(spark, src: str, dst: str, as_of: int, specs) -> None:
-    """The shared fork mechanics behind curation_state_clone and
-    vector_index_clone: for each (subdir, schema, layout) root, COPY the
-    exact directory set its as-of read resolves (_index_delta_paths:
-    newest complete compaction ≤ as_of plus the raw deltas in
-    [floor, as_of)) into `dst` under the SAME names, then persist
-    `dst`'s log epoch = as_of — the epoch lever reused so a brand-new
-    checkpoint's batch 0 maps onto the fork point instead of dying at
-    the compaction floor. Missing/empty-as-of roots end up absent in
-    `dst`, which every reader treats as the empty view.
-
-    ZERO-COPY fork (r16, guide §1.2 step 1): the as-of view IS those
-    immutable files, so forking is pure driver-side file copying — the
-    previous shape paid a Spark read + repartition + sortWithinPartitions
-    + write job per root to materialize the identical rows as a base
-    compaction (3 jobs per clone at bench scale; a corpus-sized rewrite
-    at production scale — the one cost the table-format branch
-    primitive exists to avoid). The branch's reader resolution
-    (compaction-floor + tail deltas) is byte-for-byte the trunk's as-of
-    resolution; the normal compaction cadence re-clusters the branch as
-    it ingests. The schema/layout spec fields are kept for the callers'
-    documentation of each root's contract (and for any future deep-clone
-    variant); the copy itself is layout-preserving. Compactions above
-    as_of — including vacuum stamps — are skipped by construction, so
-    forking at a historical point below a vacuum serves the retained
-    raw-delta truth (test_branch_from_vacuumed_trunk...). The epoch
-    file still lands strictly LAST (a torn clone has no epoch and the
-    retry's dirs_exist_ok re-copy completes it), and within each copied
-    directory the _SUCCESS marker lands last too (_copytree_marker_last,
-    r16 ADVICE): a plain copytree copies in listdir order, so a crash
-    mid-clone could leave a marker-bearing compaction dir missing part
-    files — which _compact_versions would treat as complete."""
-    for sub, _schema, _layout in specs:
-        root = os.path.join(src, sub)
-        if not os.path.isdir(root):
-            continue
-        for p in _index_delta_paths(root, as_of):
-            rel = os.path.relpath(p, root)
-            _copytree_marker_last(p, os.path.join(dst, sub, rel))
-    os.makedirs(dst, exist_ok=True)
-    tmp = os.path.join(dst, _EPOCH_FILE + ".tmp")
-    with open(tmp, "w", encoding="utf-8") as f:
-        f.write(str(as_of))
-    os.replace(tmp, os.path.join(dst, _EPOCH_FILE))
+    state_log.clone(CURATION, src, dst, as_of)
 
 
 def read_curation_survivors_with_batch(spark, state_dir: str) -> DataFrame:
     """(doc_id, shard, n_tokens, admitted_batch) — every live survivor
     with the batch id that ADMITTED it, read from the RAW admitted-row
-    ths deltas (the survivor deltas of the r17 single-write layout; the
-    curation twin of vector_index._rows_with_batch):
-    compactions are skipped on purpose, because provenance is exactly
-    what compaction erases and the raw deltas are retained as replay
-    truth. Driver state is one os.listdir; the loop builds a union PLAN
-    (rows never collect). The takedown mask is likewise read from the
-    RAW takedown deltas, symmetric with the survivor side (r15 ADVICE):
-    a curation_vacuum swaps the mask root to an EMPTY compaction (its
-    rows are already reflected in the pruned survivor compaction, which
-    this read deliberately skips), so resolving the mask through
-    _read_index_deltas would resurrect every pre-vacuum retirement on
-    this compliance-audit surface — the raw deltas are retained by the
-    vacuum exactly so provenance reads stay truthful."""
-    from pyspark.sql import functions as F
-
-    root = os.path.join(state_dir, "ths")
-    frames = [
-        _survivor_projection(
-            spark.read.schema(_THS_DELTA_SCHEMA).parquet(
-                os.path.join(root, f"delta={b}")
-            )
-        ).withColumn("admitted_batch", F.lit(b).cast("long"))
-        for b in _delta_ids(root, 1 << 62)
-    ]
-    if not frames:
-        return spark.createDataFrame([], _SURVIVOR_SCHEMA + ", admitted_batch long")
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
+    ths deltas (state_log.read_provenance; the vector index's delete
+    twin audits its codes the same way). The takedown mask is likewise
+    read from the RAW takedown deltas, symmetric with the survivor side:
+    a curation_vacuum swaps the mask root to an EMPTY
+    compaction (its rows are already reflected in the pruned survivor
+    compaction, which this read deliberately skips), so resolving the
+    mask through its compactions would resurrect every pre-vacuum
+    retirement on this compliance-audit surface — the raw deltas are
+    retained by the vacuum exactly so provenance reads stay truthful."""
+    out = state_log.read_provenance(
+        spark, CURATION_SURVIVORS, state_dir, "admitted_batch"
+    )
     td_root = os.path.join(state_dir, "takedowns")
     td_paths = [
-        os.path.join(td_root, f"delta={b}") for b in _delta_ids(td_root, 1 << 62)
+        os.path.join(td_root, f"delta={b}") for b in state_log.delta_ids(td_root)
     ]
     if not td_paths:
         return out
     return out.join(
-        spark.read.schema("doc_id long").parquet(*td_paths),
-        "doc_id",
-        "left_anti",
+        spark.read.schema("doc_id long").parquet(*td_paths), "doc_id", "left_anti"
     )
 
 
@@ -2088,26 +1250,14 @@ def continuous_curation_sink(
     batch ids restart across checkpoint lineages, so merging deltas
     across runs would re-admit every text hash. Read the cumulative
     survivor set with read_curation_survivors()."""
-    import shutil
-
-    if on_new_run not in ("error", "restart"):
-        raise ValueError(
-            f"on_new_run must be 'error' or 'restart', got {on_new_run!r}"
-        )
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        qid = _checkpoint_query_id(checkpoint_dir)
-        same_run = _run_guard(state_dir, qid, on_new_run, "continuous_curation_sink")
-        if not same_run:
-            for sub in ("ths", "survivors", "takedowns"):
-                shutil.rmtree(os.path.join(state_dir, sub), ignore_errors=True)
-            _clear_log_epoch(state_dir)
-        os.makedirs(state_dir, exist_ok=True)
-        curation_apply_batch(batch_df, batch_id, state_dir)
-        _write_run_marker(state_dir, qid)
-
-    return stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _state_log_sink(
+        stream_df,
+        state_dir,
+        checkpoint_dir,
+        on_new_run,
+        "continuous_curation_sink",
+        CURATION,
+        curation_apply_batch,
     )
 
 
@@ -2151,42 +1301,27 @@ def continuous_vector_index_sink(
     ('error') or wipes the index state and recomputes ('restart') —
     batch ids restart across checkpoint lineages. Query the index with
     vector_index_search / read_index_codes."""
-    import shutil
+    from cqlcopy_spark.operators.vector_index import (
+        VECTOR_INDEX,
+        vector_index_append,
+        vector_index_build,
+    )
 
-    if on_new_run not in ("error", "restart"):
-        raise ValueError(
-            f"on_new_run must be 'error' or 'restart', got {on_new_run!r}"
-        )
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from cqlcopy_spark.operators.vector_index import (
-            vector_index_append,
-            vector_index_build,
-        )
-
-        qid = _checkpoint_query_id(checkpoint_dir)
-        same_run = _run_guard(
-            state_dir, qid, on_new_run, "continuous_vector_index_sink"
-        )
-        if not same_run:
-            for sub in ("codes", "tombstones"):
-                shutil.rmtree(os.path.join(state_dir, sub), ignore_errors=True)
-            _clear_log_epoch(state_dir)
-            for f in ("centroids.parquet", "codebooks.parquet"):
-                p = os.path.join(state_dir, f)
-                shutil.rmtree(p, ignore_errors=True)
-                if os.path.isfile(p):
-                    os.remove(p)
-        os.makedirs(state_dir, exist_ok=True)
-        trained = os.path.exists(os.path.join(state_dir, "codebooks.parquet"))
-        if not trained:
-            if batch_df.isEmpty():
-                return  # nothing to train on yet — wait for data
-            vector_index_build(batch_df, state_dir, batch_id=batch_id)
-        else:
+    def apply(batch_df: DataFrame, batch_id: int, state_dir: str) -> bool:
+        if os.path.exists(os.path.join(state_dir, "codebooks.parquet")):
             vector_index_append(batch_df, batch_id, state_dir)
-        _write_run_marker(state_dir, qid)
+        elif batch_df.isEmpty():
+            return False  # nothing to train on yet — wait for data
+        else:
+            vector_index_build(batch_df, state_dir, batch_id=batch_id)
+        return True
 
-    return stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _state_log_sink(
+        stream_df,
+        state_dir,
+        checkpoint_dir,
+        on_new_run,
+        "continuous_vector_index_sink",
+        VECTOR_INDEX,
+        apply,
     )

@@ -165,17 +165,16 @@ def test_takedown_free_state_keeps_plain_union_plan(spark, curated):
 
 
 def test_curation_vacuum_prunes_and_preserves_view(spark, curated):
-    """curation_vacuum = the shared vacuum_masked_root discipline on
+    """curation_vacuum = the shared state_log.vacuum discipline on
     (survivors, takedowns): masked rows physically pruned, reader view
     bitwise unchanged, raw deltas retained, re-run a no-op."""
     from cqlcopy_spark.streaming.sinks import (
-        _compact_versions,
-        _delta_ids,
-        _read_index_deltas,
+        TAKEDOWNS,
         curation_takedown_batch,
         curation_vacuum,
         read_curation_survivors,
     )
+    from cqlcopy_spark.streaming.state_log import compact_versions, delta_ids, read_view
 
     d, state = curated
     before = _survivor_ids(spark, state)
@@ -188,13 +187,13 @@ def test_curation_vacuum_prunes_and_preserves_view(spark, curated):
     }
     # r17 single-write layout: the raw survivor deltas ARE the ths
     # admitted-row deltas
-    raw_deltas_before = _delta_ids(os.path.join(state, "ths"), 1 << 62)
+    raw_deltas_before = delta_ids(os.path.join(state, "ths"), 1 << 62)
 
     n = curation_vacuum(spark, state)
     assert n == len(doomed)  # every doomed id was an admitted survivor
     # physical pruning: the compacted survivors carry no doomed id
     surv_root = os.path.join(state, "survivors")
-    vid = _compact_versions(surv_root)[-1]
+    vid = compact_versions(surv_root)[-1]
     phys = {
         r["doc_id"]
         for r in spark.read.parquet(
@@ -208,33 +207,31 @@ def test_curation_vacuum_prunes_and_preserves_view(spark, curated):
     }
     assert view_after == view_before
     assert (
-        _read_index_deltas(
-            spark, os.path.join(state, "takedowns"), 1 << 62, "doc_id long"
-        ).count()
+        read_view(spark, TAKEDOWNS, state).count()
         == 0
     )
     # raw deltas retained as replay truth
-    assert _delta_ids(os.path.join(state, "ths"), 1 << 62) == raw_deltas_before
+    assert delta_ids(os.path.join(state, "ths"), 1 << 62) == raw_deltas_before
     # idempotent no-op re-run
     assert curation_vacuum(spark, state) == 0
 
 
 def test_takedown_mask_compaction_cadence_bounds_reader_file_set(spark, curated):
     """r15 VERDICT item 4 / r16 item 3: the takedown MASK root rides the
-    same _COMPACT_EVERY cadence as the data roots (the shared
-    _takedown_ids_batch kernel compacts it on the write path — one code
+    same COMPACT_EVERY cadence as the data roots (the shared
+    state_log.write_mask kernel compacts it on the write path — one code
     path for the curation AND minhash masks), so a reader between
     vacuums resolves ONE compacted mask dir plus a bounded tail, never
     a file set growing with lifetime takedown batches. Nine takedown
     batches against one curated state: the mask compacts, raw deltas
     survive as replay truth, the masked view equals the union of all
     nine batches, and the reader's resolved file set is bounded."""
-    from cqlcopy_spark.streaming.sinks import (
-        _COMPACT_EVERY,
-        _compact_versions,
-        _delta_ids,
-        _index_delta_paths,
-        curation_takedown_batch,
+    from cqlcopy_spark.streaming.sinks import TAKEDOWNS, curation_takedown_batch
+    from cqlcopy_spark.streaming.state_log import (
+        COMPACT_EVERY,
+        compact_versions,
+        delta_ids,
+        resolve,
     )
 
     d, state = curated
@@ -248,16 +245,16 @@ def test_takedown_mask_compaction_cadence_bounds_reader_file_set(spark, curated)
             state,
         )
     td_root = os.path.join(state, "takedowns")
-    vs = _compact_versions(td_root)
-    assert vs and vs[-1] >= 3 + _COMPACT_EVERY  # the cadence fired
+    vs = compact_versions(td_root)
+    assert vs and vs[-1] >= 3 + COMPACT_EVERY  # the cadence fired
     assert len(vs) == 1  # superseded mask compactions deleted
     # raw mask deltas all retained (replay truth / provenance)
-    assert _delta_ids(td_root, 1 << 62) == list(range(3, 12))
+    assert delta_ids(td_root, 1 << 62) == list(range(3, 12))
     # what the NEXT batch's read resolves: one compact dir + a tail
     # bounded by the cadence, not by the 9 batches on disk
-    paths = _index_delta_paths(td_root, 12)
+    paths = sum(resolve(TAKEDOWNS, state, 12), [])
     tail = [p for p in paths if "delta=" in p]
-    assert len(paths) == 1 + len(tail) and len(tail) <= _COMPACT_EVERY
+    assert len(paths) == 1 + len(tail) and len(tail) <= COMPACT_EVERY
     # the masked view is exactly the cumulative exclusion
     doomed_all = {i for ids in doomed_by_batch for i in ids}
     assert _survivor_ids(spark, state) == set(before) - doomed_all

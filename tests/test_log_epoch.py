@@ -38,11 +38,11 @@ def test_epoch_equals_vacuum_stamp(spark, epoch_vacuumed):
     """The epoch lands exactly on the vacuum's compaction version:
     resumed batch 0 maps to the stamp itself (a reader at that id sees
     exactly the vacuumed state), later batches strictly above."""
-    from cqlcopy_spark.streaming.sinks import _compact_versions
+    from cqlcopy_spark.streaming.state_log import compact_versions
 
     e, state, epoch = epoch_vacuumed
-    assert epoch == _compact_versions(os.path.join(state, "codes"))[-1]
-    assert epoch == _compact_versions(os.path.join(state, "tombstones"))[-1]
+    assert epoch == compact_versions(os.path.join(state, "codes"))[-1]
+    assert epoch == compact_versions(os.path.join(state, "tombstones"))[-1]
 
 
 def test_checkpoint_resume_after_epoch_vacuum_continues_ingest(

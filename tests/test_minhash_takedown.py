@@ -94,7 +94,6 @@ def test_retired_id_never_reindexed(spark):
 
     from cqlcopy_spark.catalog import table
     from cqlcopy_spark.streaming.sinks import (
-        _read_index_deltas,
         minhash_apply_batch,
         minhash_takedown_batch,
     )
@@ -116,21 +115,21 @@ def test_retired_id_never_reindexed(spark):
 def test_vacuum_prunes_all_three_roots_and_keeps_view(spark, ingested):
     from cqlcopy_spark.operators.dedup import _minhash_takedown_target
     from cqlcopy_spark.streaming.sinks import (
-        _minhash_takedowns,
-        _read_index_deltas,
+        TAKEDOWNS,
         minhash_takedown_batch,
         minhash_vacuum,
     )
+    from cqlcopy_spark.streaming.state_log import View, read_view
 
     state = ingested
     minhash_takedown_batch(
         _minhash_takedown_target(spark, SF_SMALL), 3, state
     )
     before = _pairs(spark, state)
-    td = {r["doc_id"] for r in _minhash_takedowns(spark, state).collect()}
+    td = {r["doc_id"] for r in read_view(spark, TAKEDOWNS, state).collect()}
     assert minhash_vacuum(spark, state) > 0
     # mask swapped empty; view unchanged
-    assert _minhash_takedowns(spark, state).count() == 0
+    assert read_view(spark, TAKEDOWNS, state).count() == 0
     assert _pairs(spark, state) == before
     # physical: no retired id in any data root's current resolution
     for sub, schema, cols in (
@@ -138,9 +137,7 @@ def test_vacuum_prunes_all_three_roots_and_keeps_view(spark, ingested):
         ("hashes", "doc_id long, hashes array<long>", ["doc_id"]),
         ("pairs", "new_doc long, dup_of long, jaccard double", ["new_doc", "dup_of"]),
     ):
-        phys = _read_index_deltas(
-            spark, os.path.join(state, sub), 1 << 62, schema
-        )
+        phys = read_view(spark, View(sub, schema, ()), state)
         for c in cols:
             hit = phys.filter(F.col(c).isin(list(td))).count()
             assert hit == 0, (sub, c, hit)
@@ -155,11 +152,11 @@ def test_vacuum_crash_between_roots_completes_on_retry(spark, ingested):
 
     from cqlcopy_spark.operators.dedup import _minhash_takedown_target
     from cqlcopy_spark.streaming.sinks import (
-        _compact_versions,
-        _minhash_takedowns,
+        TAKEDOWNS,
         minhash_takedown_batch,
         minhash_vacuum,
     )
+    from cqlcopy_spark.streaming.state_log import compact_versions, read_view
 
     state = ingested
     minhash_takedown_batch(
@@ -170,9 +167,9 @@ def test_vacuum_crash_between_roots_completes_on_retry(spark, ingested):
     # the crash window: drop the mask's empty compaction — raw takedown
     # deltas resurface, data roots stay pruned
     tomb = os.path.join(state, "takedowns")
-    vid = _compact_versions(tomb)[-1]
+    vid = compact_versions(tomb)[-1]
     shutil.rmtree(os.path.join(tomb, "compact", f"v={vid}"))
-    assert _minhash_takedowns(spark, state).count() > 0
+    assert read_view(spark, TAKEDOWNS, state).count() > 0
     assert minhash_vacuum(spark, state) == 0  # nothing left to prune
-    assert _minhash_takedowns(spark, state).count() == 0  # but completed
+    assert read_view(spark, TAKEDOWNS, state).count() == 0  # but completed
     assert _pairs(spark, state) == before

@@ -1461,33 +1461,30 @@ def test_persisted_index_search_one_scan_one_arrow_stage(spark):
 
 
 def test_stream_curation_batch_kernel_shapes(spark, tmp_path):
-    """curation_apply_batch survivor lineage: the gates are ONE map-only
-    scan (no join before the keeper), the keeper is a partial-combining
-    groupBy + semi join (never a window over the md5 key), and the
-    prior-hash drop is an anti join — no cartesian anywhere. Pinned on
-    the admitted frame the kernel writes."""
-    from pyspark.sql import functions as F
-
-    from cqlcopy_spark.functions.skew import keep_min_by
-    from cqlcopy_spark.operators.text import _curation_gated
-    from cqlcopy_spark.streaming.sinks import _read_index_deltas
+    """curation_apply_batch's admitted lineage, pinned on the frame the
+    kernel itself writes (curation_admitted): the gates are ONE
+    map-only scan, the in-batch keepers are partial-combining argmin
+    aggregates (keep_min_by — never a window over the md5 key), and the
+    prior-hash drop is an anti join — no cartesian anywhere. min(struct)
+    keeps no fixed-width buffer, so each keeper plans as a partial and a
+    final SortAggregate. The state holds one prior ths delta so the
+    anti join is not optimized away."""
+    from cqlcopy_spark.streaming.sinks import curation_admitted
 
     d = spark.read.parquet(f"{SF_SMALL}/documents.parquet").select(
         "doc_id", "text", "n_chars"
     )
-    # the kernel's deterministic in-batch keeper (r14: replaced bare
-    # dropDuplicates, which picked an arbitrary row on conflicting
-    # same-id payloads — the r13 ADVICE replay-idempotence class)
-    gated = _curation_gated(keep_min_by(d, "doc_id"))
-    keeper = gated.groupBy("th").agg(F.min("doc_id").alias("doc_id"))
-    prior = _read_index_deltas(spark, str(tmp_path / "none"), 1, "th string")
-    admitted = gated.join(keeper, ["th", "doc_id"], "left_semi").join(
-        prior, "th", "left_anti"
+    state = str(tmp_path / "state")
+    spark.createDataFrame([("x",)], "th string").write.parquet(
+        f"{state}/ths/delta=0"
     )
-    p = plan_of(admitted)
+    p = plan_of(curation_admitted(d, 1, state))
     assert "Window" not in p, p  # hot-key argmin rule
     assert "CartesianProduct" not in p, p
-    assert len(re.findall(r"\(\d+\) HashAggregate", p)) >= 2, p  # partial+final
+    # two keepers, each partial + final
+    assert len(re.findall(r"\(\d+\) (?:Hash|Sort)Aggregate", p)) >= 4, p
+    assert p.count("partial_min(") >= 2, p
+    assert "LeftAnti" in p, p  # first-delivery-wins against the prior index
 
 
 def test_curation_gate_sql_text_equivalence(spark):

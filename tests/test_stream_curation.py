@@ -216,18 +216,22 @@ def test_single_write_layout_serves_probe_and_survivor_view(spark, tmp_path):
     ths/) carrying the full admitted row; the survivor view derives
     from those files (projected), survivors/ holds no deltas, and the
     hash probe still column-prunes its scan to `th` alone."""
+    from cqlcopy_spark.operators.text import _PACK_SHARDS
     from cqlcopy_spark.streaming.sinks import (
-        _read_index_deltas,
+        CURATION_THS,
         curation_apply_batch,
         read_curation_survivors,
     )
+    from cqlcopy_spark.streaming.state_log import read_view
     from tests.test_plans import plan_of
 
     state = str(tmp_path / "state")
     curation_apply_batch(
         _df(spark, [(1, _doc(1)), (2, _doc(2))]), 0, state
     )
-    curation_apply_batch(_df(spark, [(3, _doc(3))]), 1, state)
+    # doc_id 51: 51 % 32 = 19 differs from 51 % 16 = 3; a pin with ids
+    # below the shard count would pass for any modulus
+    curation_apply_batch(_df(spark, [(3, _doc(3)), (51, _doc(51))]), 1, state)
     # one delta per batch, all under ths/, none under survivors/
     assert sorted(os.listdir(os.path.join(state, "ths"))) == [
         "delta=0",
@@ -243,16 +247,72 @@ def test_single_write_layout_serves_probe_and_survivor_view(spark, tmp_path):
         for r in read_curation_survivors(spark, state).collect()
     }
     expect = {
-        (r["doc_id"], r["doc_id"] % 16, r["n_toks"])
+        (r["doc_id"], r["doc_id"] % _PACK_SHARDS, r["n_toks"])
         for b in (0, 1)
         for r in spark.read.parquet(
             os.path.join(state, "ths", f"delta={b}")
         ).collect()
     }
     assert view == expect and view
+    assert any(d >= _PACK_SHARDS for d, _, _ in view)  # the pin is live
     # probe-side column pruning: the th index read touches ONLY th
-    probe = _read_index_deltas(
-        spark, os.path.join(state, "ths"), 2, "th string"
-    )
+    probe = read_view(spark, CURATION_THS, state, 2)
     p = plan_of(probe)
     assert "ReadSchema: struct<th:string>" in p, p
+
+
+def test_vacuum_stamp_clears_every_compaction_the_view_reads(spark, tmp_path):
+    """A crash in curation_apply_batch after ths/compact/v=b but before
+    ths/delta=b leaves a compaction above every delta id. The vacuum
+    stamp covers every delta id AND every compaction of every root the
+    survivor view reads, so the new survivors compaction lands above b."""
+    from cqlcopy_spark.streaming.sinks import (
+        curation_apply_batch,
+        curation_takedown_batch,
+        curation_vacuum,
+    )
+    from cqlcopy_spark.streaming.state_log import compact_versions
+
+    state = str(tmp_path / "state")
+    curation_apply_batch(_df(spark, [(1, _doc(1)), (2, _doc(2))]), 0, state)
+    curation_takedown_batch(
+        spark.createDataFrame([(1,)], "doc_id long"), 1, state
+    )
+    b = 7  # the crashed batch: its ths compaction, no ths/delta=7
+    spark.createDataFrame([("x",)], "th string").write.parquet(
+        os.path.join(state, "ths", "compact", f"v={b}")
+    )
+    assert not os.path.isdir(os.path.join(state, "ths", f"delta={b}"))
+    assert curation_vacuum(spark, state) == 1
+    assert compact_versions(os.path.join(state, "survivors"))[-1] > b
+
+
+def test_stale_delta_layout_fails_loudly(spark, tmp_path):
+    """An older layout kept survivor deltas under survivors/ and band
+    deltas under bands/; this layout derives both views from ths/ and
+    hashes/. Such a state must raise, naming the directory, from the
+    apply kernels and the readers alike, never read as NULL columns."""
+    import pytest
+
+    from cqlcopy_spark.streaming.sinks import (
+        curation_apply_batch,
+        minhash_apply_batch,
+        read_curation_survivors,
+        read_minhash_pairs,
+    )
+
+    cur, mh = str(tmp_path / "cur"), str(tmp_path / "mh")
+    old_layouts = ((cur, ("ths", "survivors")), (mh, ("hashes", "bands", "pairs")))
+    for state, subs in old_layouts:
+        for sub in subs:
+            os.makedirs(os.path.join(state, sub, "delta=0"))
+    docs = _df(spark, [(1, _doc(1))])
+    calls = (
+        (lambda: curation_apply_batch(docs, 1, cur), "survivors"),
+        (lambda: read_curation_survivors(spark, cur), "survivors"),
+        (lambda: minhash_apply_batch(docs.select("doc_id", "text"), 1, mh), "bands"),
+        (lambda: read_minhash_pairs(spark, mh), "bands"),
+    )
+    for call, sub in calls:
+        with pytest.raises(ValueError, match=f"stale state layout: .*{sub}"):
+            call()

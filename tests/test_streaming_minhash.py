@@ -186,21 +186,23 @@ def _split_corpus(n_batches: int, per_batch: int = 3):
 
 def test_minhash_probe_reads_are_bounded_after_compaction(spark, tmp_path):
     """r8 VERDICT item 2: at thousands of production batches the probe
-    must NOT rescan every delta. After > _COMPACT_EVERY batches the
+    must NOT rescan every delta. After > COMPACT_EVERY batches the
     state must hold a complete compact/v=<b> dir, and the file set a
     NEW batch reads must be one compacted dir plus at most
-    _COMPACT_EVERY-1 tail deltas — while the cumulative pair report
+    COMPACT_EVERY-1 tail deltas — while the cumulative pair report
     stays equal to the one-shot batch op over the same corpus."""
     from cqlcopy_spark.operators.dedup import _band_rows
     from cqlcopy_spark.plans.registry import all_queries
     from cqlcopy_spark.streaming.sinks import (
-        _band_frame,
-        _COMPACT_EVERY,
-        _compact_versions,
-        _delta_ids,
-        _HASHES_DELTA_SCHEMA,
+        MINHASH_BANDS,
         minhash_apply_batch,
         read_minhash_pairs,
+    )
+    from cqlcopy_spark.streaming.state_log import (
+        COMPACT_EVERY,
+        compact_versions,
+        delta_ids,
+        read_view,
     )
 
     batches = _split_corpus(7)
@@ -212,23 +214,23 @@ def test_minhash_probe_reads_are_bounded_after_compaction(spark, tmp_path):
 
     bands_root = os.path.join(state, "bands")
     hashes_root = os.path.join(state, "hashes")
-    vs = _compact_versions(bands_root)
+    vs = compact_versions(bands_root)
     assert vs, "no complete compaction after 7 batches"
     v = vs[-1]
-    assert v >= _COMPACT_EVERY
+    assert v >= COMPACT_EVERY
     # what batch 7 would read: the compact dir + band rows derived from
     # the hashes deltas in [v, 7) (the r17 single-write layout) —
-    # bounded by _COMPACT_EVERY, not by the batch count
-    tail = [i for i in _delta_ids(hashes_root, 7) if i >= v]
-    assert len(tail) <= _COMPACT_EVERY - 1 + (7 - 7)
+    # bounded by COMPACT_EVERY, not by the batch count
+    tail = [i for i in delta_ids(hashes_root, 7) if i >= v]
+    assert len(tail) <= COMPACT_EVERY - 1 + (7 - 7)
     assert len(tail) == 7 - v
     # the read itself contains every band row below batch 7 exactly once
-    full = _band_frame(spark, state, 7)
+    full = read_view(spark, MINHASH_BANDS, state, 7)
     raw = _band_rows(
-        spark.read.schema(_HASHES_DELTA_SCHEMA).parquet(
+        spark.read.schema(MINHASH_BANDS.delta_schema).parquet(
             *[
                 os.path.join(hashes_root, f"delta={i}")
-                for i in _delta_ids(hashes_root, 7)
+                for i in delta_ids(hashes_root, 7)
             ]
         )
     )
@@ -258,7 +260,7 @@ def test_minhash_probe_reads_are_bounded_after_compaction(spark, tmp_path):
 def test_minhash_out_of_order_replay_ignores_newer_compaction(spark, tmp_path):
     """The compaction-safety contract: a MIDDLE batch replayed after
     later batches (and after compaction) must re-derive from exactly
-    its original corpus state — _read_index_deltas must ignore compact
+    its original corpus state — the as-of read must ignore compact
     versions newer than the reading batch and fall back to raw deltas.
     The replay must leave the cumulative report unchanged."""
     from cqlcopy_spark.streaming.sinks import (
@@ -287,7 +289,7 @@ def test_minhash_out_of_order_replay_ignores_newer_compaction(spark, tmp_path):
 
 
 def test_minhash_compaction_is_incremental_and_prunes_versions(spark, tmp_path):
-    """Review fix pins: compaction must fire only when _COMPACT_EVERY
+    """Review fix pins: compaction must fire only when COMPACT_EVERY
     tail deltas accumulated SINCE the newest compaction (not on every
     batch once the total delta count passes the threshold — that was
     O(batches²) re-reads), each fire merges the previous compact
@@ -295,13 +297,8 @@ def test_minhash_compaction_is_incremental_and_prunes_versions(spark, tmp_path):
     superseded compact versions are deleted (disk = raw deltas + ONE
     compact copy). Raw deltas all survive as replay truth."""
     from cqlcopy_spark.operators.dedup import _band_rows
-    from cqlcopy_spark.streaming.sinks import (
-        _band_frame,
-        _compact_versions,
-        _delta_ids,
-        _HASHES_DELTA_SCHEMA,
-        minhash_apply_batch,
-    )
+    from cqlcopy_spark.streaming.sinks import MINHASH_BANDS, minhash_apply_batch
+    from cqlcopy_spark.streaming.state_log import compact_versions, delta_ids, read_view
 
     batches = _split_corpus(9)
     state = str(tmp_path / "state")
@@ -313,16 +310,16 @@ def test_minhash_compaction_is_incremental_and_prunes_versions(spark, tmp_path):
     hashes_root = os.path.join(state, "hashes")
     # fires at batch 4 (deltas 0-3) and batch 8 (v=4 + deltas 4-7);
     # batches 5-7 and 9... (9 batches = ids 0..8, so the last fire is 8)
-    assert _compact_versions(bands_root) == [8]
+    assert compact_versions(bands_root) == [8]
     # every raw delta retained for out-of-order replay (the band deltas
     # of the r17 layout ARE the hashes deltas; bands/ holds only the
     # clustered compactions)
-    assert _delta_ids(hashes_root, 10_000) == list(range(9))
-    assert _delta_ids(bands_root, 10_000) == []
+    assert delta_ids(hashes_root, 10_000) == list(range(9))
+    assert delta_ids(bands_root, 10_000) == []
     # the merged compact + derived tail still equals the raw union
-    full = _band_frame(spark, state, 9)
+    full = read_view(spark, MINHASH_BANDS, state, 9)
     raw = _band_rows(
-        spark.read.schema(_HASHES_DELTA_SCHEMA).parquet(
+        spark.read.schema(MINHASH_BANDS.delta_schema).parquet(
             *[os.path.join(hashes_root, f"delta={i}") for i in range(9)]
         )
     )

@@ -55,12 +55,13 @@ def test_planted_branch_corruption_fires(spark, forked):
     clone put it.)"""
     from cqlcopy_spark.operators.vector_index import (
         _CODES_SCHEMA,
+        INDEX_CODES,
         _branch_violations,
     )
-    from cqlcopy_spark.streaming.sinks import _index_delta_paths
+    from cqlcopy_spark.streaming.state_log import resolve
 
     e, trunk, branch, final = forked
-    comp = _index_delta_paths(os.path.join(branch, "codes"), 3)[0]
+    comp = sum(resolve(INDEX_CODES, branch, 3), [])[0]
     rows = spark.read.schema(_CODES_SCHEMA).parquet(comp)
     victim = rows.agg(F.min("vec_id")).first()[0]
     kept = rows.filter(F.col("vec_id") != victim)
@@ -110,14 +111,15 @@ def test_branch_guard_consults_cloned_tombstones(spark, forked):
     """A deleted-on-trunk id re-delivered to the BRANCH is dropped: the
     fork carried the tombstones, so permanence crosses the fork."""
     from cqlcopy_spark.operators.vector_index import (
-        _read_tombstones,
+        INDEX_TOMBSTONES,
         read_index_codes,
         vector_index_append,
     )
+    from cqlcopy_spark.streaming.state_log import read_view
 
     e, trunk, branch, final = forked
     doomed_id = int(
-        _read_tombstones(spark, branch).agg(F.min("vec_id")).first()[0]
+        read_view(spark, INDEX_TOMBSTONES, branch).agg(F.min("vec_id")).first()[0]
     )
     readd = e.filter(F.col("vec_id") == doomed_id).selectExpr(
         "vec_id", "transform(emb, x -> x + 5.0) AS emb"

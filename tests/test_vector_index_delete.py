@@ -115,14 +115,15 @@ def test_planted_resurrection_and_phantom_are_flagged(spark):
     from cqlcopy_spark.operators.vector_index import (
         _delete_violations,
         _lifecycle_state,
-        _read_tombstones,
+        INDEX_TOMBSTONES,
         read_index_codes,
     )
+    from cqlcopy_spark.streaming.state_log import read_view
 
     e, state = _lifecycle_state(spark, SF_SMALL)
     assert _delete_violations(spark, e, state).count() == 0
 
-    victim = min(_ids(_read_tombstones(spark, state)))
+    victim = min(_ids(read_view(spark, INDEX_TOMBSTONES, state)))
     row = spark.read.parquet(os.path.join(state, "codes", "delta=0")).filter(
         F.col("vec_id") == victim
     )

@@ -34,17 +34,15 @@ def vacuumed(spark):
 
 
 def test_vacuum_prunes_and_preserves_reader_view(spark, vacuumed):
-    from cqlcopy_spark.operators.vector_index import (
-        _read_index_deltas_codes,
-        read_index_codes,
-    )
+    from cqlcopy_spark.operators.vector_index import INDEX_CODES, read_index_codes
+    from cqlcopy_spark.streaming.state_log import read_view
 
     e, state, qlist, (pre_view_dir, raw_tombs), n_pruned = vacuumed
     n_tombs = raw_tombs.count()
     assert n_tombs > 0, "lifecycle precondition: something was deleted"
     # physical pruning happened and was counted
     assert n_pruned > 0
-    phys = _read_index_deltas_codes(spark, state)
+    phys = read_view(spark, INDEX_CODES, state)
     assert phys.join(raw_tombs, "vec_id", "left_semi").count() == 0
     # reader view bitwise unchanged (count + per-id membership)
     from cqlcopy_spark.operators.vector_index import _CODES_SCHEMA
@@ -71,13 +69,13 @@ def test_vacuum_idempotent(spark, vacuumed):
         read_index_codes,
         vector_index_vacuum,
     )
-    from cqlcopy_spark.streaming.sinks import _compact_versions
+    from cqlcopy_spark.streaming.state_log import compact_versions
 
     e, state, qlist, snap, _ = vacuumed
     before = read_index_codes(spark, state).count()
-    vids_before = _compact_versions(os.path.join(state, "codes"))
+    vids_before = compact_versions(os.path.join(state, "codes"))
     assert vector_index_vacuum(spark, state) == 0
-    assert _compact_versions(os.path.join(state, "codes")) == vids_before
+    assert compact_versions(os.path.join(state, "codes")) == vids_before
     assert read_index_codes(spark, state).count() == before
 
 
@@ -88,20 +86,20 @@ def test_vacuum_crash_between_swaps_completes_on_retry(spark, vacuumed):
     import shutil
 
     from cqlcopy_spark.operators.vector_index import (
-        _read_tombstones,
+        INDEX_TOMBSTONES,
         read_index_codes,
         vector_index_vacuum,
     )
-    from cqlcopy_spark.streaming.sinks import _compact_versions
+    from cqlcopy_spark.streaming.state_log import compact_versions, read_view
 
     e, state, qlist, snap, _ = vacuumed
     before = read_index_codes(spark, state).count()
     tomb_root = os.path.join(state, "tombstones")
-    vid = _compact_versions(tomb_root)[-1]
+    vid = compact_versions(tomb_root)[-1]
     shutil.rmtree(os.path.join(tomb_root, "compact", f"v={vid}"))
-    assert _read_tombstones(spark, state).count() > 0  # the crash state
+    assert read_view(spark, INDEX_TOMBSTONES, state).count() > 0  # the crash state
     assert vector_index_vacuum(spark, state) == 0  # nothing left to prune
-    assert _read_tombstones(spark, state).count() == 0  # but it completed
+    assert read_view(spark, INDEX_TOMBSTONES, state).count() == 0  # but it completed
     assert read_index_codes(spark, state).count() == before
 
 
@@ -111,14 +109,13 @@ def test_planted_dead_row_fires(spark, vacuumed):
     vacuum cannot pass)."""
     from cqlcopy_spark.operators.vector_index import (
         _CODES_SCHEMA,
-        _read_index_deltas_codes,
         _vacuum_violations,
     )
-    from cqlcopy_spark.streaming.sinks import _compact_versions
+    from cqlcopy_spark.streaming.state_log import compact_versions
 
     e, state, qlist, (pre_view_dir, raw_tombs), _ = vacuumed
     doomed_id = raw_tombs.agg(F.min("vec_id")).first()[0]
-    vid = _compact_versions(os.path.join(state, "codes"))[-1]
+    vid = compact_versions(os.path.join(state, "codes"))[-1]
     planted = spark.createDataFrame(
         [(int(doomed_id), [0.0] * 64, 0, "0-0-0-0-0-0-0-0")], _CODES_SCHEMA
     )
@@ -140,11 +137,11 @@ def test_planted_tombstone_residue_fires(spark, vacuumed):
     import shutil
 
     from cqlcopy_spark.operators.vector_index import _vacuum_violations
-    from cqlcopy_spark.streaming.sinks import _compact_versions
+    from cqlcopy_spark.streaming.state_log import compact_versions
 
     e, state, qlist, (pre_view_dir, raw_tombs), _ = vacuumed
     tomb_root = os.path.join(state, "tombstones")
-    vid = _compact_versions(tomb_root)[-1]
+    vid = compact_versions(tomb_root)[-1]
     shutil.rmtree(os.path.join(tomb_root, "compact", f"v={vid}"))
     v = _vacuum_violations(spark, state, qlist, pre_view_dir, raw_tombs).persist()
     residue = {r["vec_id"] for r in v.filter(F.col("kind") == "tombstone_residue").collect()}
@@ -164,11 +161,12 @@ def test_post_vacuum_resurrection_lands_and_raw_deltas_flag_it(spark, vacuumed):
     docstring points at."""
     from pyspark.sql.functions import col
     from cqlcopy_spark.operators.vector_index import (
-        _CODES_SCHEMA,
-        _rows_with_batch,
+        INDEX_CODES,
+        INDEX_TOMBSTONES,
         read_index_codes,
         vector_index_append,
     )
+    from cqlcopy_spark.streaming.state_log import read_provenance
 
     e, state, qlist, (pre_view_dir, raw_tombs), _ = vacuumed
     doomed_id = int(raw_tombs.agg(F.min("vec_id")).first()[0])
@@ -184,12 +182,10 @@ def test_post_vacuum_resurrection_lands_and_raw_deltas_flag_it(spark, vacuumed):
         .count()
         == 1
     )
-    codes_prov = _rows_with_batch(
-        spark, os.path.join(state, "codes"), _CODES_SCHEMA
+    codes_prov = read_provenance(spark, INDEX_CODES, state, "b")
+    tomb_prov = read_provenance(spark, INDEX_TOMBSTONES, state, "b").select(
+        "vec_id", col("b").alias("tb")
     )
-    tomb_prov = _rows_with_batch(
-        spark, os.path.join(state, "tombstones"), "vec_id long"
-    ).select("vec_id", col("b").alias("tb"))
     resurrected = (
         codes_prov.join(tomb_prov, "vec_id").filter(col("b") > col("tb"))
     )
@@ -222,7 +218,7 @@ def test_first_time_write_below_vacuum_floor_refused(spark, vacuumed):
 def test_replay_below_vacuum_reads_pre_vacuum_truth(spark, vacuumed):
     """Raw deltas are replay truth: a same-checkpoint replay of the last
     pre-vacuum batch (batch 3 — poisoned re-adds + final append) rewrites
-    its delta with exactly the same row set, because _read_index_deltas
+    its delta with exactly the same row set, because the as-of read
     only consults compactions ≤ the replaying batch and the vacuum
     version is stamped strictly above every delta."""
     from cqlcopy_spark.operators.vector_index import (
