@@ -21,9 +21,13 @@ own schema on read, but the write path needs a declaration or
 inference), `--dynamic` selects the cell-dynamic typing path
 (write.go:199-223 fidelity), and floats work (README.md:11 gap).
 
-Stdout export (`--output -`) is intentionally a single driver-side
-stream: the reference's stdout is exactly as serial (read.go:181-190).
-Distributed export goes to a directory via executors.
+Both exports render lines once, in the JVM (`sinks/csv_sink.render_lines`,
+the reference's convention: strings quoted, other types bare, read.go:181-190),
+so a directory and stdout carry the same lines. Stdout export
+(`--output -`) is intentionally a single driver-side stream: the
+reference's stdout is exactly as serial. Distributed export goes to a
+directory via executors. The typed write path runs no Python stage:
+progress comes from Spark's status store (`progress.py`).
 """
 
 from __future__ import annotations
@@ -33,7 +37,6 @@ import sys
 from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import col
 
@@ -277,45 +280,17 @@ def _build_write_df(
     return _dynamic_with_budget(schema)
 
 
-def _emit_stdout_csv(df: DataFrame, is_str: list[bool], cfg: CopyConfig, out) -> int:
-    """Reference stdout semantics (read.go:140-190): header always quoted,
-    values quoted iff the column's NATIVE type is string (type-preserving
-    round-trip), nulls as the unquoted null literal. `is_str` carries the
-    PRE-stringification types (the export formatter casts everything to
-    string first). Serial by nature — stdout is one stream for the
-    reference too."""
+def _emit_stdout_csv(df: DataFrame, cfg: CopyConfig, out) -> None:
+    """Reference stdout semantics (read.go:140-190): the rendered lines
+    `write_csv` writes, streamed through the driver. Serial by nature —
+    stdout is one stream for the reference too."""
+    from cqlcopy_spark.sinks.csv_sink import render_lines
 
-    def fmt(v, quoted: bool) -> str:
-        if v is None:
-            return cfg.null_literal
-        s = str(v)
-        return '"' + s.replace('"', '""') + '"' if quoted else s
-
-    n = 0
+    lines = render_lines(df, cfg)
     if cfg.header:
-        out.write(",".join(f'"{c}"' for c in df.columns) + "\n")
-    for row in df.toLocalIterator():
-        out.write(",".join(fmt(v, q) for v, q in zip(row, is_str)) + "\n")
-        n += 1
-    return n
-
-
-def _format_for_export(df: DataFrame, cfg: CopyConfig) -> DataFrame:
-    """Render timestamps in the configured --time-format and booleans in
-    the configured --bool-style before stringification (op 21)."""
-    exprs = []
-    for f in df.schema.fields:
-        c = col(f.name)
-        if isinstance(f.dataType, T.TimestampType):
-            c = F.date_format(c, cfg.time_format)
-        elif isinstance(f.dataType, T.TimestampNTZType):
-            c = F.date_format(c, cfg.time_format_ntz)
-        elif isinstance(f.dataType, T.BooleanType):
-            c = F.when(c, cfg.true_literal).when(~c, cfg.false_literal)
-        elif not isinstance(f.dataType, T.StringType):
-            c = c.cast("string")
-        exprs.append(c.alias(f.name))
-    return df.select(*exprs)
+        out.write(lines.columns[0] + "\n")
+    for (line,) in lines.toLocalIterator():
+        out.write(line + "\n")
 
 
 def run_write(spark: SparkSession, args: argparse.Namespace) -> int:
@@ -329,13 +304,11 @@ def run_write(spark: SparkSession, args: argparse.Namespace) -> int:
         df = repartition_for_workers(loaded, cfg)
         # Progress to stderr (the reference's logger also writes there),
         # keeping stdout clean for data.
-        reporter = ProgressReporter(
+        with ProgressReporter(
             spark.sparkContext,
             report=lambda s: print(s, file=sys.stderr),
             freq_s=cfg.report_freq_s,
-        )
-        with reporter as rep:
-            df = rep.instrument(df)
+        ):
             if args.backend == "cassandra":
                 from cqlcopy_spark.sources.cassandra import copy_to_cassandra
 
@@ -407,10 +380,8 @@ def run_read(spark: SparkSession, args: argparse.Namespace) -> int:
                     f"columns; {c!r} is {types[c].simpleString()}"
                 )
         df = scan_token_range(df, pk_cols, args.offset, cfg).drop("token")
-    is_str = [isinstance(f.dataType, T.StringType) for f in df.schema.fields]
-    df = _format_for_export(df, cfg)
     if args.output == "-":
-        _emit_stdout_csv(df, is_str, cfg, sys.stdout)
+        _emit_stdout_csv(df, cfg, sys.stdout)
     else:
         write_csv(df, args.output, cfg)
     return 0

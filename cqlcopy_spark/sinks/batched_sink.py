@@ -16,15 +16,23 @@ never leave half-written output visible. That is exactly the contract
 `DataFrameWriter.save()` gives parquet, re-implemented for a custom
 batched-CSV sink via the Python DataSource API.
 
+Rows arrive typed; each task renders them with one per-field renderer
+per column, chosen once from the write's schema, in the convention of
+`csv_sink._render_field` (strings always quoted, so the string "NULL"
+stays data; SQL NULL is the bare null literal).
+
 Scale posture: tasks write independently (no coordination until the
 driver-side commit); commit cost ∝ #files = #partitions, not bytes.
 """
 
 from __future__ import annotations
 
+import datetime
 import os
+from collections.abc import Callable
 from dataclasses import dataclass
 
+from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceWriter,
@@ -44,8 +52,9 @@ class StagedFile(WriterCommitMessage):
 
 
 class BatchedCsvWriter(DataSourceWriter):
-    def __init__(self, options, overwrite=False):
+    def __init__(self, options, schema, overwrite=False):
         self.path = options["path"]
+        self.schema = schema
         self.overwrite = overwrite
         # defaults come from DEFAULT_CONFIG (the reference's CLI defaults,
         # write.go:35-41) so the sink can't drift from the COPY surface
@@ -67,15 +76,52 @@ class BatchedCsvWriter(DataSourceWriter):
         self.true_lit, self.false_lit = (x.strip() for x in bs.split(","))
         # timestamp layout DERIVED from the COPY surface's --time-format
         # (Go layout → strftime), so this sink renders the same wire form
-        # cfg.time_format re-parses. PySpark hands the Python writer
-        # tz-NAIVE datetimes (session tz UTC): a naive strftime("%z")
-        # renders EMPTY, so _render localizes to UTC first — otherwise
-        # the emitted lines are not re-ingestable under the default
-        # layout (its read side requires an offset).
+        # cfg.time_format re-parses
         from cqlcopy_spark.config import go_layout_to_strftime
 
         go_fmt = options.get("time_format_go", DEFAULT_CONFIG.time_format_go)
         self.ts_format = options.get("ts_format", go_layout_to_strftime(go_fmt))
+
+    def _field_renderer(self, dtype) -> Callable[[object], str]:
+        """One CSV cell in csv_sink._render_field's convention, chosen once
+        per column from the schema: strings ALWAYS quoted (quote-doubling
+        escape) so the string "NULL" stays data, booleans the configured
+        literals, timestamps the configured layout, everything else
+        bare, SQL NULL the bare null literal."""
+        if isinstance(dtype, T.StringType):
+
+            def text(v) -> str:
+                return '"' + v.replace('"', '""') + '"'
+
+        elif isinstance(dtype, T.BooleanType):
+
+            def text(v) -> str:
+                return self.true_lit if v else self.false_lit
+
+        elif isinstance(dtype, T.TimestampType):
+            # PySpark hands the Python writer tz-NAIVE datetimes (session
+            # tz UTC), and a naive strftime("%z") renders EMPTY — the
+            # lines would not re-ingest under the default layout, whose
+            # read side requires an offset
+            utc = "%z" in self.ts_format
+
+            def text(v) -> str:
+                if utc and v.tzinfo is None:
+                    v = v.replace(tzinfo=datetime.timezone.utc)
+                return v.strftime(self.ts_format)
+
+        elif isinstance(dtype, T.TimestampNTZType):
+            # zone-less, like CopyConfig.time_format_ntz: the NTZ read
+            # side rejects a trailing offset
+            ntz_format = self.ts_format.replace("%z", "").strip()
+
+            def text(v) -> str:
+                return v.strftime(ntz_format)
+
+        else:
+            text = str
+        null = self.null_literal
+        return lambda v: null if v is None else text(v)
 
     def write(self, iterator):
         """Task-side: accumulate rows into batches, flush each batch
@@ -117,35 +163,9 @@ class BatchedCsvWriter(DataSourceWriter):
             n_batches += 1
             batch, batch_bytes = [], 0
 
-        import csv
-        import io
-
-        import datetime as _dt
-
-        def _render(v) -> str:
-            if v is None:
-                return self.null_literal
-            if isinstance(v, bool):
-                return self.true_lit if v else self.false_lit
-            if isinstance(v, _dt.datetime):
-                if v.tzinfo is None and "%z" in self.ts_format:
-                    # session tz is UTC, so naive values ARE UTC instants;
-                    # without this, %z renders as the empty string
-                    v = v.replace(tzinfo=_dt.timezone.utc)
-                return v.strftime(self.ts_format)
-            return str(v)
-
-        def _csv_line(row) -> str:
-            # RFC-4180 quoting (the convention csv_sink/write_csv uses):
-            # a bare join corrupts fields containing commas/quotes/newlines
-            buf = io.StringIO()
-            csv.writer(buf, lineterminator="\n", quoting=csv.QUOTE_MINIMAL).writerow(
-                [_render(v) for v in row]
-            )
-            return buf.getvalue()
-
+        render = [self._field_renderer(f.dataType) for f in self.schema.fields]
         for row in iterator:
-            line = _csv_line(row)
+            line = ",".join([r(v) for r, v in zip(render, row)]) + "\n"
             batch.append(line)
             # UTF-8 octets of the QUOTED line. The reference counts the
             # UNQUOTED field bytes (write.go:238-240, the formulation
@@ -213,17 +233,38 @@ class BatchedCsvSinkDataSource(DataSource):
         return "cql_batched"
 
     def writer(self, schema, overwrite):
-        return BatchedCsvWriter(self.options, overwrite=overwrite)
+        return BatchedCsvWriter(self.options, schema, overwrite=overwrite)
 
 
 def register_batched_sink(spark) -> None:
+    """Make `df.write.format("cql_batched")` work for writes from `spark`.
+
+    Python data sources live in each session's own registry, and Spark
+    resolves a format name against the thread's ACTIVE session but plans
+    the write against the writing session; the public
+    `spark.dataSource.register` also refuses a name the active session
+    already holds. A write from a second session (`spark.newSession()`)
+    therefore needs the sink in both registries, and neither a
+    session-conf flag nor a per-SparkContext one can tell that — so the
+    registries themselves are asked, and the sink goes straight into
+    each one that lacks it."""
+    from pyspark.sql.udf import _wrap_function
+
     from cqlcopy_spark.catalog import _ship_package
 
-    key = "cqlcopy_spark._batched_sink_registered"
-    if spark.conf.get(key, None) == "1":
-        return
     # the writer class is cloudpickled BY REFERENCE — executors must be
     # able to import cqlcopy_spark (CLAUDE.md UDF-shipping rule)
     _ship_package(spark)
-    spark.dataSource.register(BatchedCsvSinkDataSource)
-    spark.conf.set(key, "1")
+    jvm = spark._jvm
+    sessions = [spark._jsparkSession]
+    active = jvm.org.apache.spark.sql.SparkSession.getActiveSession()
+    if active.isDefined():
+        sessions.append(active.get())
+    name = BatchedCsvSinkDataSource.name()
+    for session in sessions:
+        registry = session.sessionState().dataSourceManager()
+        if not registry.dataSourceExists(name):
+            source = jvm.org.apache.spark.sql.execution.datasources.v2.python.UserDefinedPythonDataSource(
+                _wrap_function(spark.sparkContext, BatchedCsvSinkDataSource)
+            )
+            registry.registerDataSource(name, source)

@@ -297,3 +297,84 @@ def test_cli_write_declared_date_type(spark, tmp_path):
 
     assert got[1] == datetime.date(2024, 1, 3)
     assert got[2] is None  # unparseable cell → null, row survives
+
+
+@pytest.mark.parametrize("dynamic", [False, True], ids=["typed", "dynamic"])
+def test_cli_write_int64_extremes_round_trip(spark, tmp_path, dynamic):
+    """int64 min and max and a nullable long above 2**53 land exactly:
+    the typed write carries no pandas stage that would widen a nullable
+    long column to float64. One partition puts the NULL and the extremes
+    in one batch, where such a stage would meet both."""
+    p = tmp_path / "longs.csv"
+    rows = {1: -(2**63), 2: 2**63 - 1, 3: 2**53 + 1, 4: None}
+    body = "".join(f"{k},{'NULL' if v is None else v}\n" for k, v in rows.items())
+    p.write_text('"id","q"\n' + body, encoding="utf-8")
+    out = str(tmp_path / "longs.parquet")
+    argv = [
+        "write", "t", "id", "q", "--input", str(p), "--types", "long,long",
+        "--path", out, "--num-processes", "1",
+    ]
+    assert main(argv + ["--dynamic"] * dynamic, spark=spark) == 0
+    got = {r["id"]: r["q"] for r in spark.read.parquet(out).collect()}
+    assert got == rows
+
+
+def test_cli_write_keeps_caller_job_group(spark, tmp_path):
+    """The progress reporter reuses a job group the caller set (a tracer
+    counting jobs per call) and leaves it in place."""
+    sc = spark.sparkContext
+    sc.setJobGroup("caller-group", "caller")
+    try:
+        rc = main(
+            [
+                "write", "items", "id", "name", "price", "ok", "when",
+                "--input", _write_input(tmp_path),
+                "--types", "long,string,double,bool,timestamp",
+                "--path", str(tmp_path / "grouped.parquet"),
+            ],
+            spark=spark,
+        )
+        assert rc == 0
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+        assert sc.statusTracker().getJobIdsForGroup("caller-group")
+    finally:
+        sc._jsc.clearJobGroup()
+
+
+def test_cli_read_directory_and_stdout_render_same_lines(spark, tmp_path):
+    """One renderer for both exports: a directory export and a stdout
+    export of one long/string/bool/timestamp/double table carry the same
+    quoted header and the same lines — strings quoted, everything else
+    bare, SQL NULL the bare literal (read.go:181-190)."""
+    import datetime
+    import os
+
+    src = str(tmp_path / "typed.parquet")
+    spark.createDataFrame(
+        [
+            (1, 1.5, True, datetime.datetime(2024, 1, 2, 3, 4, 5), "keep"),
+            (2, None, None, None, "NULL"),
+            (3, -2.0, False, datetime.datetime(2024, 1, 2, 3, 4, 6), None),
+        ],
+        "a long, b double, c boolean, d timestamp, e string",
+    ).write.parquet(src)
+    read = ["read", "t", "a", "b", "c", "d", "e", "--path", src]
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        assert main(read + ["--output", "-"], spark=spark) == 0
+    stdout = buf.getvalue().splitlines()
+    out = str(tmp_path / "exported")
+    assert main(read + ["--output", out], spark=spark) == 0
+    parts = [
+        open(os.path.join(out, f), encoding="utf-8").read().splitlines()
+        for f in os.listdir(out)
+        if f.startswith("part-")
+    ]
+    header = '"a","b","c","d","e"'
+    assert stdout[0] == header and {p[0] for p in parts} == {header}
+    body = sorted(ln for p in parts for ln in p[1:])
+    assert body == sorted(stdout[1:]) == [
+        '1,1.5,true,2024-01-02 03:04:05+0000,"keep"',
+        '2,NULL,NULL,NULL,"NULL"',
+        "3,-2.0,false,2024-01-02 03:04:06+0000,NULL",
+    ]

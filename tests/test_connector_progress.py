@@ -42,13 +42,16 @@ def test_split_table_validates_identifiers():
         split_table("ks.bad;drop")
 
 
-def test_progress_reporter_counts_rows(spark):
+def test_progress_reporter_counts_rows(spark, tmp_path):
+    """Rows done come from the status store: the final line carries the
+    exact count a real parquet write produced, and a reporter that set
+    its own job group clears it on exit."""
     lines: list[str] = []
-    with ProgressReporter(spark.sparkContext, report=lines.append, freq_s=0.1) as pr:
-        n = pr.instrument(spark.range(1000).repartition(4)).count()
-    assert n == 1000
-    assert pr.rows.value == 1000
-    assert lines and "1000 rows done" in lines[-1]
+    sc = spark.sparkContext
+    with ProgressReporter(sc, report=lines.append, freq_s=0.1):
+        spark.range(1000).repartition(4).write.parquet(str(tmp_path / "p"))
+    assert lines and lines[-1].startswith("1000 rows done (0 failures)"), lines
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
 
 
 def test_paged_source_partitions_are_disjoint_complete_row_group_spans():
@@ -111,9 +114,8 @@ def test_batched_sink_timestamp_roundtrip(spark, tmp_path):
     semantics), and re-ingest through the engine's own dynamic parser to
     the same instants. PySpark hands the Python writer tz-NAIVE
     datetimes, so a bare strftime('%z') renders empty — the r04 ADVICE
-    regression this pins."""
-    import os
-
+    regression this pins. TIMESTAMP_NTZ values render zone-less, the
+    layout their read side parses."""
     import pyspark.sql.types as T
 
     from cqlcopy_spark.catalog import _ship_package
@@ -127,30 +129,28 @@ def test_batched_sink_timestamp_roundtrip(spark, tmp_path):
     src = spark.createDataFrame(
         [(1, "2024-01-01 00:00:00"), (2, "2024-06-30 23:59:59")],
         "id long, s string",
-    ).selectExpr("id", "CAST(s AS TIMESTAMP) AS ts")
+    ).selectExpr("id", "CAST(s AS TIMESTAMP) AS ts", "CAST(s AS TIMESTAMP_NTZ) AS ntz")
     src.coalesce(1).write.format("cql_batched").option("path", out).mode(
         "append"
     ).save()
-    lines = [
-        ln
-        for f in os.listdir(out)
-        if f.endswith(".csv")
-        for ln in open(os.path.join(out, f), encoding="utf-8").read().splitlines()
-    ]
-    assert sorted(lines) == [
-        "1,2024-01-01 00:00:00+0000",
-        "2,2024-06-30 23:59:59+0000",
+    assert _batched_lines(out) == [
+        "1,2024-01-01 00:00:00+0000,2024-01-01 00:00:00",
+        "2,2024-06-30 23:59:59+0000,2024-06-30 23:59:59",
     ]
     import dataclasses
 
     cfg = dataclasses.replace(DEFAULT_CONFIG, header=False)  # sink emits no header
-    raw = parse_csv_dynamic(spark, out, ["id", "ts"], cfg)
+    raw = parse_csv_dynamic(spark, out, ["id", "ts", "ntz"], cfg)
     schema = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("ts", T.TimestampType())]
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("ts", T.TimestampType()),
+            T.StructField("ntz", T.TimestampNTZType()),
+        ]
     )
     back = cast_dynamic(raw, schema, cfg)
-    got = {r["id"]: r["ts"] for r in back.select("id", "ts").collect()}
-    want = {r["id"]: r["ts"] for r in src.collect()}
+    got = {r["id"]: (r["ts"], r["ntz"]) for r in back.collect()}
+    want = {r["id"]: (r["ts"], r["ntz"]) for r in src.collect()}
     assert got == want
 
 
@@ -159,10 +159,13 @@ def test_batch_byte_threshold_counts_utf8_octets(tmp_path):
     (quoted) line — codepoint-counting unquoted fields undercounts
     multi-byte text ~2× and drifts from the reference's byte budget
     (write.go:238-240; r03 ADVICE)."""
+    from pyspark.sql import types as T
+
     from cqlcopy_spark.sinks.batched_sink import BatchedCsvWriter
 
     w = BatchedCsvWriter(
-        {"path": str(tmp_path / "sink"), "chunk_size": "1000", "max_batch_kb": "1"}
+        {"path": str(tmp_path / "sink"), "chunk_size": "1000", "max_batch_kb": "1"},
+        T.StructType([T.StructField("s", T.StringType())]),
     )
     # 100 codepoints, 200 UTF-8 bytes per row (+1 newline): octet
     # counting trips the 1000-byte budget at 5 rows → 12 rows = 3
@@ -170,3 +173,61 @@ def test_batch_byte_threshold_counts_utf8_octets(tmp_path):
     msg = w.write(("é" * 100,) for _ in range(12))
     assert msg.n_rows == 12
     assert msg.n_batches == 3
+
+
+def _batched_lines(out: str) -> list[str]:
+    import os
+
+    return sorted(
+        ln
+        for f in os.listdir(out)
+        if f.endswith(".csv")
+        for ln in open(os.path.join(out, f), encoding="utf-8").read().splitlines()
+    )
+
+
+def test_batched_sink_null_string_stays_data(spark, tmp_path):
+    """Under the default null literal the string "NULL" is written quoted
+    and SQL NULL bare, so the dynamic reader tells them apart (quoted
+    "NULL" is data, write.go:214-215)."""
+    import dataclasses
+
+    import pyspark.sql.types as T
+
+    from cqlcopy_spark.config import DEFAULT_CONFIG
+    from cqlcopy_spark.sinks.batched_sink import register_batched_sink
+    from cqlcopy_spark.sources.csv_source import cast_dynamic, parse_csv_dynamic
+
+    register_batched_sink(spark)
+    out = str(tmp_path / "nulls")
+    spark.createDataFrame(
+        [(1, "NULL"), (2, None), (3, 'say "hi"')], "id long, name string"
+    ).coalesce(1).write.format("cql_batched").option("path", out).mode("append").save()
+    assert _batched_lines(out) == ['1,"NULL"', "2,NULL", '3,"say ""hi"""']
+    cfg = dataclasses.replace(DEFAULT_CONFIG, header=False)
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("name", T.StringType())]
+    )
+    back = cast_dynamic(parse_csv_dynamic(spark, out, ["id", "name"], cfg), schema, cfg)
+    assert {r["id"]: r["name"] for r in back.collect()} == {
+        1: "NULL",
+        2: None,
+        3: 'say "hi"',
+    }
+
+
+def test_batched_sink_registers_and_writes_from_second_session(spark, tmp_path):
+    """Spark resolves a format name against the active session and plans
+    the write against the writing one: registering in a second session
+    of the same SparkContext must neither fail nor leave its writes
+    unresolvable."""
+    from cqlcopy_spark.sinks.batched_sink import register_batched_sink
+
+    register_batched_sink(spark)
+    second = spark.newSession()
+    register_batched_sink(second)
+    out = str(tmp_path / "second")
+    second.createDataFrame([(1, True), (2, None)], "id long, ok boolean").coalesce(
+        1
+    ).write.format("cql_batched").option("path", out).mode("append").save()
+    assert _batched_lines(out) == ["1,true", "2,NULL"]

@@ -358,16 +358,25 @@ def test_with_batch_id_row_and_byte_epochs(spark):
     assert bseqs[0] == 0 and bseqs[-1] >= 2  # ~600B rows: epoch every ~2 rows
 
 
-def test_stringify_casts_every_non_string(spark):
-    import datetime
+def test_write_csv_honours_bool_style(spark, tmp_path):
+    """--bool-style literals reach the rendered lines, not Spark's
+    cast-to-string 'true'/'false'."""
+    import os
+    from dataclasses import replace
 
-    from cqlcopy_spark.sinks.csv_sink import stringify
+    from cqlcopy_spark.sinks.csv_sink import write_csv
 
-    df = spark.createDataFrame(
-        [(1, 1.5, True, datetime.datetime(2024, 1, 2, 3, 4, 5), "keep")],
-        "a long, b double, c boolean, d timestamp, e string",
+    out = str(tmp_path / "bools")
+    cfg = replace(CFG, header=False, bool_style=("yes", "no"))
+    write_csv(
+        spark.createDataFrame([(1, True), (2, False), (3, None)], "id long, ok boolean"),
+        out,
+        cfg,
     )
-    out = stringify(df)
-    assert all(t == "string" for _, t in out.dtypes)
-    r = out.collect()[0]
-    assert (r["a"], r["b"], r["c"], r["e"]) == ("1", "1.5", "true", "keep")
+    lines = sorted(
+        ln
+        for f in os.listdir(out)
+        if f.startswith("part-")
+        for ln in open(os.path.join(out, f), encoding="utf-8").read().splitlines()
+    )
+    assert lines == ["1,yes", "2,no", "3,NULL"]

@@ -1650,3 +1650,39 @@ def test_gram_sql_text_equivalence(spark):
         assert new.schema == old.schema, n
         assert new.exceptAll(old).count() == 0, n
         assert old.exceptAll(new).count() == 0, n
+
+
+def test_cli_typed_write_has_no_python_stage(spark, tmp_path):
+    """`write --types` runs no Python worker: progress is read from the
+    status store, so no MapInPandas / MapInArrow / ArrowEvalPython node
+    sits between the CSV scan and the parquet write. Read from the SQL
+    status store, so this pins the plans the write actually executed."""
+    from cqlcopy_spark.cli import main
+
+    src = tmp_path / "in.csv"
+    src.write_text('"id","name"\n1,"a"\n2,NULL\n', encoding="utf-8")
+    jsc = spark.sparkContext._jsc.sc()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def execution_ids() -> set[int]:
+        jsc.listenerBus().waitUntilEmpty()
+        runs = store.executionsList()
+        return {runs.apply(i).executionId() for i in range(runs.size())}
+
+    before = execution_ids()
+    rc = main(
+        [
+            "write", "t", "id", "name", "--types", "long,string",
+            "--input", str(src), "--path", str(tmp_path / "out.parquet"),
+        ],
+        spark=spark,
+    )
+    assert rc == 0
+    plans = [
+        store.execution(i).get().physicalPlanDescription()
+        for i in sorted(execution_ids() - before)
+    ]
+    assert any("InsertIntoHadoopFsRelationCommand" in p for p in plans), plans
+    for p in plans:
+        for node in ("MapInPandas", "MapInArrow", "ArrowEvalPython"):
+            assert node not in p, p
