@@ -47,6 +47,17 @@ def _emb_double(c):
     return col(c).cast("array<double>")
 
 
+def _emb_matrix(vecs) -> "np.ndarray":
+    """(n, d) float64 matrix of n equal-length vectors, cut from ONE
+    flattened buffer instead of n per-row arrays stacked. Bit-identical
+    to the per-row stack; raises on n == 0 like np.stack."""
+    import numpy as np
+
+    vecs = list(vecs)
+    flat = np.asarray(np.concatenate(vecs), dtype=np.float64)
+    return flat.reshape(len(vecs), len(vecs[0]))
+
+
 _DOT_SQL = (
     "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
     "list_transform(range(1, len({x}) + 1), i -> {x}[i] * {y}[i])), (a, b) -> a + b)"
@@ -192,7 +203,7 @@ def _lsh_banded(e: DataFrame) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["emb"]])
+            X = _emb_matrix(pdf["emb"])
             nrm = np.zeros(X.shape[0])
             for k in range(X.shape[1]):  # sequential fold == JVM _dot order
                 nrm += X[:, k] * X[:, k]
@@ -347,8 +358,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             right = pdf[pdf["side"] == "R"]
         if not len(left) or not len(right):
             return _EMPTY
-        X = np.stack([np.asarray(v, dtype=np.float64) for v in left["emb"]])
-        Y = np.stack([np.asarray(v, dtype=np.float64) for v in right["emb"]])
+        X = _emb_matrix(left["emb"])
+        Y = _emb_matrix(right["emb"])
         xid = left["vec_id"].to_numpy()
         yid = right["vec_id"].to_numpy()
         # zero-norm vectors have no cosine — drop them EXPLICITLY (the
@@ -434,7 +445,7 @@ def _train_centroids(sample: "list", cells: int) -> "object":
     reproducible); empty cells keep their previous centroid."""
     import numpy as np
 
-    X = np.stack([np.asarray(r["emb"], dtype=np.float64) for r in sample])
+    X = _emb_matrix(r["emb"] for r in sample)
     idx = (np.arange(cells) * len(X)) // cells
     C = X[idx].copy()
     xx = (X * X).sum(axis=1)
@@ -491,7 +502,7 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["emb"]])
+            X = _emb_matrix(pdf["emb"])
             nrm = np.zeros(X.shape[0])
             for k in range(X.shape[1]):  # sequential fold == JVM _dot order
                 nrm += X[:, k] * X[:, k]
@@ -1133,7 +1144,7 @@ def dedup_embedding_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["emb"]])
+            X = _emb_matrix(pdf["emb"])
             # multi-assignment: each vector lands in its 2 nearest cells
             # (the write-side mirror of query-side nprobe) — boundary
             # pairs share a cell far more often, roughly doubling recall
@@ -1181,7 +1192,7 @@ def dedup_embedding_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if len(pdf) < 2:
             return empty
-        X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["emb"]])
+        X = _emb_matrix(pdf["emb"])
         ids = pdf["vec_id"].to_numpy()
         nrm = _seq_norm(X)
         ok = nrm > 0
@@ -1357,7 +1368,7 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if len(pdf) < 2:
             return empty
-        X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["emb"]])
+        X = _emb_matrix(pdf["emb"])
         ids = pdf["vec_id"].to_numpy()
         nrm = np.zeros(X.shape[0])
         for k in range(X.shape[1]):  # sequential fold == JVM/_sql_dot order
@@ -1446,7 +1457,7 @@ def _kmeans_partials_fn(centroids):
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["emb"]])
+            X = _emb_matrix(pdf["emb"])
             # argmin |x-c|^2 == argmin |c|^2 - 2 x.c (xx is row-constant)
             a = (cc[None, :] - 2.0 * (X @ C.T)).argmin(axis=1)
             for c in np.unique(a):
@@ -1479,7 +1490,7 @@ def _kmeans_assign_fn(centroids):
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["emb"]])
+            X = _emb_matrix(pdf["emb"])
             xx = (X * X).sum(axis=1)
             d2 = cc[None, :] - 2.0 * (X @ C.T) + xx[:, None]
             a = d2.argmin(axis=1)  # np argmin: FIRST minimum -> lowest cid
@@ -1838,7 +1849,7 @@ def _pq_fit(spark: SparkSession, sf_dir: str):
     if n_corpus is None:
         n_corpus = e.count()
     sample = _train_sample(e, _PQ_TRAIN_CAP)
-    X = np.stack([np.asarray(r["emb"], dtype=np.float64) for r in sample])
+    X = _emb_matrix(r["emb"] for r in sample)
     books = _pq_train(X)
     bc = spark.sparkContext.broadcast(books)
 
@@ -1847,7 +1858,7 @@ def _pq_fit(spark: SparkSession, sf_dir: str):
         for pdf in batches:
             if not len(pdf):
                 continue
-            Xb = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["emb"]])
+            Xb = _emb_matrix(pdf["emb"])
             codes, err = _pq_encode_batch(C, Xb)
             yield pd.DataFrame(
                 {
@@ -2062,7 +2073,7 @@ def _adc_scan_kernel(bc):
                 [[int(c) for c in s.split("-")] for s in pdf["codes"]],
                 dtype=np.int64,
             )
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["emb"]])
+            X = _emb_matrix(pdf["emb"])
             vec_ids = pdf["vec_id"].to_numpy()
             # zero-norm corpus vectors have no cosine: all-zero components
             # is the EXACT predicate for sum-of-squares == 0 (non-negative
@@ -2268,7 +2279,7 @@ def _ivfpq_train_from_sample(sample: "list"):
     per-dimension assignment."""
     import numpy as np
 
-    X = np.stack([np.asarray(r["emb"], dtype=np.float64) for r in sample])
+    X = _emb_matrix(r["emb"] for r in sample)
     coarse = _train_centroids(sample, _IVF_CELLS)
     books = _pq_train(X - coarse[_coarse_assign(X, coarse)])
     return coarse, books
@@ -2293,7 +2304,7 @@ def _ivfpq_encode_frame(frame: DataFrame, coarse, books) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            Xb = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["emb"]])
+            Xb = _emb_matrix(pdf["emb"])
             cell = _coarse_assign(Xb, C)
             codes, _ = _pq_encode_batch(B, Xb - C[cell])
             yield pd.DataFrame(

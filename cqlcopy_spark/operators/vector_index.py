@@ -131,8 +131,8 @@ def vector_index_build(base: DataFrame, state_dir: str, batch_id: int = 0) -> No
     seed = keep_min_by(base.select("vec_id", "emb"), "vec_id")
     coarse, books = _fit_from_base(seed)
     os.makedirs(state_dir, exist_ok=True)
-    _encode_with(seed, coarse, books).write.mode("overwrite").parquet(
-        os.path.join(state_dir, "codes", f"delta={batch_id}")
+    state_log.write_delta(
+        INDEX_CODES, _encode_with(seed, coarse, books), state_dir, batch_id
     )
 
     def _atomic_write(tbl, name: str) -> None:
@@ -172,26 +172,18 @@ def _load_artifacts(spark: SparkSession, state_dir: str):
     """(coarse, books) back from parquet — the bounded index-header
     read, done DRIVER-SIDE with pyarrow (no Spark job: ≤ cells + M·K
     tiny rows, and every append/search/verify re-reads them)."""
-    import numpy as np
     import pyarrow.parquet as pq
+
+    from cqlcopy_spark.operators.similarity import _emb_matrix
 
     ct = pq.read_table(os.path.join(state_dir, "centroids.parquet")).to_pydict()
     order = sorted(range(len(ct["cell"])), key=lambda i: ct["cell"][i])
-    coarse = np.stack(
-        [np.asarray(ct["c"][i], dtype=np.float64) for i in order]
-    )
+    coarse = _emb_matrix(ct["c"][i] for i in order)
     bt = pq.read_table(os.path.join(state_dir, "codebooks.parquet")).to_pydict()
     idx = sorted(range(len(bt["m"])), key=lambda i: (bt["m"][i], bt["k"][i]))
-    n_m = 1 + max(bt["m"])
     books = [
-        np.stack(
-            [
-                np.asarray(bt["c"][i], dtype=np.float64)
-                for i in idx
-                if bt["m"][i] == m
-            ]
-        )
-        for m in range(n_m)
+        _emb_matrix(bt["c"][i] for i in idx if bt["m"][i] == m)
+        for m in range(1 + max(bt["m"]))
     ]
     return coarse, books
 
@@ -224,10 +216,9 @@ def vector_index_append(new_df: DataFrame, batch_id: int, state_dir: str) -> Non
     prior_ids = state_log.read_view(spark, INDEX_CODES, state_dir, batch_id).select(
         "vec_id"
     )
-    if os.path.isdir(os.path.join(state_dir, "tombstones")):
-        prior_ids = prior_ids.unionByName(
-            state_log.read_view(spark, INDEX_TOMBSTONES, state_dir, batch_id)
-        )
+    tombs = state_log.read_mask(spark, VECTOR_INDEX, state_dir, batch_id)
+    if tombs is not None:
+        prior_ids = prior_ids.unionByName(tombs)
     # deterministic in-batch keeper (min emb per vec_id), never bare
     # dropDuplicates: an arbitrary pick would let a checkpoint replay of
     # a batch carrying one vec_id with conflicting payloads write a
@@ -237,8 +228,8 @@ def vector_index_append(new_df: DataFrame, batch_id: int, state_dir: str) -> Non
         prior_ids, "vec_id", "left_anti"
     )
     coarse, books = _load_artifacts(spark, state_dir)
-    _encode_with(fresh, coarse, books).write.mode("overwrite").parquet(
-        os.path.join(state_dir, "codes", f"delta={batch_id}")
+    state_log.write_delta(
+        INDEX_CODES, _encode_with(fresh, coarse, books), state_dir, batch_id
     )
 
 
@@ -466,9 +457,8 @@ def vector_index_delete(
 ) -> None:
     """Retire vectors from the index: append a TOMBSTONE delta
     (vec_id-keyed, overwrite-on-replay like every other delta) instead
-    of rewriting any code file — the versioned-state discipline
-    compact_cdc_tombstones (streaming/sinks.py) already proves for CDC
-    rows, applied to the vector index.
+    of rewriting any code file — state_log's id mask (write_mask), the
+    discipline the curation and minhash takedowns share.
 
     Semantics: a tombstone wins FOREVER. Readers resolve
     codes ANTI-JOIN tombstones; appends consult codes ∪ tombstones in

@@ -13,6 +13,7 @@ table format.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame
@@ -83,8 +84,6 @@ def _checkpoint_query_id(checkpoint_dir: str) -> str:
     """Stable identity of a checkpoint lineage: the query id Structured
     Streaming writes to <checkpoint>/metadata at start (falls back to
     the checkpoint path before the file exists)."""
-    import json
-
     meta = os.path.join(checkpoint_dir, "metadata")
     if os.path.isfile(meta):
         with open(meta, encoding="utf-8") as f:
@@ -95,17 +94,14 @@ def _checkpoint_query_id(checkpoint_dir: str) -> str:
 
 
 def _run_guard(state_dir: str, qid: str, on_new_run: str, sink: str) -> bool:
-    """Enforce the cross-run contract shared by the versioned-state
-    sinks: returns True when `qid` continues the recorded lineage. A
-    DIFFERENT lineage either raises (on_new_run='error') or wipes the
-    old v=* versions and returns False (on_new_run='restart') — merging
-    across checkpoint lineages can double-count/misorder because batch
-    ids restart and may slice the source differently."""
-    import json
-    import shutil
-
+    """Enforce the cross-run contract of the state_log sinks: returns
+    True when `qid` continues the recorded lineage. A DIFFERENT lineage
+    either raises (on_new_run='error') or returns False, and the caller
+    wipes the state (on_new_run='restart') — merging across checkpoint
+    lineages can double-count/misorder because batch ids restart and
+    may slice the source differently."""
     marker = os.path.join(state_dir, "_run.json")
-    if not os.path.isdir(state_dir) or not os.path.isfile(marker):
+    if not os.path.isfile(marker):
         return True
     with open(marker, encoding="utf-8") as f:
         prev_qid = json.load(f).get("query_id")
@@ -119,35 +115,22 @@ def _run_guard(state_dir: str, qid: str, on_new_run: str, sink: str) -> bool:
             "the original checkpoint, point at a fresh state_dir, or pass "
             "on_new_run='restart' to discard the old lineage and recompute."
         )
-    for v in state_log.versions(state_dir):
-        shutil.rmtree(os.path.join(state_dir, f"v={v}"), ignore_errors=True)
     return False
-
-
-def _write_run_marker(state_dir: str, qid: str) -> None:
-    import json
-
-    with open(os.path.join(state_dir, "_run.json"), "w", encoding="utf-8") as f:
-        json.dump({"query_id": qid}, f)
-
-
-def _check_on_new_run(on_new_run: str) -> None:
-    if on_new_run not in ("error", "restart"):
-        raise ValueError(
-            f"on_new_run must be 'error' or 'restart', got {on_new_run!r}"
-        )
 
 
 def _state_log_sink(
     stream_df, state_dir, checkpoint_dir, on_new_run, sink, family, apply
 ) -> DataStreamWriter:
-    """The foreachBatch writer of the delta-log sinks: per micro-batch,
+    """The foreachBatch writer of every state_log sink: per micro-batch,
     the cross-run guard (a foreign lineage raises, or with 'restart'
     wipes the family's state — batch ids restart across checkpoint
-    lineages, so merging deltas across runs would double-admit), then
+    lineages, so merging state across runs would double-count), then
     `apply(batch_df, batch_id, state_dir)`, then the run marker — unless
     apply returns False (it wrote nothing)."""
-    _check_on_new_run(on_new_run)
+    if on_new_run not in ("error", "restart"):
+        raise ValueError(
+            f"on_new_run must be 'error' or 'restart', got {on_new_run!r}"
+        )
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         qid = _checkpoint_query_id(checkpoint_dir)
@@ -155,16 +138,37 @@ def _state_log_sink(
             state_log.wipe(family, state_dir)
         os.makedirs(state_dir, exist_ok=True)
         if apply(batch_df, batch_id, state_dir) is not False:
-            _write_run_marker(state_dir, qid)
+            with open(os.path.join(state_dir, "_run.json"), "w", encoding="utf-8") as f:
+                json.dump({"query_id": qid}, f)
 
     return stream_df.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint_dir
     )
 
 
-def _latest_version_below(state_dir: str, batch_id: int) -> "int | None":
-    below = [v for v in state_log.versions(state_dir) if v < batch_id]
-    return max(below) if below else None
+# The snapshot family of the agg, cdc, topk and quantile sinks: one
+# full-state compaction per batch, no deltas (state_log's snapshot rule).
+SNAPSHOT = state_log.View("snapshot", "", ())
+SNAPSHOTS = state_log.Family((SNAPSHOT,))
+
+
+def _snapshot_sink(
+    stream_df, state_dir, checkpoint_dir, on_new_run, sink, merge
+) -> DataStreamWriter:
+    """A state_log sink over the SNAPSHOTS family: batch b commits
+    `merge(batch_df, prev)` as its snapshot, where prev is the snapshot
+    below b (None before the first)."""
+
+    def apply(batch_df: DataFrame, batch_id: int, state_dir: str) -> None:
+        spark = batch_df.sparkSession
+        prev = state_log.read_snapshot(spark, SNAPSHOT, state_dir, batch_id)
+        state_log.write_snapshot(
+            SNAPSHOT, merge(batch_df, prev), state_dir, batch_id
+        )
+
+    return _state_log_sink(
+        stream_df, state_dir, checkpoint_dir, on_new_run, sink, SNAPSHOTS, apply
+    )
 
 
 def continuous_agg_sink(
@@ -183,17 +187,16 @@ def continuous_agg_sink(
     MERGED into a parquet state table via the partial-aggregate
     algebra, never a recompute over history.
 
-    Exactly-once is scoped to SAME-CHECKPOINT recovery: within one
-    checkpoint lineage, batch ids are stable and a replayed batch id
-    carries the same rows, so writing batch b's merge to state_dir/v=<b>
-    from the latest version strictly below b makes redelivery
-    idempotent (a replay re-derives from the same predecessor and
-    overwrites the same directory). Readers take max(v); the versions
-    also give time travel over the aggregate's history.
+    The state is a state_log snapshot view (SNAPSHOT; the layout,
+    replay rule, retention and crash contract are in that module's
+    docstring). Exactly-once is scoped to SAME-CHECKPOINT recovery:
+    within one checkpoint lineage, batch ids are stable and a replayed
+    batch id carries the same rows, so re-deriving batch b from the
+    snapshot below b makes redelivery idempotent.
 
     A DIFFERENT checkpoint against existing state is NOT generally safe:
     batch ids restart and the source may slice files differently, so
-    merging new-run batch b onto old-run v<b state can double-count.
+    merging new-run batch b onto old-run state can double-count.
     The sink records the query id (from the checkpoint metadata) in
     state_dir/_run.json and, on a mismatch, applies `on_new_run`:
     "error" (default) refuses to touch the state; "restart" discards
@@ -203,61 +206,47 @@ def continuous_agg_sink(
     is never retained."""
     from pyspark.sql import functions as F
 
-    _check_on_new_run(on_new_run)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        qid = _checkpoint_query_id(checkpoint_dir)
-        same_run = _run_guard(state_dir, qid, on_new_run, "continuous_agg_sink")
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         # sum_expr must be an EXACT-integer aggregate (e.g. a cents sum):
         # merge ≡ recompute only holds bitwise for mergeable exact sums
         delta = batch_df.groupBy(group_col).agg(
             F.count(F.lit(1)).alias(count_col),
             F.expr(sum_expr).alias(sum_col),
         )
-        prev = None
-        if same_run:
-            v = _latest_version_below(state_dir, batch_id)
-            if v is not None:
-                prev = spark.read.parquet(os.path.join(state_dir, f"v={v}"))
         if prev is None:
-            merged = delta
-        else:
-            b = prev.select(
-                group_col,
-                F.col(count_col).alias("_nb"),
-                F.col(sum_col).alias("_sb"),
-            )
-            d = delta.select(
-                group_col,
-                F.col(count_col).alias("_nd"),
-                F.col(sum_col).alias("_sd"),
-            )
-            merged = b.join(d, group_col, "full_outer").select(
-                group_col,
-                (
-                    F.coalesce(F.col("_nb"), F.lit(0))
-                    + F.coalesce(F.col("_nd"), F.lit(0))
-                ).alias(count_col),
-                (
-                    F.coalesce(F.col("_sb"), F.lit(0))
-                    + F.coalesce(F.col("_sd"), F.lit(0))
-                ).alias(sum_col),
-            )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"v={batch_id}")
+            return delta
+        b = prev.select(
+            group_col,
+            F.col(count_col).alias("_nb"),
+            F.col(sum_col).alias("_sb"),
         )
-        _write_run_marker(state_dir, qid)
+        d = delta.select(
+            group_col,
+            F.col(count_col).alias("_nd"),
+            F.col(sum_col).alias("_sd"),
+        )
+        return b.join(d, group_col, "full_outer").select(
+            group_col,
+            (
+                F.coalesce(F.col("_nb"), F.lit(0)) + F.coalesce(F.col("_nd"), F.lit(0))
+            ).alias(count_col),
+            (
+                F.coalesce(F.col("_sb"), F.lit(0)) + F.coalesce(F.col("_sd"), F.lit(0))
+            ).alias(sum_col),
+        )
 
-    return stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _snapshot_sink(
+        stream_df, state_dir, checkpoint_dir, on_new_run, "continuous_agg_sink", merge
     )
 
 
 def read_agg_state(spark, state_dir: str) -> DataFrame:
-    """Latest version of a continuous_agg_sink state table."""
-    v = max(state_log.versions(state_dir))
-    return spark.read.parquet(os.path.join(state_dir, f"v={v}"))
+    """Newest complete snapshot of a continuous_agg_sink state table —
+    and of the other snapshot sinks' (state_log.read_snapshot)."""
+    snap = state_log.read_snapshot(spark, SNAPSHOT, state_dir)
+    if snap is None:
+        raise ValueError(f"{state_dir!r} holds no complete snapshot")
+    return snap
 
 
 def continuous_cdc_sink(
@@ -272,34 +261,22 @@ def continuous_cdc_sink(
     """Continuous CDC materialization — the streaming twin of
     cdc_apply_changelog: each micro-batch of sequenced change rows
     (upserts + 'D' delete markers) merges into a keyed parquet snapshot
-    by last-writer-wins on seq_col. Same versioned-state scheme as
-    continuous_agg_sink: batch b merges onto the latest v<b and writes
-    v=<b>, so a same-checkpoint replay re-derives from the same
-    predecessor (exactly-once scoped to same-checkpoint recovery; the
-    _run.json guard refuses or restarts on a foreign checkpoint).
+    by last-writer-wins on seq_col. The state is a state_log snapshot
+    view (see that module's docstring), with continuous_agg_sink's
+    replay scope and cross-run guard.
 
     Delete markers are RETAINED in state as tombstones rather than
     dropped: a late change with seq below an applied delete must lose
     to it, which requires the delete's seq to still be present.
-    Readers filter them (read_cdc_state); tombstone compaction is a
-    retention policy over versions, exactly like any snapshot store.
-    State size is keyspace-bounded (one row per live key + tombstone),
-    never stream-length-bounded. Per batch: one window shuffle on the
-    key over (batch ∪ prev-state) — what a lakehouse MERGE runs."""
+    Readers filter them (read_cdc_state); compact_cdc_tombstones drops
+    the ones below a producer watermark. State size is keyspace-bounded
+    (one row per live key + tombstone), never stream-length-bounded.
+    Per batch: one window shuffle on the key over (batch ∪ prev-state)
+    — what a lakehouse MERGE runs."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    _check_on_new_run(on_new_run)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        qid = _checkpoint_query_id(checkpoint_dir)
-        same_run = _run_guard(state_dir, qid, on_new_run, "continuous_cdc_sink")
-        prev = None
-        if same_run:
-            v = _latest_version_below(state_dir, batch_id)
-            if v is not None:
-                prev = spark.read.parquet(os.path.join(state_dir, f"v={v}"))
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         merged = batch_df if prev is None else prev.unionByName(batch_df)
         # Secondary op_col ASC tiebreak: the contract says seq is unique
         # per key (the batch twin guarantees it by construction), but if
@@ -310,18 +287,14 @@ def continuous_cdc_sink(
         w = Window.partitionBy(key_col).orderBy(
             F.col(seq_col).desc(), F.col(op_col).asc()
         )
-        latest = (
+        return (
             merged.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        latest.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"v={batch_id}")
-        )
-        _write_run_marker(state_dir, qid)
 
-    return stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _snapshot_sink(
+        stream_df, state_dir, checkpoint_dir, on_new_run, "continuous_cdc_sink", merge
     )
 
 
@@ -352,30 +325,19 @@ def continuous_topk_sink(
     containment the batch operator pins, maintained incrementally
     without ever re-scanning the stream.
 
-    Same versioned-state scheme as continuous_agg_sink (batch b merges
-    onto the latest v<b and writes v=b → same-checkpoint replays are
-    idempotent; the _run.json guard refuses or restarts on a foreign
-    checkpoint). State size is ≤ k new items per batch; a retention
-    pass may drop items whose upper bound falls below the current
-    top-N floor — a policy choice, exactly like tombstone compaction
-    in the CDC sink. The per-batch reduce is one hash aggregate + a
+    The state is a state_log snapshot view (layout, replay, retention
+    and crash contract in that module's docstring), with
+    continuous_agg_sink's replay scope and cross-run guard. State size is ≤ k new items per
+    batch. The per-batch reduce is one hash aggregate + a
     TakeOrdered(k+1): executor-side and shuffle-light at any rate."""
     from pyspark.sql import functions as F
 
-    _check_on_new_run(on_new_run)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         spark = batch_df.sparkSession
-        qid = _checkpoint_query_id(checkpoint_dir)
-        same_run = _run_guard(state_dir, qid, on_new_run, "continuous_topk_sink")
-        prev = None
         old_total = 0
-        if same_run:
-            v = _latest_version_below(state_dir, batch_id)
-            if v is not None:
-                prev = spark.read.parquet(os.path.join(state_dir, f"v={v}"))
-                head = prev.select("total_thr").head(1)
-                old_total = head[0]["total_thr"] if head else 0
+        if prev is not None:
+            head = prev.select("total_thr").head(1)
+            old_total = head[0]["total_thr"] if head else 0
 
         c = batch_df.groupBy(F.col(item_col).alias("item")).agg(
             F.count(F.lit(1)).alias("cnt")
@@ -411,13 +373,10 @@ def continuous_topk_sink(
                     ).alias("present_thr"),
                 )
             )
-        merged.withColumn("total_thr", F.lit(total).cast("long")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(state_dir, f"v={batch_id}"))
-        _write_run_marker(state_dir, qid)
+        return merged.withColumn("total_thr", F.lit(total).cast("long"))
 
-    return stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _snapshot_sink(
+        stream_df, state_dir, checkpoint_dir, on_new_run, "continuous_topk_sink", merge
     )
 
 
@@ -443,37 +402,6 @@ def read_topk_state(spark, state_dir: str, top_n: int = 10) -> DataFrame:
     )
 
 
-def compact_state_versions(state_dir: str, keep_last: int = 2) -> "list[int]":
-    """Retention pass for the versioned-state sinks (continuous_agg /
-    continuous_cdc / continuous_topk): each micro-batch writes a FULL
-    snapshot under v=<batch_id>, so only the latest version is needed
-    for correctness — older versions exist for same-checkpoint replay
-    (batch b re-derives from the latest v<b) and operator debugging.
-    Keeping the last `keep_last` versions preserves replay of the most
-    recent batch while bounding disk at keep_last × state size.
-
-    Returns the versions REMOVED. Safe to run between micro-batches or
-    from a janitor job: writers never read versions older than the
-    previous one. keep_last must be ≥ 2 — a same-checkpoint REPLAY of
-    the latest batch re-derives from the version BELOW it
-    (_latest_version_below), so keeping only the latest would make that
-    replay silently restart the accumulation from the batch alone
-    (review finding: the earlier ≥1 guard contradicted the sinks'
-    replay contract)."""
-    import shutil
-
-    if keep_last < 2:
-        raise ValueError(
-            "keep_last must be >= 2: a replayed latest batch merges onto "
-            "the version below it — with only one version kept, that "
-            "replay would silently reset the accumulated state"
-        )
-    drop = state_log.versions(state_dir)[:-keep_last]
-    for v in drop:
-        shutil.rmtree(os.path.join(state_dir, f"v={v}"), ignore_errors=True)
-    return drop
-
-
 def compact_cdc_tombstones(
     spark,
     state_dir: str,
@@ -485,37 +413,16 @@ def compact_cdc_tombstones(
     marker only needs to survive while a LATE change with a lower seq
     could still arrive — once the producer guarantees nothing below
     `min_live_seq` will ever be sent (its low-watermark), tombstones
-    below it are dead weight. Rewrites the LATEST version in place with
-    those tombstones dropped (live rows are never touched) and returns
-    the number removed. The caller owns the watermark claim — exactly
-    the contract of a lakehouse VACUUM horizon."""
+    below it are dead weight. Rewrites the newest snapshot with those
+    tombstones dropped (live rows are never touched) through
+    state_log.prune_snapshot, whose crash contract keeps the unpruned
+    snapshot visible until the pruned one is complete, and returns the
+    number removed. The caller owns the watermark claim — exactly the
+    contract of a lakehouse VACUUM horizon."""
     from pyspark.sql import functions as F
 
-    versions = state_log.versions(state_dir)
-    if not versions:
-        return 0
-    latest = os.path.join(state_dir, f"v={max(versions)}")
-    s = spark.read.parquet(latest)
     dead = (F.col(op_col) == "D") & (F.col(seq_col) < min_live_seq)
-    n_dead = s.filter(dead).count()
-    if n_dead:
-        import shutil
-
-        kept = s.filter(~dead)
-        tmp = latest + ".compact"
-        shutil.rmtree(tmp, ignore_errors=True)
-        kept.write.mode("overwrite").parquet(tmp)
-        # directory-rename swap, NOT overwrite-in-place: overwrite
-        # deletes the live snapshot before the rewrite lands, so a
-        # crash mid-job would leave v=<max> empty/partial (review
-        # finding). Renames are atomic per step; the only crash window
-        # leaves .old intact for manual recovery.
-        old = latest + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(latest, old)
-        os.rename(tmp, latest)
-        shutil.rmtree(old, ignore_errors=True)
-    return n_dead
+    return state_log.prune_snapshot(spark, SNAPSHOT, state_dir, dead)
 
 
 def continuous_quantile_sink(
@@ -536,14 +443,12 @@ def continuous_quantile_sink(
     so the reader reports quantiles with a bound that is true by
     construction after any number of batches, instead of the fixed
     N/k + S bound the one-shot batch operator earns. State is k rows +
-    one ledger row regardless of stream length; same versioned-state
-    replay-idempotence and run guard as the other sinks. Per batch the
-    raw data passes ONE sort-free reduce (exact ranks need a sort of
-    the BATCH only, never history)."""
+    one ledger row regardless of stream length, kept as a state_log
+    snapshot view (see that module's docstring) with
+    continuous_agg_sink's replay scope and cross-run guard. Per batch the raw data passes ONE sort-free reduce (exact
+    ranks need a sort of the BATCH only, never history)."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
-
-    _check_on_new_run(on_new_run)
 
     def summarize(df, w_col: str, total: int):
         """k-point weighted summary of (value, weight) rows: cumulative
@@ -582,21 +487,14 @@ def continuous_quantile_sink(
             ),
         )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        qid = _checkpoint_query_id(checkpoint_dir)
-        same_run = _run_guard(state_dir, qid, on_new_run, "continuous_quantile_sink")
-        prev = None
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         prev_err = 0
         prev_total = 0
-        if same_run:
-            v = _latest_version_below(state_dir, batch_id)
-            if v is not None:
-                prev = spark.read.parquet(os.path.join(state_dir, f"v={v}"))
-                head = prev.select("err_bound", "total_w").head(1)
-                if head:
-                    prev_err = head[0]["err_bound"]
-                    prev_total = head[0]["total_w"]
+        if prev is not None:
+            head = prev.select("err_bound", "total_w").head(1)
+            if head:
+                prev_err = head[0]["err_bound"]
+                prev_total = head[0]["total_w"]
 
         batch_vals = batch_df.select(F.col(value_col).alias("value")).withColumn(
             "weight", F.lit(1).cast("long")
@@ -607,18 +505,11 @@ def continuous_quantile_sink(
             # write an empty-but-schema'd summary so the first-ever
             # batch being empty doesn't crash the recompression below
             # (review finding: total_w would be None).
-            out = (
-                prev
-                if prev is not None
-                else batch_vals.withColumn(
-                    "err_bound", F.lit(0).cast("long")
-                ).withColumn("total_w", F.lit(0).cast("long"))
-            )
-            out.write.mode("overwrite").parquet(
-                os.path.join(state_dir, f"v={batch_id}")
-            )
-            _write_run_marker(state_dir, qid)
-            return
+            if prev is not None:
+                return prev
+            return batch_vals.withColumn(
+                "err_bound", F.lit(0).cast("long")
+            ).withColumn("total_w", F.lit(0).cast("long"))
         # batch summary: exact ranks over the batch only (err 0), then
         # union with state and recompress (err += union_weight DIV k).
         # total_w needs NO scan: prior state persists it, the batch was
@@ -629,13 +520,17 @@ def continuous_quantile_sink(
         total_w = prev_total + n_batch
         summary = summarize(merged, "weight", total_w)
         err = prev_err + total_w // k
-        summary.withColumn("err_bound", F.lit(err).cast("long")).withColumn(
+        return summary.withColumn("err_bound", F.lit(err).cast("long")).withColumn(
             "total_w", F.lit(total_w).cast("long")
-        ).write.mode("overwrite").parquet(os.path.join(state_dir, f"v={batch_id}"))
-        _write_run_marker(state_dir, qid)
+        )
 
-    return stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _snapshot_sink(
+        stream_df,
+        state_dir,
+        checkpoint_dir,
+        on_new_run,
+        "continuous_quantile_sink",
+        merge,
     )
 
 
@@ -775,8 +670,8 @@ def minhash_apply_batch(
     # with retired content, and `guard_ids` below keeps their ids out
     # forever (tombstones-win-forever, the vector index's rule)
     guard_ids = prev_hashes.select("doc_id")
-    if os.path.isdir(os.path.join(state_dir, "takedowns")):
-        td = state_log.read_view(spark, TAKEDOWNS, state_dir, batch_id)
+    td = state_log.read_mask(spark, MINHASH, state_dir, batch_id)
+    if td is not None:
         prev_bands = prev_bands.join(td, "doc_id", "left_anti")
         prev_hashes = prev_hashes.join(td, "doc_id", "left_anti")
         guard_ids = guard_ids.unionByName(td)
@@ -830,11 +725,9 @@ def minhash_apply_batch(
     # cached scan. Crash window unchanged in kind: either root present
     # without the other is repaired by the checkpoint replay's
     # overwrite-keyed rewrite.
-    pairs.write.mode("overwrite").parquet(
-        os.path.join(state_dir, "pairs", f"delta={batch_id}")
-    )
-    docs.select("doc_id", "hashes", "sig").write.mode("overwrite").parquet(
-        os.path.join(state_dir, "hashes", f"delta={batch_id}")
+    state_log.write_delta(MINHASH_PAIRS, pairs, state_dir, batch_id)
+    state_log.write_delta(
+        MINHASH_HASHES, docs.select("doc_id", "hashes", "sig"), state_dir, batch_id
     )
     new_bands.unpersist()
     docs.unpersist()
@@ -976,9 +869,8 @@ def curation_apply_batch(
     # hash probe column-prunes to `th`, the survivor view projects
     # (doc_id, shard, n_tokens) from the same files. No persist — single
     # consumer, single action.
-    curation_admitted(batch_df, batch_id, state_dir).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(state_dir, "ths", f"delta={batch_id}"))
+    admitted = curation_admitted(batch_df, batch_id, state_dir)
+    state_log.write_delta(CURATION_THS, admitted, state_dir, batch_id)
 
 
 def curation_admitted(
@@ -1211,15 +1103,8 @@ def read_curation_survivors_with_batch(spark, state_dir: str) -> DataFrame:
     out = state_log.read_provenance(
         spark, CURATION_SURVIVORS, state_dir, "admitted_batch"
     )
-    td_root = os.path.join(state_dir, "takedowns")
-    td_paths = [
-        os.path.join(td_root, f"delta={b}") for b in state_log.delta_ids(td_root)
-    ]
-    if not td_paths:
-        return out
-    return out.join(
-        spark.read.schema("doc_id long").parquet(*td_paths), "doc_id", "left_anti"
-    )
+    td = state_log.read_deltas(spark, TAKEDOWNS, state_dir)
+    return out if td is None else out.join(td, "doc_id", "left_anti")
 
 
 def continuous_curation_sink(

@@ -1,11 +1,18 @@
-"""The delta-log state layer: one implementation of the append-only log
-behind the curation, minhash and vector-index state families.
+"""The persisted-state layer: one implementation of the append-only log
+behind the curation, minhash and vector-index state families, and of the
+full snapshots behind the agg, cdc, topk and quantile sinks.
 
 Layout. A state dir holds one directory per log root, plus an epoch:
 
     <state>/<root>/delta=<b>/       one overwrite-keyed delta per batch id b
     <state>/<root>/compact/v=<v>/   a compaction: every row of the deltas
                                     below v, complete once _SUCCESS exists
+    <state>/<root>/compact/v=<v>.<g>/
+                                    generation g >= 1 of compaction v, a
+                                    rewrite of it; readers take the newest
+                                    complete generation
+    <state>/snapshot/compact/v=<b>/ a snapshot sink's full state after
+                                    batch b: a compaction with no deltas
     <state>/_log_epoch              offset added to every batch id (absent: 0)
 
 A reader view (`View`) names a compaction root and a delta root. Most
@@ -20,6 +27,17 @@ compaction that includes itself. Raw deltas are never deleted: they are
 the replay truth, the fallback below any as-of point or vacuum stamp,
 and the provenance record (`read_provenance`).
 
+A snapshot view is a compaction root with no delta tail. Its sink
+merges batch b onto the newest complete snapshot below b
+(`read_snapshot`) and commits the result as v=<b> (`write_snapshot`),
+so a replay of b re-derives from the same predecessor. Retention needs
+no knob: after the commit, every version below that predecessor is
+dropped, which keeps the two newest versions, exactly what a replay of
+the newest batch reads. `prune_snapshot` rewrites the newest snapshot
+minus some rows (the cdc tombstone pass) as a new generation of the
+same version. A top-level v=<n> dir, the layout before this layer,
+fails loudly.
+
 A family (`Family`) is the set of views one state dir holds plus its
 id-keyed mask (takedowns, tombstones). Readers anti-join the mask
 (`read_masked`). A vacuum rewrites every masked view minus the mask as
@@ -33,6 +51,11 @@ Crash contract:
   `compact_versions` ignores marker-less dirs and a retry overwrites
   them. A delta is keyed by its batch id, so a replay rewrites it.
 - A compaction lands before the versions it supersedes are removed.
+- A rewrite of a complete version (`_commit`: a snapshot replay, the
+  cdc tombstone pass) lands as a new generation before the generations
+  it supersedes are removed, so a crash leaves the old or the new one
+  visible, never neither. A re-run of the tombstone pass over its
+  post-state finds nothing to prune and returns 0.
 - A vacuum lands every data root's new version before the mask swap. A
   crash in between leaves pruned data under a full mask: consistent,
   and a re-run completes it. A re-run over a clean state is a no-op.
@@ -93,11 +116,12 @@ class View:
 
 @dataclass(frozen=True)
 class Family:
-    """The data views of one state dir, its mask, and the header files
-    that live beside the log (wiped on restart, copied on clone)."""
+    """The data views of one state dir, its mask (None: a snapshot
+    family retires nothing), and the header files that live beside the
+    log (wiped on restart, copied on clone)."""
 
     views: tuple
-    mask: View
+    mask: View | None = None
     files: tuple = ()
 
     @property
@@ -106,27 +130,38 @@ class Family:
 
     @property
     def roots(self) -> tuple:
-        views = (*self.views, self.mask)
+        views = (*self.views, self.mask) if self.mask else self.views
         return tuple(dict.fromkeys(r for v in views for r in v.roots))
 
 
-def versions(path: str) -> list[int]:
-    """Ascending n of every ``v=<n>`` subdir of `path` ([] when absent)."""
-    if not os.path.isdir(path):
+_COMPACT_DIR = re.compile(r"v=(\d+)(?:\.(\d+))?")
+
+
+def _compactions(root: str) -> list[tuple[int, int, str]]:
+    """(version, generation, path) of every dir under root/compact,
+    complete or torn, ascending."""
+    croot = os.path.join(root, "compact")
+    if not os.path.isdir(croot):
         return []
     return sorted(
-        int(m.group(1)) for d in os.listdir(path) if (m := re.fullmatch(r"v=(\d+)", d))
+        (int(m.group(1)), int(m.group(2) or 0), os.path.join(croot, d))
+        for d in os.listdir(croot)
+        if (m := _COMPACT_DIR.fullmatch(d))
     )
+
+
+def _complete(root: str) -> dict[int, tuple[int, str]]:
+    """version -> (generation, path) of its newest complete generation."""
+    return {
+        v: (g, p)
+        for v, g, p in _compactions(root)
+        if os.path.exists(os.path.join(p, "_SUCCESS"))
+    }
 
 
 def compact_versions(root: str) -> list[int]:
     """Complete compaction versions under root/compact (with _SUCCESS)."""
-    croot = os.path.join(root, "compact")
-    return [
-        v
-        for v in versions(croot)
-        if os.path.exists(os.path.join(croot, f"v={v}", "_SUCCESS"))
-    ]
+    return sorted(_complete(root))
 
 
 def delta_ids(root: str, below: int = _TOP) -> list[int]:
@@ -168,9 +203,9 @@ def _roots(view: View, state_dir: str) -> tuple[str, str]:
 def resolve(view: View, state_dir: str, below: int = _TOP) -> tuple[list, list]:
     """(compaction paths, delta paths) a reader at `below` reads."""
     root, droot = _roots(view, state_dir)
-    usable = [v for v in compact_versions(root) if v <= below]
-    floor = usable[-1] if usable else 0
-    compact = [os.path.join(root, "compact", f"v={floor}")] if usable else []
+    usable = {v: p for v, (_, p) in _complete(root).items() if v <= below}
+    floor = max(usable, default=0)
+    compact = [usable[floor]] if usable else []
     deltas = [
         os.path.join(droot, f"delta={i}") for i in delta_ids(droot, below) if i >= floor
     ]
@@ -209,10 +244,26 @@ def read_masked(
     for v in family.views:
         _roots(v, state_dir)  # a stale layout of any view fails loudly
     out = read_view(spark, view, state_dir, below)
+    mask = read_mask(spark, family, state_dir, below)
+    return out if mask is None else _minus(out, mask, family.key, view.masked)
+
+
+def read_mask(
+    spark, family: Family, state_dir: str, below: int = _TOP
+) -> DataFrame | None:
+    """The family's retired ids below `below`, or None while its mask
+    root does not exist (nothing was ever retired)."""
     if not os.path.isdir(os.path.join(state_dir, family.mask.root)):
-        return out
-    mask = read_view(spark, family.mask, state_dir, below)
-    return _minus(out, mask, family.key, view.masked)
+        return None
+    return read_view(spark, family.mask, state_dir, below)
+
+
+def read_deltas(spark, view: View, state_dir: str) -> DataFrame | None:
+    """Every RAW delta of a view that reads its own deltas, in one scan
+    (compactions skipped), or None when there is none."""
+    _, droot = _roots(view, state_dir)
+    paths = [os.path.join(droot, f"delta={b}") for b in delta_ids(droot)]
+    return spark.read.schema(view.schema).parquet(*paths) if paths else None
 
 
 def read_provenance(spark, view: View, state_dir: str, tag: str) -> DataFrame:
@@ -288,20 +339,40 @@ def begin_batch(views: tuple, state_dir: str, batch_id: int, what: str) -> int:
     return batch_id
 
 
-def _write_compaction(frame: DataFrame, root: str, version: int, layout: tuple) -> str:
-    """Write `frame` as root/compact/v=<version>, clustered and sorted on
-    `layout`, then remove every older compaction version."""
-    out = os.path.join(root, "compact", f"v={version}")
-    frame = frame.repartition(*layout).sortWithinPartitions(*layout)
+def write_delta(view: View, frame: DataFrame, state_dir: str, batch_id: int) -> None:
+    """Write `frame` as the view's delta of `batch_id` (an id already
+    mapped by `begin_batch`), overwrite-keyed: a replay rewrites it."""
+    _, droot = _roots(view, state_dir)
+    frame.write.mode("overwrite").parquet(os.path.join(droot, f"delta={batch_id}"))
+
+
+def _commit(frame: DataFrame, root: str, version: int) -> str:
+    """Write `frame` as the next generation of compaction `version` (the
+    first is plain v=<version>, and a torn one is overwritten), then drop
+    the generations it supersedes. Returns the written dir."""
+    gen = _complete(root).get(version, (-1, ""))[0] + 1
+    out = os.path.join(root, "compact", f"v={version}" + (f".{gen}" if gen else ""))
     frame.write.mode("overwrite").parquet(out)
-    _drop_below(root, version)
+    _drop(root, lambda v, g: v == version and g < gen)
     return out
 
 
-def _drop_below(root: str, version: int) -> None:
-    for v in compact_versions(root):
-        if v < version:
-            shutil.rmtree(os.path.join(root, "compact", f"v={v}"), ignore_errors=True)
+def _drop(root: str, doomed: Callable[[int, int], bool]) -> None:
+    """Remove every compaction dir, complete or torn, whose (version,
+    generation) is doomed."""
+    for v, g, p in _compactions(root):
+        if doomed(v, g):
+            shutil.rmtree(p, ignore_errors=True)
+
+
+def _write_compaction(frame: DataFrame, root: str, version: int, layout: tuple) -> str:
+    """Commit `frame` as compaction `version`, clustered and sorted on
+    `layout`, then remove every older compaction version."""
+    out = _commit(
+        frame.repartition(*layout).sortWithinPartitions(*layout), root, version
+    )
+    _drop(root, lambda v, g: v < version)
+    return out
 
 
 def maybe_compact(spark, view: View, state_dir: str, batch_id: int) -> None:
@@ -330,9 +401,57 @@ def write_mask(
     mask, key = family.mask, family.key
     batch_id = begin_batch((mask,), state_dir, batch_id, what)
     maybe_compact(ids.sparkSession, mask, state_dir, batch_id)
-    ids.select(key).dropDuplicates([key]).write.mode("overwrite").parquet(
-        os.path.join(state_dir, mask.root, f"delta={batch_id}")
-    )
+    write_delta(mask, ids.select(key).dropDuplicates([key]), state_dir, batch_id)
+
+
+def _snapshot_root(view: View, state_dir: str) -> str:
+    """A snapshot view's root; the layout before this layer, with v=<n>
+    dirs directly under the state dir, fails loudly."""
+    listing = os.listdir(state_dir) if os.path.isdir(state_dir) else []
+    stale = sorted(d for d in listing if re.fullmatch(r"v=\d+", d))
+    if stale:
+        raise ValueError(
+            f"stale state layout: {state_dir} holds {stale[0]}, but snapshots "
+            f"now live under {view.root}/compact/. Rebuild the state from its "
+            "source."
+        )
+    return os.path.join(state_dir, view.root)
+
+
+def read_snapshot(
+    spark, view: View, state_dir: str, below: int = _TOP
+) -> DataFrame | None:
+    """The newest complete snapshot strictly below batch id `below`, or
+    None when there is none."""
+    done = _complete(_snapshot_root(view, state_dir))
+    usable = [v for v in done if v < below]
+    return spark.read.parquet(done[max(usable)][1]) if usable else None
+
+
+def write_snapshot(view: View, frame: DataFrame, state_dir: str, batch_id: int) -> None:
+    """Commit `frame` as the snapshot of `batch_id`, then drop every
+    version below its predecessor (see the module docstring)."""
+    root = _snapshot_root(view, state_dir)
+    below = [v for v in compact_versions(root) if v < batch_id]
+    _commit(frame, root, batch_id)
+    if below:
+        _drop(root, lambda v, g: v < below[-1])
+
+
+def prune_snapshot(spark, view: View, state_dir: str, dead) -> int:
+    """Rewrite the newest snapshot without the rows matching the Column
+    predicate `dead`, as the next generation of the same version.
+    Returns the number of rows removed; a clean snapshot is untouched."""
+    root = _snapshot_root(view, state_dir)
+    done = _complete(root)
+    if not done:
+        return 0
+    version = max(done)
+    snap = spark.read.parquet(done[version][1])
+    n = snap.filter(dead).count()
+    if n:
+        _commit(snap.filter(~dead), root, version)
+    return n
 
 
 def vacuum(spark, family: Family, state_dir: str, bump_epoch: bool = False) -> int:
@@ -396,7 +515,7 @@ def _prune(spark, family: Family, state_dir: str) -> int:
     )
     with open(os.path.join(swap_dir, "_SUCCESS"), "w", encoding="utf-8"):
         pass
-    _drop_below(mask_root, vid)
+    _drop(mask_root, lambda v, g: v < vid)
     return n_pruned
 
 

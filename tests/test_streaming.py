@@ -644,43 +644,35 @@ def test_continuous_topk_sink_matches_batch_shard_merge(spark, tmp_path):
 
 
 def test_compact_state_versions_and_cdc_tombstones(spark, tmp_path):
-    """Retention utilities: version compaction keeps the newest
-    `keep_last` snapshots (numeric order — v=10 outlives v=9) and
-    tombstone compaction drops only delete markers BELOW the producer's
-    low-watermark, rewriting the latest version in place."""
+    """Retention: every snapshot commit keeps the two newest versions in
+    NUMERIC order (v=10 outlives v=9, which outlives v=2) with no knob,
+    and readers take the newest. Tombstone compaction drops only delete
+    markers BELOW the producer's low-watermark from the newest snapshot
+    and is idempotent."""
     import os
 
-    import pandas as pd
-
+    from cqlcopy_spark.streaming import state_log
     from cqlcopy_spark.streaming.sinks import (
+        SNAPSHOT,
         compact_cdc_tombstones,
-        compact_state_versions,
         read_agg_state,
     )
 
-    import pytest
-
     state = str(tmp_path / "state")
     for v in (0, 1, 2, 9, 10):
-        os.makedirs(os.path.join(state, f"v={v}"))
-        pd.DataFrame({"x": [v]}).to_parquet(
-            os.path.join(state, f"v={v}", "part.parquet")
-        )
-    with pytest.raises(ValueError, match="keep_last must be >= 2"):
-        compact_state_versions(state, keep_last=1)  # replay-unsafe
-    assert compact_state_versions(state, keep_last=2) == [0, 1, 2]
-    assert sorted(os.listdir(state)) == ["v=10", "v=9"]
+        frame = spark.createDataFrame([(v,)], "x long")
+        state_log.write_snapshot(SNAPSHOT, frame, state, v)
+    assert state_log.compact_versions(os.path.join(state, "snapshot")) == [9, 10]
+    assert [r["x"] for r in read_agg_state(spark, state).collect()] == [10]
 
     cdc = str(tmp_path / "cdc")
-    os.makedirs(os.path.join(cdc, "v=7"))
-    pd.DataFrame(
-        {
-            "key": [1, 2, 3, 4],
-            "seq": [3, 9, 12, 11],
-            "op": ["D", "D", "D", "U"],
-            "val": [0.0, 0.0, 0.0, 4.0],
-        }
-    ).to_parquet(os.path.join(cdc, "v=7", "part.parquet"))
+    rows = [(1, 3, "D", 0.0), (2, 9, "D", 0.0), (3, 12, "D", 0.0), (4, 11, "U", 4.0)]
+    state_log.write_snapshot(
+        SNAPSHOT,
+        spark.createDataFrame(rows, "key long, seq long, op string, val double"),
+        cdc,
+        7,
+    )
     # low-watermark 10: only key 1 (seq 3) and key 2 (seq 9) tombstones die
     assert compact_cdc_tombstones(spark, cdc, min_live_seq=10) == 2
     left = {(r["key"], r["op"]) for r in read_agg_state(spark, cdc).collect()}
