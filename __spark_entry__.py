@@ -83,58 +83,18 @@ _PRIORITY_UNCHECKED = (
     "multimodal_features",
 )
 
-# Queries whose standing verdict is known-stale and must re-verify
-# regardless of what the content-hash ledger says. Self-pruning:
-# fronting deactivates per query once it has a verdict from round >=
-# _FORCE_FRONT_ROUND. When bumping the round, PRUNE entries whose
-# verdicts are already >= the old round — they would all reactivate.
-#
-# Round 16 (r15 VERDICT item 1 — drain the buried half of the r11
-# freshness tail): the 16 r11-checked entries whose modules are
-# UNCHANGED since their r11 check (so the content-hash ledger correctly
-# ranks them 5, behind the rank-4 changed-module pool — they would
-# bury for ~3 more rounds). The other 28 r11s live in modules that DID
-# change since (text.py, similarity.py, analytics.py), so they rank 4
-# and sort FIRST within rank 4 (last-check round 11 is the oldest) —
-# they front naturally right behind the forces without pinning.
-# Window accounting: 16 forced (rank 1) + 0 never-checked + the rank-4
-# pool round-ascending (the 28 r11s, then 6 r12 slots) = 50; the whole
-# r11 cohort is inside. (The 22 r15 forces all carry r15 verdicts >=
-# _FORCE_FRONT_ROUND=15 and are pruned — with the round bumped they
-# would otherwise reactivate.)
-_FORCE_FRONT_ROUND = 16
-_FORCE_FRONT = (
-    "batch_sessionize",
-    "cast_dynamic",
-    "copy_roundtrip",
-    "events_anomaly_zscore",
-    "events_attribution",
-    "events_funnel",
-    "events_ohlc_rollup",
-    "intervals_merge",
-    "json_props_stats",
-    "jsonl_roundtrip",
-    "k_anonymity",
-    "multimodal_props",
-    "multimodal_variant",
-    "orc_roundtrip",
-    "partitioned_scan_prune",
-    "token_budget_select",
-)
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2, ordered so
     the driver's 50-entry check window keeps rotating:
 
     1. previously-FAILED (their fix needs re-verification this round),
-    2. _FORCE_FRONT (verdicts known stale — explicit re-check demands),
-    3. never-checked (longest-waiting mandated ops ahead of newer adds),
-    4. green whose implementing module CONTENT changed after its last
-       driver check (a rewrite invalidates the old verdict; content
-       sha from rotation_ledger.json — fs mtimes misfired in r07,
-       see cqlcopy_spark/plans/rotation.py),
-    5. remaining green, last-checked round ASCENDING — so with
+    2. never-checked (longest-waiting mandated ops ahead of newer adds),
+    3. green whose implementing module or any cqlcopy_spark module it
+       imports changed CONTENT after its last driver check (a rewrite
+       invalidates the old verdict; closure sha from
+       rotation_ledger.json — fs mtimes misfired in r07, see
+       cqlcopy_spark/plans/rotation.py),
+    4. remaining green, last-checked round ASCENDING — so with
        everything green the window sweeps the registry oldest-first
        instead of re-verifying the same 50 forever.
     """
@@ -144,8 +104,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     status = _checked_status()
     ledger = load_ledger(_REPO)
 
-    # ~180 queries map to ~15 modules: hash each module FILE once per
-    # call, not once per query (module_sha reads + digests the file)
+    # ~240 queries map to ~20 modules: hash each module's closure once
+    # per call, not once per query (module_sha reads + digests files)
     _sha_cache: dict[str, str] = {}
 
     def _cached_sha(fn) -> str:
@@ -157,10 +117,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def rank(name: str) -> tuple:
         if name in status and not status[name][0]:
             return (0, 0, 0, name)
-        if name in _FORCE_FRONT and (
-            name not in status or status[name][1] < _FORCE_FRONT_ROUND
-        ):
-            return (1, 0, 0, name)
         if name not in status:
             major = 2 if name in _PRIORITY_UNCHECKED else 3
             return (major, 0, 0, name)

@@ -293,6 +293,16 @@ def _emit_stdout_csv(df: DataFrame, cfg: CopyConfig, out) -> None:
         out.write(line + "\n")
 
 
+def _qualified_table(args: argparse.Namespace) -> str:
+    """keyspace.table for the cassandra backend: a qualified table name
+    is used as given, an unqualified one needs --keyspace."""
+    if "." in args.table:
+        return args.table
+    if not args.keyspace:
+        raise ValueError("--keyspace is required for an unqualified table name")
+    return f"{args.keyspace}.{args.table}"
+
+
 def run_write(spark: SparkSession, args: argparse.Namespace) -> int:
     cfg = _cfg_from_args(args)
     require_identifiers(args.table, *args.columns)
@@ -312,14 +322,7 @@ def run_write(spark: SparkSession, args: argparse.Namespace) -> int:
             if args.backend == "cassandra":
                 from cqlcopy_spark.sources.cassandra import copy_to_cassandra
 
-                if "." not in args.table and not args.keyspace:
-                    raise ValueError(
-                        "--keyspace is required for an unqualified table name"
-                    )
-                qualified = (
-                    args.table if "." in args.table else f"{args.keyspace}.{args.table}"
-                )
-                copy_to_cassandra(df, qualified, cfg)
+                copy_to_cassandra(df, _qualified_table(args), cfg)
             else:
                 if not args.path:
                     raise ValueError("--path is required for the parquet backend")
@@ -339,12 +342,7 @@ def run_read(spark: SparkSession, args: argparse.Namespace) -> int:
     from cqlcopy_spark.sources.cassandra import read_from_cassandra, scan_token_range
 
     if args.backend == "cassandra":
-        if "." not in args.table and not args.keyspace:
-            raise ValueError("--keyspace is required for an unqualified table name")
-        qualified = (
-            args.table if "." in args.table else f"{args.keyspace}.{args.table}"
-        )
-        df = read_from_cassandra(spark, qualified, args.columns, cfg)
+        df = read_from_cassandra(spark, _qualified_table(args), args.columns, cfg)
     else:
         if not args.path:
             raise ValueError("--path is required for the parquet backend")

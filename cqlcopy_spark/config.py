@@ -13,7 +13,7 @@ the reference (SURVEY.md §2A quirks) are noted inline:
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 # Go reference layout "2006-01-02 15:04:05-0700" (write.go:31) expressed as
 # a Java/Spark datetime pattern.
@@ -107,9 +107,6 @@ class CopyConfig:
     prefetch: int = 1024                 # --prefetch
     partition_key_size: int = 1          # --partition-key-size
     offset: int = -(2 ** 63)             # --offset (exclusive token lower bound)
-    # engine extensions
-    supports_floats: bool = True         # reference gap fixed (README.md:11)
-    extra: dict = field(default_factory=dict)
 
     @property
     def time_format(self) -> str:

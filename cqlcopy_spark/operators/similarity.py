@@ -58,6 +58,35 @@ def _emb_matrix(vecs) -> "np.ndarray":
     return flat.reshape(len(vecs), len(vecs[0]))
 
 
+def _seq_norm(X: "np.ndarray") -> "np.ndarray":
+    """Per-row L2 norms of an (n, d) matrix: squares summed dimension-
+    ascending, then sqrt — the JVM `_dot` / DuckDB list_reduce order, so
+    every numpy-side norm is bitwise the engines' norm."""
+    import numpy as np
+
+    acc = np.zeros(X.shape[0])
+    for k in range(X.shape[1]):
+        acc += X[:, k] * X[:, k]
+    return np.sqrt(acc)
+
+
+def _corpus_rows(sf_dir: str, e: DataFrame) -> int:
+    """Embeddings row count for sizing only: the parquet footer (exact,
+    no Spark job; guide §6), `e.count()` for tables without one."""
+    from cqlcopy_spark.catalog import parquet_table_rows
+
+    n = parquet_table_rows(sf_dir, "embeddings")
+    return e.count() if n is None else n
+
+
+def _sized_scan(e: DataFrame, n: int) -> DataFrame:
+    """`e` repartitioned to the corpus: one Arrow batch handles ~20k
+    vectors fine, so a tiny bench corpus stays on one Python worker
+    while a cluster-scale corpus fans out to every core."""
+    par = e.sparkSession.sparkContext.defaultParallelism
+    return e.repartition(max(1, min(par, n // 20_000 + 1)))
+
+
 _DOT_SQL = (
     "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
     "list_transform(range(1, len({x}) + 1), i -> {x}[i] * {y}[i])), (a, b) -> a + b)"
@@ -204,10 +233,7 @@ def _lsh_banded(e: DataFrame) -> DataFrame:
             if not len(pdf):
                 continue
             X = _emb_matrix(pdf["emb"])
-            nrm = np.zeros(X.shape[0])
-            for k in range(X.shape[1]):  # sequential fold == JVM _dot order
-                nrm += X[:, k] * X[:, k]
-            nrm = np.sqrt(nrm)
+            nrm = _seq_norm(X)
             bits = (X @ S > 0).astype(np.int64).reshape(len(pdf), n_tables, n_planes)
             sigs = (bits * weights[None, None, :]).sum(axis=2)  # (n, tables)
             yield pd.DataFrame(
@@ -265,26 +291,12 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefilter (similarity_ann_lsh's bucketing) is the sub-quadratic
     option when recall < 1 is acceptable.
 
-    Bitwise oracle parity WITHOUT per-pair scalar folds: a dgemm
-    prefilter scores the whole block pair, then only pairs within a
-    float margin of the threshold are re-scored with the exact
-    left-to-right IEEE-754 fold DuckDB's list_reduce performs
-    (vectorized across the candidate pairs). |dgemm − seq fold| ≤
-    d·ε·Σ|xᵢyᵢ| ≈ 1e-14 relative at d=64, so the 1e-6 margin cannot
-    drop a true candidate — the output is bit-identical to folding
-    every pair, at ~1/d of the arithmetic. The fold accumulates
-    element-products in index order, which is operand-symmetric, so
-    block-pair sidedness never changes the emitted double."""
-    import numpy as np
-    import pandas as pd
-
+    Each block pair runs the shared `_neardup_pairs` kernel (dgemm
+    prefilter, exact left-to-right re-fold of the margin survivors), so
+    the output is bit-identical to folding every pair, at ~1/d of the
+    arithmetic."""
     raw = table(spark, sf_dir, "embeddings")
-    # block sizing only — parquet footer first (no Spark job, guide §6)
-    from cqlcopy_spark.catalog import parquet_table_rows
-
-    n = parquet_table_rows(sf_dir, "embeddings")
-    if n is None:
-        n = raw.count()
+    n = _corpus_rows(sf_dir, raw)  # block sizing only
     # Block count: enough blocks that (a) blocks fit executor memory
     # (N/8k term — dominates at production row counts), (b) the
     # B(B+1)/2 block-pair tasks at least fill the cluster (small-corpus
@@ -334,70 +346,70 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     both = e.join(broadcast(mem), "blk").select("pid", "vec_id", "emb", "side")
 
-    def _seq_norm(X: "np.ndarray") -> "np.ndarray":
-        acc = np.zeros(X.shape[0])
-        for k in range(X.shape[1]):
-            acc += X[:, k] * X[:, k]
-        return np.sqrt(acc)
-
-    _MARGIN = 1e-6
-
-    _EMPTY = pd.DataFrame(
-        {"v1": pd.Series(dtype="int64"), "v2": pd.Series(dtype="int64"),
-         "cosine": pd.Series(dtype="float64")}
-    )
-
     def block_pair(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        if not len(pdf):
-            return _EMPTY
-        is_diag = (pdf["side"] == "B").any()
-        if is_diag:
-            left = right = pdf
-        else:
-            left = pdf[pdf["side"] == "L"]
-            right = pdf[pdf["side"] == "R"]
-        if not len(left) or not len(right):
-            return _EMPTY
-        X = _emb_matrix(left["emb"])
-        Y = _emb_matrix(right["emb"])
-        xid = left["vec_id"].to_numpy()
-        yid = right["vec_id"].to_numpy()
-        # zero-norm vectors have no cosine — drop them EXPLICITLY (the
-        # oracle filters nrm > 0; relying on NaN-fails-compare here
-        # while DuckDB orders NaN above all values is a divergence trap)
-        nx, ny = _seq_norm(X), _seq_norm(Y)
-        kx, ky = nx > 0, ny > 0
-        if not kx.all():
-            X, xid, nx = X[kx], xid[kx], nx[kx]
-        if not ky.all():
-            Y, yid, ny = Y[ky], yid[ky], ny[ky]
-        if not len(xid) or not len(yid):
-            return _EMPTY
-        denom = nx[:, None] * ny[None, :]
-        approx = (X @ Y.T) / denom
-        i, j = np.nonzero(
-            (approx >= _NEARDUP_COS - _MARGIN) & (xid[:, None] != yid[None, :])
-        )
-        # Exact fold, vectorized across the candidate pairs only.
-        acc = np.zeros(len(i))
-        Xi, Yj = X[i], Y[j]
-        for k in range(X.shape[1]):
-            acc += Xi[:, k] * Yj[:, k]
-        cos = acc / denom[i, j]
-        keep = cos >= _NEARDUP_COS
-        a, b, cc = xid[i][keep], yid[j][keep], cos[keep]
-        if is_diag:
-            # each unordered pair surfaced twice (both orientations);
-            # keep the a < b one.
-            sel = a < b
-            a, b, cc = a[sel], b[sel], cc[sel]
-        else:
-            # disjoint blocks: each pair surfaced once — orient it.
-            a, b = np.minimum(a, b), np.maximum(a, b)
-        return pd.DataFrame({"v1": a, "v2": b, "cosine": cc})
+        if (pdf["side"] == "B").any():
+            return _neardup_pairs(pdf)
+        return _neardup_pairs(pdf[pdf["side"] == "L"], right=pdf[pdf["side"] == "R"])
 
-    return both.groupBy("pid").applyInPandas(
-        block_pair, schema="v1 long, v2 long, cosine double"
+    return both.groupBy("pid").applyInPandas(block_pair, schema=_PAIR_SCHEMA)
+
+
+_PAIR_SCHEMA = "v1 long, v2 long, cosine double"
+
+
+def _neardup_pairs(left, *, right=None):
+    """The near-dup pair kernel of every embedding dedup op: (v1, v2,
+    cosine) with v1 < v2 and cosine >= _NEARDUP_COS over the (vec_id,
+    emb) rows of ONE frame (a cell or a diagonal block: each unordered
+    pair once) or of TWO disjoint frames (an off-diagonal block: every
+    cross pair). `right` is keyword-only and the signature carries no
+    type hints, so the function passes straight to applyInPandas as a
+    one-argument grouped-map kernel.
+
+    Zero-norm vectors are dropped EXPLICITLY: they have no cosine, and
+    the oracles filter nrm > 0 (NaN fails every numpy compare while
+    DuckDB orders NaN above all values — a divergence trap). A BLAS
+    matmul prefilter scores every pair, then only pairs within a 1e-6
+    margin of the threshold are re-scored with the exact left-to-right
+    IEEE fold DuckDB's list_reduce performs, vectorized across the
+    candidates. |BLAS − seq fold| ≤ d·ε·Σ|xᵢyᵢ| ≈ 1e-14 relative at
+    d=64, so the margin cannot drop a true candidate and every emitted
+    cosine is bit-identical to folding every pair. The fold multiplies
+    operands elementwise in index order, which is operand-symmetric, so
+    block sidedness never changes the emitted double."""
+    import numpy as np
+    import pandas as pd
+
+    if not len(left) or (right is not None and not len(right)):
+        return pd.DataFrame(
+            {"v1": pd.Series(dtype="int64"), "v2": pd.Series(dtype="int64"),
+             "cosine": pd.Series(dtype="float64")}
+        )
+
+    def nonzero(pdf):
+        X = _emb_matrix(pdf["emb"])
+        nrm = _seq_norm(X)
+        ok = nrm > 0
+        return X[ok], pdf["vec_id"].to_numpy()[ok], nrm[ok]
+
+    X, xid, nx = nonzero(left)
+    Y, yid, ny = (X, xid, nx) if right is None else nonzero(right)
+    denom = nx[:, None] * ny[None, :]
+    approx = (X @ Y.T) / denom
+    # one frame: the upper triangle by id; two disjoint frames: all pairs
+    pair_ok = (
+        xid[:, None] < yid[None, :] if right is None else xid[:, None] != yid[None, :]
+    )
+    i, j = np.nonzero((approx >= _NEARDUP_COS - 1e-6) & pair_ok)
+    acc = np.zeros(len(i))
+    Xi, Yj = X[i], Y[j]
+    for k in range(X.shape[1]):
+        acc += Xi[:, k] * Yj[:, k]
+    cos = acc / denom[i, j]
+    keep = cos >= _NEARDUP_COS
+    a, b = xid[i][keep], yid[j][keep]
+    return pd.DataFrame(
+        {"v1": np.minimum(a, b), "v2": np.maximum(a, b), "cosine": cos[keep]}
     )
 
 
@@ -441,24 +453,39 @@ def _train_centroids(sample: "list", cells: int) -> "object":
     """Deterministic Lloyd's k-means on a driver-side sample — the
     standard IVF training recipe (FAISS trains coarse quantizers on an
     in-memory sample too; distributing the fit buys nothing because the
-    sample is capped). Init = evenly-strided sample rows (seedless,
-    reproducible); empty cells keep their previous centroid."""
+    sample is capped)."""
+    return _lloyd(_emb_matrix(r["emb"] for r in sample), cells, _IVF_ITERS)
+
+
+def _lloyd(X: "object", k: int, iters: int) -> "object":
+    """Driver-side Lloyd's k-means over the rows of X, shared by the IVF
+    coarse quantizer and every PQ subspace: init = evenly-strided rows
+    (seedless, reproducible), first-minimum argmin, empty cells keep
+    their previous centroid — deterministic for a given X, so a verify
+    twin's re-train reproduces the same float64 centroids bit for bit."""
     import numpy as np
 
-    X = _emb_matrix(r["emb"] for r in sample)
-    idx = (np.arange(cells) * len(X)) // cells
-    C = X[idx].copy()
+    C = X[(np.arange(k) * len(X)) // k].copy()
     xx = (X * X).sum(axis=1)
-    for _ in range(_IVF_ITERS):
+    for _ in range(iters):
         # argmin of |x-c|² == argmin of |c|² - 2x·c  (matmul form: O(N·C·D)
         # flops through BLAS instead of materializing an N×C×D broadcast)
         d2 = (C * C).sum(axis=1)[None, :] - 2.0 * (X @ C.T) + xx[:, None]
         a = d2.argmin(axis=1)
-        for c in range(cells):
+        for c in range(k):
             m = a == c
             if m.any():
                 C[c] = X[m].mean(axis=0)
     return C
+
+
+def _probe_cells(coarse: "object", x: "object") -> "list":
+    """The _IVF_NPROBE cells whose centroids are nearest to query x, as
+    ints — the probe list of every IVF search."""
+    import numpy as np
+
+    d2 = ((coarse - x) ** 2).sum(axis=1)
+    return [int(c) for c in np.argsort(d2)[:_IVF_NPROBE]]
 
 
 @register("similarity_ann_ivf")  # rows-only: ANN recall < 1 by design
@@ -484,14 +511,7 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", _emb_double("embedding").alias("emb")
     )
-    # corpus size feeds ONLY the partition-count calc below — answered
-    # from the parquet footer (exact, no Spark job; guide §6), Spark
-    # count fallback for unknown tables
-    from cqlcopy_spark.catalog import parquet_table_rows
-
-    n_corpus = parquet_table_rows(sf_dir, "embeddings")
-    if n_corpus is None:
-        n_corpus = e.count()
+    n_corpus = _corpus_rows(sf_dir, e)  # partition sizing only
     sample = _train_sample(e, _IVF_TRAIN_CAP)
     centroids = _train_centroids(sample, _IVF_CELLS)
     bc = spark.sparkContext.broadcast(centroids)
@@ -503,46 +523,33 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             if not len(pdf):
                 continue
             X = _emb_matrix(pdf["emb"])
-            nrm = np.zeros(X.shape[0])
-            for k in range(X.shape[1]):  # sequential fold == JVM _dot order
-                nrm += X[:, k] * X[:, k]
             # argmin |x-c|² == argmin |c|² - 2x·c: BLAS matmul, no N×C×D blow-up
             d2 = cc[None, :] - 2.0 * (X @ C.T)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
                     "emb": pdf["emb"].to_numpy(),
-                    "nrm": np.sqrt(nrm),
+                    "nrm": _seq_norm(X),
                     "cell": d2.argmin(axis=1).astype(np.int32),
                 }
             )
 
-    # Size partitions to the corpus: one Arrow batch handles ~20k vectors
-    # fine, so a tiny bench corpus stays on one Python worker while a
-    # cluster-scale corpus fans out to every core.
-    par = max(1, min(spark.sparkContext.defaultParallelism, n_corpus // 20_000 + 1))
-    assigned = e.repartition(par).mapInPandas(
+    assigned = _sized_scan(e, n_corpus).mapInPandas(
         assign, schema="vec_id long, emb array<double>, nrm double, cell int"
     ).filter(col("nrm") > 0)  # zero-norm vectors have no cosine
 
     # Queries are tiny by contract (_N_QUERIES): collect them straight from
-    # the source (a JVM-only filter) and assign/probe driver-side — going
-    # through `assigned` would force a full corpus pass just to pluck 8 rows.
-    qrows = e.filter(col("vec_id") < _N_QUERIES).collect()
-    q_data, probe_rows = [], []
-    for r in qrows:
-        x = np.asarray(r["emb"], dtype=np.float64)
-        nrm = 0.0
-        for k in range(len(x)):  # same sequential fold as assign()
-            nrm += x[k] * x[k]
-        if nrm == 0.0:
-            continue  # zero-norm query has no cosine neighbors
-        q_data.append((r["vec_id"], x.tolist(), float(np.sqrt(nrm))))
-        d2 = ((centroids - x) ** 2).sum(axis=1)
-        for cell in np.argsort(d2)[:_IVF_NPROBE]:
-            probe_rows.append((r["vec_id"], int(cell)))
-    queries = spark.createDataFrame(q_data, "q_id long, q_emb array<double>, q_nrm double")
-    probes = spark.createDataFrame(probe_rows, "q_id long, cell int")
+    # the source (a JVM-only filter) and probe driver-side — going through
+    # `assigned` would force a full corpus pass just to pluck 8 rows.
+    qs = _collect_queries(e)
+    queries = spark.createDataFrame(
+        [(q, x.tolist(), n) for q, x, n in qs],
+        "q_id long, q_emb array<double>, q_nrm double",
+    )
+    probes = spark.createDataFrame(
+        [(q, c) for q, x, _ in qs for c in _probe_cells(centroids, x)],
+        "q_id long, cell int",
+    )
 
     cands = assigned.join(broadcast(probes.join(queries, "q_id")), "cell").filter(
         col("vec_id") != col("q_id")
@@ -1123,10 +1130,9 @@ def dedup_embedding_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: driver-trained centroids on a capped strided sample (the
     similarity_ann_ivf recipe), one Arrow matmul assignment pass, ONE
-    shuffle on the integer cell id, and an equi-join within cells whose
-    residual predicate (vec_id ordering + exact JVM-fold cosine) never
-    degenerates into a cartesian. Pair emission is output-bounded per
-    cell; skewed cells split under AQE like any hot join key."""
+    shuffle on the integer cell id, and one `_neardup_pairs` call per
+    cell — never a cartesian. Pair emission is output-bounded per
+    cell."""
     import numpy as np
 
     e = table(spark, sf_dir, "embeddings").select(
@@ -1164,61 +1170,16 @@ def dedup_embedding_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
         assign, schema="vec_id long, emb array<double>, cell int"
     )
 
-    # Within-cell scoring runs as ONE numpy kernel per cell (the exact
-    # block-pair discipline): dgemm prefilter, then the exact
-    # left-to-right IEEE fold on margin survivors only, so borderline
-    # cosines agree bit-for-bit with dedup_embedding_cosine — the
-    # subset/recall pins in tests/test_ann_recall.py depend on that.
-    # (A per-pair JVM `aggregate` fold here was ~4× slower end-to-end:
-    # interpreted HOF lambdas per candidate pair, the trap _lsh_banded's
-    # docstring documents.)
-    def _seq_norm(X):
-        acc = np.zeros(X.shape[0])
-        for k in range(X.shape[1]):
-            acc += X[:, k] * X[:, k]
-        return np.sqrt(acc)
-
-    margin = 1e-6
-
-    def cell_pairs(pdf):
-        import pandas as pd
-
-        empty = pd.DataFrame(
-            {
-                "v1": pd.Series(dtype="int64"),
-                "v2": pd.Series(dtype="int64"),
-                "cosine": pd.Series(dtype="float64"),
-            }
-        )
-        if len(pdf) < 2:
-            return empty
-        X = _emb_matrix(pdf["emb"])
-        ids = pdf["vec_id"].to_numpy()
-        nrm = _seq_norm(X)
-        ok = nrm > 0
-        X, ids, nrm = X[ok], ids[ok], nrm[ok]
-        if len(ids) < 2:
-            return empty
-        denom = nrm[:, None] * nrm[None, :]
-        approx = (X @ X.T) / denom
-        i, j = np.nonzero(
-            (approx >= _NEARDUP_COS - margin) & (ids[:, None] < ids[None, :])
-        )
-        if not len(i):
-            return empty
-        acc = np.zeros(len(i))
-        Xi, Xj = X[i], X[j]
-        for k in range(X.shape[1]):
-            acc += Xi[:, k] * Xj[:, k]
-        cos = acc / denom[i, j]
-        keep = cos >= _NEARDUP_COS
-        return pd.DataFrame(
-            {"v1": ids[i][keep], "v2": ids[j][keep], "cosine": cos[keep]}
-        )
-
+    # Within-cell scoring is the shared `_neardup_pairs` kernel, one call
+    # per cell, so borderline cosines agree bit-for-bit with
+    # dedup_embedding_cosine — the subset/recall pins in
+    # tests/test_ann_recall.py depend on that. (A per-pair JVM
+    # `aggregate` fold here was ~4× slower end-to-end: interpreted HOF
+    # lambdas per candidate pair, the trap _lsh_banded's docstring
+    # documents.)
     return (
         assigned.groupBy("cell")
-        .applyInPandas(cell_pairs, schema="v1 long, v2 long, cosine double")
+        .applyInPandas(_neardup_pairs, schema=_PAIR_SCHEMA)
         # multi-assignment can surface a pair once per shared cell
         .dropDuplicates(["v1", "v2"])
         .orderBy("v1", "v2")
@@ -1331,18 +1292,14 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: cell assignment is a pure codegen map (element_at sign
     tests — no Python, no shuffle); in-cell pairs run as one Arrow task
-    per cell with the dgemm-prefilter + margin + exact left-to-right
-    IEEE re-fold discipline of dedup_embedding_cosine, so every emitted
-    cosine is bitwise DuckDB-identical; then one groupBy(v2) argmin and
-    one left join back to the vectors. At 100 TB a cell no longer fits
+    per cell through the shared `_neardup_pairs` kernel, so every
+    emitted cosine is bitwise DuckDB-identical; then one groupBy(v2)
+    argmin and one left join back to the vectors. At 100 TB a cell no longer fits
     one task: compose the SAME block-pair decomposition
     dedup_embedding_cosine uses WITHIN each cell (pid = (cell, blk_i,
     blk_j)) — the kernel and the verdict projection are unchanged, only
     the grouping key widens. Candidate volume is Σ|cell|²/2, the
     blocked-dedup trade measured in tests/test_ann_recall.py."""
-    import numpy as np
-    import pandas as pd
-
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", _emb_double("embedding").alias("emb")
     )
@@ -1359,41 +1316,9 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unpersisted frame re-runs the scan+cell map per consumer
     # (CLAUDE.md self-join rule)
 
-    thresh, margin = _NEARDUP_COS, 1e-6
-
-    def cell_pairs(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        empty = pd.DataFrame(
-            {"v1": pd.Series(dtype="int64"), "v2": pd.Series(dtype="int64"),
-             "cosine": pd.Series(dtype="float64")}
-        )
-        if len(pdf) < 2:
-            return empty
-        X = _emb_matrix(pdf["emb"])
-        ids = pdf["vec_id"].to_numpy()
-        nrm = np.zeros(X.shape[0])
-        for k in range(X.shape[1]):  # sequential fold == JVM/_sql_dot order
-            nrm += X[:, k] * X[:, k]
-        nrm = np.sqrt(nrm)
-        denom = nrm[:, None] * nrm[None, :]
-        approx = (X @ X.T) / denom
-        i, j = np.nonzero(
-            (approx >= thresh - margin) & (ids[:, None] < ids[None, :])
-        )
-        if not len(i):
-            return empty
-        acc = np.zeros(len(i))
-        Xi, Xj = X[i], X[j]
-        for k in range(X.shape[1]):  # exact re-fold on margin survivors
-            acc += Xi[:, k] * Xj[:, k]
-        cos = acc / denom[i, j]
-        keep = cos >= thresh
-        return pd.DataFrame(
-            {"v1": ids[i][keep], "v2": ids[j][keep], "cosine": cos[keep]}
-        )
-
     pruned = (
         vecs.groupBy("cell")
-        .applyInPandas(cell_pairs, schema="v1 long, v2 long, cosine double")
+        .applyInPandas(_neardup_pairs, schema=_PAIR_SCHEMA)
         .groupBy("v2")
         .agg(
             F.min("v1").alias("pruned_by"),
@@ -1505,6 +1430,36 @@ def _kmeans_assign_fn(centroids):
     return fn
 
 
+def _lloyd_step(frame: DataFrame, centroids: "list") -> "list":
+    """One distributed Lloyd update over the (vec_id, emb) frame: the
+    partials map, a k-row JVM fold of the per-partition partial sums,
+    then the driver-side centroid update. Returns new centroid lists;
+    cells with no partial row keep their previous centroid."""
+    part = frame.mapInPandas(
+        _kmeans_partials_fn(centroids), schema="cell int, s array<double>, cnt long"
+    )
+    # the kernel accumulates across its Arrow batches and yields ONCE, so
+    # rows per cell here == partition count — the collect_list is
+    # partition-count-sized, never corpus-sized
+    rows = (
+        part.groupBy("cell")
+        .agg(
+            F.aggregate(
+                F.collect_list("s"),
+                F.array_repeat(F.lit(0.0), _EMB_DIM),
+                lambda acc, v: F.zip_with(acc, v, lambda a, b: a + b),
+            ).alias("s"),
+            F.sum("cnt").alias("cnt"),
+        )
+        .collect()
+    )
+    C = [list(c) for c in centroids]
+    for r in rows:
+        if r["cnt"]:
+            C[r["cell"]] = [v / r["cnt"] for v in r["s"]]
+    return C
+
+
 def _kmeans_fit(spark: SparkSession, sf_dir: str):
     """Full-corpus Lloyd: returns (final centroid list, assignment
     DataFrame vs those final centroids). Driver traffic per iteration
@@ -1512,15 +1467,9 @@ def _kmeans_fit(spark: SparkSession, sf_dir: str):
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", _emb_double("embedding").alias("emb")
     )
-    # one driver scalar (parallelism sizing + init stride) — answered
-    # from the parquet footer when possible (exact, no Spark job; the
-    # cache then materializes on the first Lloyd pass instead of a
-    # dedicated count job — guide §6/§1.4)
-    from cqlcopy_spark.catalog import parquet_table_rows
-
-    n = parquet_table_rows(sf_dir, "embeddings")
-    if n is None:
-        n = e.count()
+    # one driver scalar (parallelism sizing + init stride); the cache
+    # then materializes on the first Lloyd pass, not a dedicated count
+    n = _corpus_rows(sf_dir, e)
     if n == 0:
         return [], e.select(
             "vec_id",
@@ -1545,38 +1494,15 @@ def _kmeans_fit(spark: SparkSession, sf_dir: str):
     C = [list(r["emb"]) for r in init]
     while len(C) < _KMEANS_K:  # corpus smaller than K: duplicate last
         C.append(list(C[-1]))
-    par = max(1, min(spark.sparkContext.defaultParallelism, n // 20_000 + 1))
     # persist the REPARTITIONED frame, not the raw select: every Lloyd
     # pass and the final assign read `ep`, and caching below the
     # exchange re-ran the round-robin shuffle once per iteration (the
     # exchange sits above the cache and ReuseExchange never crosses
     # jobs) — 4 iterations + assign paid 5 corpus shuffles where one
     # suffices (guide §2.4). The first Lloyd collect materializes it.
-    ep = e.repartition(par).persist()
+    ep = _sized_scan(e, n).persist()
     for _ in range(_KMEANS_ITERS):
-        part = ep.mapInPandas(
-            _kmeans_partials_fn(C), schema="cell int, s array<double>, cnt long"
-        )
-        # fold the per-partition partials: the kernel accumulates across
-        # its Arrow batches and yields ONCE, so rows per cell here ==
-        # partition count — the collect_list is partition-count-sized,
-        # never corpus-sized
-        rows = (
-            part.groupBy("cell")
-            .agg(
-                F.aggregate(
-                    F.collect_list("s"),
-                    F.array_repeat(F.lit(0.0), _EMB_DIM),
-                    lambda acc, v: F.zip_with(acc, v, lambda a, b: a + b),
-                ).alias("s"),
-                F.sum("cnt").alias("cnt"),
-            )
-            .collect()
-        )
-        for r in rows:
-            if r["cnt"]:
-                C[r["cell"]] = [v / r["cnt"] for v in r["s"]]
-        # cells with no partial row keep their previous centroid
+        C = _lloyd_step(ep, C)
     assigned = ep.mapInPandas(
         _kmeans_assign_fn(C), schema="vec_id long, cluster int, dist2 double"
     )
@@ -1701,35 +1627,14 @@ def _kmeans_violations(
         F.abs(col("own") - col("dist2")).alias("metric"),
     )
 
-    # one more Lloyd step, through the SAME public kernels
-    C2 = [list(c) for c in centroids]
-    part = e.mapInPandas(
-        _kmeans_partials_fn(C2), schema="cell int, s array<double>, cnt long"
-    )
-    for r in (
-        part.groupBy("cell")
-        .agg(
-            F.aggregate(
-                F.collect_list("s"),
-                F.array_repeat(F.lit(0.0), _EMB_DIM),
-                lambda acc, v: F.zip_with(acc, v, lambda a, b: a + b),
-            ).alias("s"),
-            F.sum("cnt").alias("cnt"),
-        )
-        .collect()
-    ):
-        if r["cnt"]:
-            C2[r["cell"]] = [v / r["cnt"] for v in r["s"]]
+    # one more Lloyd step, through the SAME distributed step
+    C2 = _lloyd_step(e, centroids)
     stepped = e.mapInPandas(
         _kmeans_assign_fn(C2), schema="vec_id long, cluster int, dist2 double"
     )
     j_old = assigned.agg(F.sum("dist2").alias("j0"))
     j_new = stepped.agg(F.sum("dist2").alias("j1"))
-    from cqlcopy_spark.catalog import parquet_table_rows
-
-    n = parquet_table_rows(sf_dir, "embeddings")  # slack sizing only
-    if n is None:
-        n = e.count()
+    n = _corpus_rows(sf_dir, e)  # slack sizing only
     worse = (
         j_new.crossJoin(broadcast(j_old))
         .filter(col("j1") > col("j0") + F.lit(slack * max(n, 1)))
@@ -1779,27 +1684,13 @@ _PQ_TRAIN_CAP = 512  # driver-side training sample cap (IVF's trade)
 
 
 def _pq_train(X: "object") -> "list":
-    """Per-subspace Lloyd on the driver sample (numpy): strided seedless
-    init, empty cells keep their centroid — deterministic for a given
-    sample, so the verify twin's identical re-train reproduces the
+    """Per-subspace `_lloyd` on the driver sample — deterministic for a
+    given sample, so the verify twin's identical re-train reproduces the
     SAME float64 codebooks bit for bit. Returns M arrays of (K, SUB)."""
-    import numpy as np
-
-    books = []
-    for m in range(_PQ_M):
-        Xs = X[:, m * _PQ_SUB : (m + 1) * _PQ_SUB]
-        idx = (np.arange(_PQ_K) * len(Xs)) // _PQ_K
-        C = Xs[idx].copy()
-        xx = (Xs * Xs).sum(axis=1)
-        for _ in range(_PQ_ITERS):
-            d2 = (C * C).sum(axis=1)[None, :] - 2.0 * (Xs @ C.T) + xx[:, None]
-            a = d2.argmin(axis=1)
-            for c in range(_PQ_K):
-                sel = a == c
-                if sel.any():
-                    C[c] = Xs[sel].mean(axis=0)
-        books.append(C)
-    return books
+    return [
+        _lloyd(X[:, m * _PQ_SUB : (m + 1) * _PQ_SUB], _PQ_K, _PQ_ITERS)
+        for m in range(_PQ_M)
+    ]
 
 
 def _pq_encode_batch(C: "list", Xb: "object"):
@@ -1833,21 +1724,12 @@ def _pq_fit(spark: SparkSession, sf_dir: str):
     verify twin's JVM fold replays, so code assignments and recon_err
     are BITWISE comparable across the two paths (no tie tolerance
     needed: both sides take the first minimum)."""
-    import numpy as np
     import pandas as pd
 
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", _emb_double("embedding").alias("emb")
     )
-    # parallelism sizing only — answered from the parquet footer when
-    # possible (exact, no Spark job; the same guide §6 treatment
-    # _kmeans_fit got in CS5 — this count was the one full-scan job
-    # left in the PQ family's plan build)
-    from cqlcopy_spark.catalog import parquet_table_rows
-
-    n_corpus = parquet_table_rows(sf_dir, "embeddings")
-    if n_corpus is None:
-        n_corpus = e.count()
+    n_corpus = _corpus_rows(sf_dir, e)  # parallelism sizing only
     sample = _train_sample(e, _PQ_TRAIN_CAP)
     X = _emb_matrix(r["emb"] for r in sample)
     books = _pq_train(X)
@@ -1869,8 +1751,7 @@ def _pq_fit(spark: SparkSession, sf_dir: str):
                 }
             )
 
-    par = max(1, min(spark.sparkContext.defaultParallelism, n_corpus // 20_000 + 1))
-    enc = e.repartition(par).mapInPandas(
+    enc = _sized_scan(e, n_corpus).mapInPandas(
         encode,
         schema="vec_id long, emb array<double>, codes string, recon_err double",
     )
@@ -2009,8 +1890,8 @@ _PQ_CAND = 8 * _TOP_K  # per-partition ADC candidates kept per query
 def _collect_queries(e: DataFrame) -> "list":
     """[(q_id, x, q_nrm)] for the non-zero-norm query vectors, sorted by
     vec_id — collected driver-side (tiny by the _N_QUERIES contract,
-    ann_ivf's pattern); norms accumulate with the refine _dot's
-    sequential fold so the zero-norm exclusion matches it exactly."""
+    ann_ivf's pattern); norms are `_seq_norm`, the refine _dot's
+    sequential fold, so the zero-norm exclusion matches it exactly."""
     import numpy as np
 
     out = []
@@ -2018,12 +1899,9 @@ def _collect_queries(e: DataFrame) -> "list":
         e.filter(col("vec_id") < _N_QUERIES).collect(), key=lambda r: r["vec_id"]
     ):
         x = np.asarray(r["emb"], dtype=np.float64)
-        nrm = 0.0
-        for k in range(len(x)):
-            nrm += x[k] * x[k]
-        if nrm == 0.0:
-            continue  # zero-norm query has no cosine neighbors
-        out.append((int(r["vec_id"]), x, float(np.sqrt(nrm))))
+        nrm = float(_seq_norm(x[None, :])[0])
+        if nrm != 0.0:  # zero-norm query has no cosine neighbors
+            out.append((int(r["vec_id"]), x, nrm))
     return out
 
 
@@ -2041,12 +1919,11 @@ def _query_luts(books: "list", queries: "list") -> "object":
 
 
 def _adc_scan_kernel(bc):
-    """mapInPandas kernel shared by embedding_pq_topk and
-    similarity_ivfpq: ADC-score every input row against every query from
-    codes alone and keep a RUNNING per-partition top-_PQ_CAND per query —
-    state is bounded at Q × _PQ_CAND rows however large the partition,
-    merged per Arrow batch with a deterministic (score DESC, vec_id ASC)
-    cut.
+    """mapInPandas kernel of `_adc_search`: ADC-score every input row
+    against every query from codes alone and keep a RUNNING
+    per-partition top-_PQ_CAND per query — state is bounded at
+    Q × _PQ_CAND rows however large the partition, merged per Arrow
+    batch with a deterministic (score DESC, vec_id ASC) cut.
 
     bc.value = (q_id_arr, L, consts, probes). consts/probes are None for
     plain PQ; for IVFADC consts is the (Q, cells) <q, c(cell)> matrix
@@ -2148,6 +2025,34 @@ def _adc_refine_topk(spark: SparkSession, cands: DataFrame, queries: "list") -> 
     )
 
 
+def _adc_search(
+    spark: SparkSession, codes: DataFrame, books: "list", queries: "list", coarse=None
+) -> DataFrame:
+    """The ADC query half shared by embedding_pq_topk, similarity_ivfpq
+    and the persisted index's vector_index_search: per-query LUTs
+    against `books` and, for IVFADC (`coarse` given), the <q, c(cell)>
+    constants and `_probe_cells` sets; ONE `_adc_scan_kernel` Arrow scan
+    of `codes` (vec_id, emb, codes, plus cell for IVFADC), then the
+    exact refine."""
+    import numpy as np
+
+    consts = probes = None
+    if coarse is not None:
+        probes = [set(_probe_cells(coarse, x)) for _, x, _ in queries]
+        consts = (
+            np.stack([coarse @ x for _, x, _ in queries])
+            if queries
+            else np.zeros((0, coarse.shape[0]))
+        )
+    bc = spark.sparkContext.broadcast(
+        ([q for q, _, _ in queries], _query_luts(books, queries), consts, probes)
+    )
+    cands = codes.mapInPandas(
+        _adc_scan_kernel(bc), schema="q_id long, vec_id long, emb array<double>"
+    )
+    return _adc_refine_topk(spark, cands, queries)
+
+
 def _exact_pair_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     """similarity_topk's brute-force lineage WITHOUT the top-k cut — the
     independently-derived exact cosine pair set every refine-exactness
@@ -2198,15 +2103,9 @@ def embedding_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", _emb_double("embedding").alias("emb")
     )
-    queries = _collect_queries(e)
-    bc = spark.sparkContext.broadcast(
-        ([q for q, _, _ in queries], _query_luts(books, queries), None, None)
+    return _adc_search(
+        spark, enc.select("vec_id", "emb", "codes"), books, _collect_queries(e)
     )
-
-    cands = enc.select("vec_id", "emb", "codes").mapInPandas(
-        _adc_scan_kernel(bc), schema="q_id long, vec_id long, emb array<double>"
-    )
-    return _adc_refine_topk(spark, cands, queries)
 
 
 @register("embedding_pq_search_verify", oracle=_ANN_VERIFY_ORACLE)
@@ -2277,8 +2176,6 @@ def _ivfpq_train_from_sample(sample: "list"):
     LITERAL same recipe: vec_id sort is the caller's job, strided
     seedless coarse init, residual PQ books via the deterministic
     per-dimension assignment."""
-    import numpy as np
-
     X = _emb_matrix(r["emb"] for r in sample)
     coarse = _train_centroids(sample, _IVF_CELLS)
     books = _pq_train(X - coarse[_coarse_assign(X, coarse)])
@@ -2332,16 +2229,10 @@ def _ivfpq_fit(spark: SparkSession, sf_dir: str):
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", _emb_double("embedding").alias("emb")
     )
-    # footer row count for parallelism sizing (see _pq_fit)
-    from cqlcopy_spark.catalog import parquet_table_rows
-
-    n_corpus = parquet_table_rows(sf_dir, "embeddings")
-    if n_corpus is None:
-        n_corpus = e.count()
+    n_corpus = _corpus_rows(sf_dir, e)  # parallelism sizing only
     sample = _train_sample(e, _PQ_TRAIN_CAP)
     coarse, books = _ivfpq_train_from_sample(sample)
-    par = max(1, min(spark.sparkContext.defaultParallelism, n_corpus // 20_000 + 1))
-    enc = _ivfpq_encode_frame(e.repartition(par), coarse, books)
+    enc = _ivfpq_encode_frame(_sized_scan(e, n_corpus), coarse, books)
     return coarse, books, enc
 
 
@@ -2360,32 +2251,14 @@ def similarity_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate rows reach the broadcast-query refine join and final
     window (embedding_pq_topk's contract; the shared _ann_violations
     claims are driver-checked by similarity_ivfpq_verify)."""
-    import numpy as np
-
     coarse, books, enc = _ivfpq_fit(spark, sf_dir)
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", _emb_double("embedding").alias("emb")
     )
-    queries = _collect_queries(e)
-    probes, consts = [], []
-    for _, x, _ in queries:
-        d2 = ((coarse - x) ** 2).sum(axis=1)
-        probes.append({int(c) for c in np.argsort(d2)[:_IVF_NPROBE]})
-        consts.append(coarse @ x)  # <q, c(cell)> for every cell
-    const_all = np.stack(consts) if consts else np.zeros((0, _IVF_CELLS))
-    bc = spark.sparkContext.broadcast(
-        (
-            [q for q, _, _ in queries],
-            _query_luts(books, queries),
-            const_all,
-            probes,
-        )
+    return _adc_search(
+        spark, enc.select("vec_id", "emb", "cell", "codes"), books,
+        _collect_queries(e), coarse,
     )
-
-    cands = enc.select("vec_id", "emb", "cell", "codes").mapInPandas(
-        _adc_scan_kernel(bc), schema="q_id long, vec_id long, emb array<double>"
-    )
-    return _adc_refine_topk(spark, cands, queries)
 
 
 @register("similarity_ivfpq_verify", oracle=_ANN_VERIFY_ORACLE)

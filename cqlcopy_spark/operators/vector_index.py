@@ -16,8 +16,8 @@ already proves for the MinHash band index, applied to embeddings:
   duplicates (minhash_apply_batch's exact idempotence recipe, including
   its delta compaction cadence);
 - ``vector_index_search``  — the IVFADC query half over the persisted
-  codes: per-query LUTs + probed-cell masking inside ONE Arrow scan
-  (similarity.py:2093's `_adc_scan_kernel`), exact-cosine refine.
+  codes: the shared `similarity._adc_search` (per-query LUTs +
+  probed-cell masking inside ONE Arrow scan, exact-cosine refine).
 
 Training on the base slice only is what makes the index INCREMENTAL:
 appends never see the trainer, so batch N's codes are a pure function of
@@ -256,12 +256,11 @@ def read_index_codes(
 def vector_index_search(
     spark: SparkSession, state_dir: str, queries: list
 ) -> DataFrame:
-    """IVFADC retrieval over the PERSISTED index: per-query LUTs against
-    the stored codebooks, <q, c(cell)> constants + probed-cell masks
-    against the stored centroids, ONE Arrow scan of the codes with the
-    shared `_adc_scan_kernel` (per-partition top-cand state, corpus
-    never shuffled), exact-cosine refine over the tiny candidate set —
-    similarity_ivfpq's query half pointed at parquet instead of a
+    """IVFADC retrieval over the PERSISTED index: the shared
+    `similarity._adc_search` query half (per-query LUTs, <q, c(cell)>
+    constants and probed-cell masks, ONE Arrow scan of the codes with a
+    per-partition top-cand cut, exact-cosine refine) pointed at the
+    stored centroids, codebooks and parquet codes instead of a
     same-session encode."""
     return _search_codes_frame(
         spark, state_dir, queries, read_index_codes(spark, state_dir)
@@ -276,31 +275,10 @@ def _search_codes_frame(
     byte-identical query path it serves the vacuumed state with (the
     candidate cut is per-partition, so a served list is only comparable
     across two states scanned under the same physical layout)."""
-    import numpy as np
-
-    from cqlcopy_spark.operators.similarity import (
-        _IVF_NPROBE,
-        _adc_refine_topk,
-        _adc_scan_kernel,
-        _query_luts,
-    )
+    from cqlcopy_spark.operators.similarity import _adc_search
 
     coarse, books = _load_artifacts(spark, state_dir)
-    probes, consts = [], []
-    for _, x, _ in queries:
-        d2 = ((coarse - x) ** 2).sum(axis=1)
-        probes.append({int(c) for c in np.argsort(d2)[:_IVF_NPROBE]})
-        consts.append(coarse @ x)
-    const_all = (
-        np.stack(consts) if consts else np.zeros((0, coarse.shape[0]))
-    )
-    bc = spark.sparkContext.broadcast(
-        ([q for q, _, _ in queries], _query_luts(books, queries), const_all, probes)
-    )
-    cands = codes.mapInPandas(
-        _adc_scan_kernel(bc), schema="q_id long, vec_id long, emb array<double>"
-    )
-    return _adc_refine_topk(spark, cands, queries)
+    return _adc_search(spark, codes, books, queries, coarse)
 
 
 def _state_tempdir() -> str:
@@ -360,7 +338,7 @@ def similarity_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus arrives as three vec_id-sliced batches — the first trains
     and seeds the index, the next two are encoded with the stored
     codebooks and appended (no retrain, no historical re-encode) — and
-    retrieval runs `_adc_scan_kernel` over the parquet codes.
+    retrieval runs `similarity._adc_search` over the parquet codes.
 
     Rows-only by the same recall<1 argument as similarity_ivfpq; the
     exactness claims every emitted pair DOES make (bitwise-exact refined

@@ -7,19 +7,20 @@ last driver check, then greens oldest-check-first.  Round 7's audit showed
 the "changed after check" signal must not come from filesystem mtimes
 (checkouts, driver copies, and artifact rewrites all touch mtimes without
 touching content — the r07 fronting rule demonstrably misfired on exactly
-this): it has to be a CONTENT hash of the implementing module, recorded at
-the moment the verdict was observed.
+this): it has to be a CONTENT hash, recorded at the moment the verdict was
+observed — of the implementing module AND every cqlcopy_spark module it
+imports, transitively, since most ops keep their logic in shared helpers.
 
 Contract:
 
 - ``rotation_ledger.json`` (repo root, committed) maps
-  ``query_name -> {"round": N, "module_sha": sha256-of-module-source}``.
+  ``query_name -> {"round": N, "module_sha": sha256-of-module-closure}``.
 - ``python -m cqlcopy_spark.plans.rotation`` refreshes the ledger from the
   NEWEST ``CORRECTNESS_r*.json``.  Run it at ROUND START, before editing any
   operator module: the tree at round start is byte-identical to the tree the
   driver just verified (the driver checks the committed round-final tree),
   so hashing the modules then records exactly the code each verdict covers.
-- ``__spark_entry__.py`` fronts a green query when the CURRENT module sha
+- ``__spark_entry__.py`` fronts a green query when the CURRENT closure sha
   differs from its ledger sha.  A green query with no ledger row (verdicts
   predating the ledger) is treated as unchanged and left to the
   oldest-check-first sweep — mtime heuristics are gone entirely.
@@ -27,6 +28,8 @@ Contract:
 
 from __future__ import annotations
 
+import ast
+import functools
 import hashlib
 import json
 import re
@@ -36,15 +39,72 @@ from pathlib import Path
 LEDGER_NAME = "rotation_ledger.json"
 
 
+#: imported by every operator module, but its own imports are the
+#: registration loader (every operator), not a dependency of any query —
+#: hashed as a leaf, or every closure would be the whole package
+_LEAF_MODULES = ("cqlcopy_spark.plans.registry",)
+
+
+def _module_file(name: str, root: Path) -> Path | None:
+    p = root.joinpath(*name.split("."))
+    for f in (p.with_suffix(".py"), p / "__init__.py"):
+        if f.is_file():
+            return f
+    return None
+
+
+@functools.lru_cache(maxsize=128)
+def _import_names(src: bytes) -> tuple[str, ...]:
+    """Every module name a source imports — module-level AND function-
+    level (ast.walk reads both); `from pkg import name` yields pkg.name
+    too, since name may be a module. Cached on the source bytes: one
+    queries() call resolves ~20 closures over the same files."""
+    out = []
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(node, ast.Import):
+            out += [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom) and node.module and not node.level:
+            out += [node.module] + [f"{node.module}.{a.name}" for a in node.names]
+    return tuple(out)
+
+
+def _imported(f: Path, root: Path) -> dict[str, Path]:
+    """{module name: source file} of the cqlcopy_spark modules a source
+    file imports."""
+    found = {
+        n: _module_file(n, root)
+        for n in _import_names(f.read_bytes())
+        if n.split(".")[0] == "cqlcopy_spark"
+    }
+    return {n: p for n, p in found.items() if p}
+
+
+def module_closure(fn) -> dict[str, Path]:
+    """{module name: source file} for the module defining a registered
+    query fn plus every cqlcopy_spark module it imports, transitively."""
+    root = Path(__file__).resolve().parents[2]
+    seen: dict[str, Path] = {}
+    todo = [(fn.__module__, Path(sys.modules[fn.__module__].__file__))]
+    while todo:
+        mod, f = todo.pop()
+        if mod in seen:
+            continue
+        seen[mod] = f
+        if mod not in _LEAF_MODULES:
+            todo.extend(_imported(f, root).items())
+    return seen
+
+
 def module_sha(fn) -> str:
-    """sha256 hex of the source file defining a registered query fn
-    ('' if the module/file can't be resolved — never raises)."""
+    """sha256 hex over the dependency closure of a registered query fn
+    (module_closure: each module's name and source digest), so a rewrite
+    of a helper module fronts every query built on it ('' if the module
+    can't be resolved — never raises)."""
     try:
-        mod = sys.modules.get(getattr(fn, "__module__", "") or "")
-        f = getattr(mod, "__file__", None)
-        if not f:
-            return ""
-        return hashlib.sha256(Path(f).read_bytes()).hexdigest()
+        h = hashlib.sha256()
+        for mod, f in sorted(module_closure(fn).items()):
+            h.update(mod.encode() + b"\0" + hashlib.sha256(f.read_bytes()).digest())
+        return h.hexdigest()
     except Exception:
         return ""
 

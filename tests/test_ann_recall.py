@@ -127,3 +127,51 @@ def test_ann_refine_containment_in_duckdb(spark, ann):
         WHERE ex.cosine IS NULL OR a.cosine != ex.cosine
     """).fetchall()
     assert bad == [], bad[:5]
+
+
+def test_neardup_kernel_drops_zero_norm_vectors(spark, tmp_path):
+    """All three near-dup ops share one pair kernel: on a corpus with two
+    all-zero vectors, an exact-duplicate pair and a scaled-copy pair, no
+    output row names a zero-norm id (a zero vector has no cosine — NaN
+    would otherwise pass or fail compares engine by engine), both planted
+    pairs are in the exhaustive answer, and every blocked pair and every
+    semdedup (pruned_by, vec_id) verdict carries the exhaustive cosine
+    bit for bit."""
+    import numpy as np
+    import pandas as pd
+
+    import cqlcopy_spark.operators.similarity as sim
+
+    rng = np.random.default_rng(11)
+    X = rng.standard_normal((60, 64)).astype("float32")
+    zero = {12, 13}
+    for z in zero:
+        X[z] = 0.0
+    X[21] = X[20]  # exact duplicate
+    X[31] = X[30] * np.float32(3.0)  # scaled copy
+    pd.DataFrame(
+        {"vec_id": np.arange(len(X)), "embedding": list(X),
+         "label": np.zeros(len(X), dtype="int32")}
+    ).to_parquet(tmp_path / "embeddings.parquet")
+    sf = str(tmp_path)
+
+    exact = {
+        (r["v1"], r["v2"]): r["cosine"]
+        for r in sim.dedup_embedding_cosine(spark, sf).collect()
+    }
+    blocked = sim.dedup_embedding_blocked(spark, sf).collect()
+    sem = sim.dedup_semdedup(spark, sf).collect()
+
+    assert {(20, 21), (30, 31)} <= set(exact), sorted(exact)
+    named = {v for p in exact for v in p}
+    named |= {r["v1"] for r in blocked} | {r["v2"] for r in blocked}
+    named |= {r["vec_id"] for r in sem} | {r["pruned_by"] for r in sem}
+    assert not named & zero
+    assert len(sem) == len(X) - len(zero)
+    assert (20, 21) in {(r["v1"], r["v2"]) for r in blocked}  # same cells
+    for r in blocked:
+        assert exact.get((r["v1"], r["v2"])) == r["cosine"], r
+    pruned = [r for r in sem if not r["keep"]]
+    assert pruned
+    for r in pruned:
+        assert exact.get((r["pruned_by"], r["vec_id"])) == r["prune_cos"], r

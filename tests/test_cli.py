@@ -378,3 +378,25 @@ def test_cli_read_directory_and_stdout_render_same_lines(spark, tmp_path):
         '2,NULL,NULL,NULL,"NULL"',
         "3,-2.0,false,2024-01-02 03:04:06+0000,NULL",
     ]
+
+
+@pytest.mark.parametrize("command", ["read", "write"])
+def test_cli_cassandra_unqualified_table_needs_keyspace(
+    spark, tmp_path, monkeypatch, command
+):
+    """--backend cassandra with an unqualified table and no --keyspace
+    raises ValueError before either connector entry point is called."""
+    import cqlcopy_spark.sources.cassandra as cass
+
+    called = []
+    monkeypatch.setattr(cass, "copy_to_cassandra", lambda *a: called.append(a))
+    monkeypatch.setattr(cass, "read_from_cassandra", lambda *a: called.append(a))
+    if command == "write":
+        argv = ["write", "items", "id", "name", "price", "ok", "when",
+                "--input", _write_input(tmp_path),
+                "--types", "long,string,double,bool,timestamp"]
+    else:
+        argv = ["read", "items", "id", "--output", "-"]
+    with pytest.raises(ValueError, match="--keyspace is required"):
+        main(argv + ["--backend", "cassandra"], spark=spark)
+    assert called == []

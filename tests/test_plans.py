@@ -756,24 +756,16 @@ def test_driver_query_rotation_orders_unchecked_first(tmp_path, monkeypatch):
     spec.loader.exec_module(mod)
 
     names = list(mod.queries())
-    # _FORCE_FRONT entries rank ahead of greens by design — pick probe
-    # names outside it so the green/failed ordering is what's tested
-    cand = [n for n in names if n not in mod._FORCE_FRONT]
     ok = {"rows_match": True, "schema_match": True, "hash_match": True}
     bad = {"rows_match": True, "schema_match": True, "hash_match": False}
     (tmp_path / "CORRECTNESS_r01.json").write_text(
-        json.dumps({cand[0]: ok, cand[1]: bad})
+        json.dumps({names[0]: ok, names[1]: bad})
     )
     monkeypatch.setattr(mod, "_REPO", str(tmp_path))
     order = list(mod.queries())
-    assert order[0] == cand[1]  # failed outranks everything
-    assert order[-1] == cand[0]  # green sinks to the back
+    assert order[0] == names[1]  # failed outranks everything
+    assert order[-1] == names[0]  # green sinks to the back
     assert set(order) == set(names)
-    # force-front entries (verdicts known stale) outrank unchecked ones
-    ff = [n for n in names if n in mod._FORCE_FRONT]
-    if ff:
-        unchecked = next(n for n in order if n not in mod._FORCE_FRONT and n != cand[1])
-        assert order.index(ff[0]) < order.index(unchecked)
 
 
 def test_driver_query_rotation_rotates_greens_by_freshness(tmp_path, monkeypatch):
@@ -794,9 +786,8 @@ def test_driver_query_rotation_rotates_greens_by_freshness(tmp_path, monkeypatch
     spec.loader.exec_module(mod)
 
     names = list(mod.queries())
-    cand = [n for n in names if n not in mod._FORCE_FRONT]
     ok = {"rows_match": True, "schema_match": True, "hash_match": True}
-    a, b, c = cand[0], cand[1], cand[2]
+    a, b, c = names[0], names[1], names[2]
     # b checked (green) in r01, a checked (green) in r02, c never checked
     (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps({b: ok}))
     (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps({a: ok}))
@@ -831,6 +822,30 @@ def test_driver_query_rotation_rotates_greens_by_freshness(tmp_path, monkeypatch
     }))
     order3 = list(mod.queries())
     assert order3[-2:] == [b, a]
+
+
+def test_rotation_sha_covers_the_dependency_closure():
+    """module_sha hashes the defining module plus every cqlcopy_spark
+    module it imports, transitively: stream_curation_apply is defined in
+    text.py but its state logic lives in streaming/sinks.py and
+    streaming/state_log.py, so a rewrite of either must front it. The
+    registry is a leaf (its loader imports every operator), so an op's
+    closure is not the whole package."""
+    from pathlib import Path
+
+    from cqlcopy_spark.plans.rotation import module_closure
+
+    files = {
+        Path(f).relative_to(Path(__file__).resolve().parents[1]).as_posix()
+        for f in module_closure(QUERIES["stream_curation_apply"]).values()
+    }
+    assert {
+        "cqlcopy_spark/operators/text.py",
+        "cqlcopy_spark/streaming/sinks.py",
+        "cqlcopy_spark/streaming/state_log.py",
+    } <= files, files
+    rel = module_closure(QUERIES["agg_pricing_summary"])
+    assert "cqlcopy_spark.operators.text" not in rel, sorted(rel)
 
 
 def test_boilerplate_strip_broadcast_hash_probe(spark):
