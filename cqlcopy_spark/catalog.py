@@ -64,23 +64,65 @@ def _ship_package(spark: SparkSession) -> None:
     key = (sc.applicationId, sc.startTime)
     if key in _SHIPPED:
         return
-    import atexit
     import shutil
-    import tempfile
 
     import cqlcopy_spark
 
     pkg_dir = os.path.dirname(os.path.abspath(cqlcopy_spark.__file__))
-    staging = tempfile.mkdtemp(prefix="cqlcopy_spark_pyfiles_")
     zip_path = shutil.make_archive(
-        os.path.join(staging, "cqlcopy_spark"),
+        os.path.join(session_tempdir("cqlcopy_spark_pyfiles_"), "cqlcopy_spark"),
         "zip",
         root_dir=os.path.dirname(pkg_dir),
         base_dir="cqlcopy_spark",
     )
     sc.addPyFile(zip_path)
-    atexit.register(shutil.rmtree, staging, ignore_errors=True)
     _SHIPPED.add(key)
+
+
+def register_data_source(spark: SparkSession, cls) -> None:
+    """Make the Python data source `cls` resolvable by its name from
+    `spark`, for reads and writes alike.
+
+    Python data sources live in each session's own registry, and Spark
+    resolves a format name against the thread's ACTIVE session but plans
+    the read or write against the calling session; the public
+    `spark.dataSource.register` also refuses a name the active session
+    already holds. A second session (`spark.newSession()`) therefore
+    needs the source in both registries, and neither a session-conf flag
+    nor a per-SparkContext one can tell that — so the registries
+    themselves are asked, and the source goes straight into each one
+    that lacks it."""
+    from pyspark.sql.udf import _wrap_function
+
+    # the source class is cloudpickled BY REFERENCE — executors must be
+    # able to import cqlcopy_spark (CLAUDE.md UDF-shipping rule)
+    _ship_package(spark)
+    jvm = spark._jvm
+    sessions = [spark._jsparkSession]
+    active = jvm.org.apache.spark.sql.SparkSession.getActiveSession()
+    if active.isDefined():
+        sessions.append(active.get())
+    name = cls.name()
+    for session in sessions:
+        registry = session.sessionState().dataSourceManager()
+        if not registry.dataSourceExists(name):
+            source = jvm.org.apache.spark.sql.execution.datasources.v2.python.UserDefinedPythonDataSource(
+                _wrap_function(spark.sparkContext, cls)
+            )
+            registry.registerDataSource(name, source)
+
+
+def session_tempdir(prefix: str) -> str:
+    """A fresh temp dir removed at interpreter exit, not before: lazily
+    read frames (a streamed op's state dir) and lazily fetching tasks
+    (the shipped package zip) still need it after the call returns."""
+    import atexit
+    import shutil
+    import tempfile
+
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -180,6 +222,24 @@ def parquet_col_max(sf_dir: str, name: str, column: str):
         if st.max is not None and (mx is None or st.max > mx):
             mx = st.max
     return mx
+
+
+def id_thirds(df: DataFrame, sf_dir: str, name: str, column: str):
+    """`df` cut into three `column` ranges — ≤ MAX // 3, ≤ 2·(MAX // 3),
+    the rest — the arrival order of the streamed-lifecycle ops' three
+    micro-batches. Returns (slices, (cut1, cut2)). MAX comes from fixture
+    table `name`'s parquet footer (exact, no Spark job — guide §6), else
+    from one aggregate job over `df`; an empty table cuts at 0, so every
+    slice is empty."""
+    from pyspark.sql import functions as F
+
+    mx = parquet_col_max(sf_dir, name, column)
+    if mx is None:
+        mx = df.agg(F.max(column)).first()[0] or 0
+    lo, hi = mx // 3, 2 * (mx // 3)
+    c = F.col(column)
+    slices = (df.filter(c <= lo), df.filter((c > lo) & (c <= hi)), df.filter(c > hi))
+    return slices, (lo, hi)
 
 
 def parquet_table_rows(sf_dir: str, name: str):

@@ -34,7 +34,6 @@ from __future__ import annotations
 
 import argparse
 import sys
-from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -71,29 +70,64 @@ def _schema_from_types(cols: list[str], types_arg: str) -> T.StructType:
     )
 
 
+#: The reference's write and read flags (write.go:28-42, read.go:25-32)
+#: as (flag, CopyConfig field, subcommand that lists it in --help, or
+#: None for both), in --help order; each default is the field's value in
+#: DEFAULT_CONFIG. The other subcommand accepts the flag too, hidden, and
+#: the path it runs never reads it.
+_FLAGS = (
+    ("--partition-key-size", "partition_key_size", "read"),
+    ("--offset", "offset", "read"),
+    ("--page-size", "page_size", "read"),
+    ("--prefetch", "prefetch", "read"),
+    ("--header", "header", None),
+    ("--bool-style", "bool_style", None),
+    ("--time-format", "time_format_go", None),
+    ("--null", "null_literal", None),
+    ("--num-processes", "num_workers", "write"),
+    ("--chunk-size", "chunk_size", "write"),
+    ("--max-batch-size", "max_batch_kb", "write"),
+    ("--max-attempts", "max_attempts", "write"),
+    ("--backoff", "backoff_s", "write"),
+    ("--max-parse-errors", "max_parse_errors", "write"),
+    ("--max-insert-errors", None, "write"),
+    ("--report-frequency", "report_freq_s", "write"),
+)
+_HELP = {
+    "--offset": "resume: export only rows with token(pk) > offset",
+    "--max-insert-errors": "accepted for the reference's flag surface; no effect: "
+    "a batch that exhausts --max-attempts fails the job",
+}
+
+
+def _add_copy_flags(sp: argparse.ArgumentParser, command: str) -> None:
+    for flag, field, shown_in in _FLAGS:
+        if field is None:  # --max-insert-errors: parsed, never read
+            kw = {"type": int, "default": -1}
+        else:
+            default = getattr(DEFAULT_CONFIG, field)
+            if isinstance(default, bool):
+                kw = {"action": argparse.BooleanOptionalAction, "default": default}
+            elif isinstance(default, tuple):
+                kw = {"default": ",".join(default)}
+            else:
+                kw = {"type": type(default), "default": default}
+        shown = shown_in in (None, command)
+        sp.add_argument(flag, help=_HELP.get(flag) if shown else argparse.SUPPRESS, **kw)
+
+
 def _cfg_from_args(args: argparse.Namespace) -> CopyConfig:
-    bool_style = tuple(s.strip() for s in args.bool_style.split(","))
+    values = {
+        field: getattr(args, flag[2:].replace("-", "_"))
+        for flag, field, _ in _FLAGS
+        if field is not None
+    }
+    bool_style = tuple(s.strip() for s in values["bool_style"].split(","))
     if len(bool_style) != 2:
         raise ValueError("--bool-style must be 'true_literal,false_literal'")
-    return replace(
-        DEFAULT_CONFIG,
-        header=args.header,
-        bool_style=bool_style,
-        time_format_go=args.time_format,
-        null_literal=args.null,
-        num_workers=args.num_processes,
-        chunk_size=args.chunk_size,
-        max_batch_kb=args.max_batch_size,
-        max_attempts=args.max_attempts,
-        backoff_s=args.backoff,
-        max_parse_errors=args.max_parse_errors,
-        max_insert_errors=args.max_insert_errors,
-        report_freq_s=max(args.report_frequency, 0.1),  # floor, write.go:126-128
-        page_size=args.page_size,
-        prefetch=args.prefetch,
-        partition_key_size=args.partition_key_size,
-        offset=args.offset,
-    )
+    values["bool_style"] = bool_style
+    values["report_freq_s"] = max(values["report_freq_s"], 0.1)  # floor, write.go:126-128
+    return CopyConfig(**values)
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -121,51 +155,14 @@ def build_parser() -> argparse.ArgumentParser:
                    help="comma list of column types (omit to infer from data)")
     w.add_argument("--dynamic", action="store_true",
                    help="cell-dynamic typing (reference write.go:199-223 fidelity; needs --types)")
-    # write flags (write.go:28-42)
-    w.add_argument("--header", action=argparse.BooleanOptionalAction, default=True)
-    w.add_argument("--bool-style", default="true,false")
-    w.add_argument("--time-format", default="2006-01-02 15:04:05-0700")
-    w.add_argument("--null", default="NULL")
-    w.add_argument("--num-processes", type=int, default=8)
-    w.add_argument("--chunk-size", type=int, default=1000)
-    w.add_argument("--max-batch-size", type=int, default=20)
-    w.add_argument("--max-attempts", type=int, default=5)
-    w.add_argument("--backoff", type=float, default=1.0)
-    w.add_argument("--max-parse-errors", type=int, default=-1)
-    w.add_argument("--max-insert-errors", type=int, default=-1)
-    w.add_argument("--report-frequency", type=float, default=0.25)
+    _add_copy_flags(w, "write")
 
     r = sub.add_parser("read", parents=[root], help="table → CSV (reference read.go)")
     r.add_argument("table")
     r.add_argument("columns", nargs="+")
     r.add_argument("--output", required=True,
                    help="output directory for distributed CSV, or '-' for stdout")
-    # read flags (read.go:25-32)
-    r.add_argument("--partition-key-size", type=int, default=1)
-    r.add_argument("--offset", type=int, default=-(2 ** 63),
-                   help="resume: export only rows with token(pk) > offset")
-    r.add_argument("--page-size", type=int, default=128)
-    r.add_argument("--prefetch", type=int, default=1024)
-    r.add_argument("--header", action=argparse.BooleanOptionalAction, default=True)
-    r.add_argument("--bool-style", default="true,false")
-    r.add_argument("--time-format", default="2006-01-02 15:04:05-0700")
-    r.add_argument("--null", default="NULL")
-
-    # flags shared by both paths but unused by one keep their defaults
-    for sp, names in ((r, ["--num-processes", "--chunk-size", "--max-batch-size",
-                           "--max-attempts", "--backoff", "--max-parse-errors",
-                           "--max-insert-errors", "--report-frequency"]),
-                      (w, ["--partition-key-size", "--offset", "--page-size",
-                           "--prefetch"])):
-        defaults = {"--num-processes": 8, "--chunk-size": 1000,
-                    "--max-batch-size": 20, "--max-attempts": 5,
-                    "--backoff": 1.0, "--max-parse-errors": -1,
-                    "--max-insert-errors": -1, "--report-frequency": 0.25,
-                    "--partition-key-size": 1, "--offset": -(2 ** 63),
-                    "--page-size": 128, "--prefetch": 1024}
-        for n in names:
-            typ = type(defaults[n])
-            sp.add_argument(n, type=typ, default=defaults[n], help=argparse.SUPPRESS)
+    _add_copy_flags(r, "read")
     return p
 
 
@@ -307,11 +304,12 @@ def run_write(spark: SparkSession, args: argparse.Namespace) -> int:
     cfg = _cfg_from_args(args)
     require_identifiers(args.table, *args.columns)
     from cqlcopy_spark.progress import ProgressReporter
-    from cqlcopy_spark.sinks.csv_sink import repartition_for_workers
 
     loaded, spool = _load_write_input(spark, args, cfg)
     try:
-        df = repartition_for_workers(loaded, cfg)
+        # --num-processes workers ≡ partitions; round-robin keeps them
+        # size-balanced like the reference's shared channel (write.go:122)
+        df = loaded.repartition(cfg.num_workers)
         # Progress to stderr (the reference's logger also writes there),
         # keeping stdout clean for data.
         with ProgressReporter(
@@ -347,7 +345,7 @@ def run_read(spark: SparkSession, args: argparse.Namespace) -> int:
         if not args.path:
             raise ValueError("--path is required for the parquet backend")
         df = spark.read.parquet(args.path).select(*args.columns)
-    if args.offset > -(2 ** 63):
+    if cfg.offset > DEFAULT_CONFIG.offset:
         # resume: re-export only the ring after the last seen token
         # (read.go:100-107); drop the helper column like the reference
         # drops token(pk) from its SELECT list output (read.go:181).
@@ -377,7 +375,7 @@ def run_read(spark: SparkSession, args: argparse.Namespace) -> int:
                     f"--offset resume requires integer partition-key "
                     f"columns; {c!r} is {types[c].simpleString()}"
                 )
-        df = scan_token_range(df, pk_cols, args.offset, cfg).drop("token")
+        df = scan_token_range(df, pk_cols, cfg.offset, cfg).drop("token")
     if args.output == "-":
         _emit_stdout_csv(df, cfg, sys.stdout)
     else:

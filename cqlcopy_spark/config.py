@@ -6,8 +6,11 @@ the reference (SURVEY.md §2A quirks) are noted inline:
 
 - floats ARE supported (reference sends them as strings, README.md:11),
 - bool literals compare case-insensitively (README.md:18 documents this
-  but write.go:210-213 compared case-sensitively),
-- the insert-error budget actually aborts (write.go:244-248 only logged).
+  but write.go:210-213 compared case-sensitively).
+
+--max-insert-errors has no field: a batch that exhausts --max-attempts
+fails the job (sinks/batched_sink.py), so there is no error count to
+budget (write.go:244-248 only logged it).
 """
 
 from __future__ import annotations
@@ -100,7 +103,6 @@ class CopyConfig:
     max_attempts: int = 5                # --max-attempts (0 = infinite)
     backoff_s: float = 1.0               # --backoff
     max_parse_errors: int = -1           # --max-parse-errors (-1 = unlimited)
-    max_insert_errors: int = -1          # --max-insert-errors (-1 = unlimited)
     report_freq_s: float = 0.25          # --report-frequency (floor 0.1)
     # read path (read.go:25-32)
     page_size: int = 128                 # --page-size

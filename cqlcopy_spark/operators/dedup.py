@@ -1214,29 +1214,14 @@ def _streamed_minhash_state(spark: SparkSession, sf_dir: str) -> str:
     """Fresh temp state dir after the three doc_id-sliced minhash
     micro-batches (batches 0-2) — factored so the takedown/vacuum ops
     drive the IDENTICAL streamed lifecycle as the incremental op."""
-    import atexit
-    import shutil
-    import tempfile
-
+    from cqlcopy_spark.catalog import id_thirds, session_tempdir
     from cqlcopy_spark.streaming.sinks import minhash_apply_batch
 
-    from cqlcopy_spark.catalog import parquet_col_max
-
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
-    # empty corpus: max() is NULL — slice at 0 so all three batches are
-    # empty and the result is the empty pair relation, like the oracle.
-    # Footer-stats max first (exact, no Spark job — guide §6).
-    mx = parquet_col_max(sf_dir, "documents", "doc_id")
-    if mx is None:
-        mx = d.agg(F.max("doc_id")).first()[0] or 0
-    state = tempfile.mkdtemp(prefix="minhash_stream_state_")
-    atexit.register(shutil.rmtree, state, ignore_errors=True)
-    cuts = (mx // 3, 2 * (mx // 3))
-    slices = (
-        d.filter(col("doc_id") <= cuts[0]),
-        d.filter((col("doc_id") > cuts[0]) & (col("doc_id") <= cuts[1])),
-        d.filter(col("doc_id") > cuts[1]),
-    )
+    # an empty corpus gives three empty batches and the empty pair
+    # relation, like the oracle
+    slices, _ = id_thirds(d, sf_dir, "documents", "doc_id")
+    state = session_tempdir("minhash_stream_state_")
     for batch_id, batch in enumerate(slices):
         minhash_apply_batch(batch, batch_id, state)
     return state

@@ -541,17 +541,18 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Queries are tiny by contract (_N_QUERIES): collect them straight from
     # the source (a JVM-only filter) and probe driver-side — going through
     # `assigned` would force a full corpus pass just to pluck 8 rows.
-    qs = _collect_queries(e)
-    queries = spark.createDataFrame(
-        [(q, x.tolist(), n) for q, x, n in qs],
-        "q_id long, q_emb array<double>, q_nrm double",
-    )
+    # One driver-side row per (query, probed cell): a single broadcast
+    # join on cell, with no run-time join choice left to AQE.
     probes = spark.createDataFrame(
-        [(q, c) for q, x, _ in qs for c in _probe_cells(centroids, x)],
-        "q_id long, cell int",
+        [
+            (q, c, x.tolist(), n)
+            for q, x, n in _collect_queries(e)
+            for c in _probe_cells(centroids, x)
+        ],
+        "q_id long, cell int, q_emb array<double>, q_nrm double",
     )
 
-    cands = assigned.join(broadcast(probes.join(queries, "q_id")), "cell").filter(
+    cands = assigned.join(broadcast(probes), "cell").filter(
         col("vec_id") != col("q_id")
     )
     sims = cands.select(

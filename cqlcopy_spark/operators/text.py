@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 from pyspark.sql.window import Window
 
-from cqlcopy_spark.catalog import table
+from cqlcopy_spark.catalog import id_thirds, session_tempdir, table
 from cqlcopy_spark.functions.portable import (
     davg,
     portable_token,
@@ -3163,6 +3163,9 @@ def stream_curation_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pack_from_toks(read_curation_survivors(spark, state), _PACK_BUDGET)
 
 
+_CURATION_STATE_PREFIX = "curation_stream_state_"
+
+
 def _streamed_curation_state(
     spark: SparkSession, sf_dir: str, decontam: bool = False
 ) -> str:
@@ -3178,42 +3181,12 @@ def _streamed_curation_state(
     )
 
     d = table(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
-    mx = _max_doc_id(sf_dir, d)
-    state = _fresh_curation_state_dir()
+    slices, _ = id_thirds(d, sf_dir, "documents", "doc_id")
+    state = session_tempdir(_CURATION_STATE_PREFIX)
     if decontam:
         decontamination_index_write(_bench_split(d)[0], state)
-    cuts = (mx // 3, 2 * (mx // 3))
-    slices = (
-        d.filter(col("doc_id") <= cuts[0]),
-        d.filter((col("doc_id") > cuts[0]) & (col("doc_id") <= cuts[1])),
-        d.filter(col("doc_id") > cuts[1]),
-    )
     for batch_id, batch in enumerate(slices):
         curation_apply_batch(batch, batch_id, state)
-    return state
-
-
-def _max_doc_id(sf_dir: str, d: DataFrame) -> int:
-    """Slice-bound MAX(doc_id) from the parquet footer statistics —
-    exact and Spark-job-free (guide §6); falls back to the aggregate
-    job only when a row group lacks stats."""
-    from cqlcopy_spark.catalog import parquet_col_max
-
-    mx = parquet_col_max(sf_dir, "documents", "doc_id")
-    if mx is None:
-        mx = d.agg(F.max("doc_id")).first()[0] or 0
-    return mx
-
-
-def _fresh_curation_state_dir() -> str:
-    """Session-lifetime temp state dir for a streamed-curation
-    lifecycle op (removed at interpreter exit)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    state = tempfile.mkdtemp(prefix="curation_stream_state_")
-    atexit.register(shutil.rmtree, state, ignore_errors=True)
     return state
 
 
@@ -3477,15 +3450,10 @@ def stream_curation_epoch_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = table(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
-    mx = _max_doc_id(sf_dir, d)
-    cuts = (mx // 3, 2 * (mx // 3))
-    state = _fresh_curation_state_dir()
-    curation_apply_batch(d.filter(col("doc_id") <= cuts[0]), 0, state)
-    curation_apply_batch(
-        d.filter((col("doc_id") > cuts[0]) & (col("doc_id") <= cuts[1])),
-        1,
-        state,
-    )
+    slices, cuts = id_thirds(d, sf_dir, "documents", "doc_id")
+    state = session_tempdir(_CURATION_STATE_PREFIX)
+    curation_apply_batch(slices[0], 0, state)
+    curation_apply_batch(slices[1], 1, state)
     doomed = d.select("doc_id").filter(
         ((col("doc_id") % _TAKEDOWN_MOD) == _TAKEDOWN_RESIDUE)
         & (col("doc_id") <= cuts[1])
@@ -3499,7 +3467,7 @@ def stream_curation_epoch_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     # the resumed checkpoint restarts numbering at 0: without the epoch
     # this exact call is the state_log floor-guard error
-    curation_apply_batch(d.filter(col("doc_id") > cuts[1]), 0, state)
+    curation_apply_batch(slices[2], 0, state)
     return _pack_from_toks(read_curation_survivors(spark, state), _PACK_BUDGET)
 
 
@@ -3530,11 +3498,11 @@ def stream_curation_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     state = _streamed_curation_state(spark, sf_dir)
-    branch = _fresh_curation_state_dir()
+    branch = session_tempdir(_CURATION_STATE_PREFIX)
     curation_state_clone(spark, state, branch, as_of=_ASOF_BATCH)
     d = table(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
-    mx = _max_doc_id(sf_dir, d)
-    curation_apply_batch(d.filter(col("doc_id") > 2 * (mx // 3)), 0, branch)
+    (_, _, third), _ = id_thirds(d, sf_dir, "documents", "doc_id")
+    curation_apply_batch(third, 0, branch)
     return _pack_from_toks(read_curation_survivors(spark, branch), _PACK_BUDGET)
 
 

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
-from cqlcopy_spark.catalog import table
+from cqlcopy_spark.catalog import id_thirds, session_tempdir, table
 from cqlcopy_spark.functions.skew import keep_min_by
 from cqlcopy_spark.plans.registry import register
 from cqlcopy_spark.streaming import state_log
@@ -281,17 +281,7 @@ def _search_codes_frame(
     return _adc_search(spark, codes, books, queries, coarse)
 
 
-def _state_tempdir() -> str:
-    """Per-call state dir kept alive until interpreter exit — the
-    returned frames read it lazily (stream_minhash_incremental's
-    lifecycle)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    state = tempfile.mkdtemp(prefix="vector_index_state_")
-    atexit.register(shutil.rmtree, state, ignore_errors=True)
-    return state
+_STATE_PREFIX = "vector_index_state_"
 
 
 def _sliced_corpus(spark: SparkSession, sf_dir: str):
@@ -300,22 +290,10 @@ def _sliced_corpus(spark: SparkSession, sf_dir: str):
     deterministic functions of the fixture."""
     from cqlcopy_spark.operators.similarity import _emb_double
 
-    from cqlcopy_spark.catalog import parquet_col_max
-
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", _emb_double("embedding").alias("emb")
     )
-    # footer-stats max (exact, no Spark job — guide §6); Spark fallback
-    # only when a row group lacks statistics
-    mx = parquet_col_max(sf_dir, "embeddings", "vec_id")
-    if mx is None:
-        mx = e.agg(F.max("vec_id")).first()[0] or 0
-    cuts = (mx // 3, 2 * (mx // 3))
-    return e, (
-        e.filter(col("vec_id") <= cuts[0]),
-        e.filter((col("vec_id") > cuts[0]) & (col("vec_id") <= cuts[1])),
-        e.filter(col("vec_id") > cuts[1]),
-    )
+    return e, id_thirds(e, sf_dir, "embeddings", "vec_id")[0]
 
 
 def _incremental_index(spark: SparkSession, sf_dir: str):
@@ -325,7 +303,7 @@ def _incremental_index(spark: SparkSession, sf_dir: str):
     runs the eager max(vec_id) slicing job ONCE (r13 review: calling
     _sliced_corpus again in the op re-scanned the corpus for nothing)."""
     e, (base, b1, b2) = _sliced_corpus(spark, sf_dir)
-    state = _state_tempdir()
+    state = session_tempdir(_STATE_PREFIX)
     vector_index_build(base, state)
     vector_index_append(b1, 1, state)
     vector_index_append(b2, 2, state)
@@ -474,7 +452,7 @@ def _lifecycle_state_and_final(spark: SparkSession, sf_dir: str):
     plus the exact frame its last append delivered — the branch twin
     re-delivers it to a fork, and the replay test rebuilds it."""
     e, (base, b1, b2) = _sliced_corpus(spark, sf_dir)
-    state = _state_tempdir()
+    state = session_tempdir(_STATE_PREFIX)
     vector_index_build(base, state)
     vector_index_append(b1, 1, state)
     doomed = (
@@ -636,7 +614,7 @@ def similarity_index_branch_verify(spark: SparkSession, sf_dir: str) -> DataFram
     tests/test_vector_index_branch.py; this twin is the driver-checked
     (empty-relation hash) surface."""
     e, trunk, final = _lifecycle_state_and_final(spark, sf_dir)
-    branch = _state_tempdir()
+    branch = session_tempdir(_STATE_PREFIX)
     vector_index_clone(spark, trunk, branch, as_of=3)
     vector_index_append(final, 0, branch)  # fresh checkpoint numbering
     return _branch_violations(spark, trunk, branch)

@@ -1,12 +1,16 @@
 """Custom PySpark DataSource WRITER reproducing the reference's write
-path (SURVEY.md §2A ops 10-12, 14, 20) with two-phase commit:
+path (SURVEY.md §2A ops 10-12, 20) with two-phase commit — the engine's
+one implementation of batched, retried writes:
 
 - write.go:37-38 — batches flush at `chunk_size` rows OR `max_batch_kb`
   (Σ field bytes), whichever trips first → same dual threshold here.
 - write.go:97-101 — the reference NEVER flushes a worker's final partial
   batch (its `rows` channel closes without a drain; SURVEY.md §2A
   quirks); this writer flushes it, which is the behavior users expect.
-- write.go:253-265 — per-batch retry with fixed backoff → retry_call.
+- write.go:253-265 — per-batch retry with fixed backoff → retry_call. A
+  batch that exhausts its attempts fails the task, and so the job; the
+  reference's --max-insert-errors budget (write.go:242-248, logged but
+  never enforced there) has nothing left to count.
 
 Two-phase commit is the part Spark adds over the reference: each task
 writes its batches to a UUID-staged file and returns a commit message;
@@ -29,6 +33,7 @@ from __future__ import annotations
 
 import datetime
 import os
+import time
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -39,8 +44,28 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from cqlcopy_spark.config import DEFAULT_CONFIG
-from cqlcopy_spark.sinks.retry import retry_call
+from cqlcopy_spark.config import DEFAULT_CONFIG, go_layout_to_strftime
+
+
+def retry_call(
+    fn: Callable[[], None],
+    max_attempts: int = DEFAULT_CONFIG.max_attempts,
+    backoff_s: float = DEFAULT_CONFIG.backoff_s,
+    sleep: Callable[[float], None] = time.sleep,
+) -> bool:
+    """Run `fn` up to max_attempts times (<= 0 = infinite, matching the
+    config family's -1/0 = unlimited convention; write.go:41), fixed
+    backoff between attempts (write.go:253-265). True on success."""
+    attempt = 0
+    while True:
+        attempt += 1
+        try:
+            fn()
+            return True
+        except Exception:
+            if max_attempts > 0 and attempt >= max_attempts:
+                return False
+            sleep(backoff_s)
 
 
 @dataclass
@@ -77,10 +102,9 @@ class BatchedCsvWriter(DataSourceWriter):
         # timestamp layout DERIVED from the COPY surface's --time-format
         # (Go layout → strftime), so this sink renders the same wire form
         # cfg.time_format re-parses
-        from cqlcopy_spark.config import go_layout_to_strftime
-
-        go_fmt = options.get("time_format_go", DEFAULT_CONFIG.time_format_go)
-        self.ts_format = options.get("ts_format", go_layout_to_strftime(go_fmt))
+        self.ts_format = go_layout_to_strftime(
+            options.get("time_format_go", DEFAULT_CONFIG.time_format_go)
+        )
 
     def _field_renderer(self, dtype) -> Callable[[object], str]:
         """One CSV cell in csv_sink._render_field's convention, chosen once
@@ -168,9 +192,8 @@ class BatchedCsvWriter(DataSourceWriter):
             line = ",".join([r(v) for r, v in zip(render, row)]) + "\n"
             batch.append(line)
             # UTF-8 octets of the QUOTED line. The reference counts the
-            # UNQUOTED field bytes (write.go:238-240, the formulation
-            # csv_sink.with_batch_id mirrors with octet_length); this
-            # sink counts what it actually stages — strictly ≥ the
+            # UNQUOTED field bytes (write.go:238-240); this sink counts
+            # what it actually stages — strictly ≥ the
             # reference's measure, so batches can only flush EARLIER,
             # never overshoot the byte budget. The r03-flagged bug was
             # counting Python CODEPOINTS, which undercounts multi-byte
@@ -237,34 +260,7 @@ class BatchedCsvSinkDataSource(DataSource):
 
 
 def register_batched_sink(spark) -> None:
-    """Make `df.write.format("cql_batched")` work for writes from `spark`.
+    """Make `df.write.format("cql_batched")` work for writes from `spark`."""
+    from cqlcopy_spark.catalog import register_data_source
 
-    Python data sources live in each session's own registry, and Spark
-    resolves a format name against the thread's ACTIVE session but plans
-    the write against the writing session; the public
-    `spark.dataSource.register` also refuses a name the active session
-    already holds. A write from a second session (`spark.newSession()`)
-    therefore needs the sink in both registries, and neither a
-    session-conf flag nor a per-SparkContext one can tell that — so the
-    registries themselves are asked, and the sink goes straight into
-    each one that lacks it."""
-    from pyspark.sql.udf import _wrap_function
-
-    from cqlcopy_spark.catalog import _ship_package
-
-    # the writer class is cloudpickled BY REFERENCE — executors must be
-    # able to import cqlcopy_spark (CLAUDE.md UDF-shipping rule)
-    _ship_package(spark)
-    jvm = spark._jvm
-    sessions = [spark._jsparkSession]
-    active = jvm.org.apache.spark.sql.SparkSession.getActiveSession()
-    if active.isDefined():
-        sessions.append(active.get())
-    name = BatchedCsvSinkDataSource.name()
-    for session in sessions:
-        registry = session.sessionState().dataSourceManager()
-        if not registry.dataSourceExists(name):
-            source = jvm.org.apache.spark.sql.execution.datasources.v2.python.UserDefinedPythonDataSource(
-                _wrap_function(spark.sparkContext, BatchedCsvSinkDataSource)
-            )
-            registry.registerDataSource(name, source)
+    register_data_source(spark, BatchedCsvSinkDataSource)

@@ -1,4 +1,4 @@
-"""CSV sink (SURVEY.md §2A ops 20-21) + batched write semantics (ops 10-12).
+"""CSV sink (SURVEY.md §2A ops 20-21).
 
 The reference exports with values quoted iff the column's native type is
 string (read.go:181-190) — a type-preserving convention that lets its own
@@ -16,15 +16,6 @@ quote-preserving reader (parse_csv_dynamic) round-trips the distinction;
 Spark's schema-first CSV reader inherently conflates quoted and bare
 null literals (univocity strips quotes before the nullValue compare) —
 use the dynamic path when that fidelity matters.
-
-`write_batched` reproduces the reference's unlogged-batch grouping
-(write.go:225-251) as data: a per-partition batch index advancing every
-`chunk_size` rows OR `max_batch_kb` kilobytes, whichever first — the same
-dual threshold as write.go:241. Partitions play the role of the
-reference's workers (write.go:130-132): batch ids are (partition, seq)
-pairs, no global coordination, so it scales without a total order.
-Unlike the reference, the final partial batch is always flushed —
-the reference can drop it (SURVEY.md §2A quirks, write.go:67,155-159).
 """
 
 from __future__ import annotations
@@ -100,46 +91,3 @@ def write_csv(df: DataFrame, path: str, cfg: CopyConfig = DEFAULT_CONFIG) -> Non
         .csv(path)
     )
 
-
-def with_batch_id(df: DataFrame, cfg: CopyConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Ops 10-11 as a deterministic-per-partition transformation: assign
-    (batch_part, batch_seq) using the dual row/byte thresholds.
-
-    Implementation: a window over the partition id ordered by the
-    intra-partition position. The byte size of a row is the sum of its
-    CSV field lengths (write.go:238-240 measures exactly that)."""
-    from pyspark.sql.window import Window
-
-    sized = df.withColumn(
-        "_row_bytes",
-        # octet_length: the reference measures BYTES (Go len() on string,
-        # write.go:238-240); F.length counts codepoints and undercounts
-        # multi-byte UTF-8 up to 4x
-        sum(F.coalesce(F.octet_length(col(f.name).cast("string")), F.lit(0)) for f in df.schema.fields),
-    ).withColumn("_pid", F.spark_partition_id()).withColumn("_pos", F.monotonically_increasing_id())
-    w = Window.partitionBy("_pid").orderBy("_pos")
-    max_bytes = cfg.max_batch_kb * 1000  # write.go:241 divides by 1000, not 1024
-    sized = sized.withColumn("_rn", F.row_number().over(w) - 1).withColumn(
-        "_cum_bytes", F.sum("_row_bytes").over(w)
-    )
-    # A batch closes when either threshold trips; approximate the running
-    # reset with independent row/byte epochs and take the max epoch — both
-    # are monotone per partition so batch ids stay contiguous.
-    return (
-        sized.withColumn(
-            "batch_seq",
-            F.greatest(
-                (col("_rn") / cfg.chunk_size).cast("long"),
-                (col("_cum_bytes") / max_bytes).cast("long"),
-            ),
-        )
-        .withColumnRenamed("_pid", "batch_part")
-        .drop("_row_bytes", "_pos", "_rn", "_cum_bytes")
-    )
-
-
-def repartition_for_workers(df: DataFrame, cfg: CopyConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Op 11: the reference's --num-processes worker fan-out ≡ partition
-    count. Round-robin keeps batches size-balanced like the shared
-    channel does (write.go:122)."""
-    return df.repartition(cfg.num_workers)

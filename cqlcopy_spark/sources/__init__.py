@@ -1,1 +1,3 @@
-"""placeholder — filled in during round 1."""
+"""Sources of the COPY surface: the CSV readers (`csv_source`), the
+Cassandra connector options (`cassandra`) and the `cql_paged` token-range
+reader (`paged_source`)."""

@@ -183,13 +183,7 @@ class PagedTokenRangeDataSource(DataSource):
 
 
 def register_paged_source(spark) -> None:
-    """Idempotent per-session registration; ships the package so
-    executors can unpickle the reader class (CLAUDE.md UDF rule)."""
-    from cqlcopy_spark.catalog import _ship_package
+    """Make `spark.read.format("cql_paged")` work for reads from `spark`."""
+    from cqlcopy_spark.catalog import register_data_source
 
-    key = "cqlcopy_spark._paged_source_registered"
-    if spark.conf.get(key, None) == "1":
-        return
-    _ship_package(spark)
-    spark.dataSource.register(PagedTokenRangeDataSource)
-    spark.conf.set(key, "1")
+    register_data_source(spark, PagedTokenRangeDataSource)

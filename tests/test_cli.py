@@ -400,3 +400,43 @@ def test_cli_cassandra_unqualified_table_needs_keyspace(
     with pytest.raises(ValueError, match="--keyspace is required"):
         main(argv + ["--backend", "cassandra"], spark=spark)
     assert called == []
+
+
+@pytest.mark.parametrize("command", ["read", "write"])
+def test_cli_defaults_come_from_copy_config(command):
+    """Minimal argv parses to DEFAULT_CONFIG, and within each subcommand
+    every CopyConfig field is set by exactly one flag (hidden ones
+    included), so each default has one home: the CopyConfig field."""
+    import argparse
+    import dataclasses
+
+    from cqlcopy_spark.cli import _cfg_from_args, build_parser
+    from cqlcopy_spark.config import DEFAULT_CONFIG, CopyConfig
+
+    parser = build_parser()
+    base = [command, "t", "a", "--input" if command == "write" else "--output", "x"]
+    assert _cfg_from_args(parser.parse_args(base)) == DEFAULT_CONFIG
+
+    (subparsers,) = [
+        a for a in parser._actions if isinstance(a, argparse._SubParsersAction)
+    ]
+    fields = [f.name for f in dataclasses.fields(CopyConfig)]
+    set_by = {f: [] for f in fields}
+    not_config = {"help", "connect", "keyspace", "backend", "path", "input",
+                  "output", "types", "dynamic"}
+    for action in subparsers.choices[command]._actions:
+        if not action.option_strings or action.dest in not_config:
+            continue
+        flag, d = action.option_strings[0], action.default
+        if isinstance(d, bool):
+            argv = ["--no-" + flag[2:]]
+        elif isinstance(d, (int, float)):
+            argv = [flag, str(d + 1)]
+        else:
+            argv = [flag, d[::-1]]
+        cfg = _cfg_from_args(parser.parse_args(base + argv))
+        changed = [f for f in fields if getattr(cfg, f) != getattr(DEFAULT_CONFIG, f)]
+        assert len(changed) <= 1, (flag, changed)
+        for f in changed:
+            set_by[f].append(flag)
+    assert all(len(flags) == 1 for flags in set_by.values()), set_by

@@ -154,25 +154,44 @@ def test_batched_sink_timestamp_roundtrip(spark, tmp_path):
     assert got == want
 
 
-def test_batch_byte_threshold_counts_utf8_octets(tmp_path):
-    """The byte threshold must measure UTF-8 octets of the staged
-    (quoted) line — codepoint-counting unquoted fields undercounts
-    multi-byte text ~2× and drifts from the reference's byte budget
+@pytest.mark.parametrize(
+    "rows, chunk_size, n_batches",
+    [
+        # 100 codepoints, 200 UTF-8 bytes per row (+2 quotes, +1
+        # newline): octet counting trips the 1000-byte budget at 5 rows
+        # → 12 rows = 3 batches; codepoint counting would trip at 10 → 2
+        pytest.param(["é" * 100] * 12, 1000, 3, id="utf8-octets"),
+        # 10 + 10 + the final partial batch of 5, which is flushed (the
+        # reference drops it, write.go:97-101)
+        pytest.param([str(i) for i in range(25)], 10, 3, id="final-partial-batch"),
+        # 13-byte lines: the row threshold closes every batch long
+        # before the byte threshold would
+        pytest.param(["x" * 10] * 10, 3, 4, id="rows-before-bytes"),
+    ],
+)
+def test_batch_byte_threshold_counts_utf8_octets(tmp_path, rows, chunk_size, n_batches):
+    """A batch closes at `chunk_size` rows or `max_batch_kb`·1000 bytes,
+    whichever trips first, and the final partial batch is staged too.
+    The byte threshold measures UTF-8 octets of the staged (quoted)
+    line — codepoint-counting unquoted fields undercounts multi-byte
+    text ~2× and drifts from the reference's byte budget
     (write.go:238-240; r03 ADVICE)."""
     from pyspark.sql import types as T
 
     from cqlcopy_spark.sinks.batched_sink import BatchedCsvWriter
 
     w = BatchedCsvWriter(
-        {"path": str(tmp_path / "sink"), "chunk_size": "1000", "max_batch_kb": "1"},
+        {
+            "path": str(tmp_path / "sink"),
+            "chunk_size": str(chunk_size),
+            "max_batch_kb": "1",
+        },
         T.StructType([T.StructField("s", T.StringType())]),
     )
-    # 100 codepoints, 200 UTF-8 bytes per row (+1 newline): octet
-    # counting trips the 1000-byte budget at 5 rows → 12 rows = 3
-    # batches; codepoint counting would trip at 10 → 2 batches
-    msg = w.write(("é" * 100,) for _ in range(12))
-    assert msg.n_rows == 12
-    assert msg.n_batches == 3
+    msg = w.write((r,) for r in rows)
+    assert (msg.n_rows, msg.n_batches) == (len(rows), n_batches)
+    with open(msg.staged_path, encoding="utf-8") as f:
+        assert f.read().splitlines() == [f'"{r}"' for r in rows]
 
 
 def _batched_lines(out: str) -> list[str]:
@@ -231,3 +250,26 @@ def test_batched_sink_registers_and_writes_from_second_session(spark, tmp_path):
         1
     ).write.format("cql_batched").option("path", out).mode("append").save()
     assert _batched_lines(out) == ["1,true", "2,NULL"]
+
+
+def test_paged_source_registers_and_reads_from_second_session(spark, tmp_path):
+    """cql_paged registers like cql_batched: registering in a second
+    session of the same SparkContext must neither fail
+    (DATA_SOURCE_ALREADY_EXISTS) nor leave its reads unresolvable."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cqlcopy_spark.sources.paged_source import register_paged_source
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"id": pa.array([1, 2, 3], pa.int64())}), path)
+    register_paged_source(spark)
+    second = spark.newSession()
+    register_paged_source(second)
+    got = (
+        second.read.format("cql_paged")
+        .option("path", path)
+        .option("key_col", "id")
+        .load()
+    )
+    assert sorted(r["id"] for r in got.collect()) == [1, 2, 3]

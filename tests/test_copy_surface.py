@@ -1,6 +1,6 @@
 """Unit tests for the COPY surface: reference typing precedence
 (write.go:199-223), RFC-4180 quote-preserving parse, error budgets,
-batching, retry, identifiers (FIXTURES.md edge-case checklist)."""
+retry, identifiers (FIXTURES.md edge-case checklist)."""
 
 from __future__ import annotations
 
@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import types as T
 
 from cqlcopy_spark.config import CopyConfig, check_identifier, go_layout_to_java
-from cqlcopy_spark.sinks.retry import retry_call, write_with_retries
+from cqlcopy_spark.sinks.batched_sink import retry_call
 from cqlcopy_spark.sources.csv_source import (
     _split_rfc4180,
     cast_dynamic,
@@ -150,7 +150,7 @@ def test_parse_budget_enforced(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Retry + insert budget (ops 12, 14)
+# Retry (op 12)
 # ---------------------------------------------------------------------------
 
 def test_retry_call_succeeds_after_failures():
@@ -170,21 +170,6 @@ def test_retry_call_exhausts():
         lambda: (_ for _ in ()).throw(RuntimeError()), max_attempts=2, backoff_s=0,
         sleep=lambda s: None,
     )
-
-
-def test_write_with_retries_flushes_final_partial_batch(spark, tmp_path):
-    # 25 rows, chunk 10 → batches of 10/10/5 per partitioning; the trailing
-    # 5-row batch MUST be written (the reference drops it, SURVEY §2A quirks).
-    df = spark.range(25).repartition(1)
-    out = tmp_path / "sink.txt"
-
-    def write_batch(rows):
-        with open(out, "a") as fh:
-            fh.write(f"{len(rows)}\n")
-
-    failed = write_with_retries(df, write_batch, CopyConfig(chunk_size=10))
-    sizes = sorted(int(x) for x in out.read_text().split())
-    assert failed == 0 and sum(sizes) == 25 and sizes == [5, 10, 10]
 
 
 # ---------------------------------------------------------------------------
@@ -316,46 +301,6 @@ def test_null_literal_as_string_data_round_trips(spark, tmp_path):
         for r in cast_dynamic(raw, schema, DEFAULT_CONFIG).collect()
     }
     assert back == {1: "NULL", 2: None, 3: "plain"}
-
-
-def test_with_batch_id_row_and_byte_epochs(spark):
-    """Ops 10-11 batching arithmetic, previously untested: the row epoch
-    advances every chunk_size rows, the byte epoch every max_batch_kb·
-    1000 octets (write.go:241 divides by 1000), and batch_seq is the max
-    of the two monotone epochs."""
-    from dataclasses import replace
-
-    from cqlcopy_spark.config import DEFAULT_CONFIG
-    from cqlcopy_spark.sinks.csv_sink import with_batch_id
-
-    cfg = replace(DEFAULT_CONFIG, chunk_size=3, max_batch_kb=1)  # 1000 bytes
-    # single partition for a deterministic intra-partition order
-    df = spark.createDataFrame(
-        [(i, "x" * 100) for i in range(10)], "i long, payload string"
-    ).coalesce(1)
-    rows = (
-        with_batch_id(df, cfg)
-        .select("i", "batch_part", "batch_seq")
-        .orderBy("i")
-        .collect()
-    )
-    assert all(r["batch_part"] == rows[0]["batch_part"] for r in rows)
-    seqs = [r["batch_seq"] for r in rows]
-    # row bytes ≈ 100 + len(str(i)) ≈ 101-103 → byte epoch flips near row
-    # 9; chunk_size=3 flips at rows 3/6/9 — row epoch dominates until the
-    # end, and the sequence must be monotone, start at 0, and advance
-    assert seqs[0] == 0
-    assert seqs == sorted(seqs)
-    assert seqs[3] >= 1 and seqs[6] >= 2 and seqs[9] >= 3
-    # byte epoch alone: huge rows trip the byte threshold before chunk_size
-    big = spark.createDataFrame(
-        [(i, "y" * 600) for i in range(4)], "i long, payload string"
-    ).coalesce(1)
-    bseqs = [
-        r["batch_seq"]
-        for r in with_batch_id(big, cfg).select("i", "batch_seq").orderBy("i").collect()
-    ]
-    assert bseqs[0] == 0 and bseqs[-1] >= 2  # ~600B rows: epoch every ~2 rows
 
 
 def test_write_csv_honours_bool_style(spark, tmp_path):

@@ -29,7 +29,7 @@ def trunk(spark):
 def test_branch_continuation_reproduces_trunk(spark, trunk):
     """Fork at 2, deliver the third slice to the branch as a fresh
     checkpoint's batch 0 → the branch's live view equals the trunk's."""
-    from cqlcopy_spark.operators.text import _fresh_curation_state_dir
+    from cqlcopy_spark.catalog import session_tempdir
     from cqlcopy_spark.streaming.sinks import (
         curation_apply_batch,
         curation_state_clone,
@@ -38,7 +38,7 @@ def test_branch_continuation_reproduces_trunk(spark, trunk):
 
     d, state = trunk
     mx = d.agg(F.max("doc_id")).first()[0] or 0
-    branch = _fresh_curation_state_dir()
+    branch = session_tempdir("curation_stream_state_")
     curation_state_clone(spark, state, branch, as_of=2)
     curation_apply_batch(d.filter(F.col("doc_id") > 2 * (mx // 3)), 0, branch)
     b = {tuple(r) for r in read_curation_survivors(spark, branch).collect()}
@@ -52,7 +52,7 @@ def test_branch_continuation_reproduces_trunk(spark, trunk):
 def test_branch_divergence_isolation(spark, trunk):
     """Branch-only ingest and takedowns never leak into the trunk, and
     trunk state after the fork never leaks into the branch."""
-    from cqlcopy_spark.operators.text import _fresh_curation_state_dir
+    from cqlcopy_spark.catalog import session_tempdir
     from cqlcopy_spark.streaming.sinks import (
         curation_apply_batch,
         curation_state_clone,
@@ -62,7 +62,7 @@ def test_branch_divergence_isolation(spark, trunk):
 
     d, state = trunk
     trunk_before = _ids(read_curation_survivors(spark, state))
-    branch = _fresh_curation_state_dir()
+    branch = session_tempdir("curation_stream_state_")
     curation_state_clone(spark, state, branch, as_of=2)
     mx = d.agg(F.max("doc_id")).first()[0] or 0
     # divergent branch content: salted third slice under fresh ids
@@ -92,7 +92,7 @@ def test_branch_from_vacuumed_trunk_serves_historical_truth(spark, trunk):
     """Forking at a HISTORICAL point after the trunk was taken-down and
     vacuumed still reproduces the pre-takedown as-of view — the branch
     reads the retained raw deltas, not the vacuum version."""
-    from cqlcopy_spark.operators.text import _fresh_curation_state_dir
+    from cqlcopy_spark.catalog import session_tempdir
     from cqlcopy_spark.streaming.sinks import (
         curation_state_clone,
         curation_takedown_batch,
@@ -110,7 +110,7 @@ def test_branch_from_vacuumed_trunk_serves_historical_truth(spark, trunk):
         spark.createDataFrame([(i,) for i in doomed], "doc_id long"), 3, state
     )
     assert curation_vacuum(spark, state) > 0
-    branch = _fresh_curation_state_dir()
+    branch = session_tempdir("curation_stream_state_")
     curation_state_clone(spark, state, branch, as_of=2)
     got = {tuple(r) for r in read_curation_survivors(spark, branch).collect()}
     assert got == want

@@ -13,6 +13,7 @@ tests catch it before it becomes a 100× slowdown at scale.
 from __future__ import annotations
 
 import re
+from pathlib import Path
 
 import pytest
 
@@ -20,6 +21,8 @@ from cqlcopy_spark.plans.registry import all_queries
 from tests.conftest import SF_MEDIUM, SF_SMALL
 
 QUERIES = all_queries()
+#: the checkout's own driver entry module, whichever directory holds it
+_ENTRY = str(Path(__file__).resolve().parents[1] / "__spark_entry__.py")
 
 
 def plan_of(df) -> str:
@@ -741,6 +744,16 @@ def test_pack_utilization_single_shuffle(spark):
     assert "Join" not in p, p
 
 
+def test_ann_ivf_probes_with_one_join(spark):
+    """similarity_ann_ivf joins the corpus to ONE driver-side table of
+    (query, probed cell, query vector) rows on cell. A separate query
+    table joined to the probe table on q_id is a second join whose
+    build side AQE picks at run time, so the plan varied between runs."""
+    df = QUERIES["similarity_ann_ivf"](spark, SF_SMALL)
+    p = df._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"^\W*Join ", p, re.M)) == 1, p
+
+
 def test_driver_query_rotation_orders_unchecked_first(tmp_path, monkeypatch):
     """The grading driver correctness-checks only the first 50 queries()
     entries per round. queries() must rank previously-FAILED names
@@ -749,9 +762,7 @@ def test_driver_query_rotation_orders_unchecked_first(tmp_path, monkeypatch):
     import importlib.util
     import json
 
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
-    )
+    spec = importlib.util.spec_from_file_location("__spark_entry__", _ENTRY)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
 
@@ -779,9 +790,7 @@ def test_driver_query_rotation_rotates_greens_by_freshness(tmp_path, monkeypatch
     import importlib.util
     import json
 
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
-    )
+    spec = importlib.util.spec_from_file_location("__spark_entry__", _ENTRY)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
 

@@ -32,9 +32,9 @@ def forked(spark):
 
 
 def _state_tempdir():
-    from cqlcopy_spark.operators.vector_index import _state_tempdir as f
+    from cqlcopy_spark.catalog import session_tempdir
 
-    return f()
+    return session_tempdir("vector_index_state_")
 
 
 def test_branch_view_equals_trunk(spark, forked):
