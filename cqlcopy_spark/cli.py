@@ -26,8 +26,9 @@ the reference's convention: strings quoted, other types bare, read.go:181-190),
 so a directory and stdout carry the same lines. Stdout export
 (`--output -`) is intentionally a single driver-side stream: the
 reference's stdout is exactly as serial. Distributed export goes to a
-directory via executors. The typed write path runs no Python stage:
-progress comes from Spark's status store (`progress.py`).
+directory via executors. No write path runs a Python stage: both
+imports parse in the JVM (`sources/csv_source.py`), and progress comes
+from Spark's status store (`progress.py`).
 """
 
 from __future__ import annotations
@@ -37,7 +38,6 @@ import sys
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-from pyspark.sql.functions import col
 
 from cqlcopy_spark.config import DEFAULT_CONFIG, CopyConfig, require_identifiers
 
@@ -214,67 +214,17 @@ def _unlink_quiet(path: str) -> None:
 def _build_write_df(
     spark: SparkSession, args: argparse.Namespace, cfg: CopyConfig, path: str
 ) -> DataFrame:
-    from cqlcopy_spark.sources.csv_source import (
-        cast_dynamic,
-        csv_read_options,
-        parse_csv_dynamic,
-        read_csv,
-    )
-
-    def _dynamic_with_budget(schema: T.StructType) -> DataFrame:
-        # persist: the budget count AND the downstream consumer both
-        # execute the Python RFC-4180 parse lineage — unpersisted, the
-        # dominant per-line cost runs twice (CLAUDE.md persist rule)
-        raw = parse_csv_dynamic(spark, path, args.columns, cfg).persist()
-        bad = raw.filter(col("_parse_error").isNotNull()).count()
-        if 0 <= cfg.max_parse_errors < bad:
-            raise ValueError(
-                f"parse-error budget exceeded: {bad} > {cfg.max_parse_errors}"
-            )
-        # count-and-SKIP, like the reference (write.go:140-147): rows
-        # inside the budget are logged against it but never inserted
-        # as half-parsed garbage
-        ok = raw.filter(col("_parse_error").isNull())
-        return cast_dynamic(ok, schema, cfg).drop("_parse_error")
+    from cqlcopy_spark.sources.csv_source import infer_csv_schema, read_csv, read_csv_dynamic
 
     if args.types:
         schema = _schema_from_types(args.columns, args.types)
-        if args.dynamic:
-            return _dynamic_with_budget(schema)
-        return read_csv(spark, path, schema, cfg)
-    if args.dynamic:
+        if not args.dynamic:
+            return read_csv(spark, path, schema, cfg)
+    elif args.dynamic:
         raise ValueError("--dynamic requires --types (the target schema)")
-    # Inference path (SURVEY.md §7 notes this is a semantic upgrade over
-    # the reference's per-cell inference): Spark's reader infers the TYPES,
-    # but the rows flow through the RFC-4180 dynamic parser. The old
-    # corrupt-record check here was dead code (r03 ADVICE: inferSchema
-    # never materializes the corrupt column) — and re-reading with the
-    # inferred schema extended by the corrupt field can't fire either,
-    # because full-file inference widens every column to accommodate
-    # whatever PERMISSIVE parsing produced. Arity errors from the dynamic
-    # parser are what a "parse error" means when no schema is declared,
-    # and they give the budget real teeth.
-    opts = dict(csv_read_options(cfg))
-    corrupt_col = opts["columnNameOfCorruptRecord"]
-    inferred = spark.read.options(inferSchema="true", **opts).csv(path).schema
-    data_fields = [f for f in inferred.fields if f.name != corrupt_col]
-    if len(data_fields) != len(args.columns):
-        raise ValueError(
-            f"input has {len(data_fields)} columns, expected {len(args.columns)}"
-        )
-    _castable = (
-        T.StringType, T.BooleanType, T.TimestampType, T.TimestampNTZType,
-        T.DateType, T.LongType, T.IntegerType, T.DoubleType, T.FloatType,
-    )
-    schema = T.StructType(
-        [
-            T.StructField(
-                c, f.dataType if isinstance(f.dataType, _castable) else T.StringType()
-            )
-            for c, f in zip(args.columns, data_fields)
-        ]
-    )
-    return _dynamic_with_budget(schema)
+    else:
+        schema = infer_csv_schema(spark, path, args.columns, cfg)
+    return read_csv_dynamic(spark, path, schema, cfg)
 
 
 def _emit_stdout_csv(df: DataFrame, cfg: CopyConfig, out) -> None:

@@ -182,10 +182,8 @@ def source_paged_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan."""
     import os
 
-    from cqlcopy_spark.catalog import _ship_package
     from cqlcopy_spark.sources.paged_source import register_paged_source
 
-    _ship_package(spark)
     register_paged_source(spark)
     return (
         spark.read.format("cql_paged")

@@ -1,34 +1,34 @@
 """CSV source with the reference's typing semantics (SURVEY.md §2A ops 1-9, 13).
 
-Two paths, mirroring SURVEY.md §7 "hard part 2":
+Two import paths, mirroring SURVEY.md §7 "hard part 2", both in the JVM:
 
 1. **Schema-first (the scale path)** — `read_csv`: `spark.read.csv` with a
    declared schema and option mapping from CopyConfig. Vectorized JVM-side
    parsing, splittable files, pushdown-friendly. This is what a 100 TB load
    uses; it matches reference behavior for homogeneous columns.
 
-2. **Cell-dynamic (the fidelity path)** — `parse_csv_dynamic`: the
+2. **Cell-dynamic (the fidelity path)** — `read_csv_dynamic`: the
    reference types each CELL by inspecting its text and quoting
    (write.go:199-223): quoted→string; false/true literal; unquoted null
    literal; timestamp layout; int64; (engine upgrade) float; else string.
-   Spark's CSV parser discards quote information, so this path reads raw
-   lines (`spark.read.text` — still distributed and splittable) and parses
-   each line with an Arrow-batched pandas UDF that PRESERVES the
-   quoted-flag per field, then resolves each cell against the TARGET
-   column type with `cast_dynamic`'s precedence, exactly as a Cassandra
-   insert would coerce it. Limitation (documented): embedded newlines in
-   quoted fields need the schema-first path with multiLine=true.
+   Spark's CSV parser discards quote information, so `parse_csv_dynamic`
+   reads raw lines (`spark.read.text` — still distributed and splittable)
+   and splits each line with one Spark SQL regex tokenizer that KEEPS the
+   quoted flag per field; `cast_dynamic` then resolves each cell against
+   the TARGET column type, exactly as a Cassandra insert would coerce it.
+   Limitation (documented): embedded newlines in quoted fields need the
+   schema-first path with multiLine=true.
 
-Error budget (op 13): schema-first uses PERMISSIVE mode + corrupt-record
-accounting; the dynamic path counts per-line parse failures the same way
-the reference counts csv.Reader errors (write.go:140-147).
+Error budget (op 13): both paths count malformed rows — schema-first via
+PERMISSIVE mode's corrupt record, cell-dynamic via the tokenizer's
+`_parse_error`, the way the reference counts csv.Reader errors
+(write.go:140-147) — and raise through one check, `_enforce_budget`.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -49,12 +49,37 @@ def csv_read_options(cfg: CopyConfig) -> dict[str, str]:
         "timestampFormat": cfg.time_format,
         "timestampNTZFormat": cfg.time_format_ntz,
         # Always PERMISSIVE: the budget (including 0) is enforced by
-        # enforce_parse_budget with a proper error; FAILFAST would surface
+        # _enforce_budget with a proper error; FAILFAST would surface
         # an opaque task failure instead (write.go:140-147 also keeps
         # reading until the budget trips).
         "mode": "PERMISSIVE",
         "columnNameOfCorruptRecord": CORRUPT_COL,
     }
+
+
+def _enforce_budget(cfg: CopyConfig, count_bad: Callable[[], int]) -> None:
+    """The --max-parse-errors check of both import paths (op 13). The
+    count runs only under a finite budget (-1 = unlimited)."""
+    if cfg.max_parse_errors < 0:
+        return
+    bad = count_bad()
+    if bad > cfg.max_parse_errors:
+        raise ValueError(
+            f"parse-error budget exceeded: {bad} malformed rows > "
+            f"--max-parse-errors={cfg.max_parse_errors}"
+        )
+
+
+def _csv_scan(
+    spark: SparkSession, path: str, schema: T.StructType, cfg: CopyConfig, multi_line: bool
+) -> DataFrame:
+    """The PERMISSIVE scan `read_csv` and `count_malformed` share: the
+    declared schema plus the corrupt-record column."""
+    opts = csv_read_options(cfg)
+    if multi_line:
+        opts["multiLine"] = "true"
+    full = T.StructType(list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType())])
+    return spark.read.options(**opts).schema(full).csv(path)
 
 
 def read_csv(
@@ -80,18 +105,8 @@ def read_csv(
     COLUMN). So the clean frame filters on the corrupt marker AND an
     opaque-to-the-optimizer reference to the first data column, which
     pins full-row parsing without disabling pruning globally."""
-    opts = csv_read_options(cfg)
-    if multi_line:
-        opts["multiLine"] = "true"
-    if cfg.max_parse_errors >= 0:
-        bad = count_malformed(spark, path, schema, cfg, multi_line)
-        if bad > cfg.max_parse_errors:
-            raise ValueError(
-                f"parse-error budget exceeded: {bad} malformed rows > "
-                f"--max-parse-errors={cfg.max_parse_errors}"
-            )
-    full = T.StructType(list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType())])
-    df = spark.read.options(**opts).schema(full).csv(path)
+    _enforce_budget(cfg, lambda: count_malformed(spark, path, schema, cfg, multi_line))
+    df = _csv_scan(spark, path, schema, cfg, multi_line)
     data0 = col(schema.fields[0].name)
     keep = col(CORRUPT_COL).isNull() & (
         F.length(F.coalesce(data0.cast("string"), F.lit(""))) >= 0
@@ -109,15 +124,10 @@ def count_malformed(
     """One aggregate pass counting rows the CSV parser rejects. The agg
     references a data column alongside the corrupt marker to satisfy
     Spark's corrupt-record-only restriction."""
-    full = T.StructType(list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType())])
-    opts = csv_read_options(cfg)
-    if multi_line:
-        opts["multiLine"] = "true"
-    df = spark.read.options(**opts).schema(full).csv(path)
-    data_col = schema.fields[0].name
+    df = _csv_scan(spark, path, schema, cfg, multi_line)
     row = df.agg(
         F.count(F.when(col(CORRUPT_COL).isNotNull(), 1)).alias("bad"),
-        F.count(col(data_col)).alias("_touch"),
+        F.count(col(schema.fields[0].name)).alias("_touch"),
     ).collect()[0]
     return row["bad"]
 
@@ -126,57 +136,12 @@ def count_malformed(
 # Cell-dynamic path
 # ---------------------------------------------------------------------------
 
-#: Raw parse output: per-field value + quoted flag (mirrors the reference's
-#: csv.Column {Value string, Quoted bool}, write.go:122).
-def _raw_field_schema(ncols: int) -> T.StructType:
-    fields = []
-    for i in range(ncols):
-        fields.append(T.StructField(f"v{i}", T.StringType()))
-        fields.append(T.StructField(f"q{i}", T.BooleanType()))
-    fields.append(T.StructField("_parse_error", T.StringType()))
-    return T.StructType(fields)
-
-
-def _split_rfc4180(line: str, ncols: int) -> tuple[list[tuple[str | None, bool]], str | None]:
-    """Tiny RFC-4180 field scanner preserving the quoted flag.
-
-    Returns (fields, error). Unterminated quotes or wrong arity are parse
-    errors (the reference surfaces these via csv.Reader, write.go:140-147).
-    """
-    fields: list[tuple[str | None, bool]] = []
-    i, n = 0, len(line)
-    while True:
-        if i < n and line[i] == '"':
-            buf = []
-            i += 1
-            while True:
-                j = line.find('"', i)
-                if j < 0:
-                    return fields, "unterminated quoted field"
-                if j + 1 < n and line[j + 1] == '"':
-                    buf.append(line[i:j + 1])
-                    i = j + 2
-                else:
-                    buf.append(line[i:j])
-                    i = j + 1
-                    break
-            fields.append(("".join(buf), True))
-            if i < n:
-                if line[i] != ",":
-                    return fields, f"garbage after closing quote at {i}"
-                i += 1
-            else:
-                break
-        else:
-            j = line.find(",", i)
-            if j < 0:
-                fields.append((line[i:], False))
-                break
-            fields.append((line[i:j], False))
-            i = j + 1
-    if len(fields) != ncols:
-        return fields, f"expected {ncols} fields, got {len(fields)}"
-    return fields, None
+#: One RFC-4180 field: quoted with "" escapes, or unquoted and not starting
+#: with a quote (a later bare quote is data). The quantifiers are possessive
+#: and unrolled: java.util.regex recurses once per iteration of a group
+#: like (?:[^"]|"")*, so a long quoted field would overflow the stack.
+_QUOTED = '"[^"]*+(?:""[^"]*+)*+"'
+_FIELD = f'{_QUOTED}|(?:[^,"][^,]*+)?'
 
 
 def parse_csv_dynamic(
@@ -185,42 +150,20 @@ def parse_csv_dynamic(
     column_names: list[str],
     cfg: CopyConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
-    """Distributed quote-preserving CSV parse → one (value, quoted) pair per
-    column plus `_parse_error`. mapInPandas keeps the Python work
-    Arrow-batched; text input stays splittable so this scales out."""
-    ncols = len(column_names)
-    out_schema = _raw_field_schema(ncols)
-    header = cfg.header
+    """Distributed quote-preserving CSV parse → one `<name>` value and one
+    `<name>__quoted` flag per column (the reference's csv.Column {Value,
+    Quoted}, write.go:122) plus `_parse_error`, NULL on clean rows.
 
-    # the parse closure references module-level _split_rfc4180, which
-    # cloudpickle serializes BY REFERENCE — executors must be able to
-    # import cqlcopy_spark (CLAUDE.md UDF-shipping rule)
-    from cqlcopy_spark.catalog import _ship_package
-
-    _ship_package(spark)
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for line in pdf["value"]:
-                if line == "":
-                    # blank separator lines are skipped, not arity
-                    # errors: Go's encoding/csv (the reference's reader)
-                    # and Spark's schema-first reader both ignore them —
-                    # counting them against --max-parse-errors would
-                    # make the two ingest paths disagree on one file
-                    continue
-                fields, err = _split_rfc4180(line, ncols)
-                rec: dict[str, object] = {}
-                for i in range(ncols):
-                    v, q = fields[i] if i < len(fields) else (None, False)
-                    rec[f"v{i}"], rec[f"q{i}"] = v, q
-                rec["_parse_error"] = err
-                rows.append(rec)
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
-
+    The tokenizer is one `regexp_extract_all` over `,` + line: every
+    match is a comma and one field, so the line is well formed iff the
+    matches tile it — their byte lengths sum to the line's. A malformed line
+    is classified only then (unterminated quoted field, garbage after a
+    closing quote); a well-formed one with the wrong field count is an
+    arity error. Values on error rows are unspecified. The projection is
+    SQL text: built column by column through the DataFrame API, its eager
+    analysis costs more driver time than the parse."""
     lines = spark.read.text(path)
-    if header:
+    if cfg.header:
         # The reference reads and DISCARDS the header row (write.go:135-137):
         # column names come from the caller. Drop the first line of EVERY
         # input file — a directory of CSV parts (what write_csv emits)
@@ -243,11 +186,80 @@ def parse_csv_dynamic(
             .filter(col("_mid") != col("_first_id"))
             .drop("_file", "_mid", "_first_id")
         )
-    raw = lines.mapInPandas(parse, schema=out_schema)
-    renamed = raw
+    # blank separator lines are skipped, not arity errors: Go's
+    # encoding/csv (the reference's reader) and Spark's schema-first
+    # reader both ignore them — counting them against --max-parse-errors
+    # would make the two ingest paths disagree on one file.
+    #
+    # The one-element explode keeps the regex under every filter: a filter
+    # on `_parse_error` is pushed through plain projections with their
+    # expressions inlined, and would run the tokenizer three more times.
+    lines = lines.filter(col("value") != "").selectExpr(
+        "value",
+        f"explode(array(regexp_extract_all(concat(',', value), ',({_FIELD})', 1))) AS _parts",
+    )
+    fields = []
     for i, name in enumerate(column_names):
-        renamed = renamed.withColumnRenamed(f"v{i}", name).withColumnRenamed(f"q{i}", f"{name}__quoted")
-    return renamed
+        f = f"get(_parts, {i})"
+        quoted = f"startswith({f}, '\"')"
+        name = name.replace("`", "``")
+        fields += [
+            f"IF({quoted}, replace(substring({f}, 2, length({f}) - 2), '\"\"', '\"'), {f}) AS `{name}`",
+            f"{quoted} AS `{name}__quoted`",
+        ]
+    error = f"""CASE
+        WHEN octet_length(array_join(_parts, '')) + size(_parts) != octet_length(value) + 1 THEN
+            IF(value RLIKE '^(?:(?:{_FIELD}),)*+{_QUOTED}[^,]',
+               'garbage after closing quote', 'unterminated quoted field')
+        WHEN size(_parts) != {len(column_names)} THEN
+            concat('expected {len(column_names)} fields, got ', size(_parts))
+    END AS _parse_error"""
+    return lines.selectExpr(*fields, error)
+
+
+def read_csv_dynamic(
+    spark: SparkSession,
+    path: str,
+    schema: T.StructType,
+    cfg: CopyConfig = DEFAULT_CONFIG,
+) -> DataFrame:
+    """Cell-dynamic import: parse, enforce the --max-parse-errors budget,
+    then count-and-SKIP like the reference (write.go:140-147) — rows
+    inside the budget are logged against it but never inserted as
+    half-parsed garbage — and type the rest with `cast_dynamic`."""
+    raw = parse_csv_dynamic(spark, path, schema.fieldNames(), cfg)
+    _enforce_budget(cfg, lambda: raw.filter(col("_parse_error").isNotNull()).count())
+    ok = raw.filter(col("_parse_error").isNull())
+    return cast_dynamic(ok, schema, cfg).drop("_parse_error")
+
+
+def infer_csv_schema(
+    spark: SparkSession, path: str, column_names: list[str], cfg: CopyConfig = DEFAULT_CONFIG
+) -> T.StructType:
+    """Column types for an import without --types: Spark's reader infers
+    them (SURVEY.md §7 notes this is a semantic upgrade over the
+    reference's per-cell inference); types `cast_dynamic` cannot target
+    fall back to string. The rows themselves then go through
+    `read_csv_dynamic`, whose arity errors are what a "parse error" means
+    when no schema is declared: a corrupt-record check here could never
+    fire, because full-file inference widens every column to fit
+    whatever PERMISSIVE parsing produced."""
+    inferred = spark.read.options(inferSchema="true", **csv_read_options(cfg)).csv(path).schema
+    data_fields = [f for f in inferred.fields if f.name != CORRUPT_COL]
+    if len(data_fields) != len(column_names):
+        raise ValueError(
+            f"input has {len(data_fields)} columns, expected {len(column_names)}"
+        )
+    castable = (
+        T.StringType, T.BooleanType, T.TimestampType, T.TimestampNTZType,
+        T.DateType, T.LongType, T.IntegerType, T.DoubleType, T.FloatType,
+    )
+    return T.StructType(
+        [
+            T.StructField(c, f.dataType if isinstance(f.dataType, castable) else T.StringType())
+            for c, f in zip(column_names, data_fields)
+        ]
+    )
 
 
 def cast_cell(value: Column, quoted: Column, target: T.DataType, cfg: CopyConfig) -> Column:

@@ -60,20 +60,20 @@ def continuous_copy_sink(
     replays idempotent exactly like exactly_once_parquet_sink, and the
     sink's own commit/abort protocol guarantees a half-failed micro-batch
     never publishes partial files INSIDE its directory — the two layers
-    compose to exactly-once CSV delivery. Options (chunk_size,
-    max_batch_kb, max_attempts, ...) pass through to the sink."""
-    import shutil
-
+    compose to exactly-once CSV delivery. A replay overwrites its batch
+    directory through the sink's own overwrite commit, so the previous
+    attempt's files stay readable until the new ones are published.
+    Options (chunk_size, max_batch_kb, max_attempts, ...) pass through
+    to the sink."""
     from cqlcopy_spark.sinks.batched_sink import register_batched_sink
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         register_batched_sink(batch_df.sparkSession)
         dest = os.path.join(out_dir, f"batch_id={batch_id}")
-        shutil.rmtree(dest, ignore_errors=True)  # replay → rewrite, not append
         w = batch_df.write.format("cql_batched").option("path", dest)
         for k, v in sink_options.items():
             w = w.option(k, str(v))
-        w.mode("append").save()
+        w.mode("overwrite").save()
 
     return stream_df.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint_dir

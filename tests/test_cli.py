@@ -73,6 +73,27 @@ def test_cli_write_dynamic_preserves_quoted_null(spark, tmp_path):
     assert got[3]["price"] is None   # unquoted → null
 
 
+def test_cli_write_dynamic_leaves_nothing_cached(spark, tmp_path):
+    """A `write --dynamic` under a parse budget caches nothing: the
+    session outlives the command, and a cached parse both holds its rows
+    for the rest of the session and answers the next write of the same
+    path with the old rows after the file has changed."""
+    spark.catalog.clearCache()
+    src = _write_input(tmp_path)
+    argv = [
+        "write", "items", "id", "name", "price", "ok", "when",
+        "--input", src,
+        "--types", "long,string,double,bool,timestamp",
+        "--dynamic", "--max-parse-errors", "5",
+    ]
+    assert main(argv + ["--path", str(tmp_path / "t3.parquet")], spark=spark) == 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    with open(src, "a", encoding="utf-8") as f:
+        f.write("4,new,1.0,true,2024-01-02 03:04:08+0000\n")
+    assert main(argv + ["--path", str(tmp_path / "t4.parquet")], spark=spark) == 0
+    assert spark.read.parquet(str(tmp_path / "t4.parquet")).count() == 4
+
+
 def test_cli_read_stdout_quotes_strings_only(spark, tmp_path):
     """read --output -: header quoted, string values quoted, numerics
     bare (read.go:181-190 type-preserving convention)."""

@@ -10,7 +10,6 @@ from pyspark.sql import types as T
 from cqlcopy_spark.config import CopyConfig, check_identifier, go_layout_to_java
 from cqlcopy_spark.sinks.batched_sink import retry_call
 from cqlcopy_spark.sources.csv_source import (
-    _split_rfc4180,
     cast_dynamic,
     count_malformed,
     parse_csv_dynamic,
@@ -21,33 +20,87 @@ CFG = CopyConfig()
 
 
 # ---------------------------------------------------------------------------
-# RFC-4180 scanner
+# RFC-4180 field tokenizer (parse_csv_dynamic), every case in one Spark job
 # ---------------------------------------------------------------------------
 
-def test_split_plain():
-    fields, err = _split_rfc4180("a,b,c", 3)
+_SPLIT_CASES = {
+    "plain": "a,b,c",
+    "quoted_and_escaped": '"a,b",c,"he said ""hi"""',
+    "empty_fields": ",,",
+    "arity_error": "a,b",
+    "unterminated_quote": '"abc,d',
+    "bare_quote_inside_unquoted": 'ab"c,y,z',
+    "garbage_after_closing_quote": '"a"b,y,z',
+}
+
+
+@pytest.fixture(scope="module")
+def split(spark, tmp_path_factory):
+    """case name → (fields, error) for each `_SPLIT_CASES` line, parsed
+    as three columns. One small file is one partition, so the rows come
+    back in line order."""
+    p = tmp_path_factory.mktemp("split") / "cases.csv"
+    p.write_text("\n".join(_SPLIT_CASES.values()) + "\n", encoding="utf-8")
+    names = ["c0", "c1", "c2"]
+    rows = parse_csv_dynamic(spark, str(p), names, CopyConfig(header=False)).collect()
+    assert len(rows) == len(_SPLIT_CASES)
+    return {
+        case: ([(r[c], r[f"{c}__quoted"]) for c in names], r["_parse_error"])
+        for case, r in zip(_SPLIT_CASES, rows)
+    }
+
+
+def test_split_plain(split):
+    fields, err = split["plain"]
     assert err is None and fields == [("a", False), ("b", False), ("c", False)]
 
 
-def test_split_quoted_and_escaped():
-    fields, err = _split_rfc4180('"a,b",c,"he said ""hi"""', 3)
+def test_split_quoted_and_escaped(split):
+    fields, err = split["quoted_and_escaped"]
     assert err is None
     assert fields == [("a,b", True), ("c", False), ('he said "hi"', True)]
 
 
-def test_split_empty_fields():
-    fields, err = _split_rfc4180(",,", 3)
+def test_split_empty_fields(split):
+    fields, err = split["empty_fields"]
     assert err is None and fields == [("", False), ("", False), ("", False)]
 
 
-def test_split_arity_error():
-    _, err = _split_rfc4180("a,b", 3)
+def test_split_arity_error(split):
+    _, err = split["arity_error"]
     assert err is not None
 
 
-def test_split_unterminated_quote():
-    _, err = _split_rfc4180('"abc,d', 2)
+def test_split_unterminated_quote(split):
+    _, err = split["unterminated_quote"]
     assert "unterminated" in err
+
+
+def test_split_bare_quote_inside_unquoted_field(split):
+    """Only a field's FIRST character opens a quoted field; a later
+    bare quote is data, as in the reference's lazy-quotes reader."""
+    fields, err = split["bare_quote_inside_unquoted"]
+    assert err is None and fields[0] == ('ab"c', False)
+
+
+def test_split_garbage_after_closing_quote(split):
+    _, err = split["garbage_after_closing_quote"]
+    assert "garbage" in err
+
+
+def test_split_long_quoted_field_does_not_overflow_the_stack(spark, tmp_path):
+    """One 600k-character quoted field holding 200k escaped quote pairs,
+    in a 2,001-column line: a regex that recursed per character would
+    throw StackOverflowError on it."""
+    body = 'a""' * 200_000
+    ncols = 2_001
+    p = tmp_path / "long.csv"
+    p.write_text(f'"{body}"' + ",x" * (ncols - 1) + "\n", encoding="utf-8")
+    names = [f"c{i}" for i in range(ncols)]
+    (row,) = parse_csv_dynamic(spark, str(p), names, CopyConfig(header=False)).collect()
+    assert row["_parse_error"] is None
+    assert row["c0"] == 'a"' * 200_000 and row["c0__quoted"] is True
+    assert row["c2000"] == "x" and row["c2000__quoted"] is False
 
 
 # ---------------------------------------------------------------------------
@@ -108,11 +161,13 @@ def test_cast_dynamic_precedence(spark, edge_csv):
 
 
 def test_parse_error_column(spark, tmp_path):
+    """One error for the bad line; the blank line is skipped, neither a
+    row nor an arity error (Go's encoding/csv skips it too)."""
     p = tmp_path / "bad.csv"
-    p.write_text("a,b\n1,2\n\"unterminated,3\nx,y\n")
+    p.write_text("a,b\n1,2\n\n\"unterminated,3\nx,y\n")
     raw = parse_csv_dynamic(spark, str(p), ["a", "b"], CopyConfig())
     errs = raw.filter(raw["_parse_error"].isNotNull()).count()
-    assert errs == 1
+    assert errs == 1 and raw.count() == 3
 
 
 def test_header_skip_per_file(spark, tmp_path):

@@ -17,6 +17,11 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
+
+from tests.conftest import SF_MEDIUM
+
+_ENTRY = str(Path(__file__).resolve().parents[1] / "__spark_entry__.py")
 
 # the r8-new ops VERDICT flagged for this smoke (heavy lineage: clustered
 # cosine verdicts, corpus-wide span argmin, sequential micro-batch LSH
@@ -129,7 +134,8 @@ HEAVY_OPS = [
 
 _SCRIPT = r"""
 import importlib.util, sys
-spec = importlib.util.spec_from_file_location('__spark_entry__', '/root/repo/__spark_entry__.py')
+entry, sf_dir, names = sys.argv[1], sys.argv[2], sys.argv[3:]
+spec = importlib.util.spec_from_file_location('__spark_entry__', entry)
 mod = importlib.util.module_from_spec(spec); spec.loader.exec_module(mod)
 from pyspark.sql import SparkSession
 # EXACTLY the verify/driver session: local[8], shuffle 8, NO driver-memory
@@ -140,8 +146,8 @@ spark = (SparkSession.builder.master('local[8]')
 heap = spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
 assert heap < 1.2 * 1024**3, f'driver heap {heap} is not the default ~1g'
 qs = mod.queries()
-for name in sys.argv[1:]:
-    rows = qs[name](spark, '/root/testdata/sf0.01').collect()
+for name in names:
+    rows = qs[name](spark, sf_dir).collect()
     print(name, 'rows:', len(rows), flush=True)
 spark.stop()
 print('HEAP_SMOKE_OK')
@@ -150,7 +156,7 @@ print('HEAP_SMOKE_OK')
 
 def test_heavy_ops_complete_at_default_driver_heap():
     proc = subprocess.run(
-        [sys.executable, "-c", _SCRIPT, *HEAVY_OPS],
+        [sys.executable, "-c", _SCRIPT, _ENTRY, SF_MEDIUM, *HEAVY_OPS],
         capture_output=True,
         text=True,
         timeout=900,

@@ -1676,8 +1676,14 @@ def test_gram_sql_text_equivalence(spark):
         assert old.exceptAll(new).count() == 0, n
 
 
-def test_cli_typed_write_has_no_python_stage(spark, tmp_path):
-    """`write --types` runs no Python worker: progress is read from the
+@pytest.mark.parametrize(
+    "typing",
+    [["--types", "long,string"], ["--types", "long,string", "--dynamic"], []],
+    ids=["typed", "dynamic", "inferred"],
+)
+def test_cli_typed_write_has_no_python_stage(spark, tmp_path, typing):
+    """No `write` path runs a Python worker — schema-first, cell-dynamic
+    (the JVM field tokenizer) or inferred: progress is read from the
     status store, so no MapInPandas / MapInArrow / ArrowEvalPython node
     sits between the CSV scan and the parquet write. Read from the SQL
     status store, so this pins the plans the write actually executed."""
@@ -1696,7 +1702,7 @@ def test_cli_typed_write_has_no_python_stage(spark, tmp_path):
     before = execution_ids()
     rc = main(
         [
-            "write", "t", "id", "name", "--types", "long,string",
+            "write", "t", "id", "name", *typing,
             "--input", str(src), "--path", str(tmp_path / "out.parquet"),
         ],
         spark=spark,
@@ -1710,3 +1716,21 @@ def test_cli_typed_write_has_no_python_stage(spark, tmp_path):
     for p in plans:
         for node in ("MapInPandas", "MapInArrow", "ArrowEvalPython"):
             assert node not in p, p
+
+
+def test_dynamic_read_runs_the_field_tokenizer_once(spark, tmp_path):
+    """`read_csv_dynamic` filters on `_parse_error`; the optimizer must not
+    push that filter beneath the tokenizer with the regex inlined, or each
+    line is tokenized once per reference to the parts (four times)."""
+    from pyspark.sql import types as T
+
+    from cqlcopy_spark.sources.csv_source import read_csv_dynamic
+
+    src = tmp_path / "in.csv"
+    src.write_text('"id","name"\n1,"a"\n2,NULL\n', encoding="utf-8")
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("name", T.StringType())]
+    )
+    df = read_csv_dynamic(spark, str(src), schema)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("regexp_extract_all(") == 1, plan
