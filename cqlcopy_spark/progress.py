@@ -22,6 +22,8 @@ import time
 import uuid
 from collections.abc import Callable
 
+from py4j.protocol import Py4JJavaError
+
 from cqlcopy_spark.config import DEFAULT_CONFIG
 
 
@@ -80,7 +82,16 @@ class ProgressReporter:
                 stage_ids.update(sids.apply(i) for i in range(sids.size()))
         rows = failed = 0
         for sid in stage_ids:
-            stage = store.lastStageAttempt(sid)
+            try:
+                stage = store.lastStageAttempt(sid)
+            except Py4JJavaError as e:
+                # the store keeps spark.ui.retainedStages stages and evicts
+                # skipped ones first (they have no completion time), so in
+                # a long session a job can list a stage the store dropped;
+                # a skipped stage ran nothing and wrote no rows
+                if e.java_exception.getClass().getName() != "java.util.NoSuchElementException":
+                    raise
+                continue
             rows += stage.outputRecords()
             failed += stage.numFailedTasks()
         return rows, failed

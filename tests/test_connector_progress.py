@@ -54,6 +54,37 @@ def test_progress_reporter_counts_rows(spark, tmp_path):
     assert sc.getLocalProperty("spark.jobGroup.id") is None
 
 
+def test_progress_reporter_survives_an_evicted_stage(spark):
+    """The status store keeps spark.ui.retainedStages stages and evicts
+    skipped stages first, so late in a long session a job lists a stage
+    id the store no longer holds. The reporter reads past it instead of
+    failing the command it wraps. Here the second count skips the map
+    stage, and the test evicts that stage the way the store does."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    lines: list[str] = []
+    with ProgressReporter(sc, report=lines.append, freq_s=60):
+        pairs = sc.parallelize(range(100), 2).map(lambda x: (x % 3, x)).reduceByKey(max)
+        pairs.count()
+        pairs.count()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        sids = [
+            ids.apply(i)
+            for jid in sc.statusTracker().getJobIdsForGroup(group)
+            for ids in [store.job(jid).stageIds()]
+            for i in range(ids.size())
+        ]
+        stages = [store.lastStageAttempt(sid) for sid in sids]
+        skipped = [s for s in stages if s.status().toString() == "SKIPPED"]
+        assert len(skipped) == 1
+        key = sc._gateway.new_array(sc._jvm.int, 2)
+        key[0], key[1] = skipped[0].stageId(), skipped[0].attemptId()
+        wrapper = sc._jvm.java.lang.Class.forName("org.apache.spark.status.StageDataWrapper")
+        store.store().delete(wrapper, key)
+    assert lines and lines[-1].startswith("0 rows done (0 failures)"), lines
+
+
 def test_paged_source_partitions_are_disjoint_complete_row_group_spans():
     """Input splits are row-group spans planned from the parquet FOOTER
     only: together they cover every row group exactly once (no task

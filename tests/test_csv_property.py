@@ -37,12 +37,26 @@ _FIELD = st.text(
 _ROWS = st.integers(min_value=1, max_value=6).flatmap(
     lambda n: st.lists(st.lists(_FIELD, min_size=n, max_size=n), min_size=20, max_size=40)
 )
-#: non-blank raw lines over '",x ' with k commas, parsed as k + 1
-#: columns (the parse skips blank lines instead of returning a row)
-_LINES = st.integers(min_value=0, max_value=5).flatmap(
+
+
+def _cut(text: str, cuts: list[int]) -> str:
+    """`text` with a comma inserted at each cut point."""
+    cuts = sorted(min(c, len(text)) for c in cuts)
+    return ",".join(text[a:b] for a, b in zip([0, *cuts], [*cuts, len(text)]))
+
+
+#: every non-blank raw line over '",x ' of at most 24 characters (the
+#: parse skips the blank line instead of returning a row): per example a
+#: comma count k in 0-23 and 20-40 lines with exactly k commas, each a
+#: comma-free text of at most 24 - k characters cut at k points, parsed
+#: as k + 1 columns
+_LINES = st.integers(min_value=0, max_value=23).flatmap(
     lambda k: st.lists(
-        st.lists(st.text(alphabet=st.sampled_from(list('"x ')), max_size=5),
-                 min_size=k + 1, max_size=k + 1).map(",".join).filter(bool),
+        st.builds(
+            _cut,
+            st.text(alphabet=st.sampled_from(list('"x ')), max_size=24 - k),
+            st.lists(st.integers(min_value=0, max_value=24 - k), min_size=k, max_size=k),
+        ).filter(bool),
         min_size=20,
         max_size=40,
     )
