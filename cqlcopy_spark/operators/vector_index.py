@@ -104,12 +104,12 @@ def vector_index_build(base: DataFrame, state_dir: str, batch_id: int = 0) -> No
     jobs ≈ 11s of the first bench measurement — profiled r13).
 
     Crash safety + provenance (both r13 ADVICE):
-    - the header files are written to temp names and os.replace'd —
-      rename is atomic, and codebooks.parquet (the streaming sink's
-      'trained' sentinel) lands LAST, after the codes delta, so a crash
-      mid-build can never leave a truncated sentinel that flips every
-      replay onto the append path against corrupt artifacts; a replayed
-      seed batch simply retrains over the partial state;
+    - each header file lands whole (state_log.replace_file), and
+      codebooks.parquet (the streaming sink's 'trained' sentinel) lands
+      LAST, after the codes delta, so a crash mid-build can never leave
+      a truncated sentinel that flips every replay onto the append path
+      against corrupt artifacts; a replayed seed batch simply retrains
+      over the partial state;
     - the seed delta carries the REAL batch id: with empty leading
       stream batches the seed arrives as batch K>0, and hard-coding
       delta=0 both mislabeled the raw-delta provenance and made a
@@ -122,7 +122,6 @@ def vector_index_build(base: DataFrame, state_dir: str, batch_id: int = 0) -> No
     encodes the identical row set even when the batch carries one id
     with conflicting payloads (bare dropDuplicates picked arbitrarily)."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     # uniform effective-id mapping across every writer of this state dir
     # (a no-op on the fresh state dirs build normally targets: no epoch
@@ -130,43 +129,28 @@ def vector_index_build(base: DataFrame, state_dir: str, batch_id: int = 0) -> No
     batch_id += state_log.log_epoch(state_dir)
     seed = keep_min_by(base.select("vec_id", "emb"), "vec_id")
     coarse, books = _fit_from_base(seed)
-    os.makedirs(state_dir, exist_ok=True)
     state_log.write_delta(
         INDEX_CODES, _encode_with(seed, coarse, books), state_dir, batch_id
-    )
-
-    def _atomic_write(tbl, name: str) -> None:
-        tmp = os.path.join(state_dir, name + ".tmp")
-        pq.write_table(tbl, tmp)
-        os.replace(tmp, os.path.join(state_dir, name))
-
-    _atomic_write(
-        pa.table(
-            {
-                "cell": pa.array(range(len(coarse)), type=pa.int32()),
-                "c": pa.array([list(map(float, c)) for c in coarse],
-                              type=pa.list_(pa.float64())),
-            }
-        ),
-        "centroids.parquet",
     )
     rows = [
         (m, k, list(map(float, books[m][k])))
         for m in range(len(books))
         for k in range(books[m].shape[0])
     ]
-    _atomic_write(
-        pa.table(
-            {
-                "m": pa.array([r[0] for r in rows], type=pa.int32()),
-                "k": pa.array([r[1] for r in rows], type=pa.int32()),
-                "c": pa.array([r[2] for r in rows],
-                              type=pa.list_(pa.float64())),
-            }
-        ),
-        "codebooks.parquet",
-    )
-
+    vecs = pa.list_(pa.float64())
+    headers = {  # codebooks.parquet, the 'trained' sentinel, lands last
+        "centroids.parquet": {
+            "cell": pa.array(range(len(coarse)), type=pa.int32()),
+            "c": pa.array([list(map(float, c)) for c in coarse], type=vecs),
+        },
+        "codebooks.parquet": {
+            "m": pa.array([r[0] for r in rows], type=pa.int32()),
+            "k": pa.array([r[1] for r in rows], type=pa.int32()),
+            "c": pa.array([r[2] for r in rows], type=vecs),
+        },
+    }
+    for name, cols in headers.items():
+        state_log.replace_file(os.path.join(state_dir, name), "table", pa.table(cols))
 
 def _load_artifacts(spark: SparkSession, state_dir: str):
     """(coarse, books) back from parquet — the bounded index-header

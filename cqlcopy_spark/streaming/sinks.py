@@ -16,7 +16,9 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
+from pyspark.sql.functions import col
 from pyspark.sql.streaming import DataStreamWriter
 
 from cqlcopy_spark.functions.skew import keep_min_by
@@ -136,10 +138,9 @@ def _state_log_sink(
         qid = _checkpoint_query_id(checkpoint_dir)
         if not _run_guard(state_dir, qid, on_new_run, sink):
             state_log.wipe(family, state_dir)
-        os.makedirs(state_dir, exist_ok=True)
         if apply(batch_df, batch_id, state_dir) is not False:
-            with open(os.path.join(state_dir, "_run.json"), "w", encoding="utf-8") as f:
-                json.dump({"query_id": qid}, f)
+            marker = os.path.join(state_dir, "_run.json")
+            state_log.replace_file(marker, "text", json.dumps({"query_id": qid}))
 
     return stream_df.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint_dir
@@ -204,7 +205,6 @@ def continuous_agg_sink(
     new run redelivers the FULL input (e.g. availableNow over the same
     directory). State size is grouped-key-bounded — the stream itself
     is never retained."""
-    from pyspark.sql import functions as F
 
     def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         # sum_expr must be an EXACT-integer aggregate (e.g. a cents sum):
@@ -273,8 +273,6 @@ def continuous_cdc_sink(
     (one row per live key + tombstone), never stream-length-bounded.
     Per batch: one window shuffle on the key over (batch ∪ prev-state)
     — what a lakehouse MERGE runs."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         merged = batch_df if prev is None else prev.unionByName(batch_df)
@@ -301,7 +299,6 @@ def continuous_cdc_sink(
 def read_cdc_state(spark, state_dir: str, op_col: str = "op") -> DataFrame:
     """Latest live snapshot of a continuous_cdc_sink state table
     (tombstones filtered)."""
-    from pyspark.sql import functions as F
 
     return read_agg_state(spark, state_dir).filter(F.col(op_col) != "D")
 
@@ -330,7 +327,6 @@ def continuous_topk_sink(
     continuous_agg_sink's replay scope and cross-run guard. State size is ≤ k new items per
     batch. The per-batch reduce is one hash aggregate + a
     TakeOrdered(k+1): executor-side and shuffle-light at any rate."""
-    from pyspark.sql import functions as F
 
     def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         spark = batch_df.sparkSession
@@ -383,8 +379,6 @@ def continuous_topk_sink(
 def read_topk_state(spark, state_dir: str, top_n: int = 10) -> DataFrame:
     """Current heavy hitters from a continuous_topk_sink state: est /
     upper_bound / rank, mirroring sketch_heavy_hitters' output shape."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     s = read_agg_state(spark, state_dir)
     w = Window.orderBy(F.col("est").desc(), F.col("item"))
@@ -419,7 +413,6 @@ def compact_cdc_tombstones(
     snapshot visible until the pruned one is complete, and returns the
     number removed. The caller owns the watermark claim — exactly the
     contract of a lakehouse VACUUM horizon."""
-    from pyspark.sql import functions as F
 
     dead = (F.col(op_col) == "D") & (F.col(seq_col) < min_live_seq)
     return state_log.prune_snapshot(spark, SNAPSHOT, state_dir, dead)
@@ -447,8 +440,6 @@ def continuous_quantile_sink(
     snapshot view (see that module's docstring) with
     continuous_agg_sink's replay scope and cross-run guard. Per batch the raw data passes ONE sort-free reduce (exact
     ranks need a sort of the BATCH only, never history)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     def summarize(df, w_col: str, total: int):
         """k-point weighted summary of (value, weight) rows: cumulative
@@ -537,8 +528,6 @@ def continuous_quantile_sink(
 def read_quantile_state(spark, state_dir: str, ps=(0.5, 0.9, 0.99)) -> DataFrame:
     """Quantile estimates + the accumulated rank-error bound from a
     continuous_quantile_sink state."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     s = read_agg_state(spark, state_dir)
     w = Window.orderBy("value")
@@ -563,7 +552,6 @@ def _survivor_projection(frame: DataFrame) -> DataFrame:
     """(doc_id, shard, n_tokens) from admitted ths rows: shard =
     doc_id % _PACK_SHARDS (Spark `%` matches the oracle's on negative
     ids), n_tokens = n_toks, all BIGINT."""
-    from pyspark.sql.functions import col
 
     return frame.select(
         "doc_id",
@@ -649,8 +637,6 @@ def minhash_apply_batch(
        pairs/delta=<b> is this batch's near-dup report — the streaming
        twin of dedup_incremental's output.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import col
 
     spark = batch_df.sparkSession
     # effective id (epoch mapping) + the floor guard of every view —
@@ -886,6 +872,11 @@ def curation_admitted(
     # gate-free state keeps the original plan byte for byte
     ew_root = os.path.join(state_dir, _EVAL_WINDOWS)
     if os.path.isdir(ew_root):
+        if not state_log.is_complete(ew_root):
+            raise ValueError(
+                f"{ew_root} has no _SUCCESS: a decontamination_index_write "
+                "did not finish. Re-run it before ingest."
+            )
         fresh = _decontaminate_batch(spark, fresh, ew_root)
     gated = _curation_gated(fresh)
     # in-batch keeper as a DIRECT argmin aggregate: min(struct(doc_id,
@@ -915,13 +906,9 @@ def decontamination_index_write(bench_docs: DataFrame, state_dir: str) -> None:
     soundly at read."""
     from cqlcopy_spark.operators.text import _char_windows
 
-    os.makedirs(state_dir, exist_ok=True)
-    (
-        _char_windows(bench_docs.select("doc_id", "text"), 1)
-        .select("w")
-        .dropDuplicates(["w"])
-        .write.mode("overwrite")
-        .parquet(os.path.join(state_dir, _EVAL_WINDOWS))
+    windows = _char_windows(bench_docs.select("doc_id", "text"), 1).select("w")
+    state_log.write_frame(
+        windows.dropDuplicates(["w"]), os.path.join(state_dir, _EVAL_WINDOWS)
     )
 
 
@@ -938,7 +925,6 @@ def _decontaminate_batch(spark, batch: DataFrame, ew_root: str) -> DataFrame:
     constant across batches, which is what keeps the streamed corpus
     hash-equal to the one-shot decontaminated capstone
     (pipeline_pretrain_pack_decontam)."""
-    from pyspark.sql import functions as F
 
     from cqlcopy_spark.operators.text import _SUB_STRIDE, _bench_split, _char_windows
 

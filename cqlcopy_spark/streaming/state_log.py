@@ -4,7 +4,8 @@ full snapshots behind the agg, cdc, topk and quantile sinks.
 
 Layout. A state dir holds one directory per log root, plus an epoch:
 
-    <state>/<root>/delta=<b>/       one overwrite-keyed delta per batch id b
+    <state>/<root>/delta=<b>/       the delta of batch id b, complete once
+                                    _SUCCESS exists
     <state>/<root>/compact/v=<v>/   a compaction: every row of the deltas
                                     below v, complete once _SUCCESS exists
     <state>/<root>/compact/v=<v>.<g>/
@@ -45,33 +46,49 @@ a compaction stamped 1 + max over every delta id and compaction version
 of every root the family reads, then swaps the mask to an empty
 compaction at the same version.
 
-Crash contract:
-- A directory readers trust lands its _SUCCESS marker last: Spark's
-  committer, the driver-side mask swap and the clone copy alike.
-  `compact_versions` ignores marker-less dirs and a retry overwrites
-  them. A delta is keyed by its batch id, so a replay rewrites it.
-- A compaction lands before the versions it supersedes are removed.
-- A rewrite of a complete version (`_commit`: a snapshot replay, the
-  cdc tombstone pass) lands as a new generation before the generations
-  it supersedes are removed, so a crash leaves the old or the new one
-  visible, never neither. A re-run of the tombstone pass over its
+Crash contract. Every visible filesystem effect on a state dir goes
+through one function, `_effect`: a Spark parquet write (part files,
+then _SUCCESS), a small file, a _SUCCESS marker, a rename or replace,
+a removal. A crash stops that sequence after some effect. Each commit
+idiom is written once on top of it:
+- `replace_file` publishes a small file (the epoch, a sink's _run.json,
+  the vector index's header files) under a temp name, then replaces
+  the old one: readers see the old file or the new one.
+- `_publish_dir` writes a driver-side dir (the vacuum's empty mask
+  compaction, a clone's copies) with its _SUCCESS marker last.
+- A delta or a compaction counts only once its _SUCCESS exists: readers
+  skip a torn one and a retry overwrites it. A replay leaves a complete
+  delta in place (within one checkpoint lineage a replayed batch id
+  carries the same rows), so no crash of a replay hides a committed
+  batch.
+- A compaction at v is refused while a delta below v is torn
+  (`_write_compaction`): it would hide that batch's replay from every
+  reader. The batch is replayed first.
+- A compaction, or a new generation of one (`_commit`: a snapshot
+  replay, the cdc tombstone pass), lands before the versions it
+  supersedes are removed. A re-run of the tombstone pass over its
   post-state finds nothing to prune and returns 0.
 - A vacuum lands every data root's new version before the mask swap. A
   crash in between leaves pruned data under a full mask: consistent,
-  and a re-run completes it. A re-run over a clean state is a no-op.
+  and a re-run completes it one stamp higher. A re-run over a clean
+  state is a no-op.
 - A writer refuses a first-time batch id below a root's newest
   compaction (`begin_batch`): every reader would skip that delta.
   Replays pass, because their delta dir already exists.
 - The log epoch lets a checkpoint resume after a vacuum stamped above
-  its small batch ids (`vacuum(..., bump_epoch=True)`). It is written
-  by temp file and rename, after the vacuum. Bump only against a
-  cleanly stopped stream: an in-flight batch replayed after the bump
-  re-derives against the vacuumed state.
-- A clone copies each view's as-of file set, then writes the branch's
-  epoch = as_of last.
+  its small batch ids (`vacuum(..., bump_epoch=True)`); it is replaced
+  after the vacuum. Bump only against a cleanly stopped stream: an
+  in-flight batch replayed after the bump re-derives against the
+  vacuumed state.
+- A clone builds the branch in a staging dir beside it and renames it
+  into place last: the branch holds nothing or all of it.
 - The caller owns a vacuum's horizon claim: a pruned mask row no longer
   guards admission, so nothing retired before the vacuum may be
   delivered again. The raw deltas still show it if it is.
+tests/test_state_crash.py checks this contract: it crashes each
+lifecycle step after each of its effects, and asserts that every view
+reads its pre- or post-state and that a re-run reaches the state of an
+uncrashed run.
 
 Design reference: the Delta Lake protocol
 (https://github.com/delta-io/delta/blob/master/PROTOCOL.md) for version
@@ -134,6 +151,71 @@ class Family:
         return tuple(dict.fromkeys(r for v in views for r in v.roots))
 
 
+def _effect(op: str, path: str, arg=None) -> None:
+    """Apply one visible filesystem effect to a state dir. Every write,
+    marker, rename and removal of this layer (and of the sinks and the
+    vector index, through the primitives below) passes through here:
+    - "frame":   the DataFrame `arg` written as parquet to dir `path`,
+                 replacing it; the committer lands the part files, then
+                 _SUCCESS;
+    - "text", "table": a small file from a str or a pyarrow table;
+    - "copy":    the file `arg` copied to `path`;
+    - "replace": os.replace(arg, path);
+    - "remove":  the dir or file at `path`."""
+    if op == "frame":
+        arg.write.mode("overwrite").parquet(path)
+    elif op == "text":
+        with open(path, "w", encoding="utf-8") as f:
+            f.write(arg)
+    elif op == "table":
+        import pyarrow.parquet as pq
+
+        pq.write_table(arg, path)
+    elif op == "copy":
+        shutil.copyfile(arg, path)
+    elif op == "replace":
+        os.replace(arg, path)
+    elif os.path.isdir(path):
+        shutil.rmtree(path)
+    else:
+        os.remove(path)
+
+
+def replace_file(path: str, op: str, arg) -> None:
+    """Publish one small file whole: write it (op "text", "table" or
+    "copy", see `_effect`) under a temp name beside `path`, then replace
+    `path` with it. A crash leaves the old file or the new one."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    _effect(op, path + ".tmp", arg)
+    _effect("replace", path, path + ".tmp")
+
+
+def write_frame(frame: DataFrame, path: str) -> None:
+    """Write `frame` as the parquet dir `path`, replacing it; it counts
+    as complete once its _SUCCESS exists (`is_complete`)."""
+    _effect("frame", path, frame)
+
+
+def remove(path: str) -> None:
+    """Remove the dir or file at `path`, if there is one."""
+    if os.path.lexists(path):
+        _effect("remove", path)
+
+
+def _publish_dir(path: str, files: list) -> None:
+    """Publish a driver-side dir whole: clear a torn leftover, write each
+    (name, op, arg) file (see `_effect`), then _SUCCESS last."""
+    remove(path)
+    os.makedirs(path)
+    for name, op, arg in (*files, ("_SUCCESS", "text", "")):
+        _effect(op, os.path.join(path, name), arg)
+
+
+def is_complete(path: str) -> bool:
+    """Whether the dir at `path` was committed (its _SUCCESS exists)."""
+    return os.path.exists(os.path.join(path, "_SUCCESS"))
+
+
 _COMPACT_DIR = re.compile(r"v=(\d+)(?:\.(\d+))?")
 
 
@@ -152,11 +234,7 @@ def _compactions(root: str) -> list[tuple[int, int, str]]:
 
 def _complete(root: str) -> dict[int, tuple[int, str]]:
     """version -> (generation, path) of its newest complete generation."""
-    return {
-        v: (g, p)
-        for v, g, p in _compactions(root)
-        if os.path.exists(os.path.join(p, "_SUCCESS"))
-    }
+    return {v: (g, p) for v, g, p in _compactions(root) if is_complete(p)}
 
 
 def compact_versions(root: str) -> list[int]:
@@ -165,7 +243,8 @@ def compact_versions(root: str) -> list[int]:
 
 
 def delta_ids(root: str, below: int = _TOP) -> list[int]:
-    """Ascending batch ids of the deltas under `root` below `below`."""
+    """Ascending batch ids of the deltas under `root` below `below`,
+    complete or torn."""
     if not os.path.isdir(root):
         return []
     return sorted(
@@ -173,6 +252,16 @@ def delta_ids(root: str, below: int = _TOP) -> list[int]:
         for d in os.listdir(root)
         if (m := re.fullmatch(r"delta=(\d+)", d)) and int(m.group(1)) < below
     )
+
+
+def _delta_dir(root: str, batch_id: int) -> str:
+    return os.path.join(root, f"delta={batch_id}")
+
+
+def _complete_deltas(root: str, below: int = _TOP) -> list[int]:
+    """The ids of `delta_ids` whose delta is complete: the only ones
+    readers take."""
+    return [i for i in delta_ids(root, below) if is_complete(_delta_dir(root, i))]
 
 
 def _parquet_rows(paths: list[str]) -> int:
@@ -206,9 +295,7 @@ def resolve(view: View, state_dir: str, below: int = _TOP) -> tuple[list, list]:
     usable = {v: p for v, (_, p) in _complete(root).items() if v <= below}
     floor = max(usable, default=0)
     compact = [usable[floor]] if usable else []
-    deltas = [
-        os.path.join(droot, f"delta={i}") for i in delta_ids(droot, below) if i >= floor
-    ]
+    deltas = [_delta_dir(droot, i) for i in _complete_deltas(droot, below) if i >= floor]
     return compact, deltas
 
 
@@ -259,22 +346,23 @@ def read_mask(
 
 
 def read_deltas(spark, view: View, state_dir: str) -> DataFrame | None:
-    """Every RAW delta of a view that reads its own deltas, in one scan
-    (compactions skipped), or None when there is none."""
+    """Every complete RAW delta of a view that reads its own deltas, in
+    one scan (compactions skipped), or None when there is none."""
     _, droot = _roots(view, state_dir)
-    paths = [os.path.join(droot, f"delta={b}") for b in delta_ids(droot)]
+    paths = [_delta_dir(droot, b) for b in _complete_deltas(droot)]
     return spark.read.schema(view.schema).parquet(*paths) if paths else None
 
 
 def read_provenance(spark, view: View, state_dir: str, tag: str) -> DataFrame:
-    """The view rows of every RAW delta, each tagged with its batch id in
-    column `tag`. Compactions are skipped on purpose: provenance is what
-    compaction erases. The loop builds a union plan; rows never collect."""
+    """The view rows of every complete RAW delta, each tagged with its
+    batch id in column `tag`. Compactions are skipped on purpose:
+    provenance is what compaction erases. The loop builds a union plan;
+    rows never collect."""
     _, droot = _roots(view, state_dir)
     frames = []
-    for b in delta_ids(droot):
+    for b in _complete_deltas(droot):
         frame = spark.read.schema(view.delta_schema or view.schema).parquet(
-            os.path.join(droot, f"delta={b}")
+            _delta_dir(droot, b)
         )
         if view.project is not None:
             frame = view.project(frame)
@@ -296,14 +384,6 @@ def log_epoch(state_dir: str) -> int:
         return 0
 
 
-def _write_epoch(state_dir: str, epoch: int) -> None:
-    os.makedirs(state_dir, exist_ok=True)
-    tmp = os.path.join(state_dir, _EPOCH_FILE + ".tmp")
-    with open(tmp, "w", encoding="utf-8") as f:
-        f.write(str(epoch))
-    os.replace(tmp, os.path.join(state_dir, _EPOCH_FILE))
-
-
 def _bump_epoch(state_dir: str, roots: list[str]) -> int:
     """Raise the log epoch to sit at/above every delta id (+1) and
     compaction version across `roots`: a resumed checkpoint's batch 0
@@ -316,7 +396,7 @@ def _bump_epoch(state_dir: str, roots: list[str]) -> int:
     )
     new = max(stamp, log_epoch(state_dir))
     if new != log_epoch(state_dir):
-        _write_epoch(state_dir, new)
+        replace_file(os.path.join(state_dir, _EPOCH_FILE), "text", str(new))
     return new
 
 
@@ -341,9 +421,11 @@ def begin_batch(views: tuple, state_dir: str, batch_id: int, what: str) -> int:
 
 def write_delta(view: View, frame: DataFrame, state_dir: str, batch_id: int) -> None:
     """Write `frame` as the view's delta of `batch_id` (an id already
-    mapped by `begin_batch`), overwrite-keyed: a replay rewrites it."""
-    _, droot = _roots(view, state_dir)
-    frame.write.mode("overwrite").parquet(os.path.join(droot, f"delta={batch_id}"))
+    mapped by `begin_batch`). A replay overwrites a torn delta and leaves
+    a complete one in place: it carries the same rows."""
+    out = _delta_dir(_roots(view, state_dir)[1], batch_id)
+    if not is_complete(out):
+        write_frame(frame, out)
 
 
 def _commit(frame: DataFrame, root: str, version: int) -> str:
@@ -352,7 +434,7 @@ def _commit(frame: DataFrame, root: str, version: int) -> str:
     the generations it supersedes. Returns the written dir."""
     gen = _complete(root).get(version, (-1, ""))[0] + 1
     out = os.path.join(root, "compact", f"v={version}" + (f".{gen}" if gen else ""))
-    frame.write.mode("overwrite").parquet(out)
+    write_frame(frame, out)
     _drop(root, lambda v, g: v == version and g < gen)
     return out
 
@@ -362,15 +444,35 @@ def _drop(root: str, doomed: Callable[[int, int], bool]) -> None:
     generation) is doomed."""
     for v, g, p in _compactions(root):
         if doomed(v, g):
-            shutil.rmtree(p, ignore_errors=True)
+            _effect("remove", p)
 
 
-def _write_compaction(frame: DataFrame, root: str, version: int, layout: tuple) -> str:
-    """Commit `frame` as compaction `version`, clustered and sorted on
-    `layout`, then remove every older compaction version."""
-    out = _commit(
-        frame.repartition(*layout).sortWithinPartitions(*layout), root, version
-    )
+def _write_compaction(
+    view: View, state_dir: str, version: int, frame: DataFrame | None = None
+) -> str:
+    """Commit `frame` as the view's compaction `version`, clustered and
+    sorted on its layout (None: an empty compaction, written on the
+    driver), then remove every older compaction version. Refuses while a
+    delta below `version` is torn: the new floor would hide that batch's
+    replay from every reader."""
+    root, droot = _roots(view, state_dir)
+    torn = sorted(set(delta_ids(droot, version)) - set(_complete_deltas(droot)))
+    if torn:
+        raise ValueError(
+            f"{_delta_dir(droot, torn[0])} has no _SUCCESS: batch {torn[0]} "
+            f"did not commit. Replay batch {torn[0]} before compacting at "
+            f"v={version}, or its replay is hidden from every reader."
+        )
+    if frame is None:
+        import pyarrow as pa
+
+        out = os.path.join(root, "compact", f"v={version}")
+        empty = pa.table({c: pa.array([], pa.int64()) for c in view.layout})
+        _publish_dir(out, [("part-00000.parquet", "table", empty)])
+    else:
+        layout = view.layout
+        frame = frame.repartition(*layout).sortWithinPartitions(*layout)
+        out = _commit(frame, root, version)
     _drop(root, lambda v, g: v < version)
     return out
 
@@ -388,8 +490,9 @@ def maybe_compact(spark, view: View, state_dir: str, batch_id: int) -> None:
     floor = vs[-1] if vs else 0
     if len([i for i in delta_ids(droot, batch_id) if i >= floor]) < COMPACT_EVERY:
         return
-    frame = read_view(spark, view, state_dir, batch_id)
-    _write_compaction(frame, root, batch_id, view.layout)
+    _write_compaction(
+        view, state_dir, batch_id, read_view(spark, view, state_dir, batch_id)
+    )
 
 
 def write_mask(
@@ -440,7 +543,8 @@ def write_snapshot(view: View, frame: DataFrame, state_dir: str, batch_id: int) 
 
 def prune_snapshot(spark, view: View, state_dir: str, dead) -> int:
     """Rewrite the newest snapshot without the rows matching the Column
-    predicate `dead`, as the next generation of the same version.
+    predicate `dead`, as the next generation of the same version, and
+    drop the generations it supersedes (also those a crashed pass left).
     Returns the number of rows removed; a clean snapshot is untouched."""
     root = _snapshot_root(view, state_dir)
     done = _complete(root)
@@ -451,6 +555,7 @@ def prune_snapshot(spark, view: View, state_dir: str, dead) -> int:
     n = snap.filter(dead).count()
     if n:
         _commit(snap.filter(~dead), root, version)
+    _drop(root, lambda v, g: v == version and g < done[version][0])
     return n
 
 
@@ -467,12 +572,8 @@ def vacuum(spark, family: Family, state_dir: str, bump_epoch: bool = False) -> i
 def _prune(spark, family: Family, state_dir: str) -> int:
     from concurrent.futures import ThreadPoolExecutor
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     mask, key = family.mask, family.key
-    mask_root = os.path.join(state_dir, mask.root)
-    if not os.path.isdir(mask_root):
+    if not os.path.isdir(os.path.join(state_dir, mask.root)):
         return 0  # nothing retired — nothing to prune
     data = [v for v in family.views if v.masked]
     paths = {os.path.join(state_dir, r) for v in (mask, *data) for r in v.roots}
@@ -493,72 +594,48 @@ def _prune(spark, family: Family, state_dir: str) -> int:
         # as they are, so inputs minus output IS the prune count.
         compact, deltas = resolve(view, state_dir)
         rows_in = _parquet_rows(compact) + view.fanout * _parquet_rows(deltas)
-        out = _write_compaction(
-            _minus(read_view(spark, view, state_dir), mask_rows, key, view.masked),
-            os.path.join(state_dir, view.root),
-            vid,
-            view.layout,
-        )
-        return rows_in - _parquet_rows([out])
+        pruned = _minus(read_view(spark, view, state_dir), mask_rows, key, view.masked)
+        return rows_in - _parquet_rows([_write_compaction(view, state_dir, vid, pruned)])
 
     # the views share no state: rewrite them concurrently
     with ThreadPoolExecutor(max_workers=min(3, len(data))) as pool:
         n_pruned = sum(pool.map(_rewrite, data))
-    # mask swap LAST, as an empty compaction at the same version, written
-    # on the driver (a zero-row parquet file is metadata only)
-    swap_dir = os.path.join(mask_root, "compact", f"v={vid}")
-    shutil.rmtree(swap_dir, ignore_errors=True)
-    os.makedirs(swap_dir)
-    pq.write_table(
-        pa.table({key: pa.array([], type=pa.int64())}),
-        os.path.join(swap_dir, "part-00000.parquet"),
-    )
-    with open(os.path.join(swap_dir, "_SUCCESS"), "w", encoding="utf-8"):
-        pass
-    _drop(mask_root, lambda v, g: v < vid)
+    # mask swap LAST, as an empty compaction at the same version
+    _write_compaction(mask, state_dir, vid)
     return n_pruned
 
 
-def _copytree_marker_last(src_dir: str, dst_dir: str) -> None:
-    """Copy a delta/compaction dir with its _SUCCESS marker strictly
-    last, so a torn copy is never taken for a complete compaction."""
-    os.makedirs(dst_dir, exist_ok=True)
-    names = os.listdir(src_dir)
-    marker = [n for n in names if n == "_SUCCESS"]
-    for name in sorted(n for n in names if n != "_SUCCESS") + marker:
-        s, d = os.path.join(src_dir, name), os.path.join(dst_dir, name)
-        if os.path.isdir(s):
-            shutil.copytree(s, d, dirs_exist_ok=True)
-        else:
-            shutil.copyfile(s, d)
-
-
 def clone(family: Family, src: str, dst: str, as_of: int) -> None:
-    """Branch a state dir at `as_of`: copy the header files, then the file
-    set every view (and the mask) resolves at `as_of`, then persist the
+    """Branch a state dir at `as_of`: copy the header files and the file
+    set every view (and the mask) resolves at `as_of`, and set the
     branch's epoch = as_of, so a new checkpoint's batch 0 lands on the
-    fork point. Driver-side file copies only: no Spark job. A re-run
-    completes a torn clone."""
-    os.makedirs(dst, exist_ok=True)
+    fork point. The branch is built in a staging dir beside `dst` and
+    renamed onto it last, so `dst` (absent or empty) holds nothing of
+    it or all of it. A re-run clears a torn staging dir; a re-run over
+    the finished clone changes nothing. Driver-side file copies only:
+    no Spark job."""
+    if os.path.isdir(dst) and os.listdir(dst):
+        if os.path.exists(os.path.join(dst, _EPOCH_FILE)) and log_epoch(dst) == as_of:
+            return
+        raise ValueError(f"clone: {dst} is not empty; a branch needs a fresh dir")
+    stage = os.path.normpath(dst) + ".clone"
+    remove(stage)
+    os.makedirs(stage)
     for name in family.files:
-        # temp name + rename: a torn header copy never looks complete (the
-        # vector index's codebooks.parquet is its 'trained' sentinel)
-        tmp = os.path.join(dst, name + ".tmp")
-        shutil.copyfile(os.path.join(src, name), tmp)
-        os.replace(tmp, os.path.join(dst, name))
-    for view in (*family.views, family.mask):
-        compact, deltas = resolve(view, src, as_of)
-        for p in compact + deltas:
-            _copytree_marker_last(p, os.path.join(dst, os.path.relpath(p, src)))
-    _write_epoch(dst, as_of)
+        _effect("copy", os.path.join(stage, name), os.path.join(src, name))
+    views = (*family.views, family.mask)
+    for p in dict.fromkeys(p for v in views for p in sum(resolve(v, src, as_of), [])):
+        copies = [(n, "copy", os.path.join(p, n)) for n in sorted(os.listdir(p))]
+        _publish_dir(
+            os.path.join(stage, os.path.relpath(p, src)),
+            [c for c in copies if c[0] != "_SUCCESS"],
+        )
+    _effect("text", os.path.join(stage, _EPOCH_FILE), str(as_of))
+    _effect("replace", dst, stage)
 
 
 def wipe(family: Family, state_dir: str) -> None:
     """Remove every root, the epoch and the header files of a family:
     the restart of a sink whose checkpoint lineage changed."""
     for name in (*family.roots, *family.files, _EPOCH_FILE):
-        p = os.path.join(state_dir, name)
-        if os.path.isdir(p):
-            shutil.rmtree(p, ignore_errors=True)
-        elif os.path.exists(p):
-            os.remove(p)
+        remove(os.path.join(state_dir, name))

@@ -131,33 +131,6 @@ def test_bump_is_monotone_and_idempotent(spark, epoch_vacuumed):
     assert log_epoch(state) == epoch
 
 
-def test_crash_before_bump_recovers_via_rerun(spark):
-    """A crash between the vacuum swaps and the epoch write leaves the
-    old epoch — resuming then still fails loudly (the guard), and
-    re-running the vacuum with bump_epoch=True completes the bump even
-    through the no-op fast path."""
-    from cqlcopy_spark.operators.vector_index import (
-        _lifecycle_state,
-        vector_index_append,
-        vector_index_vacuum,
-    )
-    from cqlcopy_spark.streaming.sinks import log_epoch
-
-    e, state = _lifecycle_state(spark, SF_SMALL)
-    assert vector_index_vacuum(spark, state) > 0  # no bump — the "crash"
-    assert log_epoch(state) == 0
-    with pytest.raises(ValueError, match="below this index root's"):
-        # batch 2 was the tombstone batch — codes/delta=2 does not
-        # exist, so this is a FIRST-TIME write below the floor (batch 0
-        # would pass the guard as a replay of the build's delta)
-        vector_index_append(e.limit(1), 2, state)
-    assert vector_index_vacuum(spark, state, bump_epoch=True) == 0
-    assert log_epoch(state) > 0
-    vector_index_append(
-        e.limit(1).selectExpr("vec_id + 1000000 AS vec_id", "emb"), 0, state
-    )  # now resumes
-
-
 def test_curation_epoch_resume_and_view(spark):
     """The curation twin: takedown → curation_vacuum(bump_epoch=True) →
     the same checkpoint's batch 0 re-ingests NEW docs; the survivor view

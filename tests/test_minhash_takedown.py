@@ -143,33 +143,3 @@ def test_vacuum_prunes_all_three_roots_and_keeps_view(spark, ingested):
             assert hit == 0, (sub, c, hit)
     # idempotent no-op fast path
     assert minhash_vacuum(spark, state) == 0
-
-
-def test_vacuum_crash_between_roots_completes_on_retry(spark, ingested):
-    """Simulate a crash after the bands swap but before the mask swap:
-    re-running the vacuum completes (mask emptied, view unchanged)."""
-    import shutil
-
-    from cqlcopy_spark.operators.dedup import _minhash_takedown_target
-    from cqlcopy_spark.streaming.sinks import (
-        TAKEDOWNS,
-        minhash_takedown_batch,
-        minhash_vacuum,
-    )
-    from cqlcopy_spark.streaming.state_log import compact_versions, read_view
-
-    state = ingested
-    minhash_takedown_batch(
-        _minhash_takedown_target(spark, SF_SMALL), 3, state
-    )
-    before = _pairs(spark, state)
-    assert minhash_vacuum(spark, state) > 0
-    # the crash window: drop the mask's empty compaction — raw takedown
-    # deltas resurface, data roots stay pruned
-    tomb = os.path.join(state, "takedowns")
-    vid = compact_versions(tomb)[-1]
-    shutil.rmtree(os.path.join(tomb, "compact", f"v={vid}"))
-    assert read_view(spark, TAKEDOWNS, state).count() > 0
-    assert minhash_vacuum(spark, state) == 0  # nothing left to prune
-    assert read_view(spark, TAKEDOWNS, state).count() == 0  # but completed
-    assert _pairs(spark, state) == before

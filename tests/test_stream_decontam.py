@@ -68,6 +68,21 @@ def test_decontam_free_state_is_unchanged(spark):
     assert n_armed < n_plain
 
 
+def test_half_written_eval_index_fails_loudly(spark, tmp_path):
+    """A crashed decontamination_index_write leaves eval_windows/ with no
+    _SUCCESS (here: only the committer's _temporary/). The gate must not
+    arm over the few or no windows it holds and admit contaminated docs:
+    the kernel raises and names the writer to re-run."""
+    from cqlcopy_spark.catalog import table
+    from cqlcopy_spark.streaming.sinks import curation_apply_batch
+
+    state = str(tmp_path / "state")
+    os.makedirs(os.path.join(state, "eval_windows", "_temporary", "0"))
+    d = table(spark, SF_SMALL, "documents").select("doc_id", "text", "n_chars")
+    with pytest.raises(ValueError, match="decontamination_index_write"):
+        curation_apply_batch(d, 0, state)
+
+
 def test_decontam_flag_is_slice_invariant(spark):
     """Flag decisions are per-document pure functions, so a re-sliced
     ingest (different batch boundaries) admits the identical survivor

@@ -79,30 +79,6 @@ def test_vacuum_idempotent(spark, vacuumed):
     assert read_index_codes(spark, state).count() == before
 
 
-def test_vacuum_crash_between_swaps_completes_on_retry(spark, vacuumed):
-    """Crash-retry: with the tombstone swap missing (the crash window),
-    a re-run falls through the no-op fast path and completes the vacuum
-    — tombstones emptied, view unchanged."""
-    import shutil
-
-    from cqlcopy_spark.operators.vector_index import (
-        INDEX_TOMBSTONES,
-        read_index_codes,
-        vector_index_vacuum,
-    )
-    from cqlcopy_spark.streaming.state_log import compact_versions, read_view
-
-    e, state, qlist, snap, _ = vacuumed
-    before = read_index_codes(spark, state).count()
-    tomb_root = os.path.join(state, "tombstones")
-    vid = compact_versions(tomb_root)[-1]
-    shutil.rmtree(os.path.join(tomb_root, "compact", f"v={vid}"))
-    assert read_view(spark, INDEX_TOMBSTONES, state).count() > 0  # the crash state
-    assert vector_index_vacuum(spark, state) == 0  # nothing left to prune
-    assert read_view(spark, INDEX_TOMBSTONES, state).count() == 0  # but it completed
-    assert read_index_codes(spark, state).count() == before
-
-
 def test_planted_dead_row_fires(spark, vacuumed):
     """Liveness: a tombstoned row smuggled back into the vacuumed codes
     compaction is flagged 'dead_row' (the vacuousness guard — a no-op
