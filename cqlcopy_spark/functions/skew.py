@@ -80,10 +80,11 @@ def salted_join(
     return p.join(b, on=on + ["_salt"], how=how).drop("_salt")
 
 
-def keep_min_by(df: DataFrame, key: str) -> DataFrame:
+def keep_min_by(df: DataFrame, key: str, order=(), **aggs: Column) -> DataFrame:
     """Deterministic one-row-per-key keeper: per key, keep the row whose
     remaining-column struct is the MINIMUM (field comparison in the
-    frame's column order). Replaces bare dropDuplicates([key]) wherever
+    frame's column order), compared after the `order` Columns when
+    given. Replaces bare dropDuplicates([key]) wherever
     the kept PAYLOAD matters: dropDuplicates picks an ARBITRARY row, so
     a checkpoint replay of a micro-batch carrying the same key with
     conflicting payloads could keep the other row and break the
@@ -91,16 +92,25 @@ def keep_min_by(df: DataFrame, key: str) -> DataFrame:
     (r13 ADVICE). Shape: a partial-combining groupBy + struct unpack —
     never a window over a possibly-hot key (the argmin-per-key rule);
     column order is preserved. A keys-only frame degrades to
-    dropDuplicates (nothing to pick between identical rows)."""
+    dropDuplicates (nothing to pick between identical rows).
+
+    With `order` = (-seq, ...) this is the one last-writer-wins fold of
+    every changelog apply (cdc_apply_changelog, stream_cdc_apply,
+    continuous_cdc_sink): the newest row wins, a negated column sorts
+    DESC, and a NULL order value sorts first, so a nullable order key
+    goes behind its isNull() flag. `aggs` (name=Column) are computed in
+    the same aggregate and appended after the frame's columns."""
     others = [c for c in df.columns if c != key]
     if not others:
         return df.dropDuplicates([key])
+    keys = [o.alias(f"_o{i}") for i, o in enumerate(order)]
     packed = df.groupBy(key).agg(
-        F.min(F.struct(*[col(c) for c in others])).alias("_row")
+        F.min(F.struct(*keys, *[col(c) for c in others])).alias("_row"),
+        *[a.alias(n) for n, a in aggs.items()],
     )
     return packed.select(
-        key, *[col(f"_row.{c}").alias(c) for c in others]
-    ).select(*df.columns)
+        key, *[col(f"_row.{c}").alias(c) for c in others], *aggs
+    ).select(*df.columns, *aggs)
 
 
 def salted_sum(

@@ -1375,41 +1375,68 @@ def sketch_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _heavy_hitters(e: DataFrame, k: int, s: int, top: int) -> DataFrame:
     """Core of sketch_heavy_hitters, parameterized so tests can pin the
-    [est, upper_bound] containment guarantee under different shardings."""
-    c = (
-        e.withColumn("shard", F.pmod(col("event_id"), F.lit(s)))
-        .groupBy("shard", "user_id")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+    [est, upper_bound] containment guarantee under different shardings:
+    exact (shard, item) counts → per-shard summaries → one fold → the
+    rank tail."""
+    c = e.groupBy(
+        F.pmod(col("event_id"), F.lit(s)).alias("shard"), col("user_id").alias("item")
+    ).agg(F.count(F.lit(1)).alias("cnt"))
+    return hh_rank(hh_fold(hh_summary(c, k)), top, "user_id")
+
+
+def hh_summary(c: DataFrame, k: int) -> DataFrame:
+    """The per-shard half of the heavy-hitters sketch, over exact
+    (shard, item, cnt) counts: each shard's top-k rows (item, cnt, thr)
+    by (cnt DESC, item), thr = the shard's (k+1)-th count (0 when it
+    holds ≤ k items), plus one ledger row (NULL item, NULL cnt, thr) per
+    shard that carries its threshold into total_thr. Only each shard's
+    top k+1 survive the rank (Spark applies the limit before the
+    shuffle; for one shard it is a TakeOrdered), and thr is a window
+    max over those rows: no join, no broadcast."""
+    wr = Window.partitionBy("shard").orderBy(col("cnt").desc(), col("item"))
+    r = c.withColumn("rk", F.row_number().over(wr)).filter(col("rk") <= k + 1)
+    thr = F.max(F.when(col("rk") == k + 1, col("cnt"))).over(Window.partitionBy("shard"))
+    r = r.withColumn("thr", F.coalesce(thr, F.lit(0)))
+    ledger = r.filter(col("rk") == 1).select(
+        F.lit(None).cast(c.schema["item"].dataType).alias("item"),
+        F.lit(None).cast("long").alias("cnt"),
+        "thr",
     )
-    wr = Window.partitionBy("shard").orderBy(col("cnt").desc(), col("user_id"))
-    r = c.withColumn("rk", F.row_number().over(wr))
-    thr = r.groupBy("shard").agg(
-        F.coalesce(
-            F.max(F.when(col("rk") == k + 1, col("cnt"))), F.lit(0)
-        ).alias("thr")
-    )
-    tot = thr.agg(F.sum("thr").alias("total_thr"))
-    kept = r.filter(col("rk") <= k).select("shard", "user_id", "cnt")
-    m = (
-        kept.join(broadcast(thr), "shard")
-        .groupBy("user_id")
-        .agg(
-            F.sum("cnt").alias("est"),
-            F.sum("thr").alias("present_thr"),
-        )
-    )
-    wg = Window.orderBy(col("est").desc(), col("user_id"))
+    return r.filter(col("rk") <= k).select("item", "cnt", "thr").unionByName(ledger)
+
+
+def hh_fold(rows: DataFrame) -> DataFrame:
+    """The merge half: (item, cnt, thr) rows of any number of shard
+    summaries and earlier folds → one row per item with cnt = est (the
+    sum of its kept counts) and thr = present_thr (the thresholds of the
+    shards that kept it), and one ledger row (cnt NULL) with thr =
+    total_thr. Sums only, so a fold of folds equals one fold of every
+    summary: shards, micro-batches and time merge alike."""
     return (
-        m.crossJoin(broadcast(tot))
-        .select(
-            "user_id",
-            "est",
-            (col("est") + col("total_thr") - col("present_thr")).alias(
-                "upper_bound"
-            ),
-        )
+        rows.groupBy("item", col("cnt").isNull().alias("_ledger"))
+        .agg(F.sum("cnt").alias("cnt"), F.sum("thr").alias("thr"))
+        .drop("_ledger")
+    )
+
+
+def hh_rank(folded: DataFrame, top: int, name: str = "item") -> DataFrame:
+    """The rank tail of a fold: the `top` items by (est DESC, item) with
+    upper_bound = est + total_thr - present_thr (the most the shards
+    that dropped the item could have missed) and their rank. Orders
+    ≤ S·k rows — driver-trivial."""
+    tot = folded.filter(col("cnt").isNull()).select(col("thr").alias("total_thr"))
+    wg = Window.orderBy(col("cnt").desc(), col("item"))
+    return (
+        folded.filter(col("cnt").isNotNull())
+        .crossJoin(broadcast(tot))
         .withColumn("rank", F.row_number().over(wg))
         .filter(col("rank") <= top)
+        .select(
+            col("item").alias(name),
+            col("cnt").alias("est"),
+            (col("cnt") + col("total_thr") - col("thr")).alias("upper_bound"),
+            "rank",
+        )
         .orderBy("rank")
     )
 
@@ -1591,27 +1618,33 @@ def agg_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = _partial(li.filter(col("l_orderkey") % 10 != 0))
     delta = _partial(li.filter(col("l_orderkey") % 10 == 0))
-    b = base.select(
-        "l_returnflag", col("n").alias("n_b"), col("qty_cents").alias("s_b")
-    )
-    d = delta.select(
-        "l_returnflag", col("n").alias("n_d"), col("qty_cents").alias("s_d")
-    )
-    merged = b.join(d, "l_returnflag", "full_outer").select(
-        "l_returnflag",
-        (F.coalesce(col("n_b"), F.lit(0)) + F.coalesce(col("n_d"), F.lit(0))).alias(
-            "n"
-        ),
-        (
-            F.coalesce(col("s_b"), F.lit(0)) + F.coalesce(col("s_d"), F.lit(0))
-        ).alias("qty_cents"),
-    )
+    merged = merge_partials(base, delta, "l_returnflag", ("n", "qty_cents"))
     return merged.select(
         "l_returnflag",
         "n",
         "qty_cents",
         (col("qty_cents").cast("double") / col("n") / F.lit(100.0)).alias("avg_qty"),
     ).orderBy("l_returnflag")
+
+
+def merge_partials(state: DataFrame, part: DataFrame, key: str, cols) -> DataFrame:
+    """The partial-aggregate merge of agg_incremental_merge and
+    continuous_agg_sink: per `key`, each mergeable partial in `cols`
+    (counts, exact integer sums) is its value in `state` plus its value
+    in `part`. A grouped-key-sized FULL OUTER join, since a key may sit
+    on one side only."""
+    s = state.select(key, *(col(c).alias(f"_s_{c}") for c in cols))
+    p = part.select(key, *(col(c).alias(f"_p_{c}") for c in cols))
+    return s.join(p, key, "full_outer").select(
+        key,
+        *(
+            (
+                F.coalesce(col(f"_s_{c}"), F.lit(0))
+                + F.coalesce(col(f"_p_{c}"), F.lit(0))
+            ).alias(c)
+            for c in cols
+        ),
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -36,6 +36,7 @@ from cqlcopy_spark.functions.portable import (
     sql_dsum,
     sql_exact_sum,
 )
+from cqlcopy_spark.functions.skew import keep_min_by
 from cqlcopy_spark.plans.registry import register
 
 # ---------------------------------------------------------------------------
@@ -498,19 +499,20 @@ def cdc_apply_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full CDC changelog application — the multi-VERSION generalization
     of merge_upsert: a sequenced change stream (two update generations,
     delete markers, inserts) collapses onto the base snapshot by
-    last-writer-wins. Base rows enter the log at seq 0, so ONE window
-    (row_number over key ORDER BY seq DESC) resolves everything: the
-    newest version wins, a winning delete marker erases the key, and
-    untouched base rows survive as their own winners — no join at all.
+    last-writer-wins. Base rows enter the log at seq 0, so ONE fold
+    (keep_min_by ordered by seq DESC, the last-writer-wins fold
+    continuous_cdc_sink and stream_cdc_apply share) resolves
+    everything: the newest version wins, a winning delete marker erases
+    the key, and untouched base rows survive as their own winners — no
+    join, no window.
 
-    Scale shape: one shuffle on the merge key, identical to what a
-    lakehouse MERGE does under the hood; per-key state is the handful
-    of versions in this batch, never history. Changelog synthesized
+    Scale shape: one shuffle on the merge key, with partials combined
+    map-side, so a hot key never funnels its versions into one window
+    task; per-key state is the handful of versions in this batch, never
+    history. Changelog synthesized
     deterministically from orders (10% updated, 5% updated twice, 2%
     deleted, 4% inserted) so the oracle is closed-form. seq is unique
-    per key by construction — the window needs no further tiebreak."""
-    from pyspark.sql.window import Window
-
+    per key by construction — the fold needs no further tiebreak."""
     base = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
@@ -540,10 +542,9 @@ def cdc_apply_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
             _version(col("o_orderkey") % 25 == 0, "N", None, 1, "I", shift=100_000_000)
         )
     )
-    w = Window.partitionBy("o_orderkey").orderBy(col("seq").desc())
     return (
-        log.withColumn("rn", F.row_number().over(w))
-        .filter((col("rn") == 1) & (col("op") != "D"))
+        keep_min_by(log, "o_orderkey", order=(-col("seq"),))
+        .filter(col("op") != "D")
         .select(
             "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
             col("op").alias("last_op"),

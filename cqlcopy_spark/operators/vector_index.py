@@ -223,7 +223,7 @@ def read_index_codes(
     """The cumulative encoded corpus (every delta + compactions resolved
     exactly once, tombstoned ids masked) — what a search scans and what
     the verify twins hold to one-shot parity. The tombstone anti-join is
-    added ONLY when deletes exist, so a delete-free index keeps the
+    added ONLY when deletes exist below `as_of`, so a delete-free read keeps the
     one-scan/one-Arrow-stage query plan byte for byte (plan pin).
 
     `as_of` is TIME TRAVEL over the index log (the curation reader's

@@ -16,12 +16,18 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 from pyspark.sql.streaming import DataStreamWriter
 
 from cqlcopy_spark.functions.skew import keep_min_by
+from cqlcopy_spark.operators.analytics import (
+    hh_fold,
+    hh_rank,
+    hh_summary,
+    merge_partials,
+)
 from cqlcopy_spark.operators.dedup import (
     _N_BANDS,
     _band_rows,
@@ -147,8 +153,8 @@ def _state_log_sink(
     )
 
 
-# The snapshot family of the agg, cdc, topk and quantile sinks: one
-# full-state compaction per batch, no deltas (state_log's snapshot rule).
+# The snapshot family of the agg, cdc and topk sinks: one full-state
+# compaction per batch, no deltas (state_log's snapshot rule).
 SNAPSHOT = state_log.View("snapshot", "", ())
 SNAPSHOTS = state_log.Family((SNAPSHOT,))
 
@@ -183,10 +189,13 @@ def continuous_agg_sink(
     on_new_run: str = "error",
 ) -> DataStreamWriter:
     """Continuous incremental maintenance of a grouped aggregate — the
-    streaming twin of agg_incremental_merge: each micro-batch is
-    aggregated to per-key partials (count + exact integer sum) and
-    MERGED into a parquet state table via the partial-aggregate
-    algebra, never a recompute over history.
+    streaming twin of agg_incremental_merge, running its kernel: each
+    micro-batch is aggregated to per-key partials (count + exact integer
+    sum) and merged onto the previous snapshot by
+    analytics.merge_partials (full outer join on the key, coalesced
+    sums), never a recompute over history. sum_expr must be an
+    EXACT-integer aggregate (e.g. a cents sum): merge ≡ recompute only
+    holds bitwise for mergeable exact sums.
 
     The state is a state_log snapshot view (SNAPSHOT; the layout,
     replay rule, retention and crash contract are in that module's
@@ -205,35 +214,13 @@ def continuous_agg_sink(
     new run redelivers the FULL input (e.g. availableNow over the same
     directory). State size is grouped-key-bounded — the stream itself
     is never retained."""
+    cols = (count_col, sum_col)
 
     def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
-        # sum_expr must be an EXACT-integer aggregate (e.g. a cents sum):
-        # merge ≡ recompute only holds bitwise for mergeable exact sums
-        delta = batch_df.groupBy(group_col).agg(
-            F.count(F.lit(1)).alias(count_col),
-            F.expr(sum_expr).alias(sum_col),
+        part = batch_df.groupBy(group_col).agg(
+            F.count(F.lit(1)).alias(count_col), F.expr(sum_expr).alias(sum_col)
         )
-        if prev is None:
-            return delta
-        b = prev.select(
-            group_col,
-            F.col(count_col).alias("_nb"),
-            F.col(sum_col).alias("_sb"),
-        )
-        d = delta.select(
-            group_col,
-            F.col(count_col).alias("_nd"),
-            F.col(sum_col).alias("_sd"),
-        )
-        return b.join(d, group_col, "full_outer").select(
-            group_col,
-            (
-                F.coalesce(F.col("_nb"), F.lit(0)) + F.coalesce(F.col("_nd"), F.lit(0))
-            ).alias(count_col),
-            (
-                F.coalesce(F.col("_sb"), F.lit(0)) + F.coalesce(F.col("_sd"), F.lit(0))
-            ).alias(sum_col),
-        )
+        return part if prev is None else merge_partials(prev, part, group_col, cols)
 
     return _snapshot_sink(
         stream_df, state_dir, checkpoint_dir, on_new_run, "continuous_agg_sink", merge
@@ -259,11 +246,21 @@ def continuous_cdc_sink(
     on_new_run: str = "error",
 ) -> DataStreamWriter:
     """Continuous CDC materialization — the streaming twin of
-    cdc_apply_changelog: each micro-batch of sequenced change rows
-    (upserts + 'D' delete markers) merges into a keyed parquet snapshot
-    by last-writer-wins on seq_col. The state is a state_log snapshot
-    view (see that module's docstring), with continuous_agg_sink's
-    replay scope and cross-run guard.
+    cdc_apply_changelog, running its last-writer-wins fold: each
+    micro-batch of sequenced change rows (upserts + 'D' delete markers)
+    merges into a keyed parquet snapshot by keep_min_by over
+    (prev-state ∪ batch), ordered by (seq DESC NULLS LAST, op ASC);
+    seq is numeric. The state is a state_log snapshot view (see that
+    module's docstring), with continuous_agg_sink's replay scope and
+    cross-run guard.
+
+    The op ASC tiebreak: the contract says seq is unique per key (the
+    batch twin guarantees it by construction), but if a producer
+    violates it the merge must still be deterministic across runs and
+    engines — 'D' < 'I' < 'U' in binary order, so at equal seq the
+    delete marker wins (the conservative resolution: the tombstone
+    survives and late lower-seq changes still lose) and 'I' beats 'U';
+    rows equal on (seq, op) resolve by their remaining columns.
 
     Delete markers are RETAINED in state as tombstones rather than
     dropped: a late change with seq below an applied delete must lose
@@ -271,25 +268,13 @@ def continuous_cdc_sink(
     Readers filter them (read_cdc_state); compact_cdc_tombstones drops
     the ones below a producer watermark. State size is keyspace-bounded
     (one row per live key + tombstone), never stream-length-bounded.
-    Per batch: one window shuffle on the key over (batch ∪ prev-state)
-    — what a lakehouse MERGE runs."""
+    Per batch: one partial-combining aggregate on the key — what a
+    lakehouse MERGE runs, without funnelling a hot key into one task."""
+    order = (F.col(seq_col).isNull(), -F.col(seq_col), F.col(op_col))
 
     def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
-        merged = batch_df if prev is None else prev.unionByName(batch_df)
-        # Secondary op_col ASC tiebreak: the contract says seq is unique
-        # per key (the batch twin guarantees it by construction), but if
-        # a producer violates it the merge must still be deterministic
-        # across runs/engines — 'D' < 'I' < 'U' in binary order, so at
-        # equal seq the delete marker wins (the conservative resolution:
-        # the tombstone survives and late lower-seq changes still lose).
-        w = Window.partitionBy(key_col).orderBy(
-            F.col(seq_col).desc(), F.col(op_col).asc()
-        )
-        return (
-            merged.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        log = batch_df if prev is None else prev.unionByName(batch_df)
+        return keep_min_by(log, key_col, order)
 
     return _snapshot_sink(
         stream_df, state_dir, checkpoint_dir, on_new_run, "continuous_cdc_sink", merge
@@ -312,11 +297,14 @@ def continuous_topk_sink(
     on_new_run: str = "error",
 ) -> DataStreamWriter:
     """Continuous heavy-hitters maintenance — the streaming twin of
-    sketch_heavy_hitters with each MICRO-BATCH playing the shard role:
-    per batch, exact item counts reduce to the batch top-k plus the
-    (k+1)-th count as the batch's drop threshold; the state accumulates
-    est (sum of kept counts — a certain lower bound), present_thr
-    (sum of thresholds of batches that kept the item) and the running
+    sketch_heavy_hitters with each MICRO-BATCH playing the shard role,
+    running its kernels: per batch, exact item counts reduce to the
+    batch's shard summary (analytics.hh_summary: top-k plus the
+    (k+1)-th count as the drop threshold), and analytics.hh_fold folds
+    it onto the previous snapshot. The state is hh_fold's (item, cnt,
+    thr) rows: per item cnt = est (sum of kept counts — a certain lower
+    bound) and thr = present_thr (sum of thresholds of batches that
+    kept the item), plus one ledger row (cnt NULL) whose thr is
     total_thr, so any item's true count lies in
     [est, est + total_thr - present_thr] — the same SpaceSaving-merge
     containment the batch operator pins, maintained incrementally
@@ -324,52 +312,18 @@ def continuous_topk_sink(
 
     The state is a state_log snapshot view (layout, replay, retention
     and crash contract in that module's docstring), with
-    continuous_agg_sink's replay scope and cross-run guard. State size is ≤ k new items per
-    batch. The per-batch reduce is one hash aggregate + a
-    TakeOrdered(k+1): executor-side and shuffle-light at any rate."""
+    continuous_agg_sink's replay scope and cross-run guard. State size
+    is ≤ k new items per batch. The per-batch reduce is one hash
+    aggregate and a TakeOrdered(k+1) over the batch's distinct items,
+    both inside the snapshot write's plan: nothing is collected to the
+    driver."""
 
     def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
-        spark = batch_df.sparkSession
-        old_total = 0
-        if prev is not None:
-            head = prev.select("total_thr").head(1)
-            old_total = head[0]["total_thr"] if head else 0
-
-        c = batch_df.groupBy(F.col(item_col).alias("item")).agg(
-            F.count(F.lit(1)).alias("cnt")
-        )
-        ranked = c.orderBy(F.col("cnt").desc(), F.col("item")).limit(k + 1)
-        top = ranked.collect()  # ≤ k+1 rows — TakeOrdered, driver-tiny
-        thr = int(top[k]["cnt"]) if len(top) > k else 0
-        total = old_total + thr
-        # rebuild from the collected head so the item dtype follows the
-        # source column (string keys work as well as int keys)
-        kept = spark.createDataFrame(top[:k], schema=ranked.schema)
-        if prev is None:
-            merged = kept.select(
-                "item",
-                F.col("cnt").alias("est"),
-                F.lit(thr).cast("long").alias("present_thr"),
-            )
-        else:
-            merged = (
-                prev.select("item", "est", "present_thr")
-                .join(kept, "item", "full_outer")
-                .select(
-                    "item",
-                    (
-                        F.coalesce(F.col("est"), F.lit(0))
-                        + F.coalesce(F.col("cnt"), F.lit(0))
-                    ).alias("est"),
-                    (
-                        F.coalesce(F.col("present_thr"), F.lit(0))
-                        + F.when(F.col("cnt").isNotNull(), F.lit(thr)).otherwise(
-                            F.lit(0)
-                        )
-                    ).alias("present_thr"),
-                )
-            )
-        return merged.withColumn("total_thr", F.lit(total).cast("long"))
+        counts = batch_df.groupBy(
+            F.lit(0).alias("shard"), F.col(item_col).alias("item")
+        ).agg(F.count(F.lit(1)).alias("cnt"))
+        part = hh_summary(counts, k)
+        return hh_fold(part if prev is None else prev.unionByName(part))
 
     return _snapshot_sink(
         stream_df, state_dir, checkpoint_dir, on_new_run, "continuous_topk_sink", merge
@@ -378,22 +332,8 @@ def continuous_topk_sink(
 
 def read_topk_state(spark, state_dir: str, top_n: int = 10) -> DataFrame:
     """Current heavy hitters from a continuous_topk_sink state: est /
-    upper_bound / rank, mirroring sketch_heavy_hitters' output shape."""
-
-    s = read_agg_state(spark, state_dir)
-    w = Window.orderBy(F.col("est").desc(), F.col("item"))
-    return (
-        s.select(
-            "item",
-            "est",
-            (F.col("est") + F.col("total_thr") - F.col("present_thr")).alias(
-                "upper_bound"
-            ),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_n)
-        .orderBy("rank")
-    )
+    upper_bound / rank, sketch_heavy_hitters' rank tail (hh_rank)."""
+    return hh_rank(read_agg_state(spark, state_dir), top_n)
 
 
 def compact_cdc_tombstones(
@@ -416,136 +356,6 @@ def compact_cdc_tombstones(
 
     dead = (F.col(op_col) == "D") & (F.col(seq_col) < min_live_seq)
     return state_log.prune_snapshot(spark, SNAPSHOT, state_dir, dead)
-
-
-def continuous_quantile_sink(
-    stream_df: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    value_col: str,
-    k: int = 64,
-    on_new_run: str = "error",
-) -> DataStreamWriter:
-    """Continuous mergeable-quantile maintenance — the streaming twin of
-    sketch_quantiles_merge with an EXPLICIT error ledger: each
-    micro-batch reduces to a k-point weighted rank summary (exact rank
-    statistics, weights sum to the batch count), the union with the
-    state summary is recompressed back to k points, and every
-    recompression's worst-case rank slippage (union_weight // k, the
-    gap a kept point can absorb) is ADDED to a persisted err_bound —
-    so the reader reports quantiles with a bound that is true by
-    construction after any number of batches, instead of the fixed
-    N/k + S bound the one-shot batch operator earns. State is k rows +
-    one ledger row regardless of stream length, kept as a state_log
-    snapshot view (see that module's docstring) with
-    continuous_agg_sink's replay scope and cross-run guard. Per batch the raw data passes ONE sort-free reduce (exact
-    ranks need a sort of the BATCH only, never history)."""
-
-    def summarize(df, w_col: str, total: int):
-        """k-point weighted summary of (value, weight) rows: cumulative
-        weights W_i in (value, weight) order over a ROWS frame; keep the
-        rows where floor(W_i·k/W) increases (always keeps the last),
-        weight of a kept row = covered cumulative span. Exact: weights
-        sum to W (= `total`, known by the caller — no extra scan)."""
-        # global-order reduce: the summary NEEDS a total order, but it
-        # runs over state(k rows) ∪ batch — at high-rate streams shard
-        # the batch first (the batch operator's pmod design) and union
-        # the shard summaries before this recompression, paying one
-        # extra ledger term. The ROWS frame gives every row a DISTINCT
-        # cumulative weight even in a duplicate-value run, so a bucket
-        # boundary inside the run is detected by exactly one row (a
-        # RANGE frame shares _cw across ties and can drop whole runs,
-        # violating the err ledger). Ordering by (value, weight) makes
-        # the partial-sum sequence deterministic under ties: rows equal
-        # on both columns are identical tuples, hence interchangeable.
-        wspec = Window.orderBy("value", w_col).rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        d = df.filter(F.col(w_col) > 0).withColumn("_cw", F.sum(w_col).over(wspec))
-        d = d.withColumn(
-            "_bucket", F.expr(f"_cw * {k} DIV {total}")
-        ).withColumn(
-            "_prev_bucket", F.expr(f"(_cw - {w_col}) * {k} DIV {total}")
-        )
-        kept = d.filter(
-            (F.col("_bucket") > F.col("_prev_bucket")) | (F.col("_cw") == F.lit(total))
-        )
-        wl = Window.orderBy("_cw")
-        return kept.select(
-            "value",
-            (F.col("_cw") - F.coalesce(F.lag("_cw").over(wl), F.lit(0))).alias(
-                "weight"
-            ),
-        )
-
-    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
-        prev_err = 0
-        prev_total = 0
-        if prev is not None:
-            head = prev.select("err_bound", "total_w").head(1)
-            if head:
-                prev_err = head[0]["err_bound"]
-                prev_total = head[0]["total_w"]
-
-        batch_vals = batch_df.select(F.col(value_col).alias("value")).withColumn(
-            "weight", F.lit(1).cast("long")
-        )
-        n_batch = batch_vals.count()
-        if n_batch == 0:
-            # identity batch: carry state forward; with NO prior state
-            # write an empty-but-schema'd summary so the first-ever
-            # batch being empty doesn't crash the recompression below
-            # (review finding: total_w would be None).
-            if prev is not None:
-                return prev
-            return batch_vals.withColumn(
-                "err_bound", F.lit(0).cast("long")
-            ).withColumn("total_w", F.lit(0).cast("long"))
-        # batch summary: exact ranks over the batch only (err 0), then
-        # union with state and recompress (err += union_weight DIV k).
-        # total_w needs NO scan: prior state persists it, the batch was
-        # just counted.
-        merged = batch_vals
-        if prev is not None:
-            merged = prev.select("value", "weight").unionByName(batch_vals)
-        total_w = prev_total + n_batch
-        summary = summarize(merged, "weight", total_w)
-        err = prev_err + total_w // k
-        return summary.withColumn("err_bound", F.lit(err).cast("long")).withColumn(
-            "total_w", F.lit(total_w).cast("long")
-        )
-
-    return _snapshot_sink(
-        stream_df,
-        state_dir,
-        checkpoint_dir,
-        on_new_run,
-        "continuous_quantile_sink",
-        merge,
-    )
-
-
-def read_quantile_state(spark, state_dir: str, ps=(0.5, 0.9, 0.99)) -> DataFrame:
-    """Quantile estimates + the accumulated rank-error bound from a
-    continuous_quantile_sink state."""
-
-    s = read_agg_state(spark, state_dir)
-    w = Window.orderBy("value")
-    d = s.withColumn("_cw", F.sum("weight").over(w))
-    picks = [
-        F.min(
-            F.when(
-                F.col("_cw") >= F.ceil(F.lit(float(p)) * F.col("total_w")),
-                F.col("value"),
-            )
-        ).alias(f"p{int(p * 100)}")
-        for p in ps
-    ]
-    return d.agg(
-        F.coalesce(F.max("total_w"), F.lit(0)).alias("n"),
-        *picks,
-        F.coalesce(F.max("err_bound"), F.lit(0)).alias("rank_err_bound"),
-    )
 
 
 def _survivor_projection(frame: DataFrame) -> DataFrame:
@@ -650,8 +460,9 @@ def minhash_apply_batch(
     state_log.maybe_compact(spark, MINHASH_HASHES, state_dir, batch_id)
     prev_bands = state_log.read_view(spark, MINHASH_BANDS, state_dir, batch_id)
     prev_hashes = state_log.read_view(spark, MINHASH_HASHES, state_dir, batch_id)
-    # takedown masking (armed only when the state carries takedowns —
-    # a takedown-free state keeps the original plan byte for byte):
+    # takedown masking (armed only when the mask holds rows below this
+    # batch — before the first takedown, and after a vacuum swapped the
+    # mask empty, the plan carries no anti-join):
     # retired docs leave the PROBE side, so later arrivals never pair
     # with retired content, and `guard_ids` below keeps their ids out
     # forever (tombstones-win-forever, the vector index's rule)
@@ -787,8 +598,8 @@ def read_minhash_pairs(spark, state_dir: str) -> DataFrame:
     state dir: the union of every batch's pairs delta. Pairs are
     disjoint across deltas by construction (each pair is emitted only
     by its later-arriving member's batch), so this is a plain union —
-    no dedup pass needed. Takedown masking (armed only when takedowns
-    exist — a takedown-free state keeps the plain-union plan): a pair
+    no dedup pass needed. Takedown masking (armed only when the mask
+    holds rows — a takedown-free state keeps the plain-union plan): a pair
     touching a retired doc on EITHER side leaves the report, the
     right-to-be-forgotten contract for the dedup index
     (minhash_takedown_batch). Takedown sets are tiny: stats pick
@@ -1033,9 +844,9 @@ def read_curation_survivors(
     the union of every batch's survivor delta — disjoint across deltas
     by construction (the anti-join admits each text hash exactly once),
     so this is a plain union. The takedown anti-join is added ONLY when
-    takedowns exist, so a takedown-free state keeps the plain-union plan
-    byte for byte. Feed it to text._pack_from_toks for the
-    trainer-facing packed layout.
+    the mask holds rows below `as_of` (state_log.read_mask), so a
+    takedown-free read keeps the plain-union plan. Feed it to
+    text._pack_from_toks for the trainer-facing packed layout.
 
     `as_of` is TIME TRAVEL over the delta log: the state a reader AT
     batch id `as_of` saw — deltas (and takedown masks) strictly below

@@ -1,6 +1,6 @@
 """The persisted-state layer: one implementation of the append-only log
 behind the curation, minhash and vector-index state families, and of the
-full snapshots behind the agg, cdc, topk and quantile sinks.
+full snapshots behind the agg, cdc and topk sinks.
 
 Layout. A state dir holds one directory per log root, plus an epoch:
 
@@ -316,18 +316,22 @@ def read_view(spark, view: View, state_dir: str, below: int = _TOP) -> DataFrame
 
 
 def _minus(frame: DataFrame, mask: DataFrame, key: str, cols: tuple) -> DataFrame:
+    # a join on a column name moves that column first: restore the
+    # view's order, so a masked read has the unmasked read's schema
+    order = frame.columns
     for c in cols:
         m = mask if c == key else mask.withColumnRenamed(key, c)
         frame = frame.join(m, c, "left_anti")
-    return frame
+    return frame.select(*order)
 
 
 def read_masked(
     spark, family: Family, view: View, state_dir: str, below: int = _TOP
 ) -> DataFrame:
     """`read_view` minus the family mask at the same read point. The
-    anti-join is added only when the mask root exists, so a state that
-    never retired anything keeps the plain read plan."""
+    anti-join is added only when the mask holds rows below that point
+    (`read_mask`), so a state that retired nothing there keeps the plain
+    read plan."""
     for v in family.views:
         _roots(v, state_dir)  # a stale layout of any view fails loudly
     out = read_view(spark, view, state_dir, below)
@@ -338,9 +342,11 @@ def read_masked(
 def read_mask(
     spark, family: Family, state_dir: str, below: int = _TOP
 ) -> DataFrame | None:
-    """The family's retired ids below `below`, or None while its mask
-    root does not exist (nothing was ever retired)."""
-    if not os.path.isdir(os.path.join(state_dir, family.mask.root)):
+    """The family's retired ids below `below`, or None when the mask
+    resolves no rows there: nothing retired yet, a read point below the
+    first retirement, or the empty mask a vacuum leaves. The rows are
+    counted from the parquet footers, with no Spark job."""
+    if _parquet_rows(sum(resolve(family.mask, state_dir, below), [])) == 0:
         return None
     return read_view(spark, family.mask, state_dir, below)
 
@@ -573,20 +579,16 @@ def _prune(spark, family: Family, state_dir: str) -> int:
     from concurrent.futures import ThreadPoolExecutor
 
     mask, key = family.mask, family.key
-    if not os.path.isdir(os.path.join(state_dir, mask.root)):
-        return 0  # nothing retired — nothing to prune
+    mask_rows = read_mask(spark, family, state_dir)
+    if mask_rows is None:
+        # an empty mask prunes nothing and needs no swap: nothing was
+        # retired, or the state right after a completed vacuum. A crash
+        # between the swaps leaves mask rows visible, which falls
+        # through and completes the vacuum.
+        return 0
     data = [v for v in family.views if v.masked]
     paths = {os.path.join(state_dir, r) for v in (mask, *data) for r in v.roots}
-    everything = [i for p in paths for i in delta_ids(p) + compact_versions(p)]
-    if not everything:
-        return 0
-    vid = 1 + max(everything)
-    if _parquet_rows(sum(resolve(mask, state_dir), [])) == 0:
-        # an empty mask prunes nothing and needs no swap: the state right
-        # after a completed vacuum. A crash between the swaps leaves mask
-        # rows visible, which falls through and completes the vacuum.
-        return 0
-    mask_rows = read_view(spark, mask, state_dir)
+    vid = 1 + max(i for p in paths for i in delta_ids(p) + compact_versions(p))
 
     def _rewrite(view: View) -> int:
         # count BEFORE the write: the cleanup removes the superseded

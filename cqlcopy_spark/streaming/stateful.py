@@ -23,6 +23,7 @@ from pyspark.sql.functions import col
 
 from cqlcopy_spark.catalog import table
 from cqlcopy_spark.functions.portable import dsum, sql_dsum
+from cqlcopy_spark.functions.skew import keep_min_by
 from cqlcopy_spark.plans.registry import register
 
 _OUT_SCHEMA = "user_id long, n_events long, total_value double, last_us long"
@@ -378,11 +379,12 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     op per user wins ((us, event_id) total order — event_id unique, so
     no tie ambiguity), tombstoned keys drop out of the view.
 
-    Scale shape: ONE partial-combining groupBy(user_id) — LWW folds as
-    max(struct(us, event_id, value, op)), so partials combine map-side
-    and a hot user never funnels raw rows into a single window task
-    (CLAUDE.md argmin-per-key rule); n_ops rides the same aggregate.
-    The oracle's row_number formulation is the spec, not the plan."""
+    Scale shape: ONE partial-combining groupBy(user_id) — the shared
+    last-writer-wins fold (keep_min_by ordered by (us, event_id) DESC),
+    so partials combine map-side and a hot user never funnels raw rows
+    into a single window task (CLAUDE.md argmin-per-key rule); n_ops
+    rides the same aggregate. The oracle's row_number formulation is
+    the spec, not the plan."""
     e = table(spark, sf_dir, "events")
     log = e.select(
         "user_id",
@@ -391,18 +393,17 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         F.when(col("event_id") % _CDC_DEL_MOD == 0, "D").otherwise("U").alias("op"),
     )
-    g = log.groupBy("user_id").agg(
-        F.max(F.struct("us", "event_id", "value", "op")).alias("m"),
-        F.count(F.lit(1)).alias("n_ops"),
+    g = keep_min_by(
+        log, "user_id", order=(-col("us"), -col("event_id")), n_ops=F.count(F.lit(1))
     )
     return (
-        g.filter(col("m.op") != "D")
+        g.filter(col("op") != "D")
         .select(
             "user_id",
             "n_ops",
-            col("m.us").alias("last_us"),
-            col("m.event_id").alias("last_event_id"),
-            col("m.value").alias("last_value"),
+            col("us").alias("last_us"),
+            col("event_id").alias("last_event_id"),
+            col("value").alias("last_value"),
         )
         .orderBy("user_id")
     )

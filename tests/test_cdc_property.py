@@ -11,8 +11,10 @@ order) survives as a tombstone and late lower-seq changes lose to it.
 
 Two invariants, each of which a real-world producer bug would hit:
 
-1. REFERENCE PARITY — the sink's merged state equals the pure-Python
-   fold for any random changelog, including seq collisions.
+1. REFERENCE PARITY — the shared last-writer-wins fold (keep_min_by,
+   which cdc_apply_changelog, stream_cdc_apply and the sink run) applied
+   once to the whole log, and the sink's merged state, each equal the
+   pure-Python fold for any random changelog, including seq collisions.
 2. ARRIVAL INVARIANCE — the SAME log sliced into different micro-batch
    partitionings (one shot vs per-file triggers vs a shuffled row
    order) lands in the SAME final state: cross-batch merge must be
@@ -27,7 +29,9 @@ import random
 import time
 
 import pandas as pd
+from pyspark.sql import functions as F
 
+from cqlcopy_spark.functions.skew import keep_min_by
 from cqlcopy_spark.streaming.sinks import (
     continuous_cdc_sink,
     read_agg_state,
@@ -61,6 +65,15 @@ def _ref_lww(rows):
         if cur is None or (-seq, op) < (-cur[1], cur[2]):
             win[key] = (key, seq, op, val)
     return win
+
+
+def _fold(spark, rows) -> set:
+    """The shared LWW fold over the whole log in one shot, ordered as
+    the sink orders it: (seq DESC NULLS LAST, op ASC)."""
+    log = spark.createDataFrame(rows, SCHEMA)
+    order = (F.col("seq").isNull(), -F.col("seq"), F.col("op"))
+    out = keep_min_by(log, "key", order=order).collect()
+    return {(r["key"], r["seq"], r["op"], r["val"]) for r in out}
 
 
 def _run_sink(spark, tmp_path, tag: str, batches) -> tuple[set, set]:
@@ -108,6 +121,7 @@ def test_cdc_lww_matches_reference_and_is_arrival_invariant(spark, tmp_path):
         win = _ref_lww(rows)
         want_full = set(win.values())
         want_live = {w for w in win.values() if w[2] != "D"}
+        assert _fold(spark, rows) == want_full, f"seed {seed}: fold != reference"
 
         # one-shot apply (the cdc_apply_changelog batch shape)
         live1, full1 = _run_sink(spark, tmp_path, f"s{seed}_one", [rows])
@@ -135,6 +149,7 @@ def test_cdc_equal_seq_collision_storm(spark, tmp_path):
             rows.append((key, 5, op, float(key * 1000 + 35 + ord(op))))
     random.Random(3).shuffle(rows)
     win = _ref_lww(rows)
+    assert _fold(spark, rows) == set(win.values())
     live, full = _run_sink(spark, tmp_path, "storm", [rows[:9], rows[9:]])
     assert full == set(win.values())
     assert live == {w for w in win.values() if w[2] != "D"}

@@ -136,15 +136,18 @@ def test_feature_hash_all_jvm_two_shuffles(spark):
     assert shuffle_exchanges(p) <= 2, p  # (doc,bucket) agg + doc agg
 
 
-def test_cdc_changelog_single_window_no_join(spark):
-    """cdc_apply_changelog resolves base + changelog with ONE window
-    over the merge key — a join-based formulation would shuffle twice
-    and re-execute the base lineage per side."""
+def test_cdc_changelog_single_fold_no_window_no_join(spark):
+    """cdc_apply_changelog resolves base + changelog with ONE
+    partial-combining fold over the merge key (keep_min_by, the
+    last-writer-wins fold the cdc sink shares) — no window, which would
+    funnel a hot key's versions into one task, and no join, which would
+    shuffle twice and re-execute the base lineage per side."""
     p = plan_of(QUERIES["cdc_apply_changelog"](spark, SF_SMALL))
-    for node in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin",
-                 "CartesianProduct"):
+    for node in ("Window", "SortMergeJoin", "ShuffledHashJoin",
+                 "BroadcastHashJoin", "CartesianProduct"):
         assert node not in p, p
-    assert shuffle_exchanges(p) == 1, p  # the key window; union is narrow
+    assert p.count("partial_min(") >= 1, p  # partials combine map-side
+    assert shuffle_exchanges(p) == 1, p  # the key fold; union is narrow
 
 
 def test_sample_per_group_prefilters_before_window(spark):

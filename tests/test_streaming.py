@@ -727,169 +727,52 @@ def test_continuous_topk_sink_empty_batch_is_identity(spark, tmp_path):
     assert got == {1: (2, 2), 2: (1, 1)}  # exact — no thresholds ever paid
 
 
-def test_continuous_quantile_sink_ledger_bound_holds(spark, tmp_path):
-    """Streaming quantile maintenance: after a two-batch replay the
-    state's total weight must equal the exact row count, and every
-    reported quantile's tie-run of true ranks must intersect the target
-    window at the PERSISTED error ledger (which accumulates one
-    union_weight//k term per recompression — true by construction, and
-    the test would catch a ledger that stopped accumulating)."""
-    import math
-    import os
-    import time
+def test_continuous_topk_sink_batch_job_count(spark, tmp_path):
+    """One continuous_topk_sink batch runs as the snapshot write alone:
+    the batch summary and the fold onto the previous snapshot are one
+    plan, with no driver collect of the top k+1, no createDataFrame
+    rebuild and no head(1) of total_thr. Pins the Spark jobs of a batch
+    with and without a previous snapshot, counted from the status
+    tracker; the foreachBatch function is driven directly, as
+    tests/test_state_crash.py::_sink_batch does."""
+    from pyspark.sql.streaming import DataStreamWriter
 
-    import pandas as pd
+    from cqlcopy_spark.streaming.sinks import continuous_topk_sink, read_topk_state
 
-    from cqlcopy_spark.streaming.sinks import (
-        continuous_quantile_sink,
-        read_quantile_state,
-    )
-
-    vals1 = [((i * 2654435761) % 997) / 7.0 for i in range(400)]
-    vals2 = [((i * 40503) % 1009) / 3.0 for i in range(350)]
-    stage = str(tmp_path / "vals")
-    os.makedirs(stage)
-    f1, f2 = os.path.join(stage, "b1.parquet"), os.path.join(stage, "b2.parquet")
-    pd.DataFrame({"value": vals1}).to_parquet(f1)
-    pd.DataFrame({"value": vals2}).to_parquet(f2)
-    now = time.time()
-    os.utime(f1, (now - 60, now - 60))
-    os.utime(f2, (now, now))
-
-    state = str(tmp_path / "q_state")
-    src = (
-        spark.readStream.schema("value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    q = (
-        continuous_quantile_sink(
-            src, state, str(tmp_path / "ckpt"), value_col="value", k=32
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
+    captured = []
+    real = DataStreamWriter.foreachBatch
+    DataStreamWriter.foreachBatch = lambda self, fn: captured.append(fn) or self
     try:
-        q.awaitTermination(120)
+        continuous_topk_sink(
+            spark.readStream.format("rate").load(),
+            str(tmp_path / "state"),
+            str(tmp_path / "ckpt"),
+            item_col="item_id",
+            k=3,
+        )
     finally:
-        q.stop()
+        DataStreamWriter.foreachBatch = real
+    sc = spark.sparkContext
 
-    r = read_quantile_state(spark, state).collect()[0]
-    allv = sorted(vals1 + vals2)
-    assert r["n"] == len(allv)
-    assert r["rank_err_bound"] > 0
-    for p in (0.5, 0.9, 0.99):
-        est = r[f"p{int(p * 100)}"]
-        lo_rank = sum(1 for v in allv if v < est) + 1
-        hi_rank = sum(1 for v in allv if v <= est)
-        target = math.ceil(p * len(allv))
-        b = r["rank_err_bound"]
-        assert lo_rank <= target + b and hi_rank >= target - b, (
-            p, est, lo_rank, hi_rank, target, b,
-        )
+    def jobs(items: list, batch_id: int) -> int:
+        group = f"topk-sink-batch-{batch_id}"
+        sc.setJobGroup(group, group)
+        try:
+            captured[0](spark.createDataFrame([(i,) for i in items], "item_id long"), batch_id)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
 
-
-def test_continuous_quantile_sink_duplicate_runs_keep_bound(spark, tmp_path):
-    """Regression: duplicate-heavy data whose bucket boundaries all fall
-    INSIDE tie runs. A RANGE-frame cumulative weight gives every tied
-    row the same _cw, so no row detects the bucket crossing and whole
-    runs collapse into a later point, breaking the persisted err_bound
-    (26/25/25/24 copies of four values at k=4 reduced to a single
-    point). The ROWS-frame fix makes each duplicate own a distinct rank
-    span; this pins the ledger bound on exactly that data."""
-    import math
-    import os
-    import time
-
-    import pandas as pd
-
-    from cqlcopy_spark.streaming.sinks import (
-        continuous_quantile_sink,
-        read_quantile_state,
-    )
-
-    vals = [1.0] * 26 + [2.0] * 25 + [3.0] * 25 + [4.0] * 24
-    stage = str(tmp_path / "vals")
-    os.makedirs(stage)
-    pd.DataFrame({"value": vals}).to_parquet(os.path.join(stage, "b1.parquet"))
-
-    state = str(tmp_path / "q_state")
-    src = spark.readStream.schema("value double").parquet(stage)
-    q = (
-        continuous_quantile_sink(
-            src, state, str(tmp_path / "ckpt"), value_col="value", k=4
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(120)
-    finally:
-        q.stop()
-
-    r = read_quantile_state(spark, state, ps=(0.25, 0.5, 0.75)).collect()[0]
-    allv = sorted(vals)
-    assert r["n"] == 100
-    b = r["rank_err_bound"]
-    assert b == 100 // 4
-    for p in (0.25, 0.5, 0.75):
-        est = r[f"p{int(p * 100)}"]
-        lo_rank = sum(1 for v in allv if v < est) + 1
-        hi_rank = sum(1 for v in allv if v <= est)
-        target = math.ceil(p * 100)
-        assert lo_rank <= target + b and hi_rank >= target - b, (
-            p, est, lo_rank, hi_rank, target, b,
-        )
-    # p50 specifically: target rank 50 sits inside the 2.0 run
-    # (ranks 27..51); the collapsed summary reported 4.0 (lo_rank 77).
-    assert r["p50"] <= 3.0
-
-
-def test_continuous_quantile_sink_empty_first_batch(spark, tmp_path):
-    """Regression: the FIRST-ever micro-batch being empty must write an
-    empty-but-schema'd state instead of crashing on total_w=None, and a
-    later data batch must then merge cleanly on top of it."""
-    import os
-    import time
-
-    import pandas as pd
-
-    from cqlcopy_spark.streaming.sinks import (
-        continuous_quantile_sink,
-        read_quantile_state,
-    )
-
-    stage = str(tmp_path / "vals")
-    os.makedirs(stage)
-    f1 = os.path.join(stage, "b1.parquet")
-    f2 = os.path.join(stage, "b2.parquet")
-    pd.DataFrame({"value": pd.Series([], dtype="float64")}).to_parquet(f1)
-    pd.DataFrame({"value": [float(i) for i in range(50)]}).to_parquet(f2)
-    now = time.time()
-    os.utime(f1, (now - 60, now - 60))
-    os.utime(f2, (now, now))
-
-    state = str(tmp_path / "q_state")
-    src = (
-        spark.readStream.schema("value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    q = (
-        continuous_quantile_sink(
-            src, state, str(tmp_path / "ckpt"), value_col="value", k=8
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(120)
-    finally:
-        q.stop()
-
-    r = read_quantile_state(spark, state).collect()[0]
-    assert r["n"] == 50
-    assert r["rank_err_bound"] == 50 // 8
+    first = jobs([1] * 5 + [2] * 4 + [3] * 3 + [4] * 2 + [5], 0)
+    merged = jobs([2] * 6 + [6] * 5 + [1] * 2 + [7] * 2 + [3], 1)
+    assert (first, merged) == (2, 4), (first, merged)
+    got = {
+        r["item"]: (r["est"], r["upper_bound"])
+        for r in read_topk_state(spark, str(tmp_path / "state")).collect()
+    }
+    # thresholds 2 (batch 0) and 2 (batch 1): the batch-as-shard merge
+    assert got == {1: (7, 7), 2: (10, 10), 3: (3, 5), 6: (5, 7)}, got
 
 
 def test_cdc_apply_replay_matches_batch(spark):
